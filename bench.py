@@ -29,6 +29,10 @@ import time
 
 import pyspark.sql.functions as F
 
+#: run artifacts (full blob, rolling best); gitignored, unlike BENCH/
+_OUT_DIR = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), ".bench_build")
+
 
 def _timeit(timings, name, fn, quiet, reps=3, steals=None, rep_log=None):
     """min of ``reps`` runs — steady-state timing (run 1 may still pay
@@ -458,9 +462,7 @@ def run_bench(cpus: int | None = None, pages_n: int | None = None,
     # host has ever published, cool down and re-measure once — both
     # readings are published, and the final docs_per_sec is the better
     # one (min-of-N semantics extended across the retry).
-    best_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH",
-        "rolling.json")
+    best_path = os.path.join(_OUT_DIR, "rolling.json")
     # the best is keyed by corpus size: throughput at 4k pages is
     # overhead-dominated and must not gate (or be gated by) the 40k
     # headline configuration
@@ -513,6 +515,7 @@ def run_bench(cpus: int | None = None, pages_n: int | None = None,
             extras["docs_per_sec"],
             extras.get("docs_per_sec_retry") or 0,
         )
+        os.makedirs(_OUT_DIR, exist_ok=True)
         with open(best_path, "w") as fh:
             json.dump(rolling_doc, fh)
             fh.write("\n")
@@ -925,7 +928,7 @@ def _compact_summary(result: dict) -> dict:
             for k in ("efficiency", "clean", "steal_pct_n",
                       "steal_pct_4n", "n_clean_rounds")
         } if sec else None,
-        "full_results": "BENCH/bench_tip.json",
+        "full_results": ".bench_build/bench_tip.json",
     }
     try:
         import __spark_entry__ as _entry
@@ -938,13 +941,11 @@ def _compact_summary(result: dict) -> dict:
 
 
 def _emit(result: dict) -> None:
-    """Full blob → BENCH/bench_tip.json (committed) + stderr;
+    """Full blob → .bench_build/bench_tip.json (gitignored) + stderr;
     compact driver-parseable summary → the LAST stdout line."""
-    bench_dir = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH")
     try:
-        os.makedirs(bench_dir, exist_ok=True)
-        with open(os.path.join(bench_dir, "bench_tip.json"), "w") as fh:
+        os.makedirs(_OUT_DIR, exist_ok=True)
+        with open(os.path.join(_OUT_DIR, "bench_tip.json"), "w") as fh:
             json.dump(result, fh, indent=1)
             fh.write("\n")
     except OSError as e:

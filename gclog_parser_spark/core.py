@@ -83,6 +83,8 @@ _GEN_BODY_RE = re.compile(
 )
 # Trailing ', N.N secs]' of a basic event (Parser.scala:35).
 _PAUSE_TAIL_RE = re.compile(rf", ({AGE_PAT}) secs\]")
+# Optional second age stamp (and space) before a basic event's first item.
+_BASIC_LEAD_RE = re.compile(rf"(?:{AGE_PAT}: )? ?")
 # CMS wall-clock pause: first ' real=N.N secs]' anywhere after the type —
 # may live in the '[Times: ...]' block (Parser.scala:48; pause==real time,
 # ParserTest.scala:55-64).
@@ -294,7 +296,7 @@ def _scan_basic_event(sc: _Scanner, gc_type, gc_cause, tenuring):
     separated by ' '/', '/nothing, closed by ', T secs]'.  The heap delta is
     the first *bare* size triple; absence fails the parse (the reference's
     `.get`, Parser.scala:37)."""
-    m = sc.take(re.compile(rf"(?:{AGE_PAT}: )? ?"))
+    sc.take(_BASIC_LEAD_RE)
     heap = None
     generations = []
     stray = None

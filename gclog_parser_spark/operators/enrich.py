@@ -13,57 +13,61 @@ from pyspark.sql import DataFrame
 from gclog_parser_spark.schema import collector_family_df, heap_region_df
 
 
-def enrich_collector_family(events: DataFrame) -> DataFrame:
-    """events + `family` via broadcast left join on gc_type; CMS phases
-    not in the dim fall back to 'cms_concurrent' by prefix, everything
-    else to 'other'."""
-    spark = events.sparkSession
-    dim = collector_family_df(spark)
+def family_join(events: DataFrame):
+    """``(joined, family)``: events broadcast-left-joined to the
+    collector-family dim on gc_type, and the resolved family column —
+    the dim's family, else CMS phases not in the dim fall back to
+    'cms_concurrent' by prefix, the newer collectors by their type
+    names, everything else to 'other'."""
+    dim = collector_family_df(events.sparkSession)
     joined = events.join(F.broadcast(dim), "gc_type", "left")
     t = F.col("gc_type")
-    return joined.withColumn(
+    return joined, F.coalesce(
         "family",
-        F.coalesce(
-            "family",
-            F.when(t.startswith("CMS"), F.lit("cms_concurrent"))
-            .when(
-                (t.startswith("GC pause") & t.contains("(mixed)"))
-                | (t.startswith("Pause Young") & t.contains("(Mixed)")),
-                F.lit("g1_mixed"),
-            )
-            .when(
-                t.startswith("GC pause") | t.startswith("Pause Young"),
-                F.lit("g1_young"),
-            )
-            .when(t.startswith("Pause Full"), F.lit("full"))
-            .when(
-                t.isin(
-                    "Garbage Collection",
-                    "Minor Collection",
-                    "Major Collection",
-                ),
-                F.lit("z_cycle"),
-            )
-            .when(
-                t.startswith("Pause Init")
-                | t.startswith("Pause Final")
-                | t.startswith("Pause Degenerated"),
-                F.lit("shen_pause"),
-            )
-            .when(
-                t.startswith("GC concurrent")
-                | t.startswith("Concurrent")
-                | t.isin(
-                    "GC remark",
-                    "GC cleanup",
-                    "Pause Remark",
-                    "Pause Cleanup",
-                ),
-                F.lit("g1_concurrent"),
-            )
-            .otherwise(F.lit("other")),
-        ),
+        F.when(t.startswith("CMS"), F.lit("cms_concurrent"))
+        .when(
+            (t.startswith("GC pause") & t.contains("(mixed)"))
+            | (t.startswith("Pause Young") & t.contains("(Mixed)")),
+            F.lit("g1_mixed"),
+        )
+        .when(
+            t.startswith("GC pause") | t.startswith("Pause Young"),
+            F.lit("g1_young"),
+        )
+        .when(t.startswith("Pause Full"), F.lit("full"))
+        .when(
+            t.isin(
+                "Garbage Collection",
+                "Minor Collection",
+                "Major Collection",
+            ),
+            F.lit("z_cycle"),
+        )
+        .when(
+            t.startswith("Pause Init")
+            | t.startswith("Pause Final")
+            | t.startswith("Pause Degenerated"),
+            F.lit("shen_pause"),
+        )
+        .when(
+            t.startswith("GC concurrent")
+            | t.startswith("Concurrent")
+            | t.isin(
+                "GC remark",
+                "GC cleanup",
+                "Pause Remark",
+                "Pause Cleanup",
+            ),
+            F.lit("g1_concurrent"),
+        )
+        .otherwise(F.lit("other")),
     )
+
+
+def enrich_collector_family(events: DataFrame) -> DataFrame:
+    """events + `family` (see :func:`family_join`)."""
+    joined, family = family_join(events)
+    return joined.withColumn("family", family)
 
 
 #: Spark-side mirror of core.UNIFIED_HEAP_LINE_RE (Java regex)

@@ -219,16 +219,6 @@ def sample_frames(
     )
 
 
-def media_size_rollup(pages: DataFrame, payload_col: str = "html"):
-    """Pure-native variant for the oracle: byte sizes straight off the
-    binary column (column-pruned scan, codegen only)."""
-    return pages.select(
-        "url",
-        F.octet_length(F.col(payload_col)).alias("n_bytes"),
-        F.md5(F.col(payload_col)).alias("content_digest"),
-    )
-
-
 PHASH_BITS = 60  # fits BIGINT positive; bands must divide it
 PHASH_SCHEMA = "url string, n_cp long, phash long"
 

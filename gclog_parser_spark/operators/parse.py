@@ -26,7 +26,7 @@ no row-at-a-time Python UDF anywhere (BASELINE.json input_hint).
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
+from datetime import datetime
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, Window
 
 from gclog_parser_spark import core
 from gclog_parser_spark.datagen import CLOSE_MARK, OPEN_MARK
-from gclog_parser_spark.schema import EVENTS_SCHEMA
+from gclog_parser_spark.schema import EVENTS_SCHEMA, REGION_TYPE
 
 # Inside the UDF, timestamps travel as int64 epoch-micros: per-row
 # pandas.Timestamp boxing on the way in and per-object datetime
@@ -100,7 +100,7 @@ def extract_gc_text(
 
 
 # ---------------------------------------------------------------------------
-# Event-dict → schema record
+# Event dict → output columns
 # ---------------------------------------------------------------------------
 
 _EPOCH_ORD = datetime(1970, 1, 1).toordinal()
@@ -124,64 +124,61 @@ def _epoch_us(t) -> int:
     return us
 
 
-def _event_record(url, warc_ts, event_idx, line_no, ev):
-    heap = ev["heap"]
-    t = ev["time"]
-    promoted = core.promoted_bytes(ev)
-    tenuring = ev["tenuring"]
-    return {
-        "url": url,
-        "warc_ts": warc_ts,
-        "event_idx": event_idx,
-        "line_no": line_no,
-        "event_time": _epoch_us(t) if t is not None else None,
-        "tz_offset": core.tz_offset_str(t),
-        "jvm_age_seconds": ev["age"],
-        "gc_class": (
-            "detailed" if ev["regions"] else ev["gc_class"]
-        ),
-        "gc_type": ev["gc_type"],
-        "gc_cause": ev["gc_cause"],
-        "heap_before_bytes": core.to_bytes(heap[0]) if heap else None,
-        "heap_after_bytes": core.to_bytes(heap[1]) if heap else None,
+_COLUMNS = EVENTS_SCHEMA.names
+_REGION_FIELDS = REGION_TYPE.names
+
+
+class _Columns:
+    """Per-column value lists in ``_COLUMNS`` order: each parsed event
+    appends its values straight into them, and a batch leaves the UDF
+    as one ``pd.DataFrame`` built from the lists — no per-event dict,
+    no ``from_records`` row-to-column transpose."""
+
+    def __init__(self):
+        self.cols = [[] for _ in _COLUMNS]
+
+    def add(self, url, warc_ts, event_idx, line_no, ev):
+        (c_url, c_warc_ts, c_idx, c_line, c_time, c_tz, c_age, c_class,
+         c_type, c_cause, c_before, c_after, c_max, c_reclaimed, c_pause,
+         c_gens, c_regions, c_promoted, c_survivor, c_threshold,
+         c_stopped, c_to_stop) = self.cols
+        heap = ev["heap"]
+        t = ev["time"]
+        tenuring = ev["tenuring"]
+        to_bytes = core.to_bytes
+        c_url.append(url)
+        c_warc_ts.append(warc_ts)
+        c_idx.append(event_idx)
+        c_line.append(line_no)
+        c_time.append(_epoch_us(t) if t is not None else None)
+        c_tz.append(core.tz_offset_str(t))
+        c_age.append(ev["age"])
+        c_class.append("detailed" if ev["regions"] else ev["gc_class"])
+        c_type.append(ev["gc_type"])
+        c_cause.append(ev["gc_cause"])
+        c_before.append(to_bytes(heap[0]) if heap else None)
+        c_after.append(to_bytes(heap[1]) if heap else None)
         # ZGC summary lines carry no capacity → max stays NULL
-        "heap_max_bytes": (
-            core.to_bytes(heap[2])
-            if heap and heap[2] is not None
-            else None
-        ),
-        "heap_reclaimed_bytes": (
-            core.reclaimed_bytes(heap) if heap else None
-        ),
-        "pause_seconds": ev["pause"],
-        "generations": [
-            {
-                "name": g[0],
-                "before_bytes": core.to_bytes(g[1]),
-                "after_bytes": core.to_bytes(g[2]),
-                "capacity_bytes": core.to_bytes(g[3]),
-            }
-            for g in ev["generations"]
-        ],
-        "regions": [
-            {
-                "name": r[0],
-                "used_before": r[1],
-                "used_after": r[2],
-                "capacity_before": r[3],
-                "capacity_after": r[4],
-            }
-            for r in ev["regions"]
-        ],
-        "promoted_bytes": promoted,
-        "desired_survivor_size": int(tenuring[0]) if tenuring else None,
-        "new_threshold": int(tenuring[1]) if tenuring else None,
-        "stopped_seconds": ev.get("stopped"),
-        "seconds_to_stop": ev.get("to_stop"),
-    }
+        c_max.append(to_bytes(heap[2]) if heap and heap[2] else None)
+        c_reclaimed.append(core.reclaimed_bytes(heap) if heap else None)
+        c_pause.append(ev["pause"])
+        c_gens.append([
+            dict(name=n, before_bytes=to_bytes(b), after_bytes=to_bytes(a),
+                 capacity_bytes=to_bytes(c))
+            for n, b, a, c in ev["generations"]
+        ])
+        c_regions.append([dict(zip(_REGION_FIELDS, r)) for r in ev["regions"]])
+        c_promoted.append(core.promoted_bytes(ev))
+        c_survivor.append(int(tenuring[0]) if tenuring else None)
+        c_threshold.append(int(tenuring[1]) if tenuring else None)
+        c_stopped.append(ev.get("stopped"))
+        c_to_stop.append(ev.get("to_stop"))
 
-
-_COLUMNS = [f.name for f in EVENTS_SCHEMA.fields]
+    def frame(self) -> pd.DataFrame:
+        # empty lists would infer float64, which Arrow cannot convert to
+        # the nested column types
+        kind = None if self.cols[0] else object
+        return pd.DataFrame(dict(zip(_COLUMNS, self.cols)), dtype=kind)
 
 
 def _restore_timestamps(events: DataFrame) -> DataFrame:
@@ -192,12 +189,6 @@ def _restore_timestamps(events: DataFrame) -> DataFrame:
             "event_time": F.timestamp_micros("event_time"),
         }
     )
-
-
-def _records_to_pdf(records) -> pd.DataFrame:
-    if not records:
-        return pd.DataFrame({c: pd.Series(dtype="object") for c in _COLUMNS})
-    return pd.DataFrame.from_records(records, columns=_COLUMNS)
 
 
 def _parse_block(block: str, heap_stats: bool):
@@ -219,51 +210,41 @@ def _parse_block(block: str, heap_stats: bool):
 # ---------------------------------------------------------------------------
 
 def _parse_pages_fn(heap_stats: bool, counters=None):
-    """``counters``: optional dict of SparkContext accumulators
-    ('pages'/'events'/'skipped_blocks') — the north rule's per-partition
-    metrics; near-zero overhead (one add per page / per block)."""
+    """``counters``: optional (events, skipped_blocks) SparkContext
+    accumulators — the north rule's per-partition metrics; near-zero
+    overhead (one add per partition)."""
 
     def fn(iterator):
-        n_pages = n_events = n_skipped = 0
+        n_events = n_skipped = 0
         for pdf in iterator:
-            records = []
+            out = _Columns()
             for url, wts, text in zip(
-                pdf["url"], pdf["warc_ts"], pdf["gc_text"]
+                pdf["url"].tolist(),
+                pdf["warc_ts"].tolist(),
+                pdf["gc_text"].tolist(),
             ):
-                n_pages += 1
                 idx = 0
                 for line_no, block in core.split_blocks_pos(
                     text, heap_stats
                 ):
                     ev = _parse_block(block, heap_stats)
                     if ev is not None:
-                        records.append(
-                            _event_record(url, wts, idx, line_no, ev)
-                        )
+                        out.add(url, wts, idx, line_no, ev)
                         idx += 1
                     else:
                         n_skipped += 1
                 n_events += idx
-            yield _records_to_pdf(records)
+            yield out.frame()
         if counters:
-            counters["pages"].add(n_pages)
-            counters["events"].add(n_events)
-            counters["skipped_blocks"].add(n_skipped)
+            counters[0].add(n_events)
+            counters[1].add(n_skipped)
 
     return fn
 
 
-def parse_events_narrow(
-    pages: DataFrame,
-    mode: str = "gc_line",
-    require_marker: bool = True,
-    counters=None,
-) -> DataFrame:
-    src = extract_gc_text(pages, require_marker=require_marker)
+def _parse_narrow(src: DataFrame, heap_stats: bool, counters) -> DataFrame:
     return _restore_timestamps(
-        src.mapInPandas(
-            _parse_pages_fn(mode == "heap_stats", counters), _UDF_SCHEMA
-        )
+        src.mapInPandas(_parse_pages_fn(heap_stats, counters), _UDF_SCHEMA)
     )
 
 
@@ -271,30 +252,33 @@ def parse_events_narrow(
 # window path
 # ---------------------------------------------------------------------------
 
-def _parse_blocks_fn(heap_stats: bool):
+def _parse_blocks_fn(heap_stats: bool, counters=None):
     def fn(iterator):
+        n_events = n_skipped = 0
         for pdf in iterator:
-            records = []
+            out = _Columns()
             for url, wts, line_no, block in zip(
-                pdf["url"], pdf["warc_ts"], pdf["line_no"], pdf["block"]
+                pdf["url"].tolist(),
+                pdf["warc_ts"].tolist(),
+                pdf["line_no"].tolist(),
+                pdf["block"].tolist(),
             ):
                 ev = _parse_block(block, heap_stats)
                 if ev is not None:
                     # event_idx re-derived below by a row_number window
-                    records.append(
-                        _event_record(url, wts, -1, int(line_no), ev)
-                    )
-            yield _records_to_pdf(records)
+                    out.add(url, wts, -1, line_no, ev)
+                    n_events += 1
+                else:
+                    n_skipped += 1
+            yield out.frame()
+        if counters:
+            counters[0].add(n_events)
+            counters[1].add(n_skipped)
 
     return fn
 
 
-def parse_events_window(
-    pages: DataFrame, mode: str = "gc_line", require_marker: bool = True
-) -> DataFrame:
-    heap_stats = mode == "heap_stats"
-    src = extract_gc_text(pages, require_marker=require_marker)
-
+def _parse_window(src: DataFrame, heap_stats: bool, counters) -> DataFrame:
     line = F.col("line")
     lines = src.select(
         "url",
@@ -383,7 +367,7 @@ def parse_events_window(
 
     events = _restore_timestamps(
         blocks.select("url", "warc_ts", "line_no", "block").mapInPandas(
-            _parse_blocks_fn(heap_stats), _UDF_SCHEMA
+            _parse_blocks_fn(heap_stats, counters), _UDF_SCHEMA
         )
     )
 
@@ -413,16 +397,28 @@ def parse_events(
     producer; at the 100 TB design point a well-bucketed Iceberg scan
     makes this unnecessary for the narrow path, while the window path
     re-clusters on url anyway.
+
+    ``counters`` (a ``PipelineMetrics``): ``pages`` is an
+    ``Observation`` of the extract output, ``events``/``skipped_blocks``
+    are accumulators fed by the parse UDF — the same counts under
+    either stitch.
     """
     if mode not in ("gc_line", "heap_stats"):
         raise ValueError(f"unknown mode {mode!r}")
+    if stitch == "narrow":
+        parse = _parse_narrow
+    elif stitch == "window":
+        parse = _parse_window
+    else:
+        raise ValueError(f"unknown stitch {stitch!r}")
     if repartition:
         pages = pages.repartition(repartition, "url")
-    if stitch == "narrow":
-        return parse_events_narrow(pages, mode, require_marker, counters)
-    if stitch == "window":
-        return parse_events_window(pages, mode, require_marker)
-    raise ValueError(f"unknown stitch {stitch!r}")
+    src = extract_gc_text(pages, require_marker=require_marker)
+    if counters is not None:
+        src = src.observe(counters.pages, F.count(F.lit(1)).alias("pages"))
+        # the UDFs ship only the (picklable) accumulators
+        counters = (counters.events, counters.skipped_blocks)
+    return parse(src, mode == "heap_stats", counters)
 
 
 # ---------------------------------------------------------------------------

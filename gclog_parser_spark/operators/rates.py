@@ -63,24 +63,24 @@ def with_rates(events: DataFrame) -> DataFrame:
         .otherwise(age_ms - prev["age_ms"])
     )
 
-    out = events.withColumn(
-        "bytes_allocated_since_last", allocated
-    ).withColumn("millis_since_last", millis)
-    # `div` = Spark integral division (truncates toward zero, JVM parity)
-    out = out.withColumn(
-        "heap_allocation_rate",
-        F.when(F.col("millis_since_last") == 0, F.lit(0)).otherwise(
-            F.expr("bytes_allocated_since_last div millis_since_last")
-        ),
-    ).withColumn(
-        "promotion_rate",
-        F.when(
-            F.col("promoted_bytes").isNotNull()
-            & (F.col("millis_since_last") != 0),
-            F.expr("promoted_bytes div millis_since_last"),
-        ).otherwise(F.lit(0)),
+    out = events.withColumns(
+        {"bytes_allocated_since_last": allocated, "millis_since_last": millis}
     )
-    return out
+    # `div` = Spark integral division (truncates toward zero, JVM parity)
+    return out.withColumns(
+        {
+            "heap_allocation_rate": F.when(
+                F.col("millis_since_last") == 0, F.lit(0)
+            ).otherwise(
+                F.expr("bytes_allocated_since_last div millis_since_last")
+            ),
+            "promotion_rate": F.when(
+                F.col("promoted_bytes").isNotNull()
+                & (F.col("millis_since_last") != 0),
+                F.expr("promoted_bytes div millis_since_last"),
+            ).otherwise(F.lit(0)),
+        }
+    )
 
 
 def fullgc_pressure(events: DataFrame) -> DataFrame:

@@ -15,14 +15,16 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from gclog_parser_spark.operators.enrich import enrich_collector_family
+from gclog_parser_spark.operators.enrich import family_join
 
 
 def with_sink(events: DataFrame) -> DataFrame:
-    """Adds the routing column ``sink`` (= collector family)."""
-    if "family" not in events.columns:
-        events = enrich_collector_family(events)
-    return events.withColumn("sink", F.col("family"))
+    """Adds the routing column ``sink`` (= collector family), and the
+    ``family`` enrichment itself in the same projection when absent."""
+    if "family" in events.columns:
+        return events.withColumn("sink", F.col("family"))
+    joined, family = family_join(events)
+    return joined.withColumns({"family": family, "sink": family})
 
 
 def fanout_write(
@@ -44,11 +46,6 @@ def fanout_write(
         .format(fmt)
         .save(base_path)
     )
-
-
-def read_sink(spark, base_path: str, sink: str) -> DataFrame:
-    """Read one routed per-sink table back (partition-pruned scan)."""
-    return spark.read.parquet(base_path).where(F.col("sink") == sink)
 
 
 def fanout_commit_catalog(

@@ -17,7 +17,7 @@ Protocol (idempotent, at-least-once → exactly-once output):
    duplicates it.  On Iceberg this maps to
    ``overwritePartitions()`` — the same atomic-replace contract.
 3. append one ledger row (chunk lineage: counts from the parse-stage
-   accumulators, wall seconds, timestamp) only AFTER the data commit.
+   metrics, wall seconds, timestamp) only AFTER the data commit.
    A crash between 2 and 3 re-runs the chunk; step 2 makes that safe.
 
 At 100 TB the chunk count is sized so one chunk ≈ one executor-hour of

@@ -6,17 +6,19 @@ once (column pruning reaches the scan, the broadcast join plans against
 the final output columns, AQE re-plans the window shuffle at runtime).
 
 ``PipelineMetrics`` carries the north rule's per-partition metrics:
+pages observed on the extract output (``df.observe``, exactly-once) and
 SparkContext accumulators updated inside the Arrow parse workers
-(pages / events / skipped blocks) — the distributed analogue of the
-reference's absent-but-needed observability (its Main.scala just loops
-files single-threaded).
+(events / skipped blocks), under either stitch — the distributed
+analogue of the reference's absent-but-needed observability (its
+Main.scala just loops files single-threaded).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from gclog_parser_spark.operators.parse import parse_events
 from gclog_parser_spark.operators.rates import with_rates
@@ -32,18 +34,18 @@ class PipelineMetrics:
     @classmethod
     def create(cls, spark: SparkSession) -> "PipelineMetrics":
         sc = spark.sparkContext
-        return cls(sc.accumulator(0), sc.accumulator(0), sc.accumulator(0))
-
-    def as_counters(self) -> dict:
-        return {
-            "pages": self.pages,
-            "events": self.events,
-            "skipped_blocks": self.skipped_blocks,
-        }
+        return cls(Observation(), sc.accumulator(0), sc.accumulator(0))
 
     def snapshot(self) -> dict:
+        """Counts of the action run on the built frame (waits for it)."""
+        try:
+            pages = self.pages.get["pages"]
+        except Py4JJavaError:
+            # no metrics row: AQE pruned the observed scan of an input
+            # it found empty
+            pages = 0
         return {
-            "pages": self.pages.value,
+            "pages": pages,
             "events": self.events.value,
             "skipped_blocks": self.skipped_blocks.value,
         }
@@ -65,7 +67,7 @@ def build_events(
         stitch=stitch,
         repartition=repartition,
         require_marker=require_marker,
-        counters=metrics.as_counters() if metrics else None,
+        counters=metrics,
     )
     if rates:
         events = with_rates(events)
@@ -87,7 +89,6 @@ def observed_events(events, name: str = "gc_metrics"):
     is the per-job health row a pipeline publishes with every run.
     """
     import pyspark.sql.functions as F
-    from pyspark.sql import Observation
 
     obs = Observation(name)
     observed = events.observe(

@@ -95,7 +95,6 @@ COLLECTOR_FAMILY_ROWS = [
     ("CMS-concurrent-reset-start", "cms_concurrent"),
     ("CMS-concurrent-reset", "cms_concurrent"),
 ]
-COLLECTOR_FAMILY_SCHEMA = "gc_type string, family string"
 
 HEAP_REGION_ROWS = [
     ("PSYoungGen", "young"),
@@ -109,14 +108,21 @@ HEAP_REGION_ROWS = [
     ("from", "survivor_space"),
     ("to", "survivor_space"),
 ]
-HEAP_REGION_SCHEMA = "region_name string, kind string"
+
+
+def _inline_table(spark, rows, columns: str):
+    """``rows`` as a literal ``VALUES`` table, like the oracle's dims: a
+    ``LocalTableScan`` broadcasts rows already in JVM memory, where a
+    ``createDataFrame(list)`` RDD is unpickled in a job of its own."""
+    from gclog_parser_spark.oracle import _q
+
+    values = ", ".join("(" + ", ".join(map(_q, r)) + ")" for r in rows)
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({columns})")
 
 
 def collector_family_df(spark):
-    return spark.createDataFrame(
-        COLLECTOR_FAMILY_ROWS, COLLECTOR_FAMILY_SCHEMA
-    )
+    return _inline_table(spark, COLLECTOR_FAMILY_ROWS, "gc_type, family")
 
 
 def heap_region_df(spark):
-    return spark.createDataFrame(HEAP_REGION_ROWS, HEAP_REGION_SCHEMA)
+    return _inline_table(spark, HEAP_REGION_ROWS, "region_name, kind")

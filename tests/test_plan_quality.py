@@ -66,6 +66,49 @@ def test_window_parse_bounded_shuffles(pages):
     assert n_shuffles(plan) == 2
 
 
+def _broadcasts_local_table(plan: str) -> bool:
+    """Every broadcast builds from a ``LocalTableScan`` and no operand
+    is a Python-built RDD (``Scan ExistingRDD``)."""
+    lines = plan.splitlines()
+    builds = [
+        lines[i + 1] for i, l in enumerate(lines) if "BroadcastExchange" in l
+    ]
+    return (
+        bool(builds)
+        and all("LocalTableScan" in b for b in builds)
+        and "ExistingRDD" not in plan
+    )
+
+
+def test_enrich_dims_are_local_tables(pages):
+    """The static dims are inline VALUES tables: broadcasting one reads
+    rows already in JVM memory instead of unpickling an RDD."""
+    from gclog_parser_spark.operators.enrich import explode_region_deltas
+    from gclog_parser_spark.plans.pipeline import build_events
+
+    assert _broadcasts_local_table(plan_of(build_events(pages)))
+    heap = parse_events(pages, mode="heap_stats")
+    assert _broadcasts_local_table(plan_of(explode_region_deltas(heap)))
+
+
+def test_narrow_udf_batch_without_events_keeps_columns():
+    """A batch whose pages hold no event still yields a frame Arrow
+    converts to the UDF schema (empty columns must not infer float64)."""
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from gclog_parser_spark.operators.parse import _UDF_SCHEMA, _parse_pages_fn
+
+    batch = pd.DataFrame(
+        {"url": ["u"], "warc_ts": [0], "gc_text": ["no gc log here"]}
+    )
+    (out,) = _parse_pages_fn(False)(iter([batch]))
+    assert list(out.columns) == _UDF_SCHEMA.names
+    table = pa.Table.from_pandas(out, schema=to_arrow_schema(_UDF_SCHEMA))
+    assert table.num_rows == 0
+
+
 def test_rates_single_window_no_extra_shuffle(pages):
     """Rates = one window over (url, event_idx); adding them to the
     parsed events costs exactly one exchange."""

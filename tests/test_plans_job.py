@@ -89,6 +89,42 @@ def test_ledger_config_mismatch_fails_fast(spark, sf_dir, tmp_path):
     assert summary["chunks_run"] == 0
 
 
+def test_ledger_counts_match_across_stitches(spark, sf_dir, tmp_path):
+    """Each ledger row counts its chunk's extracted pages, parsed events
+    and skipped blocks, and the same chunk records the same row under
+    either stitch."""
+    from gclog_parser_spark.operators.parse import extract_gc_text
+
+    pages = pages_from_documents(spark, sf_dir)
+    cols = ["chunk_id", "pages", "events", "skipped_blocks"]
+    rows = {}
+    for stitch in ("narrow", "window"):
+        base = tmp_path / stitch
+        run_checkpointed(
+            spark, pages, str(base / "events"), str(base / "ledger"),
+            n_chunks=2, stitch=stitch,
+        )
+        led = spark.read.parquet(str(base / "ledger")).select(cols)
+        rows[stitch] = sorted(map(tuple, led.collect()))
+    assert rows["narrow"] == rows["window"]
+
+    def per_chunk(df):
+        counts = with_chunk_id(df, 2).groupBy("chunk_id").count().collect()
+        return {r["chunk_id"]: r["count"] for r in counts}
+
+    want_pages = per_chunk(extract_gc_text(pages))
+    want_events = per_chunk(parse_events(pages))
+    assert [r[:3] for r in rows["window"]] == [
+        (c, want_pages[c], want_events[c]) for c in (0, 1)
+    ]
+    # an input Catalyst knows is empty leaves no observed row: zero pages
+    empty = run_checkpointed(
+        spark, pages.limit(0), str(tmp_path / "e" / "events"),
+        str(tmp_path / "e" / "ledger"), n_chunks=2, stitch="window",
+    )
+    assert (empty["pages"], empty["events"]) == (0, 0)
+
+
 def test_chunk_assignment_deterministic(spark, sf_dir):
     pages = pages_from_documents(spark, sf_dir)
     a = with_chunk_id(pages, 8).groupBy("chunk_id").count().collect()
