@@ -2707,13 +2707,12 @@ def q_emb_rproj(spark, sf_dir):
     proj[j] = Σ_i sign(i,j)·emb[i] with the ±1 matrix a pure md5
     function of (i, j) — never stored, never shipped.  Components
     quantize to integer ticks first so every cross-term is exact
-    int64: the Arrow int-matmul path this query runs, the relational
-    broadcast-join path, and the DuckDB oracle all produce identical
-    bits (operators/similarity.py::srp_project; np≡rel pinned in
-    tests/test_srp.py)."""
+    int64: the Arrow int-matmul scan and the DuckDB oracle's
+    relational sum produce identical bits
+    (operators/similarity.py::srp_project)."""
     from gclog_parser_spark.operators.similarity import srp_project
 
-    return srp_project(_embs(spark, sf_dir), out_dim=16, path="np")
+    return srp_project(_embs(spark, sf_dir), out_dim=16)
 
 
 def q_emb_label_stats(spark, sf_dir):

@@ -121,9 +121,9 @@ def run_bench(cpus: int | None = None, pages_n: int | None = None,
     # --- sf-dir pipeline (driver-comparable, small) ---
     pages_sf = pages_from_documents(spark, sf_dir)
     t("parse_narrow_sf", lambda: parse_events(
-        pages_sf, stitch="narrow", repartition=cpus).count())
+        pages_sf.repartition(cpus, "url"), stitch="narrow").count())
     t("flagship_agg_sf", lambda: len(per_sink_hourly(with_sink(
-        parse_events(pages_sf, stitch="narrow", repartition=cpus)
+        parse_events(pages_sf.repartition(cpus, "url"), stitch="narrow")
     )).collect()))
 
     # --- synthetic corpus (throughput-relevant) ---
@@ -231,13 +231,7 @@ def run_bench(cpus: int | None = None, pages_n: int | None = None,
     # time the steady-state ADC search separately — the one-time vs
     # per-query split a serving deployment cares about
     from gclog_parser_spark.operators.similarity import pq_topk, pq_train
-    # default assigner is the Arrow int64 path (bit-identical to the
-    # literal-argmin expression, pinned in tests/test_pq.py)
     t("pq_train_sf", lambda: len(pq_train(embs, iters=2)), reps=1)
-    # expression-assigner twin kept for the construction-cost story:
-    # its wall is py4j/codegen compile, SF-insensitive, ~9x slower
-    t("pq_train_expr_sf",
-      lambda: len(pq_train(embs, iters=2, assigner="expr")), reps=1)
     _pq_cents = pq_train(embs, iters=2)
     t("pq_adc_topk_sf", lambda: pq_topk(embs, _pq_cents).count())
     t("token_counts_sf", lambda: token_counts(docs)
@@ -330,8 +324,8 @@ def run_bench(cpus: int | None = None, pages_n: int | None = None,
     t("media_neighbors_sf",
       lambda: entry.q_media_neighbors(spark, sf_dir).count())
 
-    # HOF (oracle-parity) vs Arrow/numpy scorer on a corpus large
-    # enough that scan cost dominates — the production ANN scan shape
+    # exact cosine scan on a corpus large enough that scan cost
+    # dominates
     n_embs = int(os.environ.get("SPARK_GRAFT_BENCH_EMBS", "50000"))
     embs_path = f"/tmp/bench_embs_{n_embs}"
     if not os.path.exists(embs_path):
@@ -345,13 +339,9 @@ def run_bench(cpus: int | None = None, pages_n: int | None = None,
         ).write.mode("overwrite").parquet(embs_path)
     embs_big = spark.read.parquet(embs_path)
     t("ann_cosine_hof_50k", lambda: cosine_topk(embs_big).count())
-    t("ann_cosine_np_50k",
-      lambda: cosine_topk(embs_big, scorer="np").count())
 
     # production-width embeddings (512 dims): the HOF expression is
-    # interpreted per element so its cost grows with dimension, while
-    # the numpy scorer's BLAS matvec barely notices — this is the pair
-    # that shows why the np path is the production scan
+    # interpreted per element, so its cost grows with dimension
     n_wide = int(os.environ.get("SPARK_GRAFT_BENCH_EMBS_WIDE", "60000"))
     wide_path = f"/tmp/bench_embs512_{n_wide}"
     if not os.path.exists(wide_path):
@@ -364,13 +354,11 @@ def run_bench(cpus: int | None = None, pages_n: int | None = None,
             F.lit("x").alias("label"),
         ).write.mode("overwrite").parquet(wide_path)
     embs_wide = spark.read.parquet(wide_path)
-    # the HOF side is the documented slow path — one rep is evidence
-    # enough and saves ~13 s of bench wall; the np side keeps min-of-2
+    # one rep: the 512-dim HOF scan is slow, and one rep saves ~13 s
+    # of bench wall
     _timeit(timings, "ann_cosine_hof_512d",
             lambda: cosine_topk(embs_wide).count(), quiet, reps=1,
             steals=steals)
-    t("ann_cosine_np_512d",
-      lambda: cosine_topk(embs_wide, scorer="np").count())
 
     # int8-quantized corpus scan: same 512-dim vectors pre-quantized
     # to array<tinyint> parquet (the one-time materialization), then
@@ -390,39 +378,18 @@ def run_bench(cpus: int | None = None, pages_n: int | None = None,
       lambda: quantized_scan_topk(embs_q).count())
 
     # signed random projection over the wide corpus: the Arrow int64
-    # matmul path (exchange-free scan; bit-identical to the relational
-    # oracle path by integer-tick construction)
+    # matmul (exchange-free scan, exact by integer-tick construction)
     from gclog_parser_spark.operators.similarity import srp_project
     t("srp_np_512d", lambda: srp_project(
-        embs_wide, out_dim=16, in_dim=512, path="np").count())
+        embs_wide, out_dim=16, in_dim=512).count())
 
-    # k-NN graph at production width: every candidate PAIR pays the
-    # per-element scoring cost, so the interpreted HOF fold is the
-    # bottleneck exactly where it hurts most; the Arrow pair-dot
-    # scorer (default) moves it to numpy, bit-identical (pinned in
-    # tests/test_similarity.py).  4k vectors keep the HOF witness
-    # affordable (~64k candidate pairs x 512 dims).
-    # three bit-identical physical paths, slow->fast: the interpreted
-    # HOF pair fold, the Arrow pair scorer on the pair join, and the
-    # default per-bucket Arrow group map (each vector crosses the
-    # exchange once, scalars come back — the 100 TB shape)
+    # k-NN graph at production width over 4k vectors: candidates are
+    # scored per LSH bucket inside the Arrow group map (each vector
+    # crosses the exchange once, scalars come back — the 100 TB shape)
     from gclog_parser_spark.operators.similarity import knn_graph
     knn_wide = embs_wide.where(F.col("vec_id") < 4000)
-    _timeit(timings, "knn_graph_hof_512d",
-            lambda: knn_graph(
-                knn_wide, k=3, scorer="hof", dim=512).count(),
-            quiet, reps=1, steals=steals)
-    t("knn_graph_np_512d",
-      lambda: knn_graph(knn_wide, k=3, scorer="np", dim=512).count())
     t("knn_graph_bucket_512d",
-      lambda: knn_graph(
-          knn_wide, k=3, dim=512, hasher="np").count())
-    # opt-in BLAS Gram lane (tolerance parity, same top-k — pinned in
-    # tests): the bucket group map's per-dim fold replaced by one
-    # m @ m.T call per bucket
-    t("knn_graph_blas_512d",
-      lambda: knn_graph(
-          knn_wide, k=3, dim=512, hasher="np", scorer="blas").count())
+      lambda: knn_graph(knn_wide, k=3, dim=512).count())
 
     # runtime Bloom-filter join reduction vs the plain merge join on
     # the same fact⋈filtered-build query — the reduction a 100 TB run
@@ -899,7 +866,7 @@ def _compact_summary(result: dict) -> dict:
         "parse_narrow", "parse_window", "parse_heap", "flagship_agg",
         "rates", "dedup_minhash_sf", "dedup_clusters_sf",
         "prefix_jaccard_sf", "pq_train_sf", "pq_adc_topk_sf",
-        "knn_graph_bucket_512d", "ann_cosine_np_512d", "pagerank_sf",
+        "knn_graph_bucket_512d", "ann_cosine_hof_512d", "pagerank_sf",
     ]
     sc = result.get("scaling") or {}
     sec = sc.get("secondary_4v16") or {}

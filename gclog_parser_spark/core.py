@@ -101,11 +101,8 @@ _G1_TAG_RE = re.compile(
 # by '[ISO-8601 time]'.  Body: 'GC(n) Pause Young (Normal) (G1
 # Evacuation Pause) 24M->4M(256M) 3.523ms' / 'GC(n) Concurrent Mark
 # Cycle' etc.
-UNIFIED_TS_PAT = (
-    r"\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\.\d{3}[+-]\d{4}"
-)
 UNIFIED_START_RE = re.compile(
-    rf"^(?:\[({UNIFIED_TS_PAT})\])?\[(\d+\.\d+)s\](?:\[[^\]]+\])*"
+    rf"^(?:\[({TS_PAT})\])?\[(\d+\.\d+)s\](?:\[[^\]]+\])*"
     rf"\[gc((?:,[a-z]+)*)\] +GC\(\d+\) "
 )
 #: unified tag sets that ARE events: the [gc] summary line and the
@@ -149,8 +146,8 @@ _METASPACE_RE = re.compile(
 )
 _HEAP_HDR_RE = re.compile(r"^\{?Heap (before|after)")
 
-# Line-classification anchors (used by split_blocks here and mirrored by the
-# columnar classifier in operators/parse.py).
+# Line-classification anchors (used by split_blocks here; their patterns
+# are also the window stitch's Spark rlike predicates in operators/parse.py).
 GC_START_RE = re.compile(rf"^(?:{TS_PAT}: )?{AGE_PAT}: \[")
 APPSTOP_START_RE = re.compile(
     rf"^(?:{TS_PAT}: )?{AGE_PAT}: Total time for which application threads "
@@ -632,8 +629,8 @@ _CANDIDATE_FIRST = frozenset("0123456789D-: [{H}")
 def classify_line(line: str, heap_stats: bool) -> str:
     """'start' | 'open' (heap-block open) | 'close' | 'cont' | 'filler'.
 
-    The same predicate set runs columnar (native Spark regexp) in
-    operators/parse.py; keep the two in lockstep.  The first-char gate
+    The window stitch in operators/parse.py runs the same regex
+    patterns columnar (native Spark rlike).  The first-char gate
     skips the regex battery for web filler (the overwhelming majority
     of lines at the Common-Crawl design point).
     """

@@ -10,6 +10,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from gclog_parser_spark import core
 from gclog_parser_spark.schema import collector_family_df, heap_region_df
 
 
@@ -70,13 +71,6 @@ def enrich_collector_family(events: DataFrame) -> DataFrame:
     return joined.withColumn("family", family)
 
 
-#: Spark-side mirror of core.UNIFIED_HEAP_LINE_RE (Java regex)
-_UNIFIED_HEAP_LINE = (
-    r"^(?:\[[^\]]*\])*\[gc,heap\] GC\((\d+)\)"
-    r" ([A-Za-z]+) regions: (\d+)->(\d+)(?:\((\d+)\))?\s*$"
-)
-
-
 def unified_region_deltas(pages: DataFrame) -> DataFrame:
     """JDK 9+ unified-logging heap-region transitions
     (``-Xlog:gc+heap=info`` — core.parse_unified_heap_line): one row per
@@ -94,24 +88,23 @@ def unified_region_deltas(pages: DataFrame) -> DataFrame:
         "url",
         F.posexplode(F.split("text", "\n")).alias("line_no", "line"),
     )
-    m = lines.where(F.col("line").rlike(_UNIFIED_HEAP_LINE)).select(
+    pat = core.UNIFIED_HEAP_LINE_RE.pattern  # valid Java regex as written
+    m = lines.where(F.col("line").rlike(pat)).select(
         "url",
         "line_no",
-        F.regexp_extract("line", _UNIFIED_HEAP_LINE, 1)
+        F.regexp_extract("line", pat, 1)
         .cast("int")
         .alias("block_idx"),
-        F.regexp_extract("line", _UNIFIED_HEAP_LINE, 2).alias(
-            "region_name"
-        ),
-        F.regexp_extract("line", _UNIFIED_HEAP_LINE, 3)
+        F.regexp_extract("line", pat, 2).alias("region_name"),
+        F.regexp_extract("line", pat, 3)
         .cast("int")
         .alias("regions_before"),
-        F.regexp_extract("line", _UNIFIED_HEAP_LINE, 4)
+        F.regexp_extract("line", pat, 4)
         .cast("int")
         .alias("regions_after"),
         F.when(
-            F.regexp_extract("line", _UNIFIED_HEAP_LINE, 5) != "",
-            F.regexp_extract("line", _UNIFIED_HEAP_LINE, 5).cast("int"),
+            F.regexp_extract("line", pat, 5) != "",
+            F.regexp_extract("line", pat, 5).cast("int"),
         ).alias("target_regions"),
     )
     w = Window.partitionBy("url", "block_idx").orderBy("line_no")

@@ -524,10 +524,12 @@ def kcore(
     more than the input; the surviving edge set only shrinks, so later
     rounds are cheaper.  Convergence is detected with an O(1) driver
     count (edge count is strictly monotone down until the fixpoint);
-    each round ``localCheckpoint``-truncates lineage.  Round count is
-    bounded by the peeling depth (the graph's degeneracy ordering
-    length), in practice a handful; ``max_rounds`` is the same loud
-    backstop as ``dedup.connected_components``.
+    each round ``localCheckpoint``-truncates lineage.  Peeling depth
+    (the rounds that remove edges) is in practice a handful; the
+    fixpoint costs one more round to confirm.  ``max_rounds`` bounds
+    the peeling depth and is the same loud backstop as
+    ``dedup.connected_components``; ``stats["rounds"]`` counts every
+    round run, the confirming one included.
     """
     if k < 1:
         raise ValueError("kcore requires k >= 1")
@@ -543,7 +545,9 @@ def kcore(
         raise ValueError("kcore over an empty edge set")
     rounds = 0
     n_edges = und.count()
-    for _ in range(max_rounds):
+    # max_rounds bounds the rounds that peel; one more may be needed to
+    # see that nothing is left to peel
+    for _ in range(max_rounds + 1):
         alive = (
             und.groupBy("a")
             .agg(F.count("*").alias("deg"))
@@ -608,7 +612,8 @@ def coreness(
     hubs swap the array form for the windowed running-count form).
     Convergence is an O(1) driver check: values only ever decrease, so
     a stable BIGINT sum means a stable vector.  ``localCheckpoint``
-    truncates lineage per round; ``max_rounds`` is the loud backstop.
+    truncates lineage per round; ``max_rounds`` is the loud backstop
+    on the rounds that change a value (one more confirms the fixpoint).
     """
     d = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
@@ -623,9 +628,10 @@ def coreness(
     h = und.groupBy(F.col("a").alias("node")).agg(
         F.count("*").cast("long").alias("h")
     )
-    prev_sum = None
+    prev_sum = h.agg(F.sum("h")).first()[0]
     rounds = 0
-    for _ in range(max_rounds):
+    # as in kcore, max_rounds bounds the rounds that change a value
+    for _ in range(max_rounds + 1):
         nb = und.join(
             h.select(F.col("node").alias("b"), F.col("h").alias("hb")),
             "b",

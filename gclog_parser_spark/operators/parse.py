@@ -55,26 +55,6 @@ _UDF_SCHEMA = T.StructType(
     ]
 )
 
-# Native-Spark (Java regex) versions of the core classifier anchors — keep
-# in lockstep with core.classify_line.
-_TS = r"\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\.\d{3}[+-]\d{4}"
-_AGE = r"\d+\.\d+"
-GC_START_RLIKE = rf"^(?:{_TS}: )?{_AGE}: \["
-APPSTOP_START_RLIKE = (
-    rf"^(?:{_TS}: )?{_AGE}: Total time for which application threads "
-    rf"were stopped: {_AGE} seconds, Stopping threads took:"
-)
-CONT_RLIKE = (
-    r"^(?:Desired survivor size \d+ bytes,|- age |: \d+[KMG]->"
-    r"| ?\[[A-Za-z0-9 \-]+: )"
-)
-# JDK 9+ unified logging start (core.UNIFIED_START_RE's Java-regex twin)
-UNIFIED_START_RLIKE = (
-    rf"^(?:\[{_TS}\])?\[\d+\.\d+s\](?:\[[^\]]+\])*"
-    rf"\[gc(?:,[a-z]+)*\] +GC\(\d+\) "
-)
-
-
 def extract_gc_text(
     pages: DataFrame, text_col: str = "text", require_marker: bool = True
 ) -> DataFrame:
@@ -278,37 +258,51 @@ def _parse_blocks_fn(heap_stats: bool, counters=None):
     return fn
 
 
-def _parse_window(src: DataFrame, heap_stats: bool, counters) -> DataFrame:
-    line = F.col("line")
-    lines = src.select(
-        "url",
-        "warc_ts",
-        F.posexplode(F.split("gc_text", "\n")).alias("line_no", "line"),
-    )
+def _line_flags(line, heap_stats: bool):
+    """(is_start, is_cont, is_open, is_close) Columns for one log
+    line: ``core.classify_line`` as native Spark predicates (pinned
+    against it on every fixture line in tests/test_spark_parse.py)."""
     # ONE alternation regex for all three start shapes: each extra
     # rlike is a full regex-engine pass over every one of the ~70
     # lines/page, and the flags are needed twice (filter + carried
     # column) — computing them once in a projection, then filtering on
     # the materialized flags, keeps it to 2 regex passes per line
-    start_any = (
-        f"(?:{GC_START_RLIKE})|(?:{APPSTOP_START_RLIKE})"
-        f"|(?:{UNIFIED_START_RLIKE})"
+    # (core's classifier patterns are valid Java regex as written;
+    # rlike ignores UNIFIED_START_RE's capture groups)
+    start_any = "|".join(
+        f"(?:{r.pattern})"
+        for r in (
+            core.GC_START_RE, core.APPSTOP_START_RE, core.UNIFIED_START_RE
+        )
     )
     is_start = line.rlike(start_any)
-    is_cont = line.rlike(CONT_RLIKE)
-    if heap_stats:
-        is_open = line.startswith("{Heap before")
-        is_close = F.rtrim(line) == "}"
-        # region lines are space-prefixed; the bare 'Heap after ...'
-        # header must survive the pre-shuffle filter too
-        is_cont = (
-            is_cont
-            | line.startswith(" ")
-            | line.rlike(r"^\{?Heap (before|after)")
-        )
-    else:
-        is_open = F.lit(False)
-        is_close = F.lit(False)
+    is_cont = line.rlike(core.CONTINUATION_RE.pattern)
+    if not heap_stats:
+        return is_start, is_cont, F.lit(False), F.lit(False)
+    # region lines are space-prefixed; the bare 'Heap after ...'
+    # header must survive the pre-shuffle filter too
+    is_cont = (
+        is_cont
+        | line.startswith(" ")
+        | line.rlike(r"^\{?Heap (before|after)")
+    )
+    return (
+        is_start,
+        is_cont,
+        line.startswith("{Heap before"),
+        F.rtrim(line) == "}",
+    )
+
+
+def _parse_window(src: DataFrame, heap_stats: bool, counters) -> DataFrame:
+    lines = src.select(
+        "url",
+        "warc_ts",
+        F.posexplode(F.split("gc_text", "\n")).alias("line_no", "line"),
+    )
+    is_start, is_cont, is_open, is_close = _line_flags(
+        F.col("line"), heap_stats
+    )
 
     # Filler is dropped HERE, map-side, before the one shuffle: the
     # exchange carries only GC-candidate lines.
@@ -382,7 +376,6 @@ def parse_events(
     pages: DataFrame,
     mode: str = "gc_line",
     stitch: str = "narrow",
-    repartition: int | None = None,
     require_marker: bool = True,
     counters=None,
 ) -> DataFrame:
@@ -390,13 +383,6 @@ def parse_events(
     ``parseWithHeapStats``, Parser.scala:119-132; JavaParser.java:7-11).
 
     mode: 'gc_line' | 'heap_stats'; stitch: 'narrow' | 'window'.
-
-    ``repartition``: explicit url-hash repartition before the parse (the
-    north rule's 'explicit repartitioning on url-hash').  Use when the
-    upstream scan is unbalanced — e.g. few large input files, or a skewed
-    producer; at the 100 TB design point a well-bucketed Iceberg scan
-    makes this unnecessary for the narrow path, while the window path
-    re-clusters on url anyway.
 
     ``counters`` (a ``PipelineMetrics``): ``pages`` is an
     ``Observation`` of the extract output, ``events``/``skipped_blocks``
@@ -411,42 +397,9 @@ def parse_events(
         parse = _parse_window
     else:
         raise ValueError(f"unknown stitch {stitch!r}")
-    if repartition:
-        pages = pages.repartition(repartition, "url")
     src = extract_gc_text(pages, require_marker=require_marker)
     if counters is not None:
         src = src.observe(counters.pages, F.count(F.lit(1)).alias("pages"))
         # the UDFs ship only the (picklable) accumulators
         counters = (counters.events, counters.skipped_blocks)
     return parse(src, mode == "heap_stats", counters)
-
-
-# ---------------------------------------------------------------------------
-# UDTF lane
-# ---------------------------------------------------------------------------
-
-def register_block_udtf(spark, name: str = "split_gc_blocks"):
-    """The block splitter as a Python UDTF (Spark 4's table-function
-    extension point — the fourth Python lane in this repo after the
-    DataSource, ``mapInPandas``, and ``applyInPandasWithState``):
-    ``SELECT s.* FROM pages p, LATERAL split_gc_blocks(p.url, p.text) s``
-    gives ad-hoc SQL users the line-grouped GC blocks without the
-    DataFrame API.  Emits exactly the (line_no, block) stream the
-    narrow parse consumes (pinned in tests/test_udtf.py), so
-    ``parse_gc_line`` over the UDTF output is a third physical parse
-    strategy.  Scale shape: per-row generator, no shuffle — identical
-    distribution behavior to the mapInPandas path, minus Arrow
-    batching (the UDTF protocol is row-oriented, so the DataFrame
-    paths stay the production default)."""
-    from pyspark.sql.functions import udtf
-
-    from gclog_parser_spark import core
-
-    @udtf(returnType="line_no int, block string")
-    class SplitBlocks:
-        def eval(self, url, text):
-            for line_no, block in core.split_blocks_pos(text, False):
-                yield line_no, block
-
-    spark.udtf.register(name, SplitBlocks)
-    return SplitBlocks

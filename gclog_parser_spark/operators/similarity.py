@@ -69,40 +69,11 @@ def _cos_sim(a, b):
     )
 
 
-def _cos_sim_np(q_vec):
-    """Arrow-vectorized twin of ``_cos_sim`` against a FIXED query
-    vector: one BLAS matrix-vector product per Arrow batch instead of
-    a per-element HOF evaluation.  Measured (pinned, min-of-3): ~par
-    with the JVM expression at 64 dims (Arrow transfer ≈ HOF cost),
-    ~1.5× faster at 512 dims and widening with dimension — use it for
-    wide production embeddings; the HOF expression stays as the
-    DuckDB-bit-parity oracle path.  Same contract: double math,
-    round(6), NULL on zero norms."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    q = np.asarray(q_vec, dtype=np.float64)
-    qnorm = float(np.sqrt((q * q).sum()))
-
-    def _sim(col):
-        if len(col) == 0:
-            return pd.Series([], dtype="float64")
-        m = np.stack(col.to_numpy()).astype(np.float64, copy=False)
-        denom = np.sqrt((m * m).sum(axis=1)) * qnorm
-        out = np.full(len(col), np.nan)
-        ok = denom != 0
-        out[ok] = np.round(m[ok] @ q / denom[ok], 6)
-        return pd.Series(out)  # NaN → NULL through Arrow
-
-    return pandas_udf(_sim, "double")
-
-
 def _bucket_pairs_pd():
-    """Per-BUCKET candidate scorer for ``knn_graph(scorer='bucket')``:
+    """Per-BUCKET candidate scorer for ``knn_graph``/``neardup_pairs``:
     an ``applyInPandas`` group map that receives one LSH bucket's
     vectors and emits every ordered candidate pair's (dot, norm-a,
-    norm-b) SCALARS.  Two wins over the pair-join shapes:
+    norm-b) SCALARS.  Unlike a bucket self-join:
 
     * the exchange carries each vector ONCE (corpus-sized), not once
       per candidate pair — at b vectors/bucket that is a b× cut in
@@ -151,120 +122,49 @@ def _bucket_pairs_pd():
     return _pairs
 
 
-def _bucket_pairs_blas_pd():
-    """BLAS-native twin of ``_bucket_pairs_pd`` (round-5 opt-in lane
-    ``scorer='blas'``): the bucket Gram matrix as ONE ``m @ m.T``
-    dsyrk/dgemm call instead of the per-dimension rank-1-update fold,
-    and norms via a single einsum.  BLAS accumulates dot products in
-    hardware-dependent order (blocked, often FMA), so this lane is
-    TOLERANCE-parity, not bit-parity: |Δdot| is bounded by standard
-    float-summation error (observed ≪1e-9 on unit-scale embeddings —
-    pinned in tests/test_similarity_scale.py), and the top-k is
-    identical on the validated corpora.  The fold path stays the
-    default/oracle witness; reach for this lane when the per-bucket
-    pair count × dims dominates and exact cross-engine bits are not
-    required.  Same memory shape: O(bucket²) doubles, LSH-occupancy
-    bounded."""
-    import numpy as np
-    import pandas as pd
+def _bucket_pair_sims(base: DataFrame, key: str) -> DataFrame:
+    """(src, dst, sim) for every ordered pair of distinct vectors of
+    ``base`` (vec_id, embedding, ``key``) that share a ``key`` value,
+    scored in the `_bucket_pairs_pd` group map; division and round(6)
+    stay JVM-side, NULL on a zero norm as in ``_cos_sim``.
 
-    def _pairs(pdf):
-        empty = pd.DataFrame(
-            {"src": pd.Series([], dtype="int64"),
-             "dst": pd.Series([], dtype="int64"),
-             "dot": pd.Series([], dtype="float64"),
-             "na": pd.Series([], dtype="float64"),
-             "nb": pd.Series([], dtype="float64")}
+    NULL keys (dim-mismatched / NaN-bearing vectors under the
+    fail-EMPTY ``lsh_buckets`` rule) are dropped BEFORE the group map:
+    groupBy keeps NULL as one group, so every degenerate vector would
+    collapse into a single O(n²) candidate group — exactly the blow-up
+    fail-EMPTY exists to prevent."""
+    pairs = (
+        base.where(F.col(key).isNotNull())
+        .groupBy(key)
+        .applyInPandas(
+            _bucket_pairs_pd(),
+            "src long, dst long, dot double, na double, nb double",
         )
-        n = len(pdf)
-        if n < 2:
-            return empty
-        ids = pdf["vec_id"].to_numpy()
-        m = np.stack(pdf["embedding"].to_numpy()).astype(
-            np.float64, copy=False
-        )
-        dots = m @ m.T  # one BLAS call — the whole bucket Gram matrix
-        nrm = np.sqrt(np.einsum("ij,ij->i", m, m))
-        src, dst = np.nonzero(~np.eye(n, dtype=bool))
-        return pd.DataFrame(
-            {"src": ids[src], "dst": ids[dst],
-             "dot": dots[src, dst], "na": nrm[src], "nb": nrm[dst]}
-        )
-
-    return _pairs
-
-
-def _pair_dot_np():
-    """Arrow-vectorized per-PAIR dot product over two array columns —
-    the candidate-scoring twin of ``_cos_sim_np`` for joins where both
-    sides vary (knn_graph, neardup_pairs).  Accumulates in the SAME
-    left-fold element order as the ``_dot`` HOF (one vectorized double
-    add per dimension across the batch), so the sum is BIT-IDENTICAL
-    to the interpreted expression: this is a batch-transfer
-    optimization, not a float reordering.  The division and round(6)
-    stay JVM-side at the call site, identical to the HOF path.
-    Measured on the 512-dim corpus (pinned): the HOF per-pair fold is
-    the dominant cost of knn_graph (BENCH_r03 ann_cosine HOF 14.6 s vs
-    np 2.2 s on the same corpus); this moves that work to numpy."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _dotf(a, b):
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        ma = np.stack(a.to_numpy()).astype(np.float64, copy=False)
-        mb = np.stack(b.to_numpy()).astype(np.float64, copy=False)
-        acc = np.zeros(len(a), dtype=np.float64)
-        for j in range(ma.shape[1]):
-            acc = acc + ma[:, j] * mb[:, j]
-        return pd.Series(acc)
-
-    return pandas_udf(_dotf, "double")
-
-
-def _query_vec(emb: DataFrame, query_vec_id: int):
-    """The single query embedding, driver-side (one tiny lookup job —
-    the production shape for a small query set is exactly this: pull
-    the queries, close over them in the vectorized scorer, scan the
-    corpus once)."""
-    row = emb.where(F.col("vec_id") == query_vec_id).select(
-        "embedding"
-    ).head()
-    if row is None:
-        raise ValueError(f"query vec_id {query_vec_id} not found")
-    return list(row["embedding"])
+    )
+    denom = F.col("na") * F.col("nb")
+    return pairs.select(
+        "src",
+        "dst",
+        F.when(denom != 0, F.round(F.col("dot") / denom, 6)).alias("sim"),
+    )
 
 
 def cosine_topk(
     emb: DataFrame,
     query_vec_id: int = 0,
     k: int = 10,
-    scorer: str = "hof",
 ) -> DataFrame:
     """Exact top-k by cosine similarity to the embedding of
     ``query_vec_id`` (excluded from results).  Deterministic ordering:
-    (rounded sim desc, vec_id asc).
-
-    ``scorer='np'`` swaps the interpreted HOF dot product for the
-    Arrow/numpy batch scorer (``_cos_sim_np``) — the production
-    corpus-scan path; the default 'hof' expression stays bit-parity
-    with the DuckDB oracle."""
+    (rounded sim desc, vec_id asc)."""
     corpus = emb.where(F.col("vec_id") != query_vec_id)
-    if scorer == "np":
-        q_vec = _query_vec(emb, query_vec_id)
-        scored = corpus.select(
-            "vec_id",
-            _cos_sim_np(q_vec)(F.col("embedding")).alias("sim"),
-        )
-    else:
-        q = emb.where(F.col("vec_id") == query_vec_id).select(
-            F.col("embedding").alias("q")
-        )
-        scored = corpus.crossJoin(F.broadcast(q)).select(
-            "vec_id",
-            _cos_sim(F.col("embedding"), F.col("q")).alias("sim"),
-        )
+    q = emb.where(F.col("vec_id") == query_vec_id).select(
+        F.col("embedding").alias("q")
+    )
+    scored = corpus.crossJoin(F.broadcast(q)).select(
+        "vec_id",
+        _cos_sim(F.col("embedding"), F.col("q")).alias("sim"),
+    )
     return (
         scored.orderBy(F.desc("sim"), F.asc("vec_id"))
         .limit(k)
@@ -272,43 +172,8 @@ def cosine_topk(
     )
 
 
-def _lsh_bucket_np(planes):
-    """Arrow twin of the expression bucket hasher: per batch, each
-    plane's dot product replays the HOF left-fold element order in
-    IEEE doubles (one vectorized add per dimension), so sign bits —
-    and therefore buckets — are BIT-IDENTICAL to the expression path
-    on corpora with finite, width-consistent embeddings (gate with
-    ``quality.embedding_checks`` first).  Degenerate inputs diverge
-    deliberately: a ragged batch raises (fail-LOUD, vs the expression
-    path's fail-empty) and NaN components hash to '0' bits (Arrow
-    cannot distinguish NULL from NaN elements)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    P = [np.asarray(p, dtype=np.float64) for p in planes]
-
-    def _b(col):
-        if len(col) == 0:
-            return pd.Series([], dtype=object)
-        m = np.stack(col.to_numpy()).astype(np.float64, copy=False)
-        outs = []
-        for p in P:
-            acc = np.zeros(len(col), dtype=np.float64)
-            for j in range(m.shape[1]):
-                acc = acc + m[:, j] * p[j]
-            outs.append(np.where(acc >= 0, "1", "0"))
-        buckets = outs[0]
-        for o in outs[1:]:
-            buckets = np.char.add(buckets, o)
-        return pd.Series(buckets)
-
-    return pandas_udf(_b, "string")
-
-
 def lsh_buckets(
-    emb: DataFrame, seed: int = 42, dim: int = EMB_DIM,
-    hasher: str = "expr",
+    emb: DataFrame, seed: int = 42, dim: int = EMB_DIM
 ) -> DataFrame:
     """(vec_id, bucket) — bucket = sign-bit string of the hyperplane
     dot products.  ``dim`` MUST match the embedding width: a mismatch
@@ -317,22 +182,7 @@ def lsh_buckets(
     equi-join drops the row (fail-EMPTY).  The old ``otherwise("0")``
     rule instead collapsed every mismatched vector into one bucket —
     a silent O(n²) candidate blow-up, the worst possible failure mode
-    at 10^9 vectors.
-
-    ``hasher="np"`` swaps the interpreted per-plane HOF folds for the
-    Arrow batch twin (`_lsh_bucket_np`) — bit-identical buckets on
-    validated corpora (pinned), and the dominant cost of bucketing at
-    production dimensionality (n_planes · dim interpreted ops per
-    vector otherwise).  The expression path stays the default because
-    it is the oracle-parity witness and degrades more gracefully on
-    pathological inputs (see `_lsh_bucket_np`)."""
-    if hasher == "np":
-        planes = plane_components(dim=dim, seed=seed)
-        return emb.select(
-            "vec_id",
-            "embedding",
-            _lsh_bucket_np(planes)(F.col("embedding")).alias("bucket"),
-        )
+    at 10^9 vectors."""
     planes = plane_components(dim=dim, seed=seed)
     bits = []
     for p in planes:
@@ -351,12 +201,9 @@ def lsh_bucket_topk(
     query_vec_id: int = 0,
     k: int = 5,
     seed: int = 42,
-    scorer: str = "hof",
 ) -> DataFrame:
     """Approximate top-k: exact cosine, but only within the query's LSH
-    bucket — the candidate set an IVF/LSH index would scan.
-    ``scorer='np'`` uses the Arrow/numpy batch scorer on the candidate
-    scan (see ``cosine_topk``)."""
+    bucket — the candidate set an IVF/LSH index would scan."""
     b = lsh_buckets(emb, seed)
     q = b.where(F.col("vec_id") == query_vec_id).select(
         F.col("bucket").alias("qbucket"),
@@ -365,17 +212,10 @@ def lsh_bucket_topk(
     cand = b.join(
         F.broadcast(q), F.col("bucket") == F.col("qbucket")
     ).where(F.col("vec_id") != query_vec_id)
-    if scorer == "np":
-        q_vec = _query_vec(emb, query_vec_id)
-        scored = cand.select(
-            "vec_id",
-            _cos_sim_np(q_vec)(F.col("embedding")).alias("sim"),
-        )
-    else:
-        scored = cand.select(
-            "vec_id",
-            _cos_sim(F.col("embedding"), F.col("q")).alias("sim"),
-        )
+    scored = cand.select(
+        "vec_id",
+        _cos_sim(F.col("embedding"), F.col("q")).alias("sim"),
+    )
     return (
         scored.orderBy(F.desc("sim"), F.asc("vec_id"))
         .limit(k)
@@ -531,7 +371,6 @@ def ivf_topk(
     k: int = 5,
     n_probe: int = 2,
     seed: int = 7,
-    scorer: str = "hof",
     cents=None,
 ) -> DataFrame:
     """IVF approximate top-k: exact cosine, but only within the
@@ -539,26 +378,17 @@ def ivf_topk(
     the inverted-file candidate set.  Candidate generation is an
     equi-join on the cell id (shuffle ∝ corpus, never ∝ pairs); at
     scale the cells are partition-pruned instead of joined.
-    ``scorer='np'`` uses the Arrow/numpy batch scorer on the candidate
-    scan (see ``cosine_topk``); ``cents`` swaps in trained centroids
-    (``ivf_train``)."""
+    ``cents`` swaps in trained centroids (``ivf_train``)."""
     cents = cents if cents is not None else centroid_components(seed=seed)
     assigned = ivf_assign(emb, cents=cents)
     probes = _query_probes(emb, query_vec_id, cents, n_probe)
     cand = assigned.join(F.broadcast(probes), "cell").where(
         F.col("vec_id") != query_vec_id
     )
-    if scorer == "np":
-        q_vec = _query_vec(emb, query_vec_id)
-        scored = cand.select(
-            "vec_id",
-            _cos_sim_np(q_vec)(F.col("embedding")).alias("sim"),
-        )
-    else:
-        scored = cand.select(
-            "vec_id",
-            _cos_sim(F.col("embedding"), F.col("q")).alias("sim"),
-        )
+    scored = cand.select(
+        "vec_id",
+        _cos_sim(F.col("embedding"), F.col("q")).alias("sim"),
+    )
     return (
         scored.orderBy(F.desc("sim"), F.asc("vec_id"))
         .limit(k)
@@ -571,9 +401,7 @@ def neardup_pairs(
     threshold: float = 0.9,
     block_col: str | None = None,
     seed: int = 42,
-    scorer: str = "bucket",
     dim: int = EMB_DIM,
-    hasher: str = "expr",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs within a blocking key.
 
@@ -587,80 +415,26 @@ def neardup_pairs(
     ``block_col`` to block on an explicit attribute instead (small,
     trusted cardinality-per-value only).
 
-    ``scorer="bucket"`` (default) groups by the block key and scores
-    all in-block pairs inside the Arrow group map
+    Pairs are scored per block inside the Arrow group map
     (`_bucket_pairs_pd`): each vector crosses the exchange once, only
-    scalar rows come back, rank-1-update left folds keep bit-parity
-    with the expression path.  ``"np"`` keeps the pair join but
-    hoists norms per VECTOR and computes the per-pair dot with the
-    Arrow batch twin (`_pair_dot_np`); division and round(6) stay
-    JVM-side.  ``"hof"`` is the pure expression the DuckDB oracle
-    mirrors.  Those three are bit-identical on any corpus (NULL
-    buckets excluded on every path); ``"blas"`` is the opt-in
-    one-``m @ m.T`` Gram lane — tolerance parity (|Δsim| ≪ 1e-9,
-    pinned), for when pair-count × dims dominates and exact
-    cross-engine bits are not required."""
+    scalar rows come back, and the rank-1-update left folds keep the
+    sums bit-identical to the ``_cos_sim`` expression the DuckDB
+    oracle mirrors; division and round(6) stay JVM-side."""
     if block_col is None:
-        base = lsh_buckets(emb, seed, dim=dim, hasher=hasher).select(
+        base = lsh_buckets(emb, seed, dim=dim).select(
             "vec_id", "embedding", F.col("bucket").alias("block")
         )
     else:
         base = emb.select(
             "vec_id", "embedding", F.col(block_col).alias("block")
         )
-    if scorer in ("bucket", "blas"):
-        # NULL blocks (dim-mismatched / NaN-bearing vectors under the
-        # fail-EMPTY lsh_buckets rule) must be dropped BEFORE the group
-        # map: groupBy keeps NULL as one group, so every degenerate
-        # vector would collapse into a single O(n²) candidate group —
-        # exactly the blow-up fail-EMPTY exists to prevent.  The
-        # equi-join scorers drop NULL keys implicitly; this restores
-        # fail-empty parity for the Arrow path.
-        fn = (
-            _bucket_pairs_blas_pd()
-            if scorer == "blas"
-            else _bucket_pairs_pd()
-        )
-        pairs = (
-            base.where(F.col("block").isNotNull())
-            .groupBy("block")
-            .applyInPandas(
-                fn,
-                "src long, dst long, dot double, na double, nb double",
-            )
-        )
-        denom = F.col("na") * F.col("nb")
-        return (
-            pairs.where(F.col("src") < F.col("dst"))
-            .select(
-                F.col("src").alias("vec_a"),
-                F.col("dst").alias("vec_b"),
-                F.when(
-                    denom != 0, F.round(F.col("dot") / denom, 6)
-                ).alias("sim"),
-            )
-            .where(F.col("sim") >= threshold)
-        )
-    if scorer == "np":
-        base = base.withColumn("_nrm", _norm(F.col("embedding")))
-    a = base.alias("a")
-    b = base.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.block") == F.col("b.block"))
-        & (F.col("a.vec_id") < F.col("b.vec_id")),
-    )
-    if scorer == "np":
-        denom = F.col("a._nrm") * F.col("b._nrm")
-        dot = _pair_dot_np()(F.col("a.embedding"), F.col("b.embedding"))
-        sim = F.when(denom != 0, F.round(dot / denom, 6))
-    else:
-        sim = _cos_sim(F.col("a.embedding"), F.col("b.embedding"))
     return (
-        pairs.select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            sim.alias("sim"),
+        _bucket_pair_sims(base, "block")
+        .where(F.col("src") < F.col("dst"))
+        .select(
+            F.col("src").alias("vec_a"),
+            F.col("dst").alias("vec_b"),
+            "sim",
         )
         .where(F.col("sim") >= threshold)
     )
@@ -1055,22 +829,10 @@ def _srp_sign(i: int, j: int) -> int:
     return 1 if h in "02468ace" else -1
 
 
-def srp_sign_df(spark, in_dim: int, out_dim: int) -> DataFrame:
-    """The sign matrix as a (i, j, s) relation — in_dim×out_dim rows
-    (64×16 = 1 024 by default), broadcast-sized by construction."""
-    rows = [
-        (i, j, _srp_sign(i, j))
-        for i in range(in_dim)
-        for j in range(out_dim)
-    ]
-    return spark.createDataFrame(rows, "i int, j int, s int")
-
-
 def srp_project(
     emb: DataFrame,
     out_dim: int = 16,
     in_dim: int = EMB_DIM,
-    path: str = "rel",
 ) -> DataFrame:
     """Signed random projection (Achlioptas/JL): ``proj[j] = Σ_i
     sign(i,j)·emb[i]`` — the dimensionality-reduction front end of
@@ -1078,42 +840,16 @@ def srp_project(
     needs a stored matrix; the sign matrix is a hash).
 
     Determinism discipline: components quantize to ``SRP_TICKS`` ticks
-    first (F.round = DuckDB round, HALF_UP), then every cross-term is
-    INTEGER — both the relational path and the numpy path compute the
-    exact same int64s, and float accumulation order cannot disagree
-    with the oracle.  Output is long-form ``(vec_id, j, pt)`` —
-    out_dim rows per vector of exact BIGINT projection ticks.
+    first (HALF_UP, exactly F.round = DuckDB round), then every
+    cross-term is INTEGER — the int64 matmul is exact, so float
+    accumulation order cannot disagree with the oracle.  Output is
+    long-form ``(vec_id, j, pt)`` — out_dim rows per vector of exact
+    BIGINT projection ticks.
 
-    Two physical paths, bit-identical:
-
-    * ``path='rel'`` — posexplode → broadcast-join the (i,j,s) sign
-      relation → partial-aggregated sum.  One exchange carrying
-      out_dim rows per vector (the 64×out_dim multiply fan-out
-      collapses map-side).
-    * ``path='np'`` — ticks computed JVM-side (same F.round), then one
-      Arrow batch int64 matmul per partition (``mapInPandas``), no
-      join, no explode; the exchange-free scan shape a 100 TB re-embed
-      job wants.  Integer matmul is exact, so 'np' ≡ 'rel' bit-for-bit
-      (pinned in tests), unlike the float cosine scorers where the HOF
-      fold is kept for oracle parity.
+    Plan: one Arrow batch int64 matmul per partition (``mapInPandas``),
+    no join, no explode, no exchange — the scan shape a 100 TB
+    re-embed job wants.
     """
-    ticks = F.transform(
-        F.col("embedding"),
-        lambda x: F.round(x.cast("double") * SRP_TICKS).cast("long"),
-    )
-    if path == "rel":
-        t = emb.select(
-            "vec_id", F.posexplode(ticks).alias("i", "tick")
-        )
-        sgn = srp_sign_df(emb.sparkSession, in_dim, out_dim)
-        return (
-            t.join(F.broadcast(sgn), "i")
-            .groupBy("vec_id", "j")
-            .agg(F.sum(F.col("s") * F.col("tick")).alias("pt"))
-        )
-    if path != "np":
-        raise ValueError(f"unknown path {path!r}")
-
     import numpy as np
 
     S = np.array(
@@ -1279,7 +1015,6 @@ def pq_train(
     m_sub: int = PQ_M,
     ks: int = PQ_KS,
     dim: int = EMB_DIM,
-    assigner: str = "np",
 ) -> list[list[list[int]]]:
     """Product-quantization codebooks (Jégou et al., "Product
     Quantization for Nearest Neighbor Search", TPAMI 2011): an
@@ -1292,31 +1027,19 @@ def pq_train(
     member sums (exact BIGINT, order-free), and the rounded tick means
     are bit-identical across engines and partitionings; the only float
     op per centroid update is one IEEE division.  Spark shape per
-    iteration: scan-side literal argmin (no join) → ONE
-    (m, cell, i) partial-sum shuffle (M·ks·sub = 512 rows out) →
-    O(M·ks·sub) driver state broadcast back as literals.  Empty cells
-    keep their previous centroid.
-
-    The default assigner is the Arrow int64 twin (`_pq_assign_np`):
-    bit-identical assignments to the literal-argmin expression path
-    (pinned in tests/test_pq.py), ~9x faster wall because the literal
+    iteration: scan-side Arrow int64 argmin (`_pq_assign_np`, no
+    join) → ONE (m, cell, i) partial-sum shuffle (M·ks·sub = 512 rows
+    out) → O(M·ks·sub) driver state shipped back in the next UDF
+    closure.  Empty cells keep their previous centroid.  The
+    assignment equals ``pq_encode``'s literal-argmin expression
+    (pinned in tests/test_pq.py); the UDF is used here because that
     expression tree costs hundreds of py4j round-trips per iteration
-    just to build — pure construction cost, SF-insensitive, so it
-    would dominate even on a 1000-executor cluster.  Pass
-    ``assigner="expr"`` for the pure-codegen path the oracle mirrors;
-    it exists as the cross-engine parity witness.
+    just to build.
     """
     sub = dim // m_sub
     cents = pq_init(emb, m_sub, ks, dim)
     for _ in range(iters):
-        if assigner == "np":
-            assigns = _pq_assign_np(cents, m_sub, sub)(
-                F.col("embedding")
-            )
-        else:
-            assigns = F.array(
-                *[_pq_assign_col(cents[m], m, sub) for m in range(m_sub)]
-            )
+        assigns = _pq_assign_np(cents, m_sub, sub)(F.col("embedding"))
         t = emb.select(
             assigns.alias("a"),
             F.posexplode("embedding").alias("pos", "val"),
@@ -1484,7 +1207,7 @@ def ivfpq_topk(
 
 def knn_graph(
     emb: DataFrame, k: int = 3, seed: int = 42, seeds=None,
-    scorer: str = "bucket", dim: int = EMB_DIM, hasher: str = "expr",
+    dim: int = EMB_DIM,
 ) -> DataFrame:
     """Approximate k-NN graph: for EVERY vector, its top-k cosine
     neighbors within its LSH bucket — the all-queries generalization of
@@ -1492,115 +1215,34 @@ def knn_graph(
     semantic dedup, embedding clustering, and graph-based retrieval
     indexes (HNSW layer-0 construction starts from exactly this).
 
-    Scale shape: candidate generation is the bucket equi-join (shuffle
-    ∝ Σ bucket², bounded by occupancy ≈ n/2^planes per bucket, never a
-    crossJoin); ranking is a per-source row_number window whose
-    ``rank <= k`` filter Spark rewrites to WindowGroupLimit — map-side
-    partial top-k, so the exchange carries ≤ k·n rows, not the full
-    candidate set.  Zero-norm vectors score NULL and are excluded
-    (both engines).  Recall follows the LSH bucket (union several
-    seeds for multiband recall, as in ``neardup_pairs_multiband``).
+    Scale shape: candidates are scored per LSH bucket inside an Arrow
+    group map (`_bucket_pairs_pd`) — the exchange carries each vector
+    ONCE (corpus-sized) instead of once per candidate pair, only
+    scalar (dot, norms) rows come back, and the rank-1-update left
+    folds keep the sums bit-identical to the ``_cos_sim`` expression
+    the DuckDB oracle mirrors.  Bucket size is bounded by occupancy
+    (≈ n/2^planes), never a crossJoin.  Ranking is a per-source
+    row_number window whose ``rank <= k`` filter Spark rewrites to
+    WindowGroupLimit — map-side partial top-k, so the exchange carries
+    ≤ k·n rows, not the full candidate set.  Zero-norm vectors score
+    NULL and are excluded (both engines).
 
     ``seeds``: pass several plane-set seeds to union candidate sets
     before ranking — the multiband recall amplifier
     (``neardup_pairs_multiband``): a true neighbor split off by one
     unlucky hyperplane set is caught by another; cost grows linearly
-    in seeds (one bucket join each), recall loss decays exponentially.
-
-    ``scorer``: ``"bucket"`` (default) groups by LSH bucket and scores
-    every candidate pair inside an Arrow group map
-    (`_bucket_pairs_pd`) — the exchange carries each vector ONCE
-    (corpus-sized) instead of once per candidate pair, and only
-    scalar (dot, norms) rows come back; rank-1-update left folds keep
-    it bit-identical to the expression path (pinned; measured ~9× at
-    512 dims, ~3× at 64).  ``"np"`` keeps the pair-join shape but
-    scores pairs with the Arrow batch twin (`_pair_dot_np`);
-    ``"hof"`` is the pure-codegen expression, the oracle-parity
-    witness.  All three are bit-identical on any corpus.
-    ``"blas"`` swaps the bucket group map for the one-``m @ m.T``
-    Gram lane (`_bucket_pairs_blas_pd`) — tolerance parity, opt-in.
+    in seeds (one bucket group map each), recall loss decays
+    exponentially.
 
     Returns ``(src, dst, sim, rank)``, rank 1-based per src."""
     from pyspark.sql import Window
 
-    pair_dot = _pair_dot_np() if scorer == "np" else None
-
-    def _cands_bucket(sd):
-        # one corpus-sized exchange (groupBy bucket), pairs scored
-        # inside the Arrow group map, scalars out — see
-        # _bucket_pairs_pd for the parity + memory discipline
-        b = lsh_buckets(emb, sd, dim=dim, hasher=hasher).select(
+    def _cands(sd):
+        b = lsh_buckets(emb, sd, dim=dim).select(
             "vec_id", "embedding", "bucket"
         )
-        # drop NULL buckets BEFORE grouping: groupBy keeps NULL as one
-        # group, so degenerate (dim-mismatched / NaN) vectors would
-        # collapse into a single O(n²) group — the equi-join scorers
-        # drop them implicitly; keep all scorers fail-empty
-        fn = (
-            _bucket_pairs_blas_pd()
-            if scorer == "blas"
-            else _bucket_pairs_pd()
-        )
-        pairs = (
-            b.where(F.col("bucket").isNotNull())
-            .groupBy("bucket")
-            .applyInPandas(
-                fn,
-                "src long, dst long, dot double, na double, nb double",
-            )
-        )
-        denom = F.col("na") * F.col("nb")
-        return (
-            pairs.select(
-                "src",
-                "dst",
-                F.when(
-                    denom != 0, F.round(F.col("dot") / denom, 6)
-                ).alias("sim"),
-            )
-            .where(F.col("sim").isNotNull())
-        )
-
-    def _cands(sd):
-        if scorer in ("bucket", "blas"):
-            return _cands_bucket(sd)
-        # norms hoisted per VECTOR before the join (sqrt(dot(v,v)) is
-        # bit-identical whether computed once per vector or once per
-        # candidate pair, so oracle parity holds) — this removes 2 of
-        # the 3 per-pair HOF aggregates and is the difference between
-        # O(pairs·dim) and O(3·pairs·dim) interpreted work
-        b = lsh_buckets(emb, sd, dim=dim, hasher=hasher).withColumn(
-            "_nrm", _norm(F.col("embedding"))
-        )
-        a = b.select(
-            F.col("vec_id").alias("src"),
-            F.col("embedding").alias("ea"),
-            F.col("_nrm").alias("na"),
-            "bucket",
-        )
-        c = b.select(
-            F.col("vec_id").alias("dst"),
-            F.col("embedding").alias("eb"),
-            F.col("_nrm").alias("nb"),
-            "bucket",
-        )
-        denom = F.col("na") * F.col("nb")
-        dot = (
-            pair_dot(F.col("ea"), F.col("eb"))
-            if pair_dot is not None
-            else _dot(F.col("ea"), F.col("eb"))
-        )
-        return (
-            a.join(c, "bucket")
-            .where(F.col("src") != F.col("dst"))
-            .select(
-                "src",
-                "dst",
-                F.when(denom != 0, F.round(dot / denom, 6)).alias(
-                    "sim"
-                ),
-            )
-            .where(F.col("sim").isNotNull())
+        return _bucket_pair_sims(b, "bucket").where(
+            F.col("sim").isNotNull()
         )
 
     scored = _cands(seed)

@@ -55,9 +55,7 @@ def build_events(
     pages: DataFrame,
     mode: str = "gc_line",
     stitch: str = "narrow",
-    repartition: int | None = None,
     require_marker: bool = True,
-    rates: bool = True,
     metrics: PipelineMetrics | None = None,
 ) -> DataFrame:
     """pages → routed, rate-annotated events (the full logical plan)."""
@@ -65,13 +63,10 @@ def build_events(
         pages,
         mode=mode,
         stitch=stitch,
-        repartition=repartition,
         require_marker=require_marker,
         counters=metrics,
     )
-    if rates:
-        events = with_rates(events)
-    return with_sink(events)
+    return with_sink(with_rates(events))
 
 
 def observed_events(events, name: str = "gc_metrics"):

@@ -219,7 +219,7 @@ def test_round5_media_and_cusum_ops_empty(spark, empty_docs):
     empty_emb = spark.createDataFrame(
         [], "vec_id int, embedding array<float>, label string"
     )
-    assert neardup_pairs(empty_emb, scorer="blas", dim=8).count() == 0
+    assert neardup_pairs(empty_emb, dim=8).count() == 0
 
 
 def test_round5_late_wave_ops_empty(spark, empty_docs, empty_events):

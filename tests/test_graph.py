@@ -444,6 +444,29 @@ def test_coreness_path_graph_all_ones(spark):
     assert len(got) == 9
 
 
+def test_kcore_coreness_backstop_is_peeling_depth(spark):
+    """``max_rounds`` bounds the peeling depth: a graph whose depth
+    equals ``max_rounds`` converges (the round that only confirms the
+    fixpoint is extra), one round less raises."""
+    import pytest
+
+    from gclog_parser_spark.operators.graph import coreness, kcore
+
+    # path 0-1-...-6: the 2-core peel removes both ends each round
+    # (3 rounds to empty); the h-index 1s also move in from both ends
+    # one node per round (3 rounds until every value is 1)
+    edges = [(i, i + 1) for i in range(6)]
+    df = spark.createDataFrame(edges, "src bigint, dst bigint")
+    assert kcore(df, k=2, max_rounds=3).collect() == []
+    got = {r["node"]: r["coreness"]
+           for r in coreness(df, max_rounds=3).collect()}
+    assert got == _py_coreness(edges)
+    with pytest.raises(RuntimeError, match="peeling fixpoint"):
+        kcore(df, k=2, max_rounds=2)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        coreness(df, max_rounds=2)
+
+
 def test_coreness_empty_guard(spark):
     import pytest
 

@@ -165,18 +165,6 @@ def test_export_single_shuffle_per_log(pages):
     assert "FlatMapGroupsInPandas" in plan
 
 
-def test_np_scorer_no_extra_shuffle(spark, sf_dir):
-    """The Arrow/numpy corpus scan is a pure projection: no exchange
-    before the TakeOrderedAndProject top-k."""
-    from gclog_parser_spark.operators.similarity import cosine_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    plan = plan_of(cosine_topk(emb, scorer="np"))
-    assert n_shuffles(plan) == 0
-    assert "ArrowEvalPython" in plan or "EvalPython" in plan
-    assert "TakeOrderedAndProject" in plan
-
-
 def test_jaccard_df_cap_feeds_join(spark):
     """The postings self-join consumes the df-capped postings: the plan
     carries the df<=cap filter on an aggregate BELOW the pair join."""
@@ -449,7 +437,7 @@ def test_aqe_splits_skewed_join_partitions(spark):
 
 
 def test_knn_bucket_scorer_single_corpus_exchange(spark, sf_dir):
-    """The default knn_graph scorer ships each vector across ONE
+    """knn_graph's bucket scorer ships each vector across ONE
     hash exchange (the bucket groupBy feeding the Arrow group map);
     candidate pairs never cross an exchange as array rows, and the
     per-src top-k is a WindowGroupLimit (map-side partial top-k)."""
@@ -462,7 +450,7 @@ def test_knn_bucket_scorer_single_corpus_exchange(spark, sf_dir):
     # exactly two hash exchanges: bucket groupBy + the rank window's
     # partitionBy(src) over the scalar pair rows
     assert n_shuffles(plan) == 2
-    # no pair-join of embedding arrays anywhere in the default plan
+    # no pair-join of embedding arrays anywhere in the plan
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
 
 

@@ -117,17 +117,29 @@ def test_empty_cells_keep_previous_centroid(spark):
 
 
 def test_pq_np_assigner_trains_identical_codebooks(spark, sf_dir):
-    """The Arrow int64 assigner (the default) must reproduce the
-    codegen literal-argmin path's codebooks BIT-FOR-BIT (integer
-    ticks + HALF_UP replication + first-minimum tie rule) — it is a
-    construction-cost optimization, not an approximation.  The expr
-    path is the cross-engine parity witness the oracle mirrors."""
-    from gclog_parser_spark.operators.similarity import pq_train
+    """Training assigns with the Arrow int64 UDF (`_pq_assign_np`),
+    encoding with the literal-argmin expression (`_pq_assign_col`, the
+    shape the DuckDB oracle mirrors).  On a trained codebook both must
+    give every vector the SAME code in every subspace (integer ticks,
+    HALF_UP replication, lowest cell on ties) — otherwise the
+    codebooks pq_train converges to are not the ones pq_encode
+    applies."""
+    from gclog_parser_spark.operators.similarity import _pq_assign_np
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    assert pq_train(emb, iters=2, assigner="expr") == pq_train(
-        emb, iters=2, assigner="np"
-    )
+    cents = pq_train(emb, iters=2)
+    udf = _pq_assign_np(cents, PQ_M, 64 // PQ_M)
+    got = {
+        r["vec_id"]: list(r["a"])
+        for r in emb.select("vec_id", udf(F.col("embedding")).alias("a"))
+        .collect()
+    }
+    want = {
+        r["vec_id"]: [r[f"code_{m}"] for m in range(PQ_M)]
+        for r in pq_encode(emb, cents).collect()
+    }
+    assert got == want
+    assert len(got) == emb.count()
 
 
 def test_ivfpq_candidates_come_from_probe_cells(spark, sf_dir):

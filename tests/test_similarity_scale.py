@@ -1,6 +1,6 @@
 """Similarity-operator edge cases and scale-shape tests: tie-break
 parity with the DuckDB oracle, LSH-bucket blocking for near-dup, and
-the numpy scan variants."""
+the Arrow bucket scorer's handling of degenerate vectors."""
 
 from __future__ import annotations
 
@@ -52,45 +52,6 @@ def test_ivf_zero_query_tie_break_matches_oracle(spark, tied_emb):
     # result set is decided purely by probe-cell + vec_id tie-breaks
     assert got == want
     assert all(s is None for _, s in got)
-
-
-def test_np_scorer_matches_hof(spark, sf_dir):
-    """The Arrow/numpy corpus-scan scorer returns the SAME top-k as the
-    interpreted-HOF oracle path for all three search operators."""
-    from gclog_parser_spark.operators.similarity import (
-        cosine_topk,
-        ivf_topk,
-        lsh_bucket_topk,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    for fn in (cosine_topk, lsh_bucket_topk, ivf_topk):
-        hof = [
-            (r["vec_id"], r["sim"]) for r in fn(emb).collect()
-        ]
-        np_ = [
-            (r["vec_id"], r["sim"])
-            for r in fn(emb, scorer="np").collect()
-        ]
-        assert np_ == hof, fn.__name__
-
-
-def test_np_scorer_zero_norm_guard(spark):
-    """All-zero corpus vectors get NULL sim from the numpy scorer too
-    (not NaN, not a crash)."""
-    from gclog_parser_spark.operators.similarity import cosine_topk
-
-    g = _lcg(3)
-    rows = [(0, [round(next(g), 6) for _ in range(EMB_DIM)], "a"),
-            (1, [0.0] * EMB_DIM, "a"),
-            (2, [round(next(g), 6) for _ in range(EMB_DIM)], "a")]
-    emb = spark.createDataFrame(
-        rows, "vec_id int, embedding array<float>, label string"
-    )
-    got = {r["vec_id"]: r["sim"]
-           for r in cosine_topk(emb, k=5, scorer="np").collect()}
-    assert got[1] is None
-    assert got[2] is not None
 
 
 def test_jaccard_hot_shingle_df_cap(spark):
@@ -415,50 +376,14 @@ def test_knn_graph_multiband_recall_dominates_single(spark, sf_dir):
     assert len(keys) == len(set(keys))
 
 
-def test_pair_dot_np_scorer_bit_identical(spark, sf_dir):
-    """The Arrow pair-dot scorer (default for knn_graph and
-    neardup_pairs) must reproduce the HOF expression path BIT-FOR-BIT:
-    the numpy accumulation replays the same left-fold element order in
-    the same IEEE doubles, and division + round(6) stay JVM-side — a
-    batch-transfer optimization, never a float reordering."""
-    from gclog_parser_spark.operators.similarity import (
-        knn_graph,
-        neardup_pairs,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    g_hof = sorted(map(tuple, knn_graph(emb, k=3, scorer="hof").collect()))
-    for s in ("np", "bucket"):
-        g = sorted(map(tuple, knn_graph(emb, k=3, scorer=s).collect()))
-        assert g == g_hof and g, s
-    p_hof = sorted(
-        map(tuple, neardup_pairs(emb, threshold=0.4, scorer="hof").collect())
-    )
-    for s in ("np", "bucket"):
-        p = sorted(
-            map(
-                tuple,
-                neardup_pairs(emb, threshold=0.4, scorer=s).collect(),
-            )
-        )
-        assert p == p_hof, s
-    # the Arrow bucket hasher is bit-identical to the expression
-    # hasher on a validated corpus (same buckets -> same graph)
-    g_nphash = sorted(
-        map(tuple, knn_graph(emb, k=3, hasher="np").collect())
-    )
-    assert g_nphash == g_hof
-
-
 def test_bucket_scorer_fail_empty_on_degenerate_vectors(spark):
-    """Round-4 advice regression: under the fail-EMPTY lsh_buckets
-    rule, dim-mismatched vectors hash to a NULL bucket.  The equi-join
-    scorers drop NULL keys implicitly, but groupBy keeps NULL as ONE
-    group — without the explicit isNotNull filter every degenerate
-    vector would collapse into a single O(n²) candidate group (or
-    crash the Arrow group map on a ragged np.stack).  All three
-    scorers must agree (and exclude the degenerate rows) on a corpus
-    that mixes valid and short vectors."""
+    """Under the fail-EMPTY lsh_buckets rule, dim-mismatched vectors
+    hash to a NULL bucket.  groupBy keeps NULL as ONE group, so without
+    the explicit isNotNull filter every degenerate vector would
+    collapse into a single O(n²) candidate group (or crash the Arrow
+    group map on a ragged np.stack).  Mixing short vectors into a
+    corpus must therefore change nothing: both operators return
+    exactly what they return on the valid rows alone."""
     from gclog_parser_spark.operators.similarity import (
         knn_graph,
         neardup_pairs,
@@ -470,67 +395,22 @@ def test_bucket_scorer_fail_empty_on_degenerate_vectors(spark):
         rows.append((i, [round(next(g), 6) for _ in range(8)], "ok"))
     for i in range(12, 18):  # six degenerate short vectors
         rows.append((i, [1.0, 2.0], "bad"))
-    emb = spark.createDataFrame(
-        rows, "vec_id int, embedding array<float>, label string"
-    )
-
-    p_hof = sorted(map(tuple, neardup_pairs(
-        emb, threshold=0.0, scorer="hof", dim=8).collect()))
-    p_np = sorted(map(tuple, neardup_pairs(
-        emb, threshold=0.0, scorer="np", dim=8).collect()))
-    p_bkt = sorted(map(tuple, neardup_pairs(
-        emb, threshold=0.0, scorer="bucket", dim=8).collect()))
-    assert p_bkt == p_np == p_hof
+    schema = "vec_id int, embedding array<float>, label string"
+    mixed = spark.createDataFrame(rows, schema)
+    valid = spark.createDataFrame(rows[:12], schema)
     bad_ids = set(range(12, 18))
-    assert all(
-        a not in bad_ids and b not in bad_ids for a, b, _ in p_bkt
-    )
 
-    g_hof = sorted(map(tuple, knn_graph(
-        emb, k=2, scorer="hof", dim=8).collect()))
-    g_bkt = sorted(map(tuple, knn_graph(
-        emb, k=2, scorer="bucket", dim=8).collect()))
-    assert g_bkt == g_hof and g_bkt
-    assert all(
-        r[0] not in bad_ids and r[1] not in bad_ids for r in g_bkt
-    )
+    def run(fn, emb, **kw):
+        return sorted(map(tuple, fn(emb, dim=8, **kw).collect()))
 
-
-def test_blas_scorer_tolerance_parity_and_same_topk(spark, sf_dir):
-    """Round-5 opt-in lane: scorer='blas' (one m @ m.T Gram call per
-    bucket) must return the SAME top-k graph and near-dup pair set as
-    the bit-parity bucket fold on the validated corpora, with raw sim
-    deltas ≪ 1e-9 (BLAS reorders the accumulation; round(6) then
-    collapses the residue so the published values are equal)."""
-    from gclog_parser_spark.operators.similarity import (
-        knn_graph,
-        neardup_pairs,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    g_fold = sorted(
-        map(tuple, knn_graph(emb, k=3, scorer="bucket").collect())
-    )
-    g_blas = sorted(
-        map(tuple, knn_graph(emb, k=3, scorer="blas").collect())
-    )
-    assert g_blas == g_fold and g_blas  # same edges, sims, ranks
-
-    p_fold = {
-        (r["vec_a"], r["vec_b"]): r["sim"]
-        for r in neardup_pairs(
-            emb, threshold=0.4, scorer="bucket"
-        ).collect()
-    }
-    p_blas = {
-        (r["vec_a"], r["vec_b"]): r["sim"]
-        for r in neardup_pairs(
-            emb, threshold=0.4, scorer="blas"
-        ).collect()
-    }
-    assert p_blas.keys() == p_fold.keys() and p_fold
-    for k in p_fold:
-        assert abs(p_blas[k] - p_fold[k]) < 1e-9, k
+    for fn, kw in ((neardup_pairs, {"threshold": 0.0}),
+                   (knn_graph, {"k": 2})):
+        got = run(fn, mixed, **kw)
+        assert got == run(fn, valid, **kw), fn.__name__
+        assert got, fn.__name__
+        assert all(
+            r[0] not in bad_ids and r[1] not in bad_ids for r in got
+        ), fn.__name__
 
 
 def test_matryoshka_energy_ratios_exact(spark):

@@ -108,6 +108,38 @@ def test_events_match_core_parser(spark, pages):
             assert g["tz_offset"] == core.tz_offset_str(e["time"])
 
 
+@pytest.mark.parametrize("heap_stats", [False, True])
+def test_window_line_flags_match_core_classifier(spark, heap_stats):
+    """The window stitch classifies lines with Spark rlike over core's
+    regex patterns; on every line of every fixture log its flags must
+    give the class ``core.classify_line`` gives (checked in core's
+    order: open, close, start, cont)."""
+    from gclog_parser_spark import fixtures
+    from gclog_parser_spark.operators.parse import _line_flags
+
+    texts = [t for _, _, t, _, _ in all_classes()] + [
+        v for k, v in sorted(vars(fixtures).items())
+        if k.endswith("_LOG") and isinstance(v, str)
+    ]
+    lines = sorted({ln for t in texts for ln in t.split("\n")})
+    df = spark.createDataFrame([(ln,) for ln in lines], "line string")
+    flags = zip(
+        ("start", "cont", "open", "close"),
+        _line_flags(F.col("line"), heap_stats),
+    )
+    got = {
+        r["line"]: next(
+            (c for c in ("open", "close", "start", "cont") if r[c]),
+            "filler",
+        )
+        for r in df.select("line", *[f.alias(c) for c, f in flags])
+        .collect()
+    }
+    want = {ln: core.classify_line(ln, heap_stats) for ln in lines}
+    assert got == want
+    assert {"start", "cont", "filler"} <= set(want.values())
+
+
 def test_pages_from_documents(spark, sf_dir):
     pages = pages_from_documents(spark, sf_dir, with_meta=True)
     n = pages.count()
