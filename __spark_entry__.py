@@ -3527,39 +3527,45 @@ def _lpa_oracle_sql(n_iter: int = 3) -> str:
 
 def _hits_oracle_sql(n_iter: int = 3, scale: int = 10**12) -> str:
     """Unrolled-CTE DuckDB HITS twin of operators/graph.hits — same
-    integer-tick gather + L1 floor normalization, HUGEINT-widened."""
+    integer-tick gather + L1 floor normalization, HUGEINT-widened.
+
+    Every CTE is ``MATERIALIZED``: each score CTE reads its raw CTE
+    twice (values and L1 sum), so an inlining planner re-evaluates the
+    unrolled chain 2^(2·n_iter) times — over a minute on a 15-node
+    graph, against milliseconds materialized.  Same rows either way."""
     nv = "(SELECT count(DISTINCT user_id) FROM events)"
     ctes = [
-        "edges AS (SELECT DISTINCT user_id AS src,"
+        "edges AS MATERIALIZED (SELECT DISTINCT user_id AS src,"
         f" event_id % {nv} AS dst FROM events)",
-        "nodes AS (SELECT src AS node FROM edges"
+        "nodes AS MATERIALIZED (SELECT src AS node FROM edges"
         " UNION SELECT dst FROM edges)",
-        "nn AS (SELECT count(*) AS n FROM nodes)",
-        f"h0 AS (SELECT node, CAST((SELECT {scale} // n FROM nn)"
-        " AS BIGINT) AS t FROM nodes)",
+        "nn AS MATERIALIZED (SELECT count(*) AS n FROM nodes)",
+        f"h0 AS MATERIALIZED (SELECT node,"
+        f" CAST((SELECT {scale} // n FROM nn) AS BIGINT) AS t"
+        " FROM nodes)",
     ]
     for i in range(1, n_iter + 1):
         ctes.append(
-            f"ar{i} AS (SELECT nd.node, CAST(coalesce(s.s, 0)"
+            f"ar{i} AS MATERIALIZED (SELECT nd.node, CAST(coalesce(s.s, 0)"
             " AS BIGINT) AS raw FROM nodes nd LEFT JOIN"
             " (SELECT e.dst AS node, sum(h.t) AS s FROM edges e"
             f" JOIN h{i-1} h ON h.node = e.src GROUP BY 1) s"
             " ON s.node = nd.node)"
         )
         ctes.append(
-            f"a{i} AS (SELECT node, CAST(CAST(raw AS HUGEINT)"
+            f"a{i} AS MATERIALIZED (SELECT node, CAST(CAST(raw AS HUGEINT)"
             f" * {scale} // (SELECT sum(raw) FROM ar{i})"
             f" AS BIGINT) AS t FROM ar{i})"
         )
         ctes.append(
-            f"hr{i} AS (SELECT nd.node, CAST(coalesce(s.s, 0)"
+            f"hr{i} AS MATERIALIZED (SELECT nd.node, CAST(coalesce(s.s, 0)"
             " AS BIGINT) AS raw FROM nodes nd LEFT JOIN"
             " (SELECT e.src AS node, sum(a.t) AS s FROM edges e"
             f" JOIN a{i} a ON a.node = e.dst GROUP BY 1) s"
             " ON s.node = nd.node)"
         )
         ctes.append(
-            f"h{i} AS (SELECT node, CAST(CAST(raw AS HUGEINT)"
+            f"h{i} AS MATERIALIZED (SELECT node, CAST(CAST(raw AS HUGEINT)"
             f" * {scale} // (SELECT sum(raw) FROM hr{i})"
             f" AS BIGINT) AS t FROM hr{i})"
         )

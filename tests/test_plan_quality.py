@@ -165,6 +165,21 @@ def test_export_single_shuffle_per_log(pages):
     assert "FlatMapGroupsInPandas" in plan
 
 
+def test_np_scorer_no_extra_shuffle(spark, sf_dir):
+    """The Arrow/numpy int8 corpus scan is a pure projection: no
+    exchange before the TakeOrderedAndProject top-k."""
+    from gclog_parser_spark.operators.similarity import (
+        quantize_embeddings,
+        quantized_scan_topk,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    plan = plan_of(quantized_scan_topk(quantize_embeddings(emb)))
+    assert n_shuffles(plan) == 0
+    assert "ArrowEvalPython" in plan or "EvalPython" in plan
+    assert "TakeOrderedAndProject" in plan
+
+
 def test_jaccard_df_cap_feeds_join(spark):
     """The postings self-join consumes the df-capped postings: the plan
     carries the df<=cap filter on an aggregate BELOW the pair join."""

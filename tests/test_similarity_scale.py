@@ -1,6 +1,7 @@
 """Similarity-operator edge cases and scale-shape tests: tie-break
-parity with the DuckDB oracle, LSH-bucket blocking for near-dup, and
-the Arrow bucket scorer's handling of degenerate vectors."""
+parity with the DuckDB oracle, LSH-bucket blocking for near-dup, the
+numpy scorers' parity with the HOF expressions, and the Arrow bucket
+scorer's handling of degenerate vectors."""
 
 from __future__ import annotations
 
@@ -52,6 +53,51 @@ def test_ivf_zero_query_tie_break_matches_oracle(spark, tied_emb):
     # result set is decided purely by probe-cell + vec_id tie-breaks
     assert got == want
     assert all(s is None for _, s in got)
+
+
+def test_np_scorer_matches_hof(spark, sf_dir):
+    """The Arrow/numpy int8 corpus-scan scorer (``quantized_scan_topk``)
+    returns the SAME top-k as the interpreted-HOF scorer over the same
+    int8 vectors (``quantized_topk``).  Its float32 norms differ from
+    the double HOF at ~1e-7 before round(6), so a sim may land one
+    6-dp unit away — never further, and never enough to reorder."""
+    from gclog_parser_spark.operators.similarity import (
+        quantize_embeddings,
+        quantized_scan_topk,
+        quantized_topk,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    qz = quantize_embeddings(emb)
+    for q in (0, 1, 7):
+        hof = quantized_topk(emb, query_vec_id=q).collect()
+        np_ = quantized_scan_topk(qz, query_vec_id=q).collect()
+        assert [r["vec_id"] for r in np_] == [r["vec_id"] for r in hof]
+        assert len(hof) == 10, q
+        for a, b in zip(np_, hof):
+            assert abs(a["sim"] - b["sim"]) <= 1.000001e-6, (q, a, b)
+
+
+def test_np_scorer_zero_norm_guard(spark):
+    """All-zero corpus vectors get NULL sim from the numpy scorer too
+    (not NaN, not a crash)."""
+    from gclog_parser_spark.operators.similarity import (
+        quantize_embeddings,
+        quantized_scan_topk,
+    )
+
+    g = _lcg(3)
+    rows = [(0, [round(next(g), 6) for _ in range(EMB_DIM)], "a"),
+            (1, [0.0] * EMB_DIM, "a"),
+            (2, [round(next(g), 6) for _ in range(EMB_DIM)], "a")]
+    emb = spark.createDataFrame(
+        rows, "vec_id int, embedding array<float>, label string"
+    )
+    got = {r["vec_id"]: r["sim"]
+           for r in quantized_scan_topk(
+               quantize_embeddings(emb), k=5).collect()}
+    assert got[1] is None
+    assert got[2] is not None
 
 
 def test_jaccard_hot_shingle_df_cap(spark):
@@ -374,6 +420,43 @@ def test_knn_graph_multiband_recall_dominates_single(spark, sf_dir):
     # dedup works: no (src,dst) appears twice
     keys = [(r.src, r.dst) for r in multi_rows]
     assert len(keys) == len(set(keys))
+
+
+def test_pair_dot_np_scorer_bit_identical(spark, sf_dir):
+    """The Arrow pair-dot scorer behind knn_graph and neardup_pairs
+    must reproduce the HOF ``_cos_sim`` expression BIT-FOR-BIT on
+    every candidate pair: the numpy accumulation replays the same
+    left-fold element order in the same IEEE doubles, and division +
+    round(6) stay JVM-side — a batch-transfer optimization, never a
+    float reordering."""
+    import pyspark.sql.functions as F
+
+    from gclog_parser_spark.operators.similarity import (
+        _bucket_pair_sims,
+        _cos_sim,
+        lsh_buckets,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    b = lsh_buckets(emb).select("vec_id", "embedding", "bucket")
+    got = sorted(map(tuple, _bucket_pair_sims(b, "bucket").collect()))
+    l, r = b.alias("l"), b.alias("r")
+    hof = sorted(
+        map(
+            tuple,
+            l.join(r, "bucket")
+            .where(F.col("l.vec_id") != F.col("r.vec_id"))
+            .select(
+                F.col("l.vec_id").cast("long").alias("src"),
+                F.col("r.vec_id").cast("long").alias("dst"),
+                _cos_sim(
+                    F.col("l.embedding"), F.col("r.embedding")
+                ).alias("sim"),
+            )
+            .collect(),
+        )
+    )
+    assert got == hof and got
 
 
 def test_bucket_scorer_fail_empty_on_degenerate_vectors(spark):

@@ -1,6 +1,7 @@
 """Signed random projection (operators/similarity.py::srp_project):
-the JL distance-preservation property actually holds on real
-embeddings, and the plan has the right shape."""
+the Arrow int64 matmul is bit-identical to a relational reference, the
+JL distance-preservation property actually holds on real embeddings,
+and the plan has the right shape."""
 
 from __future__ import annotations
 
@@ -10,6 +11,8 @@ import pyspark.sql.functions as F
 import pytest
 
 from gclog_parser_spark.operators.similarity import (
+    EMB_DIM,
+    SRP_TICKS,
     _srp_sign,
     srp_project,
 )
@@ -18,6 +21,34 @@ from gclog_parser_spark.operators.similarity import (
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+
+
+def test_np_path_equals_rel_path_bitwise(spark, emb):
+    """Integer matmul vs a broadcast-join-aggregate reference built
+    here from the same sign function: same exact int64s (this is the
+    property float scorers can't have — integer ticks make
+    accumulation order irrelevant)."""
+    out_dim = 16
+    ticks = F.transform(
+        F.col("embedding"),
+        lambda x: F.round(x.cast("double") * SRP_TICKS).cast("long"),
+    )
+    sgn = spark.createDataFrame(
+        [(i, j, _srp_sign(i, j))
+         for i in range(EMB_DIM) for j in range(out_dim)],
+        "i int, j int, s int",
+    )
+    rel_df = (
+        emb.select("vec_id", F.posexplode(ticks).alias("i", "tick"))
+        .join(F.broadcast(sgn), "i")
+        .groupBy("vec_id", "j")
+        .agg(F.sum(F.col("s") * F.col("tick")).alias("pt"))
+    )
+    rel = {(r["vec_id"], r["j"]): r["pt"] for r in rel_df.collect()}
+    np_ = {(r["vec_id"], r["j"]): r["pt"]
+           for r in srp_project(emb, out_dim=out_dim).collect()}
+    assert rel == np_
+    assert len(rel) == emb.count() * out_dim
 
 
 def test_sign_matrix_is_balanced_and_deterministic():

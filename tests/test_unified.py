@@ -153,6 +153,41 @@ def test_unified_region_deltas_counts_and_values(spark):
         assert poss == list(range(len(rs)))
 
 
+def test_unified_region_deltas_match_core_on_every_fixture_line(spark):
+    """unified_region_deltas runs core.UNIFIED_HEAP_LINE_RE's pattern
+    as a Java regex: over every fixture log, the rows it extracts are
+    exactly the lines core.parse_unified_heap_line accepts, with the
+    same fields."""
+    from datetime import datetime
+
+    from gclog_parser_spark import fixtures
+    from gclog_parser_spark.core import parse_unified_heap_line
+    from gclog_parser_spark.operators.enrich import unified_region_deltas
+    from gclog_parser_spark.schema import PAGES_SCHEMA
+
+    logs = [(name, t) for _, name, t, _, _ in fixtures.all_classes()] + [
+        (k, v) for k, v in sorted(vars(fixtures).items())
+        if k.endswith("_LOG") and isinstance(v, str)
+    ]
+    pages = spark.createDataFrame(
+        [(u, datetime(2026, 8, 17), None, t, "en") for u, t in logs],
+        PAGES_SCHEMA,
+    )
+    got = sorted(
+        (r["url"], r["block_idx"], r["region_name"], r["regions_before"],
+         r["regions_after"], r["target_regions"])
+        for r in unified_region_deltas(pages).collect()
+    )
+    want = sorted(
+        (u, *m)
+        for u, t in logs
+        for ln in t.split("\n")
+        if (m := parse_unified_heap_line(ln)) is not None
+    )
+    assert got == want
+    assert len({u for u, *_ in want}) >= 2
+
+
 def test_unified_region_plan_no_python(spark):
     """The region path is pure codegen: no Python eval anywhere, and
     exactly one exchange (the in-block order window)."""
