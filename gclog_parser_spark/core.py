@@ -41,6 +41,7 @@ from __future__ import annotations
 
 import re
 from datetime import datetime, timedelta, timezone
+from decimal import ROUND_HALF_UP, Decimal
 
 # ---------------------------------------------------------------------------
 # Shared lexical pieces (Parser.scala:8-20)
@@ -793,6 +794,21 @@ def reclaimed_bytes(delta) -> int:
 def jvm_age_millis(age_seconds: float) -> int:
     """(seconds*1000) truncated (BasicGCEvent.scala:52)."""
     return int(age_seconds * 1000)
+
+
+def half_up(x: float, places: int) -> float:
+    """``x`` rounded HALF_UP at ``places`` decimals over the double's
+    shortest decimal repr: the algorithm of Spark's ``round``
+    (BigDecimal.valueOf → setScale HALF_UP) and DuckDB's ``round``.
+    Python's ``round`` rounds half to even and differs on exact halves."""
+    return float(
+        Decimal(repr(x)).quantize(Decimal(1).scaleb(-places), ROUND_HALF_UP)
+    )
+
+
+def to_ticks(seconds: float) -> int:
+    """Seconds as exact 0.1 µs ticks (the batch ``rates.pause_ticks``)."""
+    return int(half_up(seconds * 10_000_000, 0))
 
 
 def calculate_rates(events):

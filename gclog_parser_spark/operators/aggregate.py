@@ -20,6 +20,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from gclog_parser_spark.operators.rates import pause_ticks
 from gclog_parser_spark.operators.route import with_sink
 
 ACCURACY = 10000
@@ -627,7 +628,7 @@ def agg_state(ev: DataFrame, group_col: str = "event_type") -> DataFrame:
     incrementally-maintained materialized view stores.  count/sum/
     min/max are the algebraic functions whose states merge losslessly;
     integer ticks make the sums exact in both engines."""
-    ticks = F.round(F.col("value") * 10_000_000).cast("long")
+    ticks = pause_ticks("value")
     return ev.groupBy(group_col).agg(
         F.count("*").alias("n"),
         F.sum(ticks).alias("value_ticks_sum"),

@@ -14,61 +14,36 @@ from gclog_parser_spark import core
 from gclog_parser_spark.schema import collector_family_df, heap_region_df
 
 
-def family_join(events: DataFrame):
-    """``(joined, family)``: events broadcast-left-joined to the
-    collector-family dim on gc_type, and the resolved family column —
-    the dim's family, else CMS phases not in the dim fall back to
-    'cms_concurrent' by prefix, the newer collectors by their type
-    names, everything else to 'other'."""
-    dim = collector_family_df(events.sparkSession)
-    joined = events.join(F.broadcast(dim), "gc_type", "left")
-    t = F.col("gc_type")
-    return joined, F.coalesce(
-        "family",
-        F.when(t.startswith("CMS"), F.lit("cms_concurrent"))
-        .when(
-            (t.startswith("GC pause") & t.contains("(mixed)"))
-            | (t.startswith("Pause Young") & t.contains("(Mixed)")),
-            F.lit("g1_mixed"),
-        )
-        .when(
-            t.startswith("GC pause") | t.startswith("Pause Young"),
-            F.lit("g1_young"),
-        )
-        .when(t.startswith("Pause Full"), F.lit("full"))
-        .when(
-            t.isin(
-                "Garbage Collection",
-                "Minor Collection",
-                "Major Collection",
-            ),
-            F.lit("z_cycle"),
-        )
-        .when(
-            t.startswith("Pause Init")
-            | t.startswith("Pause Final")
-            | t.startswith("Pause Degenerated"),
-            F.lit("shen_pause"),
-        )
-        .when(
-            t.startswith("GC concurrent")
-            | t.startswith("Concurrent")
-            | t.isin(
-                "GC remark",
-                "GC cleanup",
-                "Pause Remark",
-                "Pause Cleanup",
-            ),
-            F.lit("g1_concurrent"),
-        )
-        .otherwise(F.lit("other")),
-    )
+# The dim's family, else: CMS phases not in the dim fall back to
+# 'cms_concurrent' by prefix, the newer collectors go by their type
+# names, and everything else is 'other'.
+_FAMILY = """coalesce(family, CASE
+    WHEN startswith(gc_type, 'CMS') THEN 'cms_concurrent'
+    WHEN (startswith(gc_type, 'GC pause') AND contains(gc_type, '(mixed)'))
+      OR (startswith(gc_type, 'Pause Young')
+          AND contains(gc_type, '(Mixed)')) THEN 'g1_mixed'
+    WHEN startswith(gc_type, 'GC pause')
+      OR startswith(gc_type, 'Pause Young') THEN 'g1_young'
+    WHEN startswith(gc_type, 'Pause Full') THEN 'full'
+    WHEN gc_type IN ('Garbage Collection', 'Minor Collection',
+                     'Major Collection') THEN 'z_cycle'
+    WHEN startswith(gc_type, 'Pause Init')
+      OR startswith(gc_type, 'Pause Final')
+      OR startswith(gc_type, 'Pause Degenerated') THEN 'shen_pause'
+    WHEN startswith(gc_type, 'GC concurrent')
+      OR startswith(gc_type, 'Concurrent')
+      OR gc_type IN ('GC remark', 'GC cleanup', 'Pause Remark',
+                     'Pause Cleanup') THEN 'g1_concurrent'
+    ELSE 'other' END) AS family"""
 
 
 def enrich_collector_family(events: DataFrame) -> DataFrame:
-    """events + `family` (see :func:`family_join`)."""
-    joined, family = family_join(events)
-    return joined.withColumn("family", family)
+    """events broadcast-left-joined to the collector-family dim on
+    gc_type, with ``family`` resolved by ``_FAMILY``."""
+    dim = collector_family_df(events.sparkSession)
+    return events.join(F.broadcast(dim), "gc_type", "left").selectExpr(
+        "* EXCEPT (family)", _FAMILY
+    )
 
 
 def unified_region_deltas(pages: DataFrame) -> DataFrame:

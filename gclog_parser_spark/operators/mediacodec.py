@@ -175,7 +175,14 @@ def png_decode(payload: bytes) -> dict:
 
 def wav_encode(samples, framerate: int = 8000,
                sampwidth: int = 2, channels: int = 1) -> bytes:
-    """Minimal PCM WAV writer via the stdlib ``wave`` module."""
+    """Minimal PCM WAV writer via the stdlib ``wave`` module.  A sample
+    outside the signed range of ``sampwidth`` bytes raises ValueError."""
+    if sampwidth not in (1, 2):
+        raise ValueError("sampwidth must be 1 or 2")
+    hi = (1 << (8 * sampwidth - 1)) - 1
+    for s in samples:
+        if not -hi - 1 <= s <= hi:
+            raise ValueError(f"sample {s} out of range for width {sampwidth}")
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
         w.setnchannels(channels)
@@ -183,10 +190,8 @@ def wav_encode(samples, framerate: int = 8000,
         w.setframerate(framerate)
         if sampwidth == 2:
             w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
-        elif sampwidth == 1:
-            w.writeframes(bytes((s + 128) & 0xFF for s in samples))
         else:
-            raise ValueError("sampwidth must be 1 or 2")
+            w.writeframes(bytes(s + 128 for s in samples))
     return buf.getvalue()
 
 

@@ -66,16 +66,14 @@ def extract_gc_text(
     ``require_marker=False`` serves marker-less inputs (raw log files
     from sources.read_gc_logs): ``substring_index`` is the identity when
     the delimiter is absent, so the same expression handles both."""
-    c = F.col(text_col)
-    gc_text = F.substring_index(
-        F.substring_index(c, OPEN_MARK + "\n", -1), CLOSE_MARK, 1
-    )
+    text = f"`{text_col}`"
     if require_marker:
-        pages = pages.where(c.contains(OPEN_MARK))
-    return pages.select(
+        pages = pages.where(f"contains({text}, '{OPEN_MARK}')")
+    return pages.selectExpr(
         "url",
-        F.unix_micros("warc_ts").alias("warc_ts"),
-        gc_text.alias("gc_text"),
+        "unix_micros(warc_ts) AS warc_ts",
+        f"substring_index(substring_index({text}, '{OPEN_MARK}\n', -1),"
+        f" '{CLOSE_MARK}', 1) AS gc_text",
     )
 
 
@@ -105,6 +103,10 @@ def _epoch_us(t) -> int:
 
 
 _COLUMNS = EVENTS_SCHEMA.names
+_RESTORE = [
+    f"timestamp_micros({c}) AS {c}" if c in ("warc_ts", "event_time") else c
+    for c in _COLUMNS
+]
 _REGION_FIELDS = REGION_TYPE.names
 
 
@@ -163,12 +165,7 @@ class _Columns:
 
 def _restore_timestamps(events: DataFrame) -> DataFrame:
     """int64 micros (UDF wire format) → TimestampType, native exprs."""
-    return events.withColumns(
-        {
-            "warc_ts": F.timestamp_micros("warc_ts"),
-            "event_time": F.timestamp_micros("event_time"),
-        }
-    )
+    return events.selectExpr(*_RESTORE)
 
 
 def _parse_block(block: str, heap_stats: bool):

@@ -23,64 +23,50 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+_AGE_MS = "CAST(jvm_age_seconds * 1000 AS BIGINT)"
+
+# The last non-AppStopped predecessor.  The struct is non-null iff the
+# row qualifies, so ignore-nulls skips AppStopped rows even when their
+# payload fields are null.
+_PREV = (
+    "(last(CASE WHEN gc_class <> 'app_stopped' THEN named_struct("
+    f"'age_ms', {_AGE_MS}, 'heap_after_bytes', heap_after_bytes) END, true)"
+    " OVER (PARTITION BY url ORDER BY event_idx"
+    " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))"
+)
+
+# The rate columns as SQL text, in output order.  The two rates read
+# the first two columns as lateral aliases; `div` is integral division
+# (truncates toward zero, JVM parity).
+_RATES = (
+    "CASE WHEN gc_class = 'app_stopped' THEN 0"
+    f" WHEN {_PREV} IS NULL THEN coalesce(heap_before_bytes, 0)"
+    " WHEN heap_before_bytes IS NOT NULL"
+    f" AND {_PREV}.heap_after_bytes IS NOT NULL"
+    f" THEN heap_before_bytes - {_PREV}.heap_after_bytes"
+    " ELSE 0 END AS bytes_allocated_since_last",
+    "CASE WHEN gc_class = 'app_stopped' THEN 0"
+    f" WHEN {_PREV} IS NULL THEN {_AGE_MS}"
+    f" ELSE {_AGE_MS} - {_PREV}.age_ms END AS millis_since_last",
+    "CASE WHEN millis_since_last = 0 THEN 0"
+    " ELSE bytes_allocated_since_last div millis_since_last END"
+    " AS heap_allocation_rate",
+    "CASE WHEN promoted_bytes IS NOT NULL AND millis_since_last <> 0"
+    " THEN promoted_bytes div millis_since_last ELSE 0 END"
+    " AS promotion_rate",
+)
+
 
 def with_rates(events: DataFrame) -> DataFrame:
-    is_app = F.col("gc_class") == "app_stopped"
-    age_ms = (F.col("jvm_age_seconds") * 1000).cast("long")
+    """events + the four rate columns, in one projection over one
+    window on ``(url, event_idx)``."""
+    return events.selectExpr("*", *_RATES)
 
-    w_prev = (
-        Window.partitionBy("url")
-        .orderBy("event_idx")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    # last non-AppStopped predecessor (struct is non-null iff the row
-    # qualifies, so ignoreNulls skips AppStopped rows even when their
-    # payload fields are null)
-    prev = F.last(
-        F.when(
-            ~is_app,
-            F.struct(
-                age_ms.alias("age_ms"),
-                F.col("heap_after_bytes").alias("heap_after_bytes"),
-            ),
-        ),
-        ignorenulls=True,
-    ).over(w_prev)
 
-    allocated = (
-        F.when(is_app, F.lit(0))
-        .when(prev.isNull(), F.coalesce("heap_before_bytes", F.lit(0)))
-        .when(
-            F.col("heap_before_bytes").isNotNull()
-            & prev["heap_after_bytes"].isNotNull(),
-            F.col("heap_before_bytes") - prev["heap_after_bytes"],
-        )
-        .otherwise(F.lit(0))
-    )
-    millis = (
-        F.when(is_app, F.lit(0))
-        .when(prev.isNull(), age_ms)
-        .otherwise(age_ms - prev["age_ms"])
-    )
-
-    out = events.withColumns(
-        {"bytes_allocated_since_last": allocated, "millis_since_last": millis}
-    )
-    # `div` = Spark integral division (truncates toward zero, JVM parity)
-    return out.withColumns(
-        {
-            "heap_allocation_rate": F.when(
-                F.col("millis_since_last") == 0, F.lit(0)
-            ).otherwise(
-                F.expr("bytes_allocated_since_last div millis_since_last")
-            ),
-            "promotion_rate": F.when(
-                F.col("promoted_bytes").isNotNull()
-                & (F.col("millis_since_last") != 0),
-                F.expr("promoted_bytes div millis_since_last"),
-            ).otherwise(F.lit(0)),
-        }
-    )
+def pause_ticks(col: str):
+    """Seconds as exact 0.1 µs BIGINT ticks, rounded HALF_UP (the
+    streaming twins use ``core.to_ticks``, DuckDB ``round``)."""
+    return F.round(F.col(col) * 10_000_000).cast("long")
 
 
 def fullgc_pressure(events: DataFrame) -> DataFrame:
@@ -222,9 +208,7 @@ def gc_overhead(events: DataFrame) -> DataFrame:
     ev = events.where(F.col("jvm_age_seconds").isNotNull()).select(
         "url",
         (F.col("jvm_age_seconds") * 1000).cast("long").alias("age_ms"),
-        F.round(F.col("pause_seconds") * 10_000_000)
-        .cast("long")
-        .alias("pause_ticks"),
+        pause_ticks("pause_seconds").alias("pause_ticks"),
     )
     agg = ev.groupBy("url").agg(
         F.count("pause_ticks").alias("n_pauses"),
@@ -279,9 +263,7 @@ def pause_cusum(
     pauses = events.where(F.col("pause_seconds").isNotNull()).select(
         "url",
         "event_idx",
-        F.round(F.col("pause_seconds") * 10_000_000)
-        .cast("long")
-        .alias("pause_ticks"),
+        pause_ticks("pause_seconds").alias("pause_ticks"),
     )
     w = (
         Window.partitionBy("url")
@@ -363,9 +345,7 @@ def slo_burn(
         "url",
         "event_idx",
         (F.col("jvm_age_seconds") * 1000).cast("long").alias("age_ms"),
-        F.round(F.col("pause_seconds") * 10_000_000)
-        .cast("long")
-        .alias("pause_ticks"),
+        pause_ticks("pause_seconds").alias("pause_ticks"),
     )
     wo = Window.partitionBy("url").orderBy("event_idx")
     runs = pauses.withColumn(
@@ -504,9 +484,7 @@ def pause_jitter(events: DataFrame) -> DataFrame:
     exchange; output ∝ JVMs."""
     p = events.where(F.col("pause_seconds").isNotNull()).select(
         "url",
-        F.round(F.col("pause_seconds") * 10_000_000)
-        .cast("long")
-        .alias("t"),
+        pause_ticks("pause_seconds").alias("t"),
     )
     agg = p.groupBy("url").agg(
         F.count("*").cast("long").alias("n_pauses"),

@@ -15,16 +15,15 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from gclog_parser_spark.operators.enrich import family_join
+from gclog_parser_spark.operators.enrich import enrich_collector_family
 
 
 def with_sink(events: DataFrame) -> DataFrame:
     """Adds the routing column ``sink`` (= collector family), and the
-    ``family`` enrichment itself in the same projection when absent."""
-    if "family" in events.columns:
-        return events.withColumn("sink", F.col("family"))
-    joined, family = family_join(events)
-    return joined.withColumns({"family": family, "sink": family})
+    ``family`` enrichment itself first when absent."""
+    if "family" not in events.columns:
+        events = enrich_collector_family(events)
+    return events.withColumn("sink", F.col("family"))
 
 
 def fanout_write(

@@ -505,7 +505,8 @@ def corpus_manifest(
     ``shard_by_tokens`` output shard, the doc count, exact token
     total, id range, and an ORDER-INVARIANT content checksum (exact
     sum of per-doc 60-bit md5 ticks over ``doc_id:text``, accumulated
-    in DECIMAL(38,0) so 10^12 docs cannot overflow).  Two re-runs of
+    in DECIMAL(38,0) so 10^12 docs cannot overflow; a NULL text hashes
+    as the empty string in both engines).  Two re-runs of
     the pipeline produce byte-equal manifests iff they produced the
     same shards with the same content — the cheap release-equality
     check that avoids re-hashing terabytes pairwise.
@@ -522,7 +523,9 @@ def corpus_manifest(
         F.substring(
             F.md5(
                 F.concat_ws(
-                    ":", F.col("doc_id").cast("string"), F.col("text")
+                    ":",
+                    F.col("doc_id").cast("string"),
+                    F.coalesce("text", F.lit("")),
                 )
             ),
             1,

@@ -288,14 +288,8 @@ def ivf_train(
     DuckDB oracle re-derives them value-for-value); empty cells and
     zero-norm means keep their previous centroid."""
     import math
-    from decimal import ROUND_HALF_UP, Decimal
 
-    def _r6(x: float) -> float:
-        # HALF_UP to match DuckDB round() (ann_ivf_trained_sql) — Python
-        # round() is banker's and would diverge on exact .5 at 6 dp
-        return float(
-            Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
-        )
+    from gclog_parser_spark.core import half_up
 
     cents = centroid_components(n_cells, dim, seed)
     for _ in range(iters):
@@ -324,7 +318,7 @@ def ivf_train(
                 new.append(cents[c])  # empty/degenerate cell
             else:
                 new.append(
-                    [_r6(m[p] / norm) for p in range(dim)]
+                    [half_up(m[p] / norm, 6) for p in range(dim)]
                 )
         cents = new
     return cents

@@ -2220,7 +2220,7 @@ blocks AS (
   FROM pc GROUP BY 1, 2, 3
 ),
 tot AS (SELECT url, CAST(SUM(cp) AS BIGINT) AS total FROM pc GROUP BY 1),
-phashes AS (
+phashes AS MATERIALIZED (
   SELECT b.url, CAST(MAX(b.n) AS BIGINT) AS n_cp,
     CAST(SUM(CASE WHEN b.bs * b.n >= t.total * b.bn
           THEN (CAST(1 AS BIGINT) << ({bits} - 1 - b.blk))
@@ -2752,7 +2752,7 @@ def corpus_manifest_sql(
 ticks AS (
   SELECT doc_id,
     CAST('0x' || substr(
-      md5(CAST(doc_id AS VARCHAR) || ':' || text), 1, 15)
+      md5(CAST(doc_id AS VARCHAR) || ':' || coalesce(text, '')), 1, 15)
       AS BIGINT) AS tick
   FROM documents
 )

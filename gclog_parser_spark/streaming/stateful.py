@@ -28,6 +28,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gclog_parser_spark.core import half_up, to_ticks
 from gclog_parser_spark.schema import EVENTS_SCHEMA
 
 STATE_SCHEMA = StructType(
@@ -225,7 +226,7 @@ def stateful_cusum(
             for rec in pdf.to_dict("records"):
                 if pd.isna(rec["pause_seconds"]):
                     continue
-                ticks = int(round(rec["pause_seconds"] * 10_000_000))
+                ticks = to_ticks(rec["pause_seconds"])
                 p_sum += ticks - target_ticks
                 p_min = min(p_min, p_sum)
                 cusum = p_sum - min(0, p_min)
@@ -251,18 +252,6 @@ def stateful_cusum(
         stateStructType=CUSUM_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _half_up6(x: float) -> float:
-    """HALF_UP at 6 dp over the double's shortest decimal repr — the
-    same algorithm as Spark's ``F.round`` (BigDecimal.valueOf →
-    setScale HALF_UP) and DuckDB's ``round``, so the streaming twin's
-    burn doubles are bit-identical to the batch operator's."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(
-        Decimal(repr(x)).quantize(Decimal("0.000001"), ROUND_HALF_UP)
     )
 
 
@@ -344,11 +333,11 @@ def stateful_slo_burn(
             if l_bucket is None:
                 return
             ticks_long = sum(t for t in shorts if t is not None)
-            burn_l = _half_up6(ticks_long / den_long)
+            burn_l = half_up(ticks_long / den_long, 6)
             for j, t in enumerate(shorts):
                 if t is None:
                     continue
-                burn_s = _half_up6(t / den_short)
+                burn_s = half_up(t / den_short, 6)
                 out.append(
                     {
                         "url": url,
@@ -377,7 +366,7 @@ def stateful_slo_burn(
                 ):
                     continue
                 age_ms = int(rec["jvm_age_seconds"] * 1000)
-                ticks = int(round(rec["pause_seconds"] * 10_000_000))
+                ticks = to_ticks(rec["pause_seconds"])
                 if last_age is not None and age_ms < last_age:
                     flush()  # restart boundary: close the open window
                     run_id += 1
@@ -445,7 +434,7 @@ def stateful_jitter(
     operand to double first — the twin mirrors ``float(num) /
     float(den)`` (NOT Python's exact big-int division, which differs
     past 2⁵³) and rounds with the BigDecimal-equivalent
-    ``_half_up6``.  Eviction: the ``stateful_rates`` end-marker
+    ``core.half_up``.  Eviction: the ``stateful_rates`` end-marker
     contract."""
     import math
 
@@ -468,22 +457,22 @@ def stateful_jitter(
             for rec in pdf.to_dict("records"):
                 if pd.isna(rec["pause_seconds"]):
                     continue
-                t = int(round(rec["pause_seconds"] * 10_000_000))
+                t = to_ticks(rec["pause_seconds"])
                 n += 1
                 sx += t
                 sxx += t * t
                 saw = True
         out = []
         if saw and n > 0:
-            mean = _half_up6(float(sx) / float(n * 10000))
+            mean = half_up(float(sx) / float(n * 10000), 6)
             if n > 1:
                 v = (
                     float(n * sxx - sx * sx)
                     / float(n * (n - 1))
                     / 100000000.0
                 )
-                var = _half_up6(v)
-                std = _half_up6(math.sqrt(v))
+                var = half_up(v, 6)
+                std = half_up(math.sqrt(v), 6)
             else:
                 var = None
                 std = None

@@ -193,6 +193,18 @@ def test_wav_roundtrip_and_pinned_digest():
     assert wav_decode(b8)["values"] == [-128, -1, 0, 1, 127]
 
 
+def test_wav_encode_rejects_out_of_range_samples_at_both_widths():
+    """Neither width wraps a sample it cannot store: 8-bit used to
+    wrap 128 to -128 silently while 16-bit raised struct.error."""
+    import pytest
+
+    from gclog_parser_spark.operators.mediacodec import wav_encode
+
+    for width, bad in ((1, 128), (1, -129), (2, 32768), (2, -32769)):
+        with pytest.raises(ValueError):
+            wav_encode([0, bad], sampwidth=width)
+
+
 def test_decode_media_dispatch_and_guards():
     """Dispatch: PNG/WAV decode for real, anything else returns None
     (caller falls back to the stub); malformed decodable payloads fail

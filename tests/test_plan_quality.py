@@ -91,6 +91,71 @@ def test_enrich_dims_are_local_tables(pages):
     assert _broadcasts_local_table(plan_of(explode_region_deltas(heap)))
 
 
+def test_build_events_plan_build_round_trips(spark, pages):
+    """The per-event plan is SQL text: building a narrow
+    ``build_events`` costs a bounded number of py4j round trips to the
+    JVM (the Column-API build made ~1,100)."""
+    from gclog_parser_spark.plans.pipeline import build_events
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        build_events(pages)
+    finally:
+        del client.send_command
+    assert 0 < len(calls) <= 300
+
+
+_EVENT_COLUMNS = [
+    ("url", "string"), ("warc_ts", "timestamp"), ("event_idx", "int"),
+    ("line_no", "int"), ("event_time", "timestamp"),
+    ("tz_offset", "string"), ("jvm_age_seconds", "double"),
+    ("gc_class", "string"), ("gc_cause", "string"),
+    ("heap_before_bytes", "bigint"), ("heap_after_bytes", "bigint"),
+    ("heap_max_bytes", "bigint"), ("heap_reclaimed_bytes", "bigint"),
+    ("pause_seconds", "double"),
+    ("generations", "array<struct<name:string,before_bytes:bigint,"
+     "after_bytes:bigint,capacity_bytes:bigint>>"),
+    ("regions", "array<struct<name:string,used_before:string,"
+     "used_after:string,capacity_before:string,capacity_after:string>>"),
+    ("promoted_bytes", "bigint"), ("desired_survivor_size", "bigint"),
+    ("new_threshold", "int"), ("stopped_seconds", "double"),
+    ("seconds_to_stop", "double"),
+    ("bytes_allocated_since_last", "bigint"),
+    ("millis_since_last", "bigint"), ("heap_allocation_rate", "bigint"),
+    ("promotion_rate", "bigint"),
+]
+
+
+@pytest.mark.parametrize("mode", ["gc_line", "heap_stats"])
+@pytest.mark.parametrize("stitch", ["narrow", "window"])
+def test_build_events_schema_pinned(pages, stitch, mode):
+    """``build_events`` columns as (name, type, nullable): the join key
+    leads, every parsed and rate column is nullable except the window
+    stitch's row_number ``event_idx``, and the resolved family and its
+    sink are never NULL."""
+    from gclog_parser_spark.plans.pipeline import build_events
+
+    df = build_events(pages, mode=mode, stitch=stitch)
+    got = [(f.name, f.dataType.simpleString(), f.nullable) for f in df.schema]
+    want = (
+        [("gc_type", "string", True)]
+        + [
+            (n, t, not (stitch == "window" and n == "event_idx"))
+            for n, t in _EVENT_COLUMNS
+        ]
+        + [("family", "string", False), ("sink", "string", False)]
+    )
+    assert got == want
+
+
 def test_narrow_udf_batch_without_events_keeps_columns():
     """A batch whose pages hold no event still yields a frame Arrow
     converts to the UDF schema (empty columns must not infer float64)."""

@@ -556,3 +556,34 @@ def test_corpus_manifest_rerun_stable_and_content_sensitive(spark, sf_dir):
     assert a[:2] == b[:2]  # same (shard_group, shard_idx)
     assert a[2] == b[2]    # n_docs unchanged
     assert a[-1] != b[-1]  # checksum caught the edit
+
+
+def test_corpus_manifest_null_text_matches_oracle(spark):
+    """A NULL-text doc contributes the same checksum tick in Spark and
+    in the DuckDB oracle (both hash it as ``doc_id:``)."""
+    import duckdb
+    import pandas as pd
+
+    from gclog_parser_spark.operators.sampling import corpus_manifest
+    from gclog_parser_spark.oracle_text import corpus_manifest_sql
+
+    rows = [(0, None), (1, "alpha beta gamma"), (2, "delta epsilon")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted(
+        (r["shard_group"], r["shard_idx"], r["n_docs"], r["n_tokens"],
+         int(r["content_checksum"]))
+        for r in corpus_manifest(docs, tokens_per_shard=4, n_groups=2)
+        .collect()
+    )
+    con = duckdb.connect()
+    con.register(
+        "documents", pd.DataFrame(rows, columns=["doc_id", "text"])
+    )
+    want = sorted(
+        (g, i, n, t, int(c))
+        for g, i, n, t, _, _, c in con.execute(
+            corpus_manifest_sql(tokens_per_shard=4, n_groups=2)
+        ).fetchall()
+    )
+    assert got == want
+    assert sum(n for _, _, n, _, _ in got) == 3

@@ -400,3 +400,38 @@ def test_stateful_jitter_end_marker_evicts(spark, tmp_path):
     assert snaps[0]["n_pauses"] == snaps[1]["n_pauses"]
     assert snaps[0]["mean_pause_ms"] == snaps[1]["mean_pause_ms"]
     assert snaps[0]["var_pause_ms2"] == snaps[1]["var_pause_ms2"]
+
+
+def test_stateful_cusum_rounds_half_tick_pauses_like_batch(spark, tmp_path):
+    """Pauses whose tick product is an exact half (0.5, 1.5, 2.5 ticks)
+    round HALF_UP in the streaming twin as in the batch operator: ticks
+    1, 2, 3 (half-to-even would give 0, 2, 2)."""
+    from gclog_parser_spark.operators.rates import pause_cusum
+    from gclog_parser_spark.streaming.stateful import stateful_cusum
+
+    schema = "url string, event_idx int, pause_seconds double"
+    events = spark.createDataFrame(
+        [("u", i, p) for i, p in enumerate([5e-08, 1.5e-07, 2.5e-07])],
+        schema,
+    )
+    inp = str(tmp_path / "events")
+    events.write.parquet(inp)
+    q = (
+        stateful_cusum(
+            spark.readStream.schema(schema).parquet(inp),
+            target_ms=0, threshold_ms=0,
+        )
+        .writeStream.format("memory")
+        .queryName("t_cusum_half")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(300)
+    got = sorted(tuple(r) for r in spark.sql("select * from t_cusum_half")
+                 .collect())
+    want = sorted(tuple(r) for r in pause_cusum(
+        events, target_ms=0, threshold_ms=0).collect())
+    assert got == want
+    assert [r[2] for r in got] == [1, 2, 3]
