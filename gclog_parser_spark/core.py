@@ -145,7 +145,7 @@ _SUBSPACE_RE = re.compile(
 _METASPACE_RE = re.compile(
     rf"^ *([A-Za-z][A-Za-z\- ]*?) +used ({SIZE_PAT}), capacity ({SIZE_PAT})"
 )
-_HEAP_HDR_RE = re.compile(r"^\{?Heap (before|after)")
+HEAP_HDR_RE = re.compile(r"^\{?Heap (before|after)")
 
 # Line-classification anchors (used by split_blocks here; their patterns
 # are also the window stitch's Spark rlike predicates in operators/parse.py).
@@ -586,7 +586,7 @@ def parse_heap_block(block: str):
     Region deltas zip before/after (and their subspaces) positionally;
     mismatched names raise, like the reference's MatchError."""
     lines = block.split("\n")
-    if not _HEAP_HDR_RE.match(lines[0]):
+    if not HEAP_HDR_RE.match(lines[0]):
         return None
     before, i = _scan_regions(lines, 1)
     # the GcLine may span multiple lines (tenuring); hand the rest of the
@@ -598,7 +598,7 @@ def parse_heap_block(block: str):
     # find the 'Heap after' header; the grammar allows one ignored line
     # between the GcLine tail and it (Parser.scala:99).
     j = i
-    while j < len(lines) and not _HEAP_HDR_RE.match(lines[j]):
+    while j < len(lines) and not HEAP_HDR_RE.match(lines[j]):
         j += 1
     if j >= len(lines):
         return None
@@ -649,7 +649,7 @@ def classify_line(line: str, heap_stats: bool) -> str:
     if c == "[" and UNIFIED_START_RE.match(line):
         return "start"
     if CONTINUATION_RE.match(line) or (
-        heap_stats and (c == " " or _HEAP_HDR_RE.match(line))
+        heap_stats and (c == " " or HEAP_HDR_RE.match(line))
     ):
         return "cont"
     return "filler"

@@ -9,8 +9,9 @@ the plan of choice: throughput scales linearly with executors because
 there is no exchange at all between the columnar scan and the event rows.
 
 ``stitch='window'`` — the north-rule **window-based line grouping**
-(replaces the reference's recursive descent, Parser.scala:117-145):
-``posexplode`` the lines, classify them with *native* Spark predicates,
+(replaces the reference's recursive descent, Parser.scala:117-145),
+written as SQL text over ``core``'s classifier patterns:
+``posexplode`` the lines, classify them with ``RLIKE`` predicates,
 **drop web filler before the shuffle** (the shuffle then carries only GC
 candidate lines — a small fraction of the corpus), assign
 ``event_seq = sum(is_start) over (partition by url order by line_no)``,
@@ -19,19 +20,23 @@ hash(url) partitioning* (no second exchange), and parse the stitched
 blocks in ``mapInPandas``.  Use this when a single log is too large for
 one task or when logs arrive pre-split in line-oriented chunks.
 
-Both plans keep all heavy lifting either in WholeStageCodegen (classify,
-group, re-assemble) or in Arrow-vectorized Python (block parse); there is
-no row-at-a-time Python UDF anywhere (BASELINE.json input_hint).
+One UDF loop (``_parse_pages_fn``) parses blocks for both stitches; they
+differ only in where a row's blocks come from (``core.split_blocks_pos``
+over a whole log, or the one block the window stitched).  Both plans
+keep all heavy lifting either in WholeStageCodegen (classify, group,
+re-assemble) or in Arrow-vectorized Python (block parse); there is no
+row-at-a-time Python UDF anywhere (BASELINE.json input_hint).
 """
 
 from __future__ import annotations
 
 from datetime import datetime
+from itertools import repeat
 
 import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 from gclog_parser_spark import core
 from gclog_parser_spark.datagen import CLOSE_MARK, OPEN_MARK
@@ -183,27 +188,39 @@ def _parse_block(block: str, heap_stats: bool):
 
 
 # ---------------------------------------------------------------------------
-# narrow path
+# the parse UDF (both stitches)
 # ---------------------------------------------------------------------------
 
 def _parse_pages_fn(heap_stats: bool, counters=None):
-    """``counters``: optional (events, skipped_blocks) SparkContext
-    accumulators — the north rule's per-partition metrics; near-zero
-    overhead (one add per partition)."""
+    """The ``mapInPandas`` body of both stitches.  A narrow batch holds
+    whole logs (``gc_text``), split here by ``core.split_blocks_pos``; a
+    window batch holds one stitched ``block`` per row with its
+    ``line_no``.  ``counters``: optional (events, skipped_blocks)
+    SparkContext accumulators — the north rule's per-partition metrics;
+    near-zero overhead (one add per partition)."""
 
     def fn(iterator):
         n_events = n_skipped = 0
         for pdf in iterator:
             out = _Columns()
-            for url, wts, text in zip(
-                pdf["url"].tolist(),
-                pdf["warc_ts"].tolist(),
-                pdf["gc_text"].tolist(),
+            if "block" in pdf.columns:
+                blocks = (
+                    ((line_no, block),)
+                    for line_no, block in zip(
+                        pdf["line_no"].tolist(), pdf["block"].tolist()
+                    )
+                )
+            else:
+                blocks = map(
+                    core.split_blocks_pos,
+                    pdf["gc_text"].tolist(),
+                    repeat(heap_stats),
+                )
+            for url, wts, row_blocks in zip(
+                pdf["url"].tolist(), pdf["warc_ts"].tolist(), blocks
             ):
                 idx = 0
-                for line_no, block in core.split_blocks_pos(
-                    text, heap_stats
-                ):
+                for line_no, block in row_blocks:
                     ev = _parse_block(block, heap_stats)
                     if ev is not None:
                         out.add(url, wts, idx, line_no, ev)
@@ -219,154 +236,105 @@ def _parse_pages_fn(heap_stats: bool, counters=None):
     return fn
 
 
-def _parse_narrow(src: DataFrame, heap_stats: bool, counters) -> DataFrame:
+def _parse_blocks(src: DataFrame, heap_stats: bool, counters) -> DataFrame:
+    """The narrow stitch whole; the window stitch's parse step."""
     return _restore_timestamps(
         src.mapInPandas(_parse_pages_fn(heap_stats, counters), _UDF_SCHEMA)
     )
 
 
 # ---------------------------------------------------------------------------
-# window path
+# window path: SQL text over core's classifier patterns
 # ---------------------------------------------------------------------------
 
-def _parse_blocks_fn(heap_stats: bool, counters=None):
-    def fn(iterator):
-        n_events = n_skipped = 0
-        for pdf in iterator:
-            out = _Columns()
-            for url, wts, line_no, block in zip(
-                pdf["url"].tolist(),
-                pdf["warc_ts"].tolist(),
-                pdf["line_no"].tolist(),
-                pdf["block"].tolist(),
-            ):
-                ev = _parse_block(block, heap_stats)
-                if ev is not None:
-                    # event_idx re-derived below by a row_number window
-                    out.add(url, wts, -1, line_no, ev)
-                    n_events += 1
-                else:
-                    n_skipped += 1
-            yield out.frame()
-        if counters:
-            counters[0].add(n_events)
-            counters[1].add(n_skipped)
+# ``core.classify_line`` as SQL predicates over ``line`` (pinned against
+# it on every fixture line in tests/test_spark_parse.py).  core's
+# patterns are valid Java regex as written; RLIKE ignores
+# UNIFIED_START_RE's capture groups.  The three start shapes are ONE
+# alternation: each RLIKE is a full regex pass over the line.
+_START = "line RLIKE r'{}'".format("|".join(
+    f"(?:{r.pattern})"
+    for r in (core.GC_START_RE, core.APPSTOP_START_RE, core.UNIFIED_START_RE)
+))
+_CONT = f"line RLIKE r'{core.CONTINUATION_RE.pattern}'"
 
-    return fn
+#: heap_stats → (start, cont, open, close).  In heap-stats mode region
+#: lines are space-prefixed, and the bare 'Heap after ...' header must
+#: survive the pre-shuffle filter too.  The open flag is
+#: HEAP_BLOCK_OPEN_RE as a prefix test, which spares every filler line
+#: one more regex pass.
+_LINE_FLAGS = {
+    False: (_START, _CONT, "false", "false"),
+    True: (
+        _START,
+        f"{_CONT} OR startswith(line, ' ')"
+        f" OR line RLIKE r'{core.HEAP_HDR_RE.pattern}'",
+        "startswith(line, '{Heap before')",
+        "rtrim(line) = '}'",
+    ),
+}
+
+_LINES = "posexplode(split(gc_text, '\\n')) AS (line_no, line)"
 
 
-def _line_flags(line, heap_stats: bool):
-    """(is_start, is_cont, is_open, is_close) Columns for one log
-    line: ``core.classify_line`` as native Spark predicates (pinned
-    against it on every fixture line in tests/test_spark_parse.py)."""
-    # ONE alternation regex for all three start shapes: each extra
-    # rlike is a full regex-engine pass over every one of the ~70
-    # lines/page, and the flags are needed twice (filter + carried
-    # column) — computing them once in a projection, then filtering on
-    # the materialized flags, keeps it to 2 regex passes per line
-    # (core's classifier patterns are valid Java regex as written;
-    # rlike ignores UNIFIED_START_RE's capture groups)
-    start_any = "|".join(
-        f"(?:{r.pattern})"
-        for r in (
-            core.GC_START_RE, core.APPSTOP_START_RE, core.UNIFIED_START_RE
-        )
-    )
-    is_start = line.rlike(start_any)
-    is_cont = line.rlike(core.CONTINUATION_RE.pattern)
-    if not heap_stats:
-        return is_start, is_cont, F.lit(False), F.lit(False)
-    # region lines are space-prefixed; the bare 'Heap after ...'
-    # header must survive the pre-shuffle filter too
-    is_cont = (
-        is_cont
-        | line.startswith(" ")
-        | line.rlike(r"^\{?Heap (before|after)")
-    )
+def _over(end: str) -> str:
     return (
-        is_start,
-        is_cont,
-        line.startswith("{Heap before"),
-        F.rtrim(line) == "}",
+        "OVER (PARTITION BY url ORDER BY line_no"
+        f" ROWS BETWEEN UNBOUNDED PRECEDING AND {end})"
     )
+
+
+# Brace depth before the line; in heap-stats mode a block starts at an
+# open or start line outside any brace block.
+_DEPTH = (
+    f"coalesce(sum(opens) {_over('1 PRECEDING')}, 0)"
+    f" - coalesce(sum(closes) {_over('1 PRECEDING')}, 0)"
+)
+_SEQ = "sum(CAST({} AS INT)) " + _over("CURRENT ROW") + " AS event_seq"
+_EVENT_SEQ = {
+    False: _SEQ.format("is_start"),
+    True: _SEQ.format(f"(opens = 1 OR is_start) AND {_DEPTH} = 0"),
+}
+
+_BLOCK = (
+    "array_join(transform(array_sort(collect_list(struct(line_no, line))),"
+    " s -> s.line), '\\n') AS block"
+)
+
+# Gap-free per-url event index (the events side is tiny vs the lines).
+_REINDEX = [
+    "row_number() OVER (PARTITION BY url ORDER BY line_no) - 1 AS event_idx"
+    if c == "event_idx" else c
+    for c in _COLUMNS
+]
 
 
 def _parse_window(src: DataFrame, heap_stats: bool, counters) -> DataFrame:
-    lines = src.select(
-        "url",
-        "warc_ts",
-        F.posexplode(F.split("gc_text", "\n")).alias("line_no", "line"),
-    )
-    is_start, is_cont, is_open, is_close = _line_flags(
-        F.col("line"), heap_stats
-    )
-
-    # Filler is dropped HERE, map-side, before the one shuffle: the
-    # exchange carries only GC-candidate lines.
-    lines = lines.select(
-        "url",
-        "warc_ts",
-        "line_no",
-        "line",
-        is_start.alias("is_start"),
-        is_cont.alias("is_cont"),
-        is_open.cast("int").alias("opens"),
-        is_close.cast("int").alias("closes"),
-    ).where(
-        F.col("is_start") | F.col("is_cont")
-        | (F.col("opens") == 1) | (F.col("closes") == 1)
-    ).drop("is_cont")
-
-    w_prev = (
-        Window.partitionBy("url")
-        .orderBy("line_no")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_cur = (
-        Window.partitionBy("url")
-        .orderBy("line_no")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    depth = (
-        F.coalesce(F.sum("opens").over(w_prev), F.lit(0))
-        - F.coalesce(F.sum("closes").over(w_prev), F.lit(0))
-    )
-    eff_start = (
-        ((F.col("opens") == 1) | F.col("is_start")) & (depth == 0)
-        if heap_stats
-        else F.col("is_start")
-    )
-    lines = lines.withColumn(
-        "event_seq", F.sum(eff_start.cast("int")).over(w_cur)
-    ).where(F.col("event_seq") > 0)
-
-    # Re-assemble blocks natively.  The hash aggregate's clustering on
-    # (url, event_seq) is satisfied by the window's hash(url) exchange,
-    # so this does NOT shuffle again.
-    blocks = lines.groupBy("url", "warc_ts", "event_seq").agg(
-        F.min("line_no").alias("line_no"),
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("line_no", "line"))
-                ),
-                lambda s: s["line"],
-            ),
-            "\n",
-        ).alias("block"),
-    )
-
-    events = _restore_timestamps(
-        blocks.select("url", "warc_ts", "line_no", "block").mapInPandas(
-            _parse_blocks_fn(heap_stats, counters), _UDF_SCHEMA
+    start, cont, opens, closes = _LINE_FLAGS[heap_stats]
+    # Filler is dropped map-side, before the line stream's one shuffle.
+    # The executed plan evaluates the filter's RLIKEs on every line, then
+    # the projection's start alternation again on the surviving lines
+    # (GC candidates, a small fraction of the lines).  Flags projected
+    # first and filtered on would plan the same: Catalyst pushes such a
+    # filter below the projection.
+    lines = (
+        src.selectExpr("url", "warc_ts", _LINES)
+        .where(f"{start} OR {cont} OR {opens} OR {closes}")
+        .selectExpr(
+            "url", "warc_ts", "line_no", "line",
+            f"{start} AS is_start",
+            f"CAST({opens} AS INT) AS opens",
+            f"CAST({closes} AS INT) AS closes",
         )
+        .selectExpr("url", "warc_ts", "line_no", "line", _EVENT_SEQ[heap_stats])
+        .where("event_seq > 0")
     )
-
-    # Gap-free per-url event index (events DF is tiny vs the line stream).
-    w_idx = Window.partitionBy("url").orderBy("line_no")
-    return events.withColumn(
-        "event_idx", (F.row_number().over(w_idx) - 1).cast("int")
-    )
+    # The hash aggregate's clustering on (url, event_seq) is satisfied by
+    # the window's hash(url) exchange, so re-assembly does NOT shuffle.
+    blocks = lines.groupBy("url", "warc_ts", "event_seq").agg(
+        F.expr("min(line_no) AS line_no"), F.expr(_BLOCK)
+    ).drop("event_seq")
+    return _parse_blocks(blocks, heap_stats, counters).selectExpr(*_REINDEX)
 
 
 def parse_events(
@@ -389,7 +357,7 @@ def parse_events(
     if mode not in ("gc_line", "heap_stats"):
         raise ValueError(f"unknown mode {mode!r}")
     if stitch == "narrow":
-        parse = _parse_narrow
+        parse = _parse_blocks
     elif stitch == "window":
         parse = _parse_window
     else:

@@ -35,19 +35,22 @@ _PREV = (
     " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING))"
 )
 
-# The rate columns as SQL text, in output order.  The two rates read
-# the first two columns as lateral aliases; `div` is integral division
-# (truncates toward zero, JVM parity).
+# The rate columns as SQL text, in output order, after the helper
+# ``_prev``: every later column reads the columns before it as lateral
+# aliases, so the window is evaluated once per row (``with_rates`` drops
+# the helper); `div` is integral division (truncates toward zero, JVM
+# parity).
 _RATES = (
+    f"{_PREV} AS _prev",
     "CASE WHEN gc_class = 'app_stopped' THEN 0"
-    f" WHEN {_PREV} IS NULL THEN coalesce(heap_before_bytes, 0)"
+    " WHEN _prev IS NULL THEN coalesce(heap_before_bytes, 0)"
     " WHEN heap_before_bytes IS NOT NULL"
-    f" AND {_PREV}.heap_after_bytes IS NOT NULL"
-    f" THEN heap_before_bytes - {_PREV}.heap_after_bytes"
+    " AND _prev.heap_after_bytes IS NOT NULL"
+    " THEN heap_before_bytes - _prev.heap_after_bytes"
     " ELSE 0 END AS bytes_allocated_since_last",
     "CASE WHEN gc_class = 'app_stopped' THEN 0"
-    f" WHEN {_PREV} IS NULL THEN {_AGE_MS}"
-    f" ELSE {_AGE_MS} - {_PREV}.age_ms END AS millis_since_last",
+    f" WHEN _prev IS NULL THEN {_AGE_MS}"
+    f" ELSE {_AGE_MS} - _prev.age_ms END AS millis_since_last",
     "CASE WHEN millis_since_last = 0 THEN 0"
     " ELSE bytes_allocated_since_last div millis_since_last END"
     " AS heap_allocation_rate",
@@ -60,7 +63,7 @@ _RATES = (
 def with_rates(events: DataFrame) -> DataFrame:
     """events + the four rate columns, in one projection over one
     window on ``(url, event_idx)``."""
-    return events.selectExpr("*", *_RATES)
+    return events.selectExpr("*", *_RATES).drop("_prev")
 
 
 def pause_ticks(col: str):

@@ -8,9 +8,8 @@ the final output columns, AQE re-plans the window shuffle at runtime).
 ``PipelineMetrics`` carries the north rule's per-partition metrics:
 pages observed on the extract output (``df.observe``, exactly-once) and
 SparkContext accumulators updated inside the Arrow parse workers
-(events / skipped blocks), under either stitch — the distributed
-analogue of the reference's absent-but-needed observability (its
-Main.scala just loops files single-threaded).
+(events / skipped blocks, under either stitch; a retried task adds its
+counts again).
 """
 
 from __future__ import annotations
@@ -68,31 +67,3 @@ def build_events(
     )
     return with_sink(with_rates(events))
 
-
-def observed_events(events, name: str = "gc_metrics"):
-    """The modern (Spark 3.3+/4) twin of the accumulator counters:
-    ``df.observe`` attaches aggregate metrics to the PLAN, collected
-    as a side effect of whatever action runs — no second scan, no
-    driver round-trip, and unlike accumulators the values are
-    exactly-once per query (retried tasks can double-count
-    accumulators; observed metrics are computed in the aggregation
-    layer).
-
-    Returns ``(observed_df, observation)``: run any action on the
-    frame, then read ``observation.get`` for {'events', 'urls_hashed',
-    'pause_seconds_sum', 'null_pause_events'}.  At cluster scale this
-    is the per-job health row a pipeline publishes with every run.
-    """
-    import pyspark.sql.functions as F
-
-    obs = Observation(name)
-    observed = events.observe(
-        obs,
-        F.count(F.lit(1)).alias("events"),
-        F.approx_count_distinct("url").alias("urls_hashed"),
-        F.round(F.sum("pause_seconds"), 6).alias("pause_seconds_sum"),
-        F.sum(
-            F.col("pause_seconds").isNull().cast("long")
-        ).alias("null_pause_events"),
-    )
-    return observed, obs

@@ -5,6 +5,7 @@ them (SURVEY.md §4, BENCH/BASELINE.md 'why this holds at 100 TB')."""
 from __future__ import annotations
 
 import re
+import threading
 
 import pytest
 
@@ -16,6 +17,7 @@ from gclog_parser_spark.operators.aggregate import (
 from gclog_parser_spark.operators.parse import parse_events
 from gclog_parser_spark.operators.rates import with_rates
 from gclog_parser_spark.operators.route import with_sink
+from gclog_parser_spark.plans.pipeline import build_events
 
 
 @pytest.fixture(scope="module")
@@ -91,26 +93,41 @@ def test_enrich_dims_are_local_tables(pages):
     assert _broadcasts_local_table(plan_of(explode_region_deltas(heap)))
 
 
-def test_build_events_plan_build_round_trips(spark, pages):
-    """The per-event plan is SQL text: building a narrow
-    ``build_events`` costs a bounded number of py4j round trips to the
-    JVM (the Column-API build made ~1,100)."""
-    from gclog_parser_spark.plans.pipeline import build_events
+_PLAN_BUILDS = {
+    "build_events": build_events,
+    "parse_events-window-gc_line": lambda pages: parse_events(
+        pages, stitch="window"
+    ),
+    "parse_events-window-heap_stats": lambda pages: parse_events(
+        pages, mode="heap_stats", stitch="window"
+    ),
+}
 
+
+@pytest.mark.parametrize("case", sorted(_PLAN_BUILDS))
+def test_build_events_plan_build_round_trips(spark, pages, case):
+    """The per-event plan is SQL text: building a narrow
+    ``build_events`` or a window-stitch ``parse_events`` costs a bounded
+    number of py4j round trips to the JVM (the Column-API builds made
+    ~1,100 and ~720-840)."""
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
     calls = []
+    builder = threading.get_ident()
 
     def counting(*args, **kwargs):
-        calls.append(1)
+        # py4j's own thread sends detach commands for collected objects
+        # of earlier builds at any time
+        if threading.get_ident() == builder:
+            calls.append(1)
         return send(*args, **kwargs)
 
     client.send_command = counting
     try:
-        build_events(pages)
+        _PLAN_BUILDS[case](pages)
     finally:
         del client.send_command
-    assert 0 < len(calls) <= 300
+    assert 0 < len(calls) <= 250
 
 
 _EVENT_COLUMNS = [
@@ -180,6 +197,15 @@ def test_rates_single_window_no_extra_shuffle(pages):
     events = parse_events(pages, stitch="narrow")
     plan = plan_of(with_rates(events))
     assert n_shuffles(plan) == 1
+
+
+def test_build_events_rates_window_evaluates_last_once(pages):
+    """The rate CASEs read the previous event through one lateral alias,
+    so the executed ``build_events`` plan's ``Window`` node evaluates
+    exactly one ``last()``."""
+    plan = plan_of(build_events(pages))
+    (window,) = [l for l in plan.splitlines() if "Window [" in l]
+    assert window.count("last(") == 1
 
 
 def test_salted_agg_two_stage(pages):

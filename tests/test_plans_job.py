@@ -415,23 +415,18 @@ def test_select_pipeline_end_to_end(spark, sf_dir, tmp_path):
 
 
 def test_observed_metrics_ride_the_action(spark, sf_dir):
-    """df.observe: the metrics row materializes as a side effect of
-    the consumer's own action — no second scan — and matches an
-    explicit recount."""
-    from gclog_parser_spark.datagen import pages_from_documents
-    from gclog_parser_spark.operators.parse import parse_events
-    from gclog_parser_spark.plans.pipeline import observed_events
-
-    events = parse_events(pages_from_documents(spark, sf_dir))
-    observed, obs = observed_events(events)
-    n = observed.count()  # the ONLY action
-    got = obs.get
-    assert got["events"] == n
-    assert got["null_pause_events"] >= 0
-    recount = events.agg(
-        F.round(F.sum("pause_seconds"), 6).alias("s")
-    ).collect()[0]["s"]
-    assert got["pause_seconds_sum"] == recount
+    """df.observe: the pages metrics row materializes as a side effect
+    of the consumer's own action — no second scan — and matches an
+    explicit recount; under the window stitch the parse-UDF loop the
+    narrow stitch shares feeds the event counters."""
+    pages = pages_from_documents(spark, sf_dir)
+    metrics = PipelineMetrics.create(spark)
+    events = build_events(pages, stitch="window", metrics=metrics)
+    n = events.count()  # the ONLY action
+    snap = metrics.snapshot()
+    assert snap["pages"] == pages.count()
+    assert snap["events"] == n == parse_events(pages).count()
+    assert snap["skipped_blocks"] == 0
 
 
 def test_tokenize_pipeline_end_to_end(spark, sf_dir, tmp_path):

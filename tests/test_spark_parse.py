@@ -110,12 +110,12 @@ def test_events_match_core_parser(spark, pages):
 
 @pytest.mark.parametrize("heap_stats", [False, True])
 def test_window_line_flags_match_core_classifier(spark, heap_stats):
-    """The window stitch classifies lines with Spark rlike over core's
-    regex patterns; on every line of every fixture log its flags must
+    """The window stitch classifies lines with SQL RLIKE predicates over
+    core's regex patterns; on every line of every fixture log its flags must
     give the class ``core.classify_line`` gives (checked in core's
     order: open, close, start, cont)."""
     from gclog_parser_spark import fixtures
-    from gclog_parser_spark.operators.parse import _line_flags
+    from gclog_parser_spark.operators.parse import _LINE_FLAGS
 
     texts = [t for _, _, t, _, _ in all_classes()] + [
         v for k, v in sorted(vars(fixtures).items())
@@ -123,16 +123,13 @@ def test_window_line_flags_match_core_classifier(spark, heap_stats):
     ]
     lines = sorted({ln for t in texts for ln in t.split("\n")})
     df = spark.createDataFrame([(ln,) for ln in lines], "line string")
-    flags = zip(
-        ("start", "cont", "open", "close"),
-        _line_flags(F.col("line"), heap_stats),
-    )
+    flags = zip(("start", "cont", "open", "close"), _LINE_FLAGS[heap_stats])
     got = {
         r["line"]: next(
             (c for c in ("open", "close", "start", "cont") if r[c]),
             "filler",
         )
-        for r in df.select("line", *[f.alias(c) for c, f in flags])
+        for r in df.selectExpr("line", *[f"({e}) AS {c}" for c, e in flags])
         .collect()
     }
     want = {ln: core.classify_line(ln, heap_stats) for ln in lines}
