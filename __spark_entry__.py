@@ -24,7 +24,7 @@ from gclog_parser_spark.datagen import pages_from_documents
 from gclog_parser_spark.operators.aggregate import per_sink_hourly
 from gclog_parser_spark.operators.enrich import explode_region_deltas
 from gclog_parser_spark.operators.parse import parse_events
-from gclog_parser_spark.operators.rates import with_rates
+from gclog_parser_spark.operators.rates import pause_ticks, with_rates
 from gclog_parser_spark.operators.route import with_sink
 
 
@@ -43,13 +43,6 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Spark-side queries
 # ---------------------------------------------------------------------------
-
-_MICROS = 10_000_000  # pause seconds → 0.1µs ticks (exact in BIGINT)
-
-
-def _pause_ticks(col):
-    return F.round(F.col(col) * _MICROS).cast("long")
-
 
 def q_gc_event_counts(spark, sf_dir):
     return (
@@ -166,7 +159,7 @@ def _fixture_parse(spark, fixture_text: str, url: str):
         "heap_before_bytes",
         "heap_after_bytes",
         "heap_max_bytes",
-        _pause_ticks("pause_seconds").alias("pause_ticks"),
+        pause_ticks("pause_seconds").alias("pause_ticks"),
     )
 
 
@@ -662,7 +655,7 @@ def q_gc_pause_by_family(spark, sf_dir):
         .groupBy("family")
         .agg(
             F.count("*").alias("events"),
-            F.sum(_pause_ticks("pause_seconds")).alias("pause_ticks_sum"),
+            F.sum(pause_ticks("pause_seconds")).alias("pause_ticks_sum"),
         )
     )
 
@@ -742,8 +735,8 @@ def q_gc_appstopped(spark, sf_dir):
     ev = _events(spark, sf_dir).where(F.col("gc_class") == "app_stopped")
     return ev.agg(
         F.count("*").alias("events"),
-        F.sum(_pause_ticks("stopped_seconds")).alias("stopped_ticks_sum"),
-        F.sum(_pause_ticks("seconds_to_stop")).alias("to_stop_ticks_sum"),
+        F.sum(pause_ticks("stopped_seconds")).alias("stopped_ticks_sum"),
+        F.sum(pause_ticks("seconds_to_stop")).alias("to_stop_ticks_sum"),
     )
 
 
@@ -4145,7 +4138,7 @@ def q_rel_dpp_scan(spark, sf_dir):
         .groupBy("day")
         .agg(
             F.count("*").alias("events"),
-            F.sum(_pause_ticks("value")).alias("value_ticks_sum"),
+            F.sum(pause_ticks("value")).alias("value_ticks_sum"),
             F.countDistinct("user_id").alias("users"),
         )
     )
@@ -4162,7 +4155,7 @@ def q_snap_time_travel(spark, sf_dir):
     df = cat.read_snapshot(spark, table, snapshot_id=2)
     return df.groupBy("event_type").agg(
         F.count("*").alias("events"),
-        F.sum(_pause_ticks("value")).alias("value_ticks_sum"),
+        F.sum(pause_ticks("value")).alias("value_ticks_sum"),
         F.countDistinct("user_id").alias("users"),
     )
 
@@ -4177,7 +4170,7 @@ def q_snap_incremental(spark, sf_dir):
     df = cat.incremental_read(spark, table, from_snapshot=1, to_snapshot=3)
     return df.groupBy("event_type").agg(
         F.count("*").alias("events"),
-        F.sum(_pause_ticks("value")).alias("value_ticks_sum"),
+        F.sum(pause_ticks("value")).alias("value_ticks_sum"),
     )
 
 

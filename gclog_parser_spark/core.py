@@ -823,34 +823,48 @@ def calculate_rates(events):
     Rates use truncating integer division (GCEventWithRates.scala:26-46).
     """
     out = []
-    previous = None
+    previous = (None, None)
     for ev in events:
-        if ev["gc_class"] == "app_stopped":
-            out.append((0, 0, 0, 0))
-            continue
-        if previous is None:
-            allocated = to_bytes(ev["heap"][0]) if ev["heap"] else 0
-            millis = jvm_age_millis(ev["age"])
-        else:
-            if ev["heap"] is not None and previous["heap"] is not None:
-                allocated = to_bytes(ev["heap"][0]) - to_bytes(
-                    previous["heap"][1]
-                )
-            else:
-                allocated = 0
-            millis = jvm_age_millis(ev["age"]) - jvm_age_millis(
-                previous["age"]
-            )
-        previous = ev
-        alloc_rate = 0 if millis == 0 else _tdiv(allocated, millis)
-        promoted = promoted_bytes(ev)
-        promo_rate = (
-            _tdiv(promoted, millis)
-            if (promoted is not None and millis != 0)
-            else 0
+        heap = ev["heap"]
+        rates, previous = rate_step(
+            previous,
+            jvm_age_millis(ev["age"]),
+            to_bytes(heap[0]) if heap else None,
+            to_bytes(heap[1]) if heap else None,
+            promoted_bytes(ev),
+            ev["gc_class"] == "app_stopped",
         )
-        out.append((allocated, millis, alloc_rate, promo_rate))
+        out.append(rates)
     return out
+
+
+def rate_step(previous, age_ms, heap_before, heap_after, promoted, stopped):
+    """One ``RateCalculator`` step, shared by :func:`calculate_rates` and
+    the streaming twin (streaming/stateful.py).  ``previous`` is the
+    (jvm age ms, heap-after bytes) of the last non-AppStopped event,
+    ``(None, None)`` before the first; byte arguments are ``None`` for
+    events without heap / promotion.
+
+    Returns ((allocated, millis, alloc_rate, promo_rate), previous')."""
+    if stopped:
+        return (0, 0, 0, 0), previous
+    prev_age_ms, prev_heap_after = previous
+    if prev_age_ms is None:
+        allocated = heap_before if heap_before is not None else 0
+        millis = age_ms
+    else:
+        if heap_before is not None and prev_heap_after is not None:
+            allocated = heap_before - prev_heap_after
+        else:
+            allocated = 0
+        millis = age_ms - prev_age_ms
+    alloc_rate = 0 if millis == 0 else _tdiv(allocated, millis)
+    promo_rate = (
+        _tdiv(promoted, millis)
+        if (promoted is not None and millis != 0)
+        else 0
+    )
+    return (allocated, millis, alloc_rate, promo_rate), (age_ms, heap_after)
 
 
 def _tdiv(a: int, b: int) -> int:

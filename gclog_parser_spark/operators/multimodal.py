@@ -1,20 +1,22 @@
 """Multimodal column plumbing: treat image/audio/video payloads as
 opaque ``binary`` columns with typed metadata.
 
-The *decode* step is REAL for the formats the standard library can
-decode — PNG (zlib inflate + scanline unfilter) and WAV (the ``wave``
-module), see ``operators.mediacodec`` — and a deterministic stub
-(``decode_stub``) for formats that genuinely need codecs (JPEG, MP4;
-no PIL/ffmpeg in this image).  Everything Spark-side is real and
-tested either way: schema, Arrow batch shape, partitioning, and the
-`mapInPandas` signature (Arrow-batched bytes in, feature struct out —
-the exact shape of a 100 TB media feature-extraction pass).
+Every media operator here is ONE Arrow-batched ``mapInPandas`` pass,
+``_map_payloads``: pruned ``(url, payload)`` scan, bytes in, typed
+feature rows out, zero shuffle — the shape of a 100 TB media
+feature-extraction pass.  An operator supplies only its per-payload
+body.  The *decode* step is REAL for the formats the standard library
+can decode — PNG (zlib inflate + scanline unfilter) and WAV (the
+``wave`` module), see ``operators.mediacodec`` — and a deterministic
+stub (``decode_stub``) for formats that genuinely need codecs (JPEG,
+MP4; no PIL/ffmpeg in this image).
 """
 
 from __future__ import annotations
 
 import hashlib
 
+import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -59,12 +61,69 @@ def _sniff(payload: bytes):
     return "bin", "unknown"
 
 
-def extract_media_meta(pages: DataFrame, payload_col: str = "html"):
-    """binary column → typed metadata via Arrow-batched mapInPandas.
+def _stub_resize_digest(payload: bytes, target_w: int, target_h: int):
+    """The documented resize stub: md5 of the decoded text + 'WxH'."""
+    text = payload.decode("utf-8", errors="replace")
+    return hashlib.md5((text + f"{target_w}x{target_h}").encode()).hexdigest()
 
-    Batches arrive as pandas Series of ``bytes``; output is one typed
-    row per input row.  At scale this stage is embarrassingly parallel
-    (no shuffle) and the binary column is the only one read.
+
+def _codepoints(text: str) -> np.ndarray:
+    """The stub decode's 'pixels': the text's code points as int64."""
+    return np.frombuffer(
+        text.encode("utf-32-le"), dtype=np.uint32
+    ).astype(np.int64)
+
+
+def _average_hash(vals, bits: int) -> int:
+    """``bits``-bit average hash of ``n ≥ 1`` integer values: position
+    ``i`` falls in block ``i·bits div n`` and bit j (MSB first) is set
+    when the block is non-empty and block_sum·n ≥ total·block_len.
+    The sums are exact int64 prefix sums and the comparison is exact
+    integer cross-multiplication, so empty blocks (n < bits) and
+    negative (WAV) values need no special case."""
+    arr = np.asarray(vals, dtype=np.int64)
+    n = len(arr)
+    # block j spans positions [ceil(j·n/bits), ceil((j+1)·n/bits))
+    bounds = (np.arange(bits + 1, dtype=np.int64) * n + bits - 1) // bits
+    csum = np.concatenate(([0], np.cumsum(arr)))
+    block_sum = csum[bounds[1:]] - csum[bounds[:-1]]
+    block_len = np.diff(bounds)
+    total = int(csum[-1])
+    h = 0
+    for j in range(bits):
+        if block_len[j] and int(block_sum[j]) * n >= total * int(
+            block_len[j]
+        ):
+            h |= 1 << (bits - 1 - j)
+    return h
+
+
+def _map_payloads(
+    pages: DataFrame, payload_col: str, schema: str, rows
+) -> DataFrame:
+    """The one per-payload pass: Arrow batches of the pruned
+    ``(url, payload_col)`` columns, NULL payloads skipped, and
+    ``rows(payload_bytes)`` yields 0..n tuples of the ``schema``
+    columns after ``url``.  No shuffle."""
+    columns = [field.split()[0] for field in schema.split(",")]
+
+    def fn(batches):
+        for pdf in batches:
+            yield pd.DataFrame.from_records(
+                [
+                    (url, *row)
+                    for url, payload in zip(pdf["url"], pdf[payload_col])
+                    if payload is not None
+                    for row in rows(bytes(payload))
+                ],
+                columns=columns,
+            )
+
+    return pages.select("url", payload_col).mapInPandas(fn, schema)
+
+
+def extract_media_meta(pages: DataFrame, payload_col: str = "html"):
+    """binary column → one typed metadata row per non-NULL payload.
 
     PNG payloads get REAL width/height (stdlib inflate + unfilter);
     WAV payloads decode for real too (dims are NULL — not an image);
@@ -75,46 +134,21 @@ def extract_media_meta(pages: DataFrame, payload_col: str = "html"):
     otherwise.  ``decoder`` says which path produced the row.
     """
 
-    def fn(batches):
-        for pdf in batches:
-            recs = []
-            for url, payload in zip(pdf["url"], pdf[payload_col]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                magic, kind = _sniff(b)
-                dec = decode_media(b)
-                if dec is not None:
-                    width, height = dec["width"], dec["height"]
-                    digest = value_digest(dec["values"])
-                    decoder = dec["codec"]
-                else:
-                    fake = decode_stub(b)
-                    width = fake["fake_width"]
-                    height = fake["fake_height"]
-                    digest = hashlib.md5(b).hexdigest()
-                    decoder = "stub"
-                recs.append(
-                    {
-                        "url": url,
-                        "n_bytes": len(b),
-                        "magic": magic,
-                        "kind": kind,
-                        "width": width,
-                        "height": height,
-                        "content_digest": digest,
-                        "decoder": decoder,
-                    }
-                )
-            yield pd.DataFrame.from_records(
-                recs,
-                columns=[
-                    "url", "n_bytes", "magic", "kind",
-                    "width", "height", "content_digest", "decoder",
-                ],
-            )
+    def rows(b):
+        magic, kind = _sniff(b)
+        dec = decode_media(b)
+        if dec is not None:
+            width, height = dec["width"], dec["height"]
+            digest = value_digest(dec["values"])
+            decoder = dec["codec"]
+        else:
+            fake = decode_stub(b)
+            width, height = fake["fake_width"], fake["fake_height"]
+            digest = hashlib.md5(b).hexdigest()
+            decoder = "stub"
+        yield len(b), magic, kind, width, height, digest, decoder
 
-    return pages.select("url", payload_col).mapInPandas(fn, META_SCHEMA)
+    return _map_payloads(pages, payload_col, META_SCHEMA, rows)
 
 
 RESIZE_SCHEMA = (
@@ -129,9 +163,8 @@ def resize_media(
     target_h: int = 16,
     payload_col: str = "html",
 ) -> DataFrame:
-    """Fake-resize every payload to ``target_w×target_h`` via the same
-    Arrow-batched ``mapInPandas`` shape a real thumbnailer uses (bytes
-    in → one feature row out, no shuffle, payload column only).
+    """Fake-resize every payload to ``target_w×target_h``: one feature
+    row per payload, the shape a real thumbnailer uses.
 
     The pixel work is the documented stub (no codecs in this image):
     the 'resized' artifact is a deterministic digest of
@@ -139,37 +172,15 @@ def resize_media(
     plumbing value-for-value.  A real deployment replaces ONLY the
     digest line with the codec + resample call."""
 
-    def fn(batches):
-        for pdf in batches:
-            recs = []
-            for url, payload in zip(pdf["url"], pdf[payload_col]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                _, kind = _sniff(b)
-                text = b.decode("utf-8", errors="replace")
-                recs.append(
-                    {
-                        "url": url,
-                        "kind": kind,
-                        "target_w": target_w,
-                        "target_h": target_h,
-                        "resized_digest": hashlib.md5(
-                            (text + f"{target_w}x{target_h}").encode()
-                        ).hexdigest(),
-                    }
-                )
-            yield pd.DataFrame.from_records(
-                recs,
-                columns=[
-                    "url", "kind", "target_w", "target_h",
-                    "resized_digest",
-                ],
-            )
+    def rows(b):
+        yield (
+            _sniff(b)[1],
+            target_w,
+            target_h,
+            _stub_resize_digest(b, target_w, target_h),
+        )
 
-    return pages.select("url", payload_col).mapInPandas(
-        fn, RESIZE_SCHEMA
-    )
+    return _map_payloads(pages, payload_col, RESIZE_SCHEMA, rows)
 
 
 FRAMES_SCHEMA = "url string, frame_idx int, frame_digest string"
@@ -191,32 +202,14 @@ def sample_frames(
     payload; every ``every_n``-th window is 'decoded' (deterministic
     digest stub, same contract as ``decode_stub``)."""
 
-    def fn(batches):
-        for pdf in batches:
-            recs = []
-            for url, payload in zip(pdf["url"], pdf[payload_col]):
-                if payload is None:
-                    continue
-                text = bytes(payload).decode("utf-8", errors="replace")
-                n_frames = (len(text) + FRAME_CHARS - 1) // FRAME_CHARS
-                for i in range(0, n_frames, every_n):
-                    chunk = text[i * FRAME_CHARS: (i + 1) * FRAME_CHARS]
-                    recs.append(
-                        {
-                            "url": url,
-                            "frame_idx": i,
-                            "frame_digest": hashlib.md5(
-                                chunk.encode()
-                            ).hexdigest(),
-                        }
-                    )
-            yield pd.DataFrame.from_records(
-                recs, columns=["url", "frame_idx", "frame_digest"]
-            )
+    def rows(b):
+        text = b.decode("utf-8", errors="replace")
+        n_frames = (len(text) + FRAME_CHARS - 1) // FRAME_CHARS
+        for i in range(0, n_frames, every_n):
+            chunk = text[i * FRAME_CHARS: (i + 1) * FRAME_CHARS]
+            yield i, hashlib.md5(chunk.encode()).hexdigest()
 
-    return pages.select("url", payload_col).mapInPandas(
-        fn, FRAMES_SCHEMA
-    )
+    return _map_payloads(pages, payload_col, FRAMES_SCHEMA, rows)
 
 
 PHASH_BITS = 60  # fits BIGINT positive; bands must divide it
@@ -236,55 +229,18 @@ def media_phash(
     same bits.  Decode is the documented codec stub (no PIL/ffmpeg in
     this image): 'pixels' are the utf-8 codepoints, vectorized per row
     via numpy over the utf-32 view — a real deployment swaps ONLY the
-    decode line for the codec + DCT/resample call, the Spark plumbing
-    (pruned binary scan, Arrow batches, zero shuffle) is the 100 TB
-    shape already.
+    decode line for the codec + DCT/resample call.
 
     Returns (url, n_cp, phash) — phash is a ``bits``-bit BIGINT;
-    near-duplicate payloads land within small Hamming distance."""
-    import numpy as np
+    near-duplicate payloads land within small Hamming distance.
+    Empty payloads drop."""
 
-    def _phash_one(text: str) -> tuple[int, int]:
-        n = len(text)
-        arr = np.frombuffer(
-            text.encode("utf-32-le"), dtype=np.uint32
-        ).astype(np.int64)
-        total = int(arr.sum())
-        if n >= bits:
-            starts = (np.arange(bits) * n + bits - 1) // bits
-            bs = np.add.reduceat(arr, starts)
-            bn = np.diff(np.append(starts, n))
-        else:  # tiny payloads: some blocks empty, loop is exact
-            bs = np.zeros(bits, dtype=np.int64)
-            bn = np.zeros(bits, dtype=np.int64)
-            for pos in range(n):
-                b = pos * bits // n
-                bs[b] += int(arr[pos])
-                bn[b] += 1
-        h = 0
-        for i in range(bits):
-            if bn[i] and int(bs[i]) * n >= total * int(bn[i]):
-                h |= 1 << (bits - 1 - i)
-        return n, h
+    def rows(b):
+        text = b.decode("utf-8", errors="replace")
+        if text:
+            yield len(text), _average_hash(_codepoints(text), bits)
 
-    def fn(batches):
-        for pdf in batches:
-            recs = []
-            for url, payload in zip(pdf["url"], pdf[payload_col]):
-                if payload is None:
-                    continue
-                text = bytes(payload).decode("utf-8", errors="replace")
-                if not text:
-                    continue
-                n, h = _phash_one(text)
-                recs.append({"url": url, "n_cp": n, "phash": h})
-            yield pd.DataFrame.from_records(
-                recs, columns=["url", "n_cp", "phash"]
-            )
-
-    return pages.select("url", payload_col).mapInPandas(
-        fn, PHASH_SCHEMA
-    )
+    return _map_payloads(pages, payload_col, PHASH_SCHEMA, rows)
 
 
 def media_phash_pairs(
@@ -359,8 +315,7 @@ def media_embed(
     payload_col: str = "html",
 ) -> DataFrame:
     """Deterministic stand-in media embedder — the model-inference
-    pass of a multimodal pipeline in its real Spark shape: pruned
-    (url, binary) scan → Arrow-batched ``mapInPandas`` → (url,
+    pass of a multimodal pipeline in its real Spark shape: (url,
     ``array<long>``) embedding relation, zero shuffle.  A real
     deployment swaps ONLY the per-payload function for the
     CLIP/encoder forward pass (GPU-batched over exactly these Arrow
@@ -374,30 +329,16 @@ def media_embed(
     Identical payloads ⇒ identical vectors, which is precisely the
     property embedding-dedup relies on."""
 
-    def fn(batches):
-        for pdf in batches:
-            recs = []
-            for url, payload in zip(pdf["url"], pdf[payload_col]):
-                if payload is None:
-                    continue
-                text = bytes(payload).decode("utf-8", errors="replace")
-                emb = [
-                    int(
-                        hashlib.md5(
-                            (text + f":{j}").encode()
-                        ).hexdigest()[:6],
-                        16,
-                    )
-                    - EMBED_LANE_OFFSET
-                    for j in range(dim)
-                ]
-                recs.append({"url": url, "emb": emb})
-            yield pd.DataFrame.from_records(
-                recs, columns=["url", "emb"]
-            )
+    def rows(b):
+        text = b.decode("utf-8", errors="replace")
+        yield ([
+            int(hashlib.md5((text + f":{j}").encode()).hexdigest()[:6], 16)
+            - EMBED_LANE_OFFSET
+            for j in range(dim)
+        ],)
 
-    return pages.select("url", payload_col).mapInPandas(
-        fn, "url string, emb array<long>"
+    return _map_payloads(
+        pages, payload_col, "url string, emb array<long>", rows
     )
 
 
@@ -462,58 +403,24 @@ def decode_media_features(pages: DataFrame, payload_col: str = "payload"):
     (pixels row-major channel-interleaved / signed PCM samples) — the
     full-fidelity, text-safe form the DuckDB oracle recomputes from
     the generator's closed form (``datagen.media_pages``), so this
-    query proves the encode→decode round trip against ground truth.
+    query proves the encode→decode round trip against ground truth."""
 
-    Scale shape: pruned (url, payload) scan → Arrow-batched
-    ``mapInPandas``, zero shuffle — the 100 TB decode pass."""
-
-    def fn(batches):
-        for pdf in batches:
-            recs = []
-            for url, payload in zip(pdf["url"], pdf[payload_col]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                dec = decode_media(b)
-                if dec is not None:
-                    vals = dec["values"]
-                    recs.append(
-                        {
-                            "url": url,
-                            "codec": dec["codec"],
-                            "width": dec["width"],
-                            "height": dec["height"],
-                            "n_channels": dec["n_channels"],
-                            "sample_rate": dec["sample_rate"],
-                            "n_values": len(vals),
-                            "value_digest": value_digest(vals),
-                        }
-                    )
-                else:
-                    fake = decode_stub(b)
-                    recs.append(
-                        {
-                            "url": url,
-                            "codec": "stub",
-                            "width": fake["fake_width"],
-                            "height": fake["fake_height"],
-                            "n_channels": None,
-                            "sample_rate": None,
-                            "n_values": None,
-                            "value_digest": None,
-                        }
-                    )
-            yield pd.DataFrame.from_records(
-                recs,
-                columns=[
-                    "url", "codec", "width", "height", "n_channels",
-                    "sample_rate", "n_values", "value_digest",
-                ],
+    def rows(b):
+        dec = decode_media(b)
+        if dec is None:
+            fake = decode_stub(b)
+            yield (
+                "stub", fake["fake_width"], fake["fake_height"],
+                None, None, None, None,
             )
+            return
+        vals = dec["values"]
+        yield (
+            dec["codec"], dec["width"], dec["height"], dec["n_channels"],
+            dec["sample_rate"], len(vals), value_digest(vals),
+        )
 
-    return pages.select("url", payload_col).mapInPandas(
-        fn, DECODE_SCHEMA
-    )
+    return _map_payloads(pages, payload_col, DECODE_SCHEMA, rows)
 
 
 RESIZE_REAL_SCHEMA = (
@@ -533,68 +440,36 @@ def resize_media_real(
     c) — integer index math, exactly re-derivable in SQL), WAV
     downsamples the waveform to a ``target_w·target_h``-point sketch
     (out(j) = sample(j·n div L)); other payloads keep the documented
-    stub digest (md5 of text + 'WxH').  ``resized_digest`` digests the
-    resized values the same way ``value_digest`` does, so the oracle
-    verifies REAL resampled pixels, not plumbing alone.
+    stub digest of :func:`resize_media` (md5 of text + 'WxH').
+    ``resized_digest`` digests the resized values the same way
+    ``value_digest`` does, so the oracle verifies REAL resampled
+    pixels, not plumbing alone."""
+    L = target_w * target_h
 
-    Same scale shape as every decode pass here: pruned binary scan →
-    Arrow ``mapInPandas``, zero shuffle."""
-
-    def fn(batches):
-        L = target_w * target_h
-        for pdf in batches:
-            recs = []
-            for url, payload in zip(pdf["url"], pdf[payload_col]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                dec = decode_media(b)
-                if dec is None:
-                    text = b.decode("utf-8", errors="replace")
-                    digest = hashlib.md5(
-                        (text + f"{target_w}x{target_h}").encode()
-                    ).hexdigest()
-                    decoder = "stub"
-                elif dec["codec"] == "png":
-                    w, h, ch = (
-                        dec["width"], dec["height"], dec["n_channels"]
-                    )
-                    src = dec["values"]
-                    out = [
-                        src[((ty * h // target_h) * w
-                             + (tx * w // target_w)) * ch + c]
-                        for ty in range(target_h)
-                        for tx in range(target_w)
-                        for c in range(ch)
-                    ]
-                    digest = value_digest(out)
-                    decoder = "png"
-                else:  # wav: 1-D waveform sketch
-                    src = dec["values"]
-                    n = len(src)
-                    out = [src[j * n // L] for j in range(L)]
-                    digest = value_digest(out)
-                    decoder = "wav"
-                recs.append(
-                    {
-                        "url": url,
-                        "decoder": decoder,
-                        "target_w": target_w,
-                        "target_h": target_h,
-                        "resized_digest": digest,
-                    }
-                )
-            yield pd.DataFrame.from_records(
-                recs,
-                columns=[
-                    "url", "decoder", "target_w", "target_h",
-                    "resized_digest",
-                ],
+    def rows(b):
+        dec = decode_media(b)
+        if dec is None:
+            yield (
+                "stub", target_w, target_h,
+                _stub_resize_digest(b, target_w, target_h),
             )
+            return
+        src = dec["values"]
+        if dec["codec"] == "png":
+            w, h, ch = dec["width"], dec["height"], dec["n_channels"]
+            out = [
+                src[((ty * h // target_h) * w
+                     + (tx * w // target_w)) * ch + c]
+                for ty in range(target_h)
+                for tx in range(target_w)
+                for c in range(ch)
+            ]
+        else:  # wav: 1-D waveform sketch
+            n = len(src)
+            out = [src[j * n // L] for j in range(L)]
+        yield dec["codec"], target_w, target_h, value_digest(out)
 
-    return pages.select("url", payload_col).mapInPandas(
-        fn, RESIZE_REAL_SCHEMA
-    )
+    return _map_payloads(pages, payload_col, RESIZE_REAL_SCHEMA, rows)
 
 
 PHASH_REAL_SCHEMA = "url string, decoder string, n_vals long, phash long"
@@ -611,61 +486,21 @@ def media_phash_real(
     stand-ins; undecodable payloads keep exactly that codepoint lane
     (``decoder='stub'``), so one relation covers the mixed corpus.
 
-    Same exact-integer bit rule as ``media_phash``: ``bits``
-    contiguous blocks (position ``i`` → block ``i·bits div n``, the
-    closed form of the reduceat boundaries), bit_j = (block sum ·
-    n ≥ total · block len) — signed-safe integer cross-multiplication,
-    so WAV's negative samples compare exactly too.  Zero shuffle:
-    pruned (url, payload) scan → Arrow ``mapInPandas``."""
-    import numpy as np
+    The same average hash as ``media_phash`` (position ``i`` → block
+    ``i·bits div n``, exact integer cross-multiplication), so WAV's
+    negative samples compare exactly too."""
 
-    def _hash_values(vals) -> int:
-        n = len(vals)
-        arr = np.asarray(vals, dtype=np.int64)
-        total = int(arr.sum())
-        b = (np.arange(n, dtype=np.int64) * bits) // n
-        bs = np.bincount(b, weights=arr, minlength=bits).astype(
-            np.int64
-        )
-        bn = np.bincount(b, minlength=bits).astype(np.int64)
-        h = 0
-        for j in range(bits):
-            if bn[j] and int(bs[j]) * n >= total * int(bn[j]):
-                h |= 1 << (bits - 1 - j)
-        return h
+    def rows(b):
+        dec = decode_media(b)
+        if dec is not None:
+            vals, decoder = dec["values"], dec["codec"]
+        else:
+            vals = _codepoints(b.decode("utf-8", errors="replace"))
+            decoder = "stub"
+        if len(vals):
+            yield decoder, len(vals), _average_hash(vals, bits)
 
-    def fn(batches):
-        for pdf in batches:
-            recs = []
-            for url, payload in zip(pdf["url"], pdf[payload_col]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                dec = decode_media(b)
-                if dec is not None:
-                    vals = dec["values"]
-                    decoder = dec["codec"]
-                else:
-                    text = b.decode("utf-8", errors="replace")
-                    vals = [ord(c) for c in text]
-                    decoder = "stub"
-                if not vals:
-                    continue
-                recs.append(
-                    {
-                        "url": url,
-                        "decoder": decoder,
-                        "n_vals": len(vals),
-                        "phash": _hash_values(vals),
-                    }
-                )
-            yield pd.DataFrame.from_records(
-                recs, columns=["url", "decoder", "n_vals", "phash"]
-            )
-
-    return pages.select("url", payload_col).mapInPandas(
-        fn, PHASH_REAL_SCHEMA
-    )
+    return _map_payloads(pages, payload_col, PHASH_REAL_SCHEMA, rows)
 
 
 AUDIO_FEATURES_SCHEMA = (
@@ -690,44 +525,22 @@ def media_audio_features(
       classic pitch/noisiness signal.
 
     Non-WAV payloads drop (this is the audio lane; the mixed-corpus
-    meta lives in ``extract_media_meta``).  Zero shuffle: pruned
-    (url, payload) scan → Arrow ``mapInPandas``."""
-    import numpy as np
+    meta lives in ``extract_media_meta``)."""
 
-    def fn(batches):
-        for pdf in batches:
-            recs = []
-            for url, payload in zip(pdf["url"], pdf[payload_col]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                dec = decode_media(b)
-                if dec is None or dec["codec"] != "wav":
-                    continue
-                s = np.asarray(dec["values"], dtype=np.int64)
-                recs.append(
-                    {
-                        "url": url,
-                        "n_samples": len(s),
-                        "sample_rate": dec["sample_rate"],
-                        "sum_sq": int((s * s).sum()),
-                        "peak_abs": int(np.abs(s).max()) if len(s) else 0,
-                        "zero_crossings": int(
-                            ((s[:-1] * s[1:]) < 0).sum()
-                        ) if len(s) > 1 else 0,
-                    }
-                )
-            yield pd.DataFrame.from_records(
-                recs,
-                columns=[
-                    "url", "n_samples", "sample_rate", "sum_sq",
-                    "peak_abs", "zero_crossings",
-                ],
-            )
+    def rows(b):
+        dec = decode_media(b)
+        if dec is None or dec["codec"] != "wav":
+            return
+        s = np.asarray(dec["values"], dtype=np.int64)
+        yield (
+            len(s),
+            dec["sample_rate"],
+            int((s * s).sum()),
+            int(np.abs(s).max()) if len(s) else 0,
+            int(((s[:-1] * s[1:]) < 0).sum()) if len(s) > 1 else 0,
+        )
 
-    return pages.select("url", payload_col).mapInPandas(
-        fn, AUDIO_FEATURES_SCHEMA
-    )
+    return _map_payloads(pages, payload_col, AUDIO_FEATURES_SCHEMA, rows)
 
 
 IMAGE_STATS_SCHEMA = (
@@ -743,41 +556,21 @@ def media_image_stats(
     gate (all-black / blown-out / low-entropy screenshots) run before
     an image encoder sees the corpus.  Exact integers only (sum, min,
     max, distinct pixel values), so the oracle recomputes them from
-    the generator closed form.  Non-PNG payloads drop (image lane).
-    Zero shuffle: pruned scan → Arrow ``mapInPandas``."""
-    import numpy as np
+    the generator closed form.  Non-PNG payloads drop (image lane)."""
 
-    def fn(batches):
-        for pdf in batches:
-            recs = []
-            for url, payload in zip(pdf["url"], pdf[payload_col]):
-                if payload is None:
-                    continue
-                b = bytes(payload)
-                dec = decode_media(b)
-                if dec is None or dec["codec"] != "png":
-                    continue
-                px = np.asarray(dec["values"], dtype=np.int64)
-                recs.append(
-                    {
-                        "url": url,
-                        "width": dec["width"],
-                        "height": dec["height"],
-                        "n_channels": dec["n_channels"],
-                        "sum_px": int(px.sum()),
-                        "min_px": int(px.min()),
-                        "max_px": int(px.max()),
-                        "n_distinct": int(len(np.unique(px))),
-                    }
-                )
-            yield pd.DataFrame.from_records(
-                recs,
-                columns=[
-                    "url", "width", "height", "n_channels",
-                    "sum_px", "min_px", "max_px", "n_distinct",
-                ],
-            )
+    def rows(b):
+        dec = decode_media(b)
+        if dec is None or dec["codec"] != "png":
+            return
+        px = np.asarray(dec["values"], dtype=np.int64)
+        yield (
+            dec["width"],
+            dec["height"],
+            dec["n_channels"],
+            int(px.sum()),
+            int(px.min()),
+            int(px.max()),
+            int(len(np.unique(px))),
+        )
 
-    return pages.select("url", payload_col).mapInPandas(
-        fn, IMAGE_STATS_SCHEMA
-    )
+    return _map_payloads(pages, payload_col, IMAGE_STATS_SCHEMA, rows)

@@ -262,7 +262,10 @@ _CONT = f"line RLIKE r'{core.CONTINUATION_RE.pattern}'"
 #: lines are space-prefixed, and the bare 'Heap after ...' header must
 #: survive the pre-shuffle filter too.  The open flag is
 #: HEAP_BLOCK_OPEN_RE as a prefix test, which spares every filler line
-#: one more regex pass.
+#: one more regex pass.  The close flag strips what Python's
+#: ``str.rstrip()`` strips (Spark's ``rtrim`` strips only spaces, so
+#: ``'}\r'`` on a CRLF log would never close its block): Java's
+#: Unicode ``\s`` plus the four separators U+001C..U+001F.
 _LINE_FLAGS = {
     False: (_START, _CONT, "false", "false"),
     True: (
@@ -270,7 +273,7 @@ _LINE_FLAGS = {
         f"{_CONT} OR startswith(line, ' ')"
         f" OR line RLIKE r'{core.HEAP_HDR_RE.pattern}'",
         "startswith(line, '{Heap before')",
-        "rtrim(line) = '}'",
+        r"line RLIKE r'(?U)^\}[\s\x1c-\x1f]*$'",
     ),
 }
 

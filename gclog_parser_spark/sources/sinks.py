@@ -63,7 +63,6 @@ def stream_to_socket(
     host: str,
     port: int = DEFAULT_GRAPHITE_PORT,
     checkpoint: str | None = None,
-    available_now: bool = True,
     transform=None,
 ):
     """Streaming variant of the socket sink.
@@ -95,6 +94,4 @@ def stream_to_socket(
     writer = lines_stream.writeStream.foreachBatch(write_batch)
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

@@ -1,21 +1,20 @@
-"""Custom stateful streaming operator: cross-batch RateCalculator.
+"""Custom stateful streaming operators: the per-url streaming twins
+of the batch rates operators (``stateful_rates``, ``stateful_cusum``,
+``stateful_slo_burn``, ``stateful_jitter``).
 
-``parse_stream`` needs no state because one page carries one whole log.
-But when a single JVM's log arrives *split across pages/micro-batches*
-(tailed files, Kafka chunks), the reference's ``RateCalculator``
-scan state — the previous non-AppStopped event's (jvmAgeMillis,
-heap_after) (RateCalculator.scala:13-30) — must survive batch
-boundaries.  This is exactly Structured Streaming's
-``applyInPandasWithState``: state keyed by url, one tiny tuple per live
-log, GroupStateTimeout to evict finished logs.
-
-Semantics are identical to operators/rates.py (W1-W3) and
-core.calculate_rates: AppStopped rows emit (0,0,0,0) and do not advance
-state; events without heap advance state but allocate 0; truncating
-integer division; first event allocates its own heap_before.
+When a single JVM's log arrives *split across pages/micro-batches*
+(tailed files, Kafka chunks), scan state such as the reference's
+``RateCalculator`` previous event (RateCalculator.scala:13-30) must
+survive batch boundaries.  That is Structured Streaming's
+``applyInPandasWithState``: state keyed by url, a few BIGINT words per
+live log.  All four twins run through ONE shell, ``_stateful``, and
+supply only their fold; the rates fold calls ``core.rate_step``, the
+step ``core.calculate_rates`` runs.
 """
 
 from __future__ import annotations
+
+import math
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -28,7 +27,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from gclog_parser_spark.core import half_up, to_ticks
+from gclog_parser_spark.core import half_up, rate_step, to_ticks
 from gclog_parser_spark.schema import EVENTS_SCHEMA
 
 STATE_SCHEMA = StructType(
@@ -69,67 +68,69 @@ RATED_SCHEMA = StructType(
     ]
 )
 
-
-def _tdiv(a: int, b: int) -> int:
-    q = abs(a) // abs(b)
-    return q if (a >= 0) == (b >= 0) else -q
+_RATE_COLS = [f.name for f in RATED_SCHEMA.fields[-4:]]
 
 
-def _rate_events(key, pdf_iter, state, end_marker_col=None):
-    """Grouped-map-with-state fn: events of one url, in arrival order."""
-    if state.exists:
-        prev_age_ms, prev_heap_after = state.get
-    else:
-        prev_age_ms, prev_heap_after = None, None
+def _opt_int(v):
+    return None if pd.isna(v) else int(v)
 
-    log_ended = False
-    out = []
-    for pdf in pdf_iter:
-        pdf = pdf.sort_values(["event_idx"])
-        if end_marker_col is not None and bool(
-            pdf[end_marker_col].fillna(False).any()
-        ):
-            log_ended = True
-        for rec in pdf.to_dict("records"):
-            age_ms = int(rec["jvm_age_seconds"] * 1000)
-            heap_before = rec["heap_before_bytes"]
-            heap_before = (
-                None if pd.isna(heap_before) else int(heap_before)
-            )
-            heap_after = rec["heap_after_bytes"]
-            heap_after = None if pd.isna(heap_after) else int(heap_after)
-            if rec["gc_class"] == "app_stopped":
-                allocated = millis = 0
-            elif prev_age_ms is None:
-                allocated = heap_before if heap_before is not None else 0
-                millis = age_ms
-                prev_age_ms, prev_heap_after = age_ms, heap_after
-            else:
-                if heap_before is not None and prev_heap_after is not None:
-                    allocated = heap_before - prev_heap_after
-                else:
-                    allocated = 0
-                millis = age_ms - prev_age_ms
-                prev_age_ms, prev_heap_after = age_ms, heap_after
-            rec["bytes_allocated_since_last"] = allocated
-            rec["millis_since_last"] = millis
-            rec["heap_allocation_rate"] = (
-                0 if millis == 0 else _tdiv(allocated, millis)
-            )
-            promoted = rec["promoted_bytes"]
-            rec["promotion_rate"] = (
-                _tdiv(int(promoted), millis)
-                if (not pd.isna(promoted) and millis != 0)
-                else 0
-            )
-            out.append(rec)
 
-    if log_ended:
-        state.remove()  # bounded state: finished logs evict explicitly
-    else:
-        state.update((prev_age_ms, prev_heap_after))
-    cols = [f.name for f in RATED_SCHEMA.fields]
-    yield pd.DataFrame.from_records(out, columns=cols)
+def _stateful(events, cols, end_marker_col, out_schema, state_schema, fold):
+    """The one ``applyInPandasWithState`` shell of the twins: per url,
+    ``fold(key, state, recs, ended)`` gets the stored state (``None``
+    on first sight), the url's batch rows as dicts (each Arrow chunk
+    sorted by ``event_idx``) and whether any row set
+    ``end_marker_col``.  It returns the state to keep, or ``None`` to
+    evict it, and the output rows.  An end marker always evicts."""
+    columns = [f.name for f in out_schema.fields]
+
+    def fn(key, pdf_iter, state):
+        recs, ended = [], False
+        for pdf in pdf_iter:
+            pdf = pdf.sort_values(["event_idx"])
+            if end_marker_col is not None and bool(
+                pdf[end_marker_col].fillna(False).any()
+            ):
+                ended = True
+            recs.extend(pdf.to_dict("records"))
+        kept, rows = fold(
+            key, state.get if state.exists else None, recs, ended
+        )
+        if ended or kept is None:
+            state.remove()  # bounded state: finished logs evict explicitly
+        else:
+            state.update(kept)
+        yield pd.DataFrame.from_records(rows, columns=columns)
+
+    marker = [end_marker_col] if end_marker_col else []
+    return events.select(*cols, *marker).groupBy(
+        "url"
+    ).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        # NoTimeout: this PySpark build NPEs planning the timeout-driven
+        # empty batch (PythonSQLMetrics on a null session).  State stays
+        # a few BIGINT words per live log; evict via ``end_marker_col``
+        # or by restarting the query per processing epoch.
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _rates_fold(key, previous, recs, ended):
+    previous = previous or (None, None)
+    for rec in recs:
+        rates, previous = rate_step(
+            previous,
+            int(rec["jvm_age_seconds"] * 1000),
+            _opt_int(rec["heap_before_bytes"]),
+            _opt_int(rec["heap_after_bytes"]),
+            _opt_int(rec["promoted_bytes"]),
+            rec["gc_class"] == "app_stopped",
+        )
+        rec.update(zip(_RATE_COLS, rates))
+    return tuple(previous), recs
 
 
 def stateful_rates(
@@ -143,29 +144,11 @@ def stateful_rates(
     a url's batch sets it, that url's state is removed after processing
     — the explicit end-of-log eviction path (a tail-source would set it
     on file close / session end).  Timeout-driven eviction is
-    unavailable in this PySpark build (see below), so this marker is
-    how state stays bounded on an unbounded url universe."""
-    cols = _SCALAR_COLS + (
-        [end_marker_col] if end_marker_col else []
-    )
-
-    def fn(key, pdf_iter, state):
-        return _rate_events(
-            key, pdf_iter, state, end_marker_col=end_marker_col
-        )
-
-    return events.select(*cols).groupBy(
-        "url"
-    ).applyInPandasWithState(
-        fn,
-        outputStructType=RATED_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        # NoTimeout: this PySpark build NPEs planning the timeout-driven
-        # empty batch (PythonSQLMetrics on a null session).  State stays
-        # one 16-byte tuple per live log; evict via ``end_marker_col``
-        # or by restarting the query per processing epoch.
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    unavailable in this PySpark build (see ``_stateful``), so this
+    marker is how state stays bounded on an unbounded url universe."""
+    return _stateful(
+        events, _SCALAR_COLS, end_marker_col, RATED_SCHEMA, STATE_SCHEMA,
+        _rates_fold,
     )
 
 
@@ -206,52 +189,26 @@ def stateful_cusum(
     (``end_marker_col``; NoTimeout — see that docstring)."""
     target_ticks = target_ms * 10_000
     threshold_ticks = threshold_ms * 10_000
-    cols = ["url", "event_idx", "pause_seconds"] + (
-        [end_marker_col] if end_marker_col else []
-    )
 
-    def fn(key, pdf_iter, state):
-        if state.exists:
-            p_sum, p_min = state.get
-        else:
-            p_sum, p_min = 0, 0
-        log_ended = False
-        out = []
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["event_idx"])
-            if end_marker_col is not None and bool(
-                pdf[end_marker_col].fillna(False).any()
-            ):
-                log_ended = True
-            for rec in pdf.to_dict("records"):
-                if pd.isna(rec["pause_seconds"]):
-                    continue
-                ticks = to_ticks(rec["pause_seconds"])
-                p_sum += ticks - target_ticks
-                p_min = min(p_min, p_sum)
-                cusum = p_sum - min(0, p_min)
-                out.append(
-                    {
-                        "url": rec["url"],
-                        "event_idx": rec["event_idx"],
-                        "pause_ticks": ticks,
-                        "cusum_ticks": cusum,
-                        "alarm": cusum >= threshold_ticks,
-                    }
-                )
-        if log_ended:
-            state.remove()
-        else:
-            state.update((p_sum, p_min))
-        cols_out = [f.name for f in CUSUM_SCHEMA.fields]
-        yield pd.DataFrame.from_records(out, columns=cols_out)
+    def fold(key, st, recs, ended):
+        p_sum, p_min = st or (0, 0)
+        rows = []
+        for rec in recs:
+            if pd.isna(rec["pause_seconds"]):
+                continue
+            ticks = to_ticks(rec["pause_seconds"])
+            p_sum += ticks - target_ticks
+            p_min = min(p_min, p_sum)
+            cusum = p_sum - min(0, p_min)
+            rows.append(
+                (rec["url"], rec["event_idx"], ticks, cusum,
+                 cusum >= threshold_ticks)
+            )
+        return (p_sum, p_min), rows
 
-    return events.select(*cols).groupBy("url").applyInPandasWithState(
-        fn,
-        outputStructType=CUSUM_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _stateful(
+        events, ["url", "event_idx", "pause_seconds"], end_marker_col,
+        CUSUM_SCHEMA, CUSUM_STATE_SCHEMA, fold,
     )
 
 
@@ -312,14 +269,10 @@ def stateful_slo_burn(
     den_short, den_long = int(den_short), int(den_long)
     short_ms = short_s * 1000
     state_schema, out_schema = _slo_schemas(k)
-    cols = ["url", "event_idx", "jvm_age_seconds", "pause_seconds"] + (
-        [end_marker_col] if end_marker_col else []
-    )
 
-    def fn(key, pdf_iter, state):
+    def fold(key, st, recs, ended):
         (url,) = key
-        if state.exists:
-            st = state.get
+        if st is not None:
             run_id, last_age, l_bucket = st[0], st[1], st[2]
             shorts = list(st[3:])
         else:
@@ -338,61 +291,41 @@ def stateful_slo_burn(
                 if t is None:
                     continue
                 burn_s = half_up(t / den_short, 6)
-                out.append(
-                    {
-                        "url": url,
-                        "run_id": run_id,
-                        "win_start_s": (l_bucket * k + j) * short_s,
-                        "ticks_short": t,
-                        "ticks_long": ticks_long,
-                        "burn_short": burn_s,
-                        "burn_long": burn_l,
-                        "alarm": burn_s >= burn_threshold
-                        and burn_l >= burn_threshold,
-                    }
-                )
+                out.append((
+                    url, run_id, (l_bucket * k + j) * short_s, t,
+                    ticks_long, burn_s, burn_l,
+                    burn_s >= burn_threshold and burn_l >= burn_threshold,
+                ))
             shorts, l_bucket = [None] * k, None
 
-        log_ended = False
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values(["event_idx"])
-            if end_marker_col is not None and bool(
-                pdf[end_marker_col].fillna(False).any()
+        for rec in recs:
+            if pd.isna(rec["pause_seconds"]) or pd.isna(
+                rec["jvm_age_seconds"]
             ):
-                log_ended = True
-            for rec in pdf.to_dict("records"):
-                if pd.isna(rec["pause_seconds"]) or pd.isna(
-                    rec["jvm_age_seconds"]
-                ):
-                    continue
-                age_ms = int(rec["jvm_age_seconds"] * 1000)
-                ticks = to_ticks(rec["pause_seconds"])
-                if last_age is not None and age_ms < last_age:
-                    flush()  # restart boundary: close the open window
-                    run_id += 1
-                last_age = age_ms
-                s_bucket = age_ms // short_ms
-                lb = s_bucket // k
-                if l_bucket is not None and lb != l_bucket:
-                    flush()  # age advanced past the open long window
-                l_bucket = lb
-                j = s_bucket - lb * k
-                shorts[j] = (shorts[j] or 0) + ticks
+                continue
+            age_ms = int(rec["jvm_age_seconds"] * 1000)
+            ticks = to_ticks(rec["pause_seconds"])
+            if last_age is not None and age_ms < last_age:
+                flush()  # restart boundary: close the open window
+                run_id += 1
+            last_age = age_ms
+            s_bucket = age_ms // short_ms
+            lb = s_bucket // k
+            if l_bucket is not None and lb != l_bucket:
+                flush()  # age advanced past the open long window
+            l_bucket = lb
+            j = s_bucket - lb * k
+            shorts[j] = (shorts[j] or 0) + ticks
 
-        if log_ended or flush_on_batch_end:
+        if ended or flush_on_batch_end:
             flush()
-            state.remove()
-        else:
-            state.update(tuple([run_id, last_age, l_bucket] + shorts))
-        cols_out = [f.name for f in out_schema.fields]
-        yield pd.DataFrame.from_records(out, columns=cols_out)
+            return None, out
+        return tuple([run_id, last_age, l_bucket] + shorts), out
 
-    return events.select(*cols).groupBy("url").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _stateful(
+        events,
+        ["url", "event_idx", "jvm_age_seconds", "pause_seconds"],
+        end_marker_col, out_schema, state_schema, fold,
     )
 
 
@@ -436,34 +369,20 @@ def stateful_jitter(
     past 2⁵³) and rounds with the BigDecimal-equivalent
     ``core.half_up``.  Eviction: the ``stateful_rates`` end-marker
     contract."""
-    import math
 
-    cols = ["url", "event_idx", "pause_seconds"] + (
-        [end_marker_col] if end_marker_col else []
-    )
-
-    def fn(key, pdf_iter, state):
-        if state.exists:
-            n, sx, sxx = state.get
-        else:
-            n, sx, sxx = 0, 0, 0
-        log_ended = False
+    def fold(key, st, recs, ended):
+        n, sx, sxx = st or (0, 0, 0)
         saw = False
-        for pdf in pdf_iter:
-            if end_marker_col is not None and bool(
-                pdf[end_marker_col].fillna(False).any()
-            ):
-                log_ended = True
-            for rec in pdf.to_dict("records"):
-                if pd.isna(rec["pause_seconds"]):
-                    continue
-                t = to_ticks(rec["pause_seconds"])
-                n += 1
-                sx += t
-                sxx += t * t
-                saw = True
+        for rec in recs:
+            if pd.isna(rec["pause_seconds"]):
+                continue
+            t = to_ticks(rec["pause_seconds"])
+            n += 1
+            sx += t
+            sxx += t * t
+            saw = True
         out = []
-        if saw and n > 0:
+        if saw:
             mean = half_up(float(sx) / float(n * 10000), 6)
             if n > 1:
                 v = (
@@ -476,26 +395,10 @@ def stateful_jitter(
             else:
                 var = None
                 std = None
-            out.append(
-                {
-                    "url": key[0],
-                    "n_pauses": n,
-                    "mean_pause_ms": mean,
-                    "var_pause_ms2": var,
-                    "stddev_pause_ms": std,
-                }
-            )
-        if log_ended:
-            state.remove()
-        else:
-            state.update((n, sx, sxx))
-        cols_out = [f.name for f in JITTER_SCHEMA.fields]
-        yield pd.DataFrame.from_records(out, columns=cols_out)
+            out.append((key[0], n, mean, var, std))
+        return (n, sx, sxx), out
 
-    return events.select(*cols).groupBy("url").applyInPandasWithState(
-        fn,
-        outputStructType=JITTER_SCHEMA,
-        stateStructType=JITTER_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _stateful(
+        events, ["url", "event_idx", "pause_seconds"], end_marker_col,
+        JITTER_SCHEMA, JITTER_STATE_SCHEMA, fold,
     )

@@ -21,6 +21,11 @@ analogue is a micro-batch stream over arriving page files:
 
 Rates (W1-W3) are computed within each page's log (the log is whole per
 page), so streaming output equals batch output page-for-page.
+
+Every ``run_*`` runner is a checkpointed ``availableNow`` replay
+started by ``_start``; the aggregate runners write the in-memory sink
+through ``_to_memory``, and the one-file-per-trigger sources read
+through ``_replay``.
 """
 
 from __future__ import annotations
@@ -43,6 +48,39 @@ def stream_pages(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(input_dir)
+
+
+def _replay(spark: SparkSession, schema, input_dir: str) -> DataFrame:
+    """File-source stream, one file per micro-batch: chronologically
+    written files pin the batch boundaries, so a replay is
+    deterministic."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(input_dir)
+    )
+
+
+def _start(writer, checkpoint: str):
+    """Every runner's finite replay: checkpointed, ``availableNow``."""
+    return (
+        writer.option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _to_memory(
+    df: DataFrame, query_name: str, output_mode: str, checkpoint: str
+):
+    """In-memory sink writer of the aggregate runners (tests/demo;
+    production would foreachBatch-upsert into a serving table)."""
+    return _start(
+        df.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode),
+        checkpoint,
+    )
 
 
 def parse_stream(
@@ -69,8 +107,6 @@ def run_fanout_stream(
     input_dir: str,
     out_path: str,
     checkpoint: str,
-    mode: str = "gc_line",
-    available_now: bool = True,
 ):
     """Continuous parse → route → per-sink fan-out write.
 
@@ -84,7 +120,7 @@ def run_fanout_stream(
     replayed batch atomically replaces its own partitions instead of
     appending duplicates — together that is exactly-once output.
     """
-    events = parse_stream(stream_pages(spark, input_dir), mode=mode)
+    events = parse_stream(stream_pages(spark, input_dir))
 
     def write_batch(batch_df: DataFrame, batch_id: int):
         # rates need an analytic window — legal here because each
@@ -99,13 +135,7 @@ def run_fanout_stream(
             "batch_id", "sink"
         ).parquet(out_path)
 
-    writer = (
-        events.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(events.writeStream.foreachBatch(write_batch), checkpoint)
 
 
 def dedup_stream(pages: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -131,7 +161,6 @@ def run_dedup_stream(
     out_path: str,
     checkpoint: str,
     watermark: str = "2 hours",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """Continuous ingestion dedup: pages stream → watermarked hash dedup
@@ -141,14 +170,10 @@ def run_dedup_stream(
         stream_pages(spark, input_dir, max_files_per_trigger),
         watermark=watermark,
     ).select("url", "warc_ts", "text_hash")
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
+    return _start(
+        deduped.writeStream.format("parquet").option("path", out_path),
+        checkpoint,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def hourly_sink_counts(
@@ -177,19 +202,11 @@ def run_hourly_stream(
     input_dir: str,
     checkpoint: str,
     query_name: str = "hourly_sinks",
-    output_mode: str = "complete",
 ):
-    """Windowed streaming aggregate to an in-memory sink (tests/demo);
-    production would foreachBatch-upsert into a serving table."""
+    """Windowed streaming aggregate to an in-memory sink."""
     events = parse_stream(stream_pages(spark, input_dir))
-    agg = hourly_sink_counts(events)
-    return (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _to_memory(
+        hourly_sink_counts(events), query_name, "complete", checkpoint
     )
 
 
@@ -237,14 +254,8 @@ def run_sliding_stream(
     (complete mode: a finite replay must emit every window, including
     the ones still inside the watermark horizon at end-of-input)."""
     ev = spark.readStream.schema(schema).parquet(input_dir)
-    agg = sliding_value_counts(ev)
-    return (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _to_memory(
+        sliding_value_counts(ev), query_name, "complete", checkpoint
     )
 
 
@@ -317,14 +328,7 @@ def run_attribution_stream(
         )
 
     agg = attribution_join(_side("view"), _side("purchase"))
-    return (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _to_memory(agg, query_name, "append", checkpoint)
 
 
 def session_window_counts(events: DataFrame, gap: str = "6 hours") -> DataFrame:
@@ -362,14 +366,8 @@ def run_session_stream(
     (complete mode: the finite replay must emit sessions still open
     at end-of-input too — exactly the batch result)."""
     ev = spark.readStream.schema(schema).parquet(input_dir)
-    agg = session_window_counts(ev)
-    return (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _to_memory(
+        session_window_counts(ev), query_name, "complete", checkpoint
     )
 
 
@@ -412,14 +410,9 @@ def run_cdc_apply_stream(
         merged = apply_changes(state, batch, delete_col=delete_col)
         cat.snapshot_write(merged, table, mode="overwrite")
 
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(input_dir)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        _replay(spark, schema, input_dir).writeStream.foreachBatch(_apply),
+        checkpoint,
     )
 
 
@@ -440,20 +433,10 @@ def run_hll_stream(
     always-on distinct-users dashboard that never holds a user set."""
     from gclog_parser_spark.operators.aggregate import hll_registers
 
-    ev = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(input_dir)
+    regs = hll_registers(
+        _replay(spark, schema, input_dir), ["event_type"], "user_id"
     )
-    regs = hll_registers(ev, ["event_type"], "user_id")
-    return (
-        regs.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _to_memory(regs, query_name, "complete", checkpoint)
 
 
 def run_late_audit_stream(
@@ -485,13 +468,10 @@ def run_late_audit_stream(
 
     ``maxFilesPerTrigger=1`` + chronologically named/written files pin
     the batch boundaries so the replay is deterministic."""
-    ev = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(input_dir)
-        # event-time ops need TIMESTAMP; the table stores NTZ (UTC
-        # session makes the cast value-preserving)
-        .withColumn("ts_t", F.col("ts").cast("timestamp"))
+    # event-time ops need TIMESTAMP; the table stores NTZ (UTC session
+    # makes the cast value-preserving)
+    ev = _replay(spark, schema, input_dir).withColumn(
+        "ts_t", F.col("ts").cast("timestamp")
     )
     agg = (
         ev.withWatermark("ts_t", watermark)
@@ -499,14 +479,7 @@ def run_late_audit_stream(
         .agg(F.count("*").alias("n_stream"))
         .select(F.col("w.start").alias("hour"), "n_stream")
     )
-    return (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _to_memory(agg, query_name, "append", checkpoint)
 
 
 def run_incremental_dedup_stream(
@@ -567,12 +540,7 @@ def run_incremental_dedup_stream(
         )
         keepers.write.mode("append").parquet(survivors_dir)
 
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(input_dir)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        _replay(spark, schema, input_dir).writeStream.foreachBatch(_apply),
+        checkpoint,
     )

@@ -21,12 +21,16 @@ def _pages(spark, payloads):
 
 def _ref_phash(text: str, bits: int = PHASH_BITS) -> int:
     """Independent reference implementation of the documented rule."""
-    cps = [ord(c) for c in text]
-    n = len(cps)
-    total = sum(cps)
+    return _ref_average_hash([ord(c) for c in text], bits)
+
+
+def _ref_average_hash(vals, bits: int = PHASH_BITS) -> int:
+    """Brute-force loop over the values: position → block, exact sums."""
+    n = len(vals)
+    total = sum(vals)
     bs = [0] * bits
     bn = [0] * bits
-    for pos, c in enumerate(cps):
+    for pos, c in enumerate(vals):
         b = pos * bits // n
         bs[b] += c
         bn[b] += 1
@@ -41,8 +45,9 @@ def test_phash_matches_reference_rule(spark):
     texts = [
         "a" * 50 + "z" * 50,
         "hello world " * 40,
-        "x" * 30,  # n < bits: exercises the small-payload loop
+        "x" * 30,  # n < bits: some blocks empty
         "abc",
+        "xy" * 30,  # n == bits: one value per block
     ]
     got = {
         r.url: (r.n_cp, r.phash)
@@ -50,6 +55,17 @@ def test_phash_matches_reference_rule(spark):
     }
     for i, t in enumerate(texts):
         assert got[f"u{i:03d}"] == (len(t), _ref_phash(t)), t[:20]
+
+    # the one average hash media_phash and media_phash_real share, on
+    # signed (WAV-like) values: n < bits, n == bits, n > bits
+    import random
+
+    from gclog_parser_spark.operators.multimodal import _average_hash
+
+    rng = random.Random(5)
+    for n in (1, 7, PHASH_BITS - 1, PHASH_BITS, PHASH_BITS + 1, 997):
+        vals = [rng.randint(-32768, 32767) for _ in range(n)]
+        assert _average_hash(vals, PHASH_BITS) == _ref_average_hash(vals), n
 
 
 def test_phash_identical_payloads_collide_at_zero(spark):

@@ -2,6 +2,8 @@
 strategies) → events, checked against the pure-Python core parser and the
 reference-pinned per-fixture event counts (FIXTURES.md §3)."""
 
+from datetime import datetime
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -12,6 +14,7 @@ from gclog_parser_spark.datagen import (
 )
 from gclog_parser_spark.fixtures import all_classes, fixture_text
 from gclog_parser_spark.operators.parse import extract_gc_text, parse_events
+from gclog_parser_spark.schema import PAGES_SCHEMA
 
 
 @pytest.fixture(scope="module")
@@ -65,14 +68,31 @@ def test_heap_stats_counts_per_class(spark, pages, stitch):
 
 
 def test_narrow_equals_window(spark, pages):
-    """Both physical strategies must produce identical logical results."""
-    for mode in ("gc_line", "heap_stats"):
-        a = parse_events(pages, mode=mode, stitch="narrow")
-        b = parse_events(pages, mode=mode, stitch="window")
+    """Both physical strategies must produce identical logical results,
+    also on a log with CRLF line ends: the heap_stats window stitch must
+    close a ``'}\\r'`` brace block as the narrow one does."""
+    crlf = spark.createDataFrame(
+        [(
+            "crlf://heap8/0", datetime(2016, 11, 10, 4), None,
+            fixture_text("heap8").replace("\n", "\r\n"), "en",
+        )],
+        PAGES_SCHEMA,
+    )
+    cases = [(pages, mode, True, None) for mode in ("gc_line", "heap_stats")]
+    cases.append((crlf, "heap_stats", False, 7))
+    for src, mode, require_marker, n_events in cases:
+        a = parse_events(
+            src, mode=mode, stitch="narrow", require_marker=require_marker
+        )
+        b = parse_events(
+            src, mode=mode, stitch="window", require_marker=require_marker
+        )
         cols = [c for c in a.columns]
         sa = sorted(map(repr, a.select(cols).collect()))
         sb = sorted(map(repr, b.select(cols).collect()))
         assert sa == sb, f"mode={mode}"
+        if n_events is not None:
+            assert len(sa) == n_events
 
 
 def test_events_match_core_parser(spark, pages):
@@ -111,7 +131,8 @@ def test_events_match_core_parser(spark, pages):
 @pytest.mark.parametrize("heap_stats", [False, True])
 def test_window_line_flags_match_core_classifier(spark, heap_stats):
     """The window stitch classifies lines with SQL RLIKE predicates over
-    core's regex patterns; on every line of every fixture log its flags must
+    core's regex patterns; on every line of every fixture log, and on
+    each again with a trailing ``'\\r'`` (CRLF logs), its flags must
     give the class ``core.classify_line`` gives (checked in core's
     order: open, close, start, cont)."""
     from gclog_parser_spark import fixtures
@@ -121,7 +142,9 @@ def test_window_line_flags_match_core_classifier(spark, heap_stats):
         v for k, v in sorted(vars(fixtures).items())
         if k.endswith("_LOG") and isinstance(v, str)
     ]
-    lines = sorted({ln for t in texts for ln in t.split("\n")})
+    lines = sorted(
+        {ln + end for t in texts for ln in t.split("\n") for end in ("", "\r")}
+    )
     df = spark.createDataFrame([(ln,) for ln in lines], "line string")
     flags = zip(("start", "cont", "open", "close"), _LINE_FLAGS[heap_stats])
     got = {

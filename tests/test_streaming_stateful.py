@@ -6,7 +6,9 @@ core.calculate_rates)."""
 from __future__ import annotations
 
 import time
+from collections import Counter
 from datetime import datetime
+from functools import partial
 
 from gclog_parser_spark.core import calculate_rates, parse_log
 from gclog_parser_spark.fixtures import fixture_text
@@ -351,11 +353,15 @@ def test_stateful_jitter_end_marker_evicts(spark, tmp_path):
     """A log-end marker removes the JVM's three-word state: a rotated
     log reusing the url restarts jitter accounting from scratch (the
     second run's snapshot counts ONLY its own pauses), exactly like a
-    fresh log — while without eviction the counts would accumulate."""
+    fresh log — while without eviction the counts would accumulate.
+    The CUSUM twin's two-word state evicts the same way."""
     import pyspark.sql.functions as F
 
     from gclog_parser_spark.operators.parse import parse_events
-    from gclog_parser_spark.streaming.stateful import stateful_jitter
+    from gclog_parser_spark.streaming.stateful import (
+        stateful_cusum,
+        stateful_jitter,
+    )
 
     text = fixture_text("basic8")
     url = "tail://app-j2/gc.log"
@@ -383,16 +389,22 @@ def test_stateful_jitter_end_marker_evicts(spark, tmp_path):
     stream = parsed.withColumn(
         "log_end", F.col("jvm_age_seconds") == last_age
     )
-    q = (
-        stateful_jitter(stream, end_marker_col="log_end")
-        .writeStream.format("memory")
-        .queryName("t_jitter_evict")
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
+    # target 0: the CUSUM is the running pause-tick sum, so a carried
+    # state would lift every second-run row above its first-run twin
+    for name, twin in (
+        ("t_jitter_evict", stateful_jitter),
+        ("t_cusum_evict", partial(stateful_cusum, target_ms=0)),
+    ):
+        q = (
+            twin(stream, end_marker_col="log_end")
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .option("checkpointLocation", f"{ckpt}/{name}")
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(300)
     snaps = spark.sql("select * from t_jitter_evict").collect()
     # two batches, one snapshot each; eviction means the second run
     # re-counts from zero -> both snapshots identical
@@ -400,6 +412,11 @@ def test_stateful_jitter_end_marker_evicts(spark, tmp_path):
     assert snaps[0]["n_pauses"] == snaps[1]["n_pauses"]
     assert snaps[0]["mean_pause_ms"] == snaps[1]["mean_pause_ms"]
     assert snaps[0]["var_pause_ms2"] == snaps[1]["var_pause_ms2"]
+    # CUSUM: each run emits the same (event_idx, ticks, cusum) rows
+    cusum = Counter(
+        tuple(r) for r in spark.sql("select * from t_cusum_evict").collect()
+    )
+    assert cusum and set(cusum.values()) == {2}
 
 
 def test_stateful_cusum_rounds_half_tick_pauses_like_batch(spark, tmp_path):

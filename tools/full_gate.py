@@ -16,7 +16,9 @@ before stringification; the hash is SHA-256 over the sorted row
 multiset.  ``ROWS_ONLY`` queries (no SQL-expressible oracle) get the
 weaker rows>0 check, mirrored as rows_match with hash_match null.
 
-Usage: ``python tools/full_gate.py [out.json] [sf_dir]``
+Usage: ``python tools/full_gate.py [out.json] [sf_dir] [substrings]``
+— ``substrings`` (comma-separated, e.g. ``media_,stream``) gates only
+the queries whose name contains one of them.
 """
 
 from __future__ import annotations
@@ -65,6 +67,7 @@ def main() -> int:
 
     out_path = sys.argv[1] if len(sys.argv) > 1 else "CORRECTNESS_full.json"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
+    subs = sys.argv[3].split(",") if len(sys.argv) > 3 else [""]
 
     spark = get_spark(master="local[8]", shuffle_partitions=8)
     con = duckdb.connect()
@@ -77,7 +80,7 @@ def main() -> int:
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     results: dict[str, dict] = {}
-    for name in sorted(queries):
+    for name in sorted(n for n in queries if any(p in n for p in subs)):
         rec = {
             "rows_match": False, "schema_match": False,
             "hash_match": False, "spark_rows": None,
