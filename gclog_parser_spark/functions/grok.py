@@ -73,11 +73,7 @@ def grok_compile(pattern: str) -> tuple[str, list[tuple[str, str]]]:
 
 
 def grok_parse(
-    df: DataFrame,
-    col: str,
-    pattern: str,
-    keep: list[str] | None = None,
-    drop_unmatched: bool = True,
+    df: DataFrame, col: str, pattern: str, drop_unmatched: bool = True
 ) -> DataFrame:
     """Project the grok template's typed fields out of ``col``.
 
@@ -90,8 +86,7 @@ def grok_parse(
     if not fields:
         raise ValueError("pattern binds no named fields")
     matched = F.col(col).rlike(regex)
-    cols = list(keep or [])
-    exprs = [F.col(c) for c in cols]
+    exprs = []
     for i, (name, typ) in enumerate(fields):
         raw = F.regexp_extract(F.col(col), regex, i + 1)
         val = F.when(matched, raw)

@@ -61,15 +61,13 @@ def per_sink_hourly(events: DataFrame, exact: bool = False) -> DataFrame:
     )
 
 
-def per_sink_hourly_salted(
-    events: DataFrame, salt_buckets: int = 16
-) -> DataFrame:
+def per_sink_hourly_salted(events: DataFrame) -> DataFrame:
     """Explicit two-stage salted aggregation for the algebraic measures:
-    stage 1 groups by (sink, hour, hash(url) % salt) — the hot hour fans
-    out over `salt_buckets` reducers — stage 2 merges the partials."""
+    stage 1 groups by (sink, hour, hash(url) % 16) — the hot hour fans
+    out over 16 reducers — stage 2 merges the partials."""
     routed = events if "sink" in events.columns else with_sink(events)
     salted = routed.withColumn(
-        "salt", F.pmod(F.xxhash64("url"), F.lit(salt_buckets))
+        "salt", F.pmod(F.xxhash64("url"), F.lit(16))
     )
     partial = salted.groupBy(
         "sink", F.date_trunc("hour", "warc_ts").alias("hour"), "salt"
@@ -131,18 +129,11 @@ def session_stats(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    key: str = "event_type",
-    value: str = "value",
-    duration_secs: int = 600,
-    slide_secs: int = 300,
-) -> DataFrame:
+def sliding_counts(events: DataFrame) -> DataFrame:
     """Sliding event-time window aggregation (`F.window` with a slide —
     the overlapping-window twin of the tumbling hourly rollups): per
-    (key, window-start) over windows of ``duration_secs`` sliding every
-    ``slide_secs``, count rows and sum ``value``.
+    (event_type, window-start) over 600 s windows sliding every 300 s,
+    count rows and sum ``value``.
 
     Spark assigns each row to its duration/slide overlapping windows
     scan-side (a generator projection, no extra shuffle), then the
@@ -151,21 +142,18 @@ def sliding_counts(
     out of the generator.  Output window_start as an epoch-seconds
     BIGINT (portable to the oracle).
     """
-    assert duration_secs % slide_secs == 0
     win = F.window(
-        F.col(ts_col).cast("timestamp"),
-        f"{duration_secs} seconds",
-        f"{slide_secs} seconds",
+        F.col("ts").cast("timestamp"), "600 seconds", "300 seconds"
     )
     return (
-        events.groupBy(win.alias("w"), F.col(key))
+        events.groupBy(win.alias("w"), F.col("event_type"))
         .agg(
             F.count("*").alias("n_events"),
-            F.round(F.sum(value), 6).alias("sum_value"),
+            F.round(F.sum("value"), 6).alias("sum_value"),
         )
         .select(
             F.unix_timestamp(F.col("w.start")).alias("window_start"),
-            key,
+            "event_type",
             "n_events",
             "sum_value",
         )
@@ -505,22 +493,18 @@ def quantile_sketch_merge(
     )
 
 
-def sketch_quantiles(
-    sketch: DataFrame,
-    group_col: str,
-    probs: tuple[float, ...] = (0.5, 0.9, 0.99),
-) -> DataFrame:
+def sketch_quantiles(sketch: DataFrame, group_col: str) -> DataFrame:
     """Quantile estimates from the sketch: per group, sort the sampled
     values and PICK the element at ``floor((n-1)·p)`` — a selected
     value, never an interpolation, so the output is exact and both
     engines agree bit-for-bit.  Returns (group, n_sample, p50, p90,
-    ...) with one aggregation over ≤ k rows per group."""
+    p99) with one aggregation over ≤ k rows per group."""
     agg = sketch.groupBy(group_col).agg(
         F.count("*").alias("n_sample"),
         F.array_sort(F.collect_list("v")).alias("vs"),
     )
     cols = [F.col(group_col), F.col("n_sample")]
-    for p in probs:
+    for p in (0.5, 0.9, 0.99):
         idx = F.floor((F.col("n_sample") - 1) * F.lit(p)).cast("int") + 1
         cols.append(
             F.element_at("vs", idx).alias(f"p{int(p * 100)}")
@@ -622,14 +606,14 @@ def kmv_pair_intersections(
     )
 
 
-def agg_state(ev: DataFrame, group_col: str = "event_type") -> DataFrame:
+def agg_state(ev: DataFrame) -> DataFrame:
     """Algebraic aggregate STATE per group — (n, value_ticks_sum,
     min_value_ticks, max_value_ticks) — the mergeable partial an
     incrementally-maintained materialized view stores.  count/sum/
     min/max are the algebraic functions whose states merge losslessly;
     integer ticks make the sums exact in both engines."""
     ticks = pause_ticks("value")
-    return ev.groupBy(group_col).agg(
+    return ev.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum(ticks).alias("value_ticks_sum"),
         F.min(ticks).alias("min_value_ticks"),
@@ -637,9 +621,7 @@ def agg_state(ev: DataFrame, group_col: str = "event_type") -> DataFrame:
     )
 
 
-def merge_agg_states(
-    states: list[DataFrame], group_col: str = "event_type"
-) -> DataFrame:
+def merge_agg_states(states: list[DataFrame]) -> DataFrame:
     """Incremental materialized-view refresh: union the per-batch
     states and fold — ``merge(state(base), state(delta)) ==
     state(base ∪ delta)`` exactly, so refreshing an MV after an append
@@ -652,7 +634,7 @@ def merge_agg_states(
     out = states[0]
     for s in states[1:]:
         out = out.unionByName(s)
-    return out.groupBy(group_col).agg(
+    return out.groupBy("event_type").agg(
         F.sum("n").alias("n"),
         F.sum("value_ticks_sum").alias("value_ticks_sum"),
         F.min("min_value_ticks").alias("min_value_ticks"),
@@ -792,12 +774,11 @@ def mad_anomalies(
     rel: DataFrame,
     value_col: str = "n",
     k: float = 3.0,
-    mad_floor: float = 1.0,
 ) -> DataFrame:
     """Robust outlier flags via median absolute deviation — the
     telemetry anomaly detector (median/MAD shrug off the very outliers
     a mean/stddev rule would absorb).  Flags rows where
-    ``value > median + k·MAD``.
+    ``value > median + k·max(MAD, 1)``.
 
     Scale shape: the input relation is usually a pre-collapsed
     aggregate (e.g. per-hour counts — tiny however big the raw table),
@@ -826,7 +807,7 @@ def mad_anomalies(
         (
             v
             > F.col("med")
-            + F.lit(k) * F.greatest(F.col("mad"), F.lit(mad_floor))
+            + F.lit(k) * F.greatest(F.col("mad"), F.lit(1.0))
         ).alias("is_anomaly"),
     )
 
@@ -837,12 +818,7 @@ CMS_DEPTH = 4
 CMS_WIDTH = 512  # power of two; counters per row
 
 
-def cms_counters(
-    df: DataFrame,
-    value_col: str,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-) -> DataFrame:
+def cms_counters(df: DataFrame, value_col: str) -> DataFrame:
     """Count-Min sketch counter relation ``(row_idx, bucket, cnt)`` —
     the mergeable frequency-estimate state (Cormode & Muthukrishnan
     2005): row j hashes the value with an independent salted md5, the
@@ -858,7 +834,7 @@ def cms_counters(
     from gclog_parser_spark.operators.dedup import md5_long
 
     rows = F.explode(
-        F.array(*[F.lit(j) for j in range(depth)])
+        F.array(*[F.lit(j) for j in range(CMS_DEPTH)])
     ).alias("row_idx")
     v = F.col(value_col).cast("string")
     keyed = df.where(F.col(value_col).isNotNull()).select(
@@ -867,7 +843,7 @@ def cms_counters(
     bucket = F.pmod(
         md5_long(F.concat(F.lit("cms"), F.col("row_idx").cast("string"),
                           F.lit(":"), F.col("_v"))),
-        F.lit(width),
+        F.lit(CMS_WIDTH),
     )
     return keyed.groupBy("row_idx", bucket.alias("bucket")).agg(
         F.count(F.lit(1)).alias("cnt")
@@ -875,11 +851,7 @@ def cms_counters(
 
 
 def cms_estimate(
-    probes: DataFrame,
-    counters: DataFrame,
-    value_col: str,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
+    probes: DataFrame, counters: DataFrame, value_col: str
 ) -> DataFrame:
     """Point-estimate each probe key against the counter relation:
     est = min over rows of the key's counter (0 if the bucket is
@@ -890,14 +862,14 @@ def cms_estimate(
     from gclog_parser_spark.operators.dedup import md5_long
 
     rows = F.explode(
-        F.array(*[F.lit(j) for j in range(depth)])
+        F.array(*[F.lit(j) for j in range(CMS_DEPTH)])
     ).alias("row_idx")
     v = F.col(value_col).cast("string")
     keyed = probes.select(F.col(value_col), v.alias("_v"), rows)
     bucket = F.pmod(
         md5_long(F.concat(F.lit("cms"), F.col("row_idx").cast("string"),
                           F.lit(":"), F.col("_v"))),
-        F.lit(width),
+        F.lit(CMS_WIDTH),
     )
     return (
         keyed.withColumn("bucket", bucket)
@@ -911,23 +883,15 @@ def cms_estimate(
     )
 
 
-def journey_paths(
-    events: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    step_col: str = "event_type",
-    gap_minutes: int = 30,
-    max_steps: int = 5,
-    k: int = 20,
-) -> DataFrame:
-    """Top-k user journeys: sessionize per key (gaps-and-islands on
-    ``gap_minutes``), take each session's first ``max_steps`` steps in
+def journey_paths(events: DataFrame, k: int = 20) -> DataFrame:
+    """Top-k user journeys: sessionize per user_id (gaps-and-islands
+    on a 30-minute gap), take each session's first 5 event_type steps in
     (ts, event_id) order, and count identical paths — the funnel
     discovery that tells you which flows actually happen (vs
     `rel_funnel`, which scores one hypothesized flow, and
     `rel_transitions`, which only sees pairs).
 
-    Scale shape: ONE exchange on ``key`` shared by the session and
+    Scale shape: ONE exchange on ``user_id`` shared by the session and
     step-rank windows, the path aggregate collapses map-side (paths
     are short strings), and the top-k is ORDER BY+LIMIT — Spark plans
     TakeOrderedAndProject, a map-side partial top-k that never sorts
@@ -935,37 +899,36 @@ def journey_paths(
     (count DESC, path) cut are total orders in both engines."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(key).orderBy(ts_col, "event_id")
-    prev_ts = F.lag(ts_col).over(w)
-    gap_s = gap_minutes * 60
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    prev_ts = F.lag("ts").over(w)
     new_s = F.when(
         prev_ts.isNull()
         | (
-            F.unix_micros(F.col(ts_col).cast("timestamp"))
+            F.unix_micros(F.col("ts").cast("timestamp"))
             - F.unix_micros(prev_ts.cast("timestamp"))
-            > gap_s * 1_000_000
+            > 30 * 60 * 1_000_000
         ),
         1,
     ).otherwise(0)
     sess = events.select(
-        key, ts_col, "event_id", step_col, new_s.alias("_new")
+        "user_id", "ts", "event_id", "event_type", new_s.alias("_new")
     ).withColumn(
         "_sid",
         F.sum("_new").over(
             w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         ),
     )
-    ws = Window.partitionBy(key, "_sid").orderBy(ts_col, "event_id")
+    ws = Window.partitionBy("user_id", "_sid").orderBy("ts", "event_id")
     steps = sess.withColumn("_step", F.row_number().over(ws)).where(
-        F.col("_step") <= max_steps
+        F.col("_step") <= 5
     )
-    paths = steps.groupBy(key, "_sid").agg(
+    paths = steps.groupBy("user_id", "_sid").agg(
         F.array_join(
             F.transform(
                 F.array_sort(
-                    F.collect_list(F.struct("_step", step_col))
+                    F.collect_list(F.struct("_step", "event_type"))
                 ),
-                lambda s: s[step_col],
+                lambda s: s["event_type"],
             ),
             ">",
         ).alias("path")
@@ -981,11 +944,7 @@ def journey_paths(
 DECAY_SCALE_BITS = 40  # weight ticks: 2^(40 - age); age caps at 40
 
 
-def decayed_counts(
-    events: DataFrame,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def decayed_counts(events: DataFrame) -> DataFrame:
     """Freshness-weighted ('trending') counts with EXACT exponential
     decay: each row weighs 2^-age_days (half-life = one day), summed
     as integer ticks ``2^(40 - min(age, 40))`` — powers of two make
@@ -999,19 +958,19 @@ def decayed_counts(
     scale this is the classic trending dashboard: one scan, map-side
     partial sums, state = one (group) row however many events."""
     anchor = events.agg(
-        F.max(F.to_date(ts_col)).alias("_anchor")
+        F.max(F.to_date("ts")).alias("_anchor")
     )
     aged = events.crossJoin(F.broadcast(anchor)).select(
-        group_col,
+        "event_type",
         F.least(
-            F.datediff("_anchor", F.to_date(ts_col)),
+            F.datediff("_anchor", F.to_date("ts")),
             F.lit(DECAY_SCALE_BITS),
         ).alias("_age"),
     )
     ticks = F.expr(
         f"shiftleft(CAST(1 AS BIGINT), {DECAY_SCALE_BITS} - _age)"
     )
-    return aged.groupBy(group_col).agg(
+    return aged.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(ticks).alias("decayed_ticks"),
         F.round(

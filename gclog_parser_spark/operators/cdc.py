@@ -27,17 +27,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 
-def latest_snapshot(
-    changes: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    seq_col: str = "event_id",
-) -> DataFrame:
-    """Newest row per ``key`` from an append-only changelog —
-    deterministic: (ts DESC, seq DESC) totally orders each key's
-    changes because ``seq_col`` is unique."""
-    w = Window.partitionBy(key).orderBy(
-        F.desc(ts_col), F.desc(seq_col)
+def latest_snapshot(changes: DataFrame) -> DataFrame:
+    """Newest row per ``user_id`` from an append-only changelog —
+    deterministic: (ts DESC, event_id DESC) totally orders each
+    key's changes because ``event_id`` is unique."""
+    w = Window.partitionBy("user_id").orderBy(
+        F.desc("ts"), F.desc("event_id")
     )
     return (
         changes.withColumn("_rn", F.row_number().over(w))
@@ -49,13 +44,10 @@ def latest_snapshot(
 def apply_changes(
     base: DataFrame,
     changes: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    seq_col: str = "event_id",
     delete_col: str | None = None,
 ) -> DataFrame:
-    """MERGE INTO base USING changes: upsert the newest change per key
-    over the base row, honoring tombstones.
+    """MERGE INTO base USING changes: upsert the newest change per
+    ``user_id`` (by ts, then event_id) over the base row, honoring tombstones.
 
     Base rows are tagged with the lowest precedence (a change with the
     same key always wins, regardless of its timestamp — MERGE
@@ -78,8 +70,8 @@ def apply_changes(
     tagged_changes = changes.select(*cols, del_expr.alias("_del")).withColumn(
         "_prec", F.lit(1)
     )
-    w = Window.partitionBy(key).orderBy(
-        F.desc("_prec"), F.desc(ts_col), F.desc(seq_col)
+    w = Window.partitionBy("user_id").orderBy(
+        F.desc("_prec"), F.desc("ts"), F.desc("event_id")
     )
     return (
         tagged_base.unionByName(tagged_changes)
@@ -89,15 +81,10 @@ def apply_changes(
     )
 
 
-def scd2_history(
-    changes: DataFrame,
-    key: str = "user_id",
-    attr: str = "event_type",
-    ts_col: str = "ts",
-    seq_col: str = "event_id",
-) -> DataFrame:
+def scd2_history(changes: DataFrame) -> DataFrame:
     """Type-2 slowly-changing-dimension history from an append-only
-    changelog: one validity interval per ATTRIBUTE RUN — consecutive
+    changelog: one validity interval per ``event_type`` RUN of a
+    ``user_id`` — consecutive
     changes carrying the same value are compressed away (the
     change-detection step; without it every heartbeat update mints a
     spurious version), each surviving change opens ``[valid_from,
@@ -111,17 +98,17 @@ def scd2_history(
     ordering (ts, seq — deterministic cross-engine tie-break), so
     Catalyst reuses the sort.  No join, no driver state.
     """
-    w = Window.partitionBy(key).orderBy(ts_col, seq_col)
-    vers = changes.withColumn("prev", F.lag(attr).over(w)).where(
-        F.col("prev").isNull() | (F.col(attr) != F.col("prev"))
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    vers = changes.withColumn("prev", F.lag("event_type").over(w)).where(
+        F.col("prev").isNull() | (F.col("event_type") != F.col("prev"))
     )
-    w2 = Window.partitionBy(key).orderBy(ts_col, seq_col)
+    w2 = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (
-        vers.withColumn("valid_to", F.lead(ts_col).over(w2))
+        vers.withColumn("valid_to", F.lead("ts").over(w2))
         .select(
-            key,
-            attr,
-            F.col(ts_col).alias("valid_from"),
+            "user_id",
+            "event_type",
+            F.col("ts").alias("valid_from"),
             "valid_to",
             F.col("valid_to").isNull().alias("is_current"),
         )

@@ -57,10 +57,10 @@ def _shingle_expr(w, k: int = SHINGLE_K):
     )).otherwise(F.array().cast("array<string>"))
 
 
-def shingles(col, k: int = SHINGLE_K):
+def shingles(col):
     """One-expression convenience form (tests/small inputs); the
     operators below use the two-step materialized form."""
-    return _shingle_expr(_words(col), k)
+    return _shingle_expr(_words(col))
 
 
 def _doc_shingles(docs: DataFrame, distinct: bool = False) -> DataFrame:
@@ -90,9 +90,7 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, num_hashes: int = NUM_HASHES
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, sig: array<long>) — sig[j] = min over shingles of
     md5_long(j || ':' || shingle).
 
@@ -106,9 +104,9 @@ def minhash_signatures(
     therefore no candidate pairs — same contract as before.
 
     Hash family: each md5 of the shingle yields FOUR independent
-    32-bit lanes (8 hex chars each), so ``num_hashes`` functions cost
-    ``ceil(num_hashes/4)`` md5 evaluations per shingle instead of
-    ``num_hashes`` — md5 is the whole cost of signature generation at
+    32-bit lanes (8 hex chars each), so ``NUM_HASHES`` functions cost
+    ``ceil(NUM_HASHES/4)`` md5 evaluations per shingle instead of
+    ``NUM_HASHES`` — md5 is the whole cost of signature generation at
     10^12 docs (measured ~2× on the sf0.1 bench for the default 8).
     Block b > 0 salts the digest with ``"b:"``; 32-bit min-values keep
     the estimator's agreement semantics (collision bias ∝ shingles/2³²,
@@ -116,7 +114,7 @@ def minhash_signatures(
     import math
 
     sh = _doc_shingles(docs.select("doc_id", "text"))
-    n_blocks = math.ceil(num_hashes / 4)
+    n_blocks = math.ceil(NUM_HASHES / 4)
     blocks = [
         F.md5(F.col("s"))
         if b == 0
@@ -129,49 +127,41 @@ def minhash_signatures(
                 F.substring(blocks[j // 4], (j % 4) * 8 + 1, 8), 16, 10
             ).cast("long")
         ).alias(f"h{j}")
-        for j in range(num_hashes)
+        for j in range(NUM_HASHES)
     ]
     agg = sh.groupBy("doc_id").agg(*mins)
     return agg.select(
         "doc_id",
-        F.array(*[F.col(f"h{j}") for j in range(num_hashes)]).alias(
+        F.array(*[F.col(f"h{j}") for j in range(NUM_HASHES)]).alias(
             "sig"
         ),
     )
 
 
-def minhash_band_pairs(
-    docs: DataFrame,
-    num_hashes: int = NUM_HASHES,
-    bands: int = BANDS,
-) -> DataFrame:
+def minhash_band_pairs(docs: DataFrame) -> DataFrame:
     """LSH candidate pairs: docs sharing a full band of minhashes.
 
     One row per (doc_a < doc_b, band_idx).  The join key is
     (band_idx, band signature) so the shuffle carries doc×band rows —
     this is the piece that keeps near-dup at 10^12 docs tractable."""
-    sigs = minhash_signatures(docs, num_hashes).where(
+    sigs = minhash_signatures(docs).where(
         F.element_at("sig", 1).isNotNull()  # docs with no shingles
     )
-    return band_pairs_from_sigs(sigs, num_hashes, bands)
+    return band_pairs_from_sigs(sigs)
 
 
-def band_keys(
-    sigs: DataFrame,
-    num_hashes: int = NUM_HASHES,
-    bands: int = BANDS,
-) -> DataFrame:
+def band_keys(sigs: DataFrame) -> DataFrame:
     """The banding projection ``(doc_id, band_idx, band_key)`` — the
     LSH index relation.  Split out of ``band_pairs_from_sigs`` so the
     incremental path can persist it as the corpus index table and
     probe it with a new batch's keys (the production shape: the index
     is append-only storage, never recomputed from corpus text)."""
-    rows = num_hashes // bands
+    rows = NUM_HASHES // BANDS
     return sigs.select(
         "doc_id",
         F.posexplode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(BANDS - 1)),
                 lambda b: F.concat_ws(
                     "_",
                     F.transform(
@@ -186,15 +176,11 @@ def band_keys(
     )
 
 
-def band_pairs_from_sigs(
-    sigs: DataFrame,
-    num_hashes: int = NUM_HASHES,
-    bands: int = BANDS,
-) -> DataFrame:
+def band_pairs_from_sigs(sigs: DataFrame) -> DataFrame:
     """The banding + equi-join half of `minhash_band_pairs`, split out
     so callers that also need the signatures (the verify stage) compute
     them once."""
-    banded = band_keys(sigs, num_hashes, bands)
+    banded = band_keys(sigs)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -236,10 +222,7 @@ def simhash_docs(docs: DataFrame, bits: int = 16) -> DataFrame:
 
 
 def minhash_verified_pairs(
-    docs: DataFrame,
-    num_hashes: int = NUM_HASHES,
-    bands: int = BANDS,
-    threshold: float = 0.5,
+    docs: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
     """The verify stage between LSH candidate generation and
     clustering: each candidate pair gets the MinHash-estimated Jaccard
@@ -249,11 +232,11 @@ def minhash_verified_pairs(
     standard precision repair, and it costs only two hash-joins of the
     tiny (doc_id, sig) relation against the candidate pairs — never a
     rescan of the text."""
-    sigs = minhash_signatures(docs, num_hashes).where(
+    sigs = minhash_signatures(docs).where(
         F.element_at("sig", 1).isNotNull()
     )
     pairs = (
-        band_pairs_from_sigs(sigs, num_hashes, bands)
+        band_pairs_from_sigs(sigs)
         .select("doc_a", "doc_b")
         .distinct()
     )
@@ -276,7 +259,7 @@ def minhash_verified_pairs(
         .select(
             "doc_a",
             "doc_b",
-            F.round(agree / num_hashes, 6).alias("est_jaccard"),
+            F.round(agree / NUM_HASHES, 6).alias("est_jaccard"),
         )
         .where(F.col("est_jaccard") >= threshold)
     )
@@ -404,8 +387,6 @@ def connected_components(
 
 def dedup_clusters(
     docs: DataFrame,
-    num_hashes: int = NUM_HASHES,
-    bands: int = BANDS,
     stats: dict | None = None,
     min_est: float | None = None,
 ) -> DataFrame:
@@ -421,13 +402,11 @@ def dedup_clusters(
     (`minhash_verified_pairs`) — without it, one lucky shared band is
     enough to merge two clusters."""
     if min_est is not None:
-        pairs = minhash_verified_pairs(
-            docs, num_hashes, bands, threshold=min_est
-        ).select("doc_a", "doc_b")
-    else:
-        pairs = minhash_band_pairs(docs, num_hashes, bands).select(
+        pairs = minhash_verified_pairs(docs, threshold=min_est).select(
             "doc_a", "doc_b"
         )
+    else:
+        pairs = minhash_band_pairs(docs).select("doc_a", "doc_b")
     comp = connected_components(pairs, stats=stats).select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
     )
@@ -442,11 +421,7 @@ def dedup_clusters(
     )
 
 
-def dedup_survivors(
-    docs: DataFrame,
-    num_hashes: int = NUM_HASHES,
-    bands: int = BANDS,
-) -> DataFrame:
+def dedup_survivors(docs: DataFrame) -> DataFrame:
     """Canonical-document selection per near-dup cluster: instead of
     ``dedup_clusters``' arbitrary min-id keeper, retain the HIGHEST
     QUALITY member (``quality_stats`` score, doc_id tie-break) — the
@@ -465,9 +440,7 @@ def dedup_survivors(
     (BASELINE.json)."""
     from gclog_parser_spark.operators.textstats import quality_stats
 
-    cl = dedup_clusters(docs, num_hashes, bands).select(
-        "doc_id", "cluster_id"
-    )
+    cl = dedup_clusters(docs).select("doc_id", "cluster_id")
     q = quality_stats(docs).select("doc_id", "quality_score")
     w = Window.partitionBy("cluster_id").orderBy(
         F.desc("quality_score"), "doc_id"
@@ -533,14 +506,9 @@ def _pair_overlaps(
     return inter.join(sa, "doc_a").join(sb, "doc_b")
 
 
-def jaccard_pairs(
-    docs: DataFrame,
-    bucket_col: str = "source",
-    threshold: float = 0.5,
-    max_df: int = 256,
-) -> DataFrame:
-    """n-gram Jaccard similarity for candidate pairs within a bucket
-    (default: same `source`).  Computed relationally: explode distinct
+def jaccard_pairs(docs: DataFrame, max_df: int = 256) -> DataFrame:
+    """n-gram Jaccard similarity >= 0.5 for candidate pairs within the
+    same `source`.  Computed relationally: explode distinct
     shingles → self-join on shingle → |A∩B| by group; |A∪B| from per-doc
     counts.  Shuffle ∝ postings, never materializes the pair matrix.
 
@@ -552,7 +520,7 @@ def jaccard_pairs(
     an IDF floor).  Per kept shingle the join fan-out is bounded by
     max_df², independent of corpus size; hot shingles carry no
     similarity signal anyway."""
-    inter = _pair_overlaps(docs, bucket_col, max_df)
+    inter = _pair_overlaps(docs, "source", max_df)
     out = (
         inter.withColumn(
             "jaccard",
@@ -562,7 +530,7 @@ def jaccard_pairs(
                 6,
             ),
         )
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= 0.5)
         .select("doc_a", "doc_b", "jaccard")
     )
     return out
@@ -668,7 +636,6 @@ def prefix_jaccard_pairs(
 def simhash_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
-    bits: int = 32,
     bands: int = 4,
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash Hamming distance — the third
@@ -676,13 +643,13 @@ def simhash_pairs(
     Levenshtein-fuzzy (edit distance): Hamming over the simhash catches
     bag-of-words drift in O(1) per comparison.
 
-    Pigeonhole banding makes it scale: split the ``bits``-bit simhash
+    Pigeonhole banding makes it scale: split the 32-bit simhash
     into ``bands`` equal segments — two hashes within Hamming distance
     ``max_hamming`` (< bands) must agree EXACTLY on at least one
     segment, so candidates come from ``bands`` equi-joins on
     (band_idx, segment value) instead of the O(n²) all-pairs scan (the
     plan the oracle deliberately runs).  Shuffle ∝ docs×bands; hot
-    segments are bounded by segment cardinality 2^(bits/bands).
+    segments are bounded by segment cardinality 2^(32/bands).
     Candidates then verify with a popcount on the XOR — exact, no
     recall loss for max_hamming ≤ bands-1.
 
@@ -693,8 +660,8 @@ def simhash_pairs(
             f"pigeonhole needs max_hamming < bands, got"
             f" {max_hamming} >= {bands}"
         )
-    seg = bits // bands
-    sigs = simhash_docs(docs, bits=bits)
+    seg = 32 // bands
+    sigs = simhash_docs(docs, bits=32)
     banded = sigs.select(
         "doc_id",
         "simhash",
@@ -797,12 +764,9 @@ def span_dedup(docs: DataFrame, k: int = 5) -> DataFrame:
 
 
 def containment_pairs(
-    docs: DataFrame,
-    bucket_col: str = "source",
-    min_containment: float = 0.8,
-    max_df: int = 256,
+    docs: DataFrame, min_containment: float = 0.8
 ) -> DataFrame:
-    """ASYMMETRIC near-dup detection: containment
+    """ASYMMETRIC near-dup detection within the same `source`: containment
     ``C(A,B) = |A∩B| / min(|A|,|B|)`` over distinct shingle sets —
     the rule that catches a document EMBEDDED in another (quoted
     articles, boilerplate-wrapped mirrors, truncated re-crawls), which
@@ -815,9 +779,9 @@ def containment_pairs(
 
     Same relational postings plan (and the same df-cap tractability
     argument) as :func:`jaccard_pairs` — one shingle self-join bounded
-    by max_df² fan-out per shingle, never a pair matrix.
+    by 256² fan-out per shingle, never a pair matrix.
     """
-    inter = _pair_overlaps(docs, bucket_col, max_df)
+    inter = _pair_overlaps(docs, "source", 256)
     return (
         inter.withColumn(
             "containment",
@@ -839,12 +803,7 @@ def containment_pairs(
     )
 
 
-def incremental_dedup(
-    corpus: DataFrame,
-    batch: DataFrame,
-    num_hashes: int = NUM_HASHES,
-    bands: int = BANDS,
-) -> DataFrame:
+def incremental_dedup(corpus: DataFrame, batch: DataFrame) -> DataFrame:
     """Dedup a NEW crawl batch against an already-deduplicated corpus —
     the shape production pipelines actually run (nobody re-clusters
     10^12 documents per crawl; each batch probes the stored index and
@@ -875,21 +834,21 @@ def incremental_dedup(
         .withColumn("dup_exact", F.lit(True))
     )
 
-    sigs_c = minhash_signatures(corpus, num_hashes).where(
+    sigs_c = minhash_signatures(corpus).where(
         F.element_at("sig", 1).isNotNull()
     )
-    sigs_b = minhash_signatures(batch, num_hashes).where(
+    sigs_b = minhash_signatures(batch).where(
         F.element_at("sig", 1).isNotNull()
     )
-    idx_c = band_keys(sigs_c, num_hashes, bands)
-    keys_b = band_keys(sigs_b, num_hashes, bands)
+    idx_c = band_keys(sigs_c)
+    keys_b = band_keys(sigs_b)
     vs_old = (
         keys_b.join(idx_c, ["band_idx", "band_key"], "left_semi")
         .select("doc_id").distinct()
         .withColumn("dup_of_corpus", F.lit(True))
     )
     vs_new = (
-        band_pairs_from_sigs(sigs_b, num_hashes, bands)
+        band_pairs_from_sigs(sigs_b)
         .select(F.col("doc_b").alias("doc_id")).distinct()
         .withColumn("dup_in_batch", F.lit(True))
     )
@@ -913,16 +872,10 @@ def incremental_dedup(
     )
 
 
-def lsh_recall(
-    docs: DataFrame,
-    threshold_num: int = 1,
-    threshold_den: int = 2,
-    num_hashes: int = NUM_HASHES,
-    bands: int = BANDS,
-) -> DataFrame:
+def lsh_recall(docs: DataFrame) -> DataFrame:
     """Candidate-recall audit for the MinHash-LSH banding index:
     measure what fraction of TRUE near-dup pairs (exact Jaccard ≥
-    num/den, from the provably-complete ``prefix_jaccard_pairs``
+    1/2, from the provably-complete ``prefix_jaccard_pairs``
     ground truth) the banding actually surfaces as candidates.
 
     One row: ``(n_truth, n_candidates, n_hits, recall, efficiency)``
@@ -941,11 +894,9 @@ def lsh_recall(
 
     Reference has no similarity ops; north-rule dedup quality gate
     (BASELINE.json)."""
-    truth = prefix_jaccard_pairs(
-        docs, threshold_num, threshold_den
-    ).select("doc_a", "doc_b")
+    truth = prefix_jaccard_pairs(docs).select("doc_a", "doc_b")
     cand = (
-        minhash_band_pairs(docs, num_hashes, bands)
+        minhash_band_pairs(docs)
         .select("doc_a", "doc_b")
         .distinct()
     )

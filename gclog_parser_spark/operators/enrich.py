@@ -197,14 +197,12 @@ def _cs(col):
     return (col.cast("decimal(12,2)") * 100).cast("long")
 
 
-def cpu_times(
-    pages: DataFrame, text_col: str = "text", require_marker: bool = True
-) -> DataFrame:
-    """GC CPU-time accounting per log: extract the ``[Times: user=U
-    sys=S, real=R secs]`` trailers (legacy, present on most JDK 7/8
-    lines — the reference grammar reads only ``real=`` as the CMS
-    pause, Parser.scala:48; user/sys are dropped there) and the JDK 9+
-    ``[gc,cpu] GC(n) User= Sys= Real=`` unified twin, as exact
+def cpu_times(pages: DataFrame) -> DataFrame:
+    """GC CPU-time accounting per marked log in ``text``: extract the
+    ``[Times: user=U sys=S, real=R secs]`` trailers (legacy, present on
+    most JDK 7/8 lines — the reference grammar reads only ``real=`` as
+    the CMS pause, Parser.scala:48; user/sys are dropped there) and the
+    JDK 9+ ``[gc,cpu] GC(n) User= Sys= Real=`` unified twin, as exact
     centisecond BIGINTs.
 
     Returns one row per url: line count, summed user/sys/real ticks,
@@ -215,8 +213,7 @@ def cpu_times(
     volume ∝ urls, never ∝ page text."""
     from gclog_parser_spark.operators.parse import extract_gc_text
 
-    gc = extract_gc_text(pages, text_col=text_col,
-                         require_marker=require_marker)
+    gc = extract_gc_text(pages)
     lines = gc.select(
         "url",
         F.posexplode(F.split("gc_text", "\n")).alias("line_no", "line"),

@@ -14,8 +14,8 @@ Exact cross-engine parity trick: ranks are **integer ticks**
 unrolled-CTE reimplementation matches bit-for-bit, with no
 float-summation-order tolerance games.  The tick formulas:
 
-    r0        = scale DIV N                      (every node)
-    base      = ((100-d)·(scale DIV N)) DIV 100
+    r0        = SCALE DIV N                      (every node)
+    base      = ((100-d)·(SCALE DIV N)) DIV 100
     contrib_e = r_src DIV outdeg_src             (per edge)
     r'        = base + (d · Σ contrib_in) DIV 100
 
@@ -37,38 +37,49 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+#: rank ticks per unit of rank mass, and the damping factor in percent
+#: (85 = the canonical 0.85, so the damping multiply stays in BIGINT)
+SCALE = 10**12
+DAMPING_PCT = 85
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    n_iter: int = 5,
-    damping_pct: int = 85,
-    scale: int = 10**12,
-) -> DataFrame:
-    """Fixed-iteration integer-tick PageRank over distinct edges.
 
-    Returns ``(node, rank_ticks)`` for every node that appears as a
-    source or destination.  ``damping_pct`` is the damping factor in
-    percent (85 = the canonical 0.85) so the damping multiply stays in
-    BIGINT.
-    """
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).distinct()
+def _edges_and_nodes(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The distinct ``(src, dst)`` edges and their ``node`` set, each
+    materialized once: every iteration below reads both, and a lazy
+    relation would re-scan and re-dedup the input per iteration (AQE
+    runs each iteration's query stages when its checkpoint is built)."""
+    e = edges.select("src", "dst").distinct().localCheckpoint()
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
+        .localCheckpoint()
     )
+    return e, nodes
+
+
+def _out_edges(e: DataFrame) -> DataFrame:
+    """``(src, dst, deg)``: each edge with its source's out-degree,
+    materialized once for the iteration loop."""
+    outdeg = e.groupBy("src").agg(F.count("*").alias("deg"))
+    return e.join(outdeg, "src").localCheckpoint()
+
+
+def pagerank(edges: DataFrame, n_iter: int = 5) -> DataFrame:
+    """Fixed-iteration integer-tick PageRank over distinct ``(src,
+    dst)`` edges.
+
+    Returns ``(node, rank_ticks)`` for every node that appears as a
+    source or destination.
+    """
+    e, nodes = _edges_and_nodes(edges)
     n = nodes.count()
     if n == 0:
         raise ValueError("pagerank over an empty edge set")
-    r0 = scale // n
-    base = ((100 - damping_pct) * r0) // 100
+    r0 = SCALE // n
+    base = ((100 - DAMPING_PCT) * r0) // 100
 
-    outdeg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    ed = e.join(outdeg, "src")
+    ed = _out_edges(e)
     ranks = nodes.withColumn("rank_ticks", F.lit(r0).cast("long"))
     for _ in range(n_iter):
         contrib = (
@@ -88,7 +99,7 @@ def pagerank(
                 (
                     F.lit(base)
                     + F.expr(
-                        f"({damping_pct} * coalesce(s, CAST(0 AS BIGINT)))"
+                        f"({DAMPING_PCT} * coalesce(s, CAST(0 AS BIGINT)))"
                         " DIV 100"
                     )
                 ).cast("long").alias("rank_ticks"),
@@ -99,13 +110,7 @@ def pagerank(
 
 
 def trustrank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    n_iter: int = 5,
-    damping_pct: int = 85,
-    scale: int = 10**12,
+    edges: DataFrame, seeds: DataFrame, n_iter: int = 5
 ) -> DataFrame:
     """Fixed-iteration integer-tick TrustRank (Gyöngyi, Garcia-Molina
     & Pedersen 2004): personalized PageRank whose teleport vector is a
@@ -121,8 +126,8 @@ def trustrank(
     ticks, ``DIV`` floor division, dangling mass dropped — with the
     seeded differences:
 
-        t0(v)   = scale DIV |S|  if v ∈ S else 0
-        base(v) = ((100-d)·(scale DIV |S|)) DIV 100  if v ∈ S else 0
+        t0(v)   = SCALE DIV |S|  if v ∈ S else 0
+        base(v) = ((100-d)·(SCALE DIV |S|)) DIV 100  if v ∈ S else 0
         t'(v)   = base(v) + (d · Σ contrib_in) DIV 100
 
     so a node unreachable from every seed holds exactly 0 ticks
@@ -136,14 +141,7 @@ def trustrank(
     lineage truncated per round via ``localCheckpoint``; driver state
     is two counts.
     """
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).distinct()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    e, nodes = _edges_and_nodes(edges)
     if nodes.count() == 0:
         raise ValueError("trustrank over an empty edge set")
     seed_col = seeds.columns[0]
@@ -155,16 +153,15 @@ def trustrank(
     n_seed = seed_nodes.count()
     if n_seed == 0:
         raise ValueError("trustrank requires >= 1 seed present in the graph")
-    t0 = scale // n_seed
-    base = ((100 - damping_pct) * t0) // 100
+    t0 = SCALE // n_seed
+    base = ((100 - DAMPING_PCT) * t0) // 100
 
     flagged = nodes.join(
         seed_nodes.withColumn("is_seed", F.lit(True)), "node", "left"
     ).select(
         "node", F.coalesce(F.col("is_seed"), F.lit(False)).alias("is_seed")
-    )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    ed = e.join(outdeg, "src")
+    ).localCheckpoint()
+    ed = _out_edges(e)
     ranks = flagged.select(
         "node",
         F.when(F.col("is_seed"), F.lit(t0))
@@ -187,7 +184,7 @@ def trustrank(
                 (
                     F.when(F.col("is_seed"), F.lit(base)).otherwise(F.lit(0))
                     + F.expr(
-                        f"({damping_pct} * coalesce(s, CAST(0 AS BIGINT)))"
+                        f"({DAMPING_PCT} * coalesce(s, CAST(0 AS BIGINT)))"
                         " DIV 100"
                     )
                 ).cast("long").alias("trust_ticks"),
@@ -210,9 +207,7 @@ def events_link_graph(events: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def triangle_counts(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
+def triangle_counts(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts — the local clustering signal web-graph
     pipelines use next to PageRank (spam farms are triangle-dense;
     genuine hubs are not).
@@ -235,11 +230,12 @@ def triangle_counts(
     the 3 corners + one final exchange.  Shuffle ∝ oriented wedges
     (Σ out_deg², bounded by orientation), never ∝ naive wedges.
 
-    Returns ``(node, n_triangles)`` for every node in the edge set,
+    Returns ``(node, n_triangles)`` for every node in the ``(src,
+    dst)`` edge set,
     zeros included.  The DuckDB oracle counts the same triangles with
     NO orientation (pure a<b<c edge-chain joins) — an independent
     construction."""
-    e = edges.select(F.col(src).alias("x"), F.col(dst).alias("y")).where(
+    e = edges.select(F.col("src").alias("x"), F.col("dst").alias("y")).where(
         F.col("x") != F.col("y")
     )
     # the canonical edge set and the oriented relation are each reused
@@ -314,12 +310,10 @@ def triangle_counts(
     )
 
 
-def _l1_normalize(
-    scores: DataFrame, col: str, scale: int
-) -> DataFrame:
-    """Rescale nonneg integer ticks so they sum to ≤ ``scale``:
-    t' = t·scale DIV Σt, floor division computed in DECIMAL(38,0) so
-    the t·scale product can't overflow BIGINT (the DuckDB twin uses
+def _l1_normalize(scores: DataFrame, col: str) -> DataFrame:
+    """Rescale nonneg integer ticks so they sum to ≤ ``SCALE``:
+    t' = t·SCALE DIV Σt, floor division computed in DECIMAL(38,0) so
+    the t·SCALE product can't overflow BIGINT (the DuckDB twin uses
     HUGEINT — identical floors for nonnegative operands).  The total
     is a one-row broadcast cross join (house scalar pattern), so the
     step adds one partial-aggregated reduce, no wide exchange."""
@@ -335,25 +329,20 @@ def _l1_normalize(
                 # a graph with ≥1 edge, where init ticks propagate)
                 f"CASE WHEN __tot <= 0 THEN CAST(raise_error("
                 f"'hits: non-positive L1 total') AS BIGINT) "
-                f"ELSE CAST(CAST({col} AS DECIMAL(38,0)) * {scale}"
+                f"ELSE CAST(CAST({col} AS DECIMAL(38,0)) * {SCALE}"
                 f" DIV __tot AS BIGINT) END"
             ).alias(col),
         )
     )
 
 
-def hits(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    n_iter: int = 3,
-    scale: int = 10**12,
-) -> DataFrame:
-    """Kleinberg HITS hub/authority scores — the link-quality pair web
-    pipelines read next to PageRank (authorities ≈ canonical content
-    pages, hubs ≈ link directories; spam detection reads the gap
-    between them).  The reference repo has no graph surface; charter
-    is the north rule's web-corpus superset, like :func:`pagerank`.
+def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
+    """Kleinberg HITS hub/authority scores over ``(src, dst)`` edges —
+    the link-quality pair web pipelines read next to PageRank
+    (authorities ≈ canonical content pages, hubs ≈ link directories;
+    spam detection reads the gap between them).  The reference repo has
+    no graph surface; charter is the north rule's web-corpus superset,
+    like :func:`pagerank`.
 
     Exact cross-engine parity: all state is integer ticks.  Each
     half-iteration is the mutual-reinforcement sum (auth(v) = Σ hub(u)
@@ -372,19 +361,11 @@ def hits(
     if n_iter < 1:
         # n_iter=0 would leave auth unset and crash on the final join
         raise ValueError("hits requires n_iter >= 1")
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).distinct()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e, nodes = _edges_and_nodes(edges)
     n = nodes.count()
     if n == 0:
         raise ValueError("hits over an empty edge set")
-    init = scale // n
+    init = SCALE // n
 
     def _gather(scores: DataFrame, col: str, frm: str, to: str,
                 out: str) -> DataFrame:
@@ -403,22 +384,18 @@ def hits(
     for _ in range(n_iter):
         auth = _l1_normalize(
             _gather(hub, "hub_ticks", "src", "dst", "auth_ticks"),
-            "auth_ticks", scale,
+            "auth_ticks",
         ).localCheckpoint(eager=False)
         hub = _l1_normalize(
             _gather(auth, "auth_ticks", "dst", "src", "hub_ticks"),
-            "hub_ticks", scale,
+            "hub_ticks",
         ).localCheckpoint(eager=False)
     return auth.join(hub, "node")
 
 
-def label_propagation(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    n_iter: int = 3,
-) -> DataFrame:
-    """Synchronous label-propagation community detection (Raghavan,
+def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
+    """Synchronous label-propagation community detection over ``(src,
+    dst)`` edges (Raghavan,
     Albert & Kumara 2007) — the near-linear community finder web-corpus
     pipelines run next to PageRank: mirror farms and template clusters
     collapse into one community, and per-community quotas then cap how
@@ -449,11 +426,13 @@ def label_propagation(
     if n_iter < 1:
         raise ValueError("label_propagation requires n_iter >= 1")
     d = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
+        F.col("src").alias("a"), F.col("dst").alias("b")
     ).where(F.col("a") != F.col("b"))
-    und = d.union(
-        d.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).distinct()
+    und = (
+        d.union(d.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .distinct()
+        .localCheckpoint()
+    )
     labels = (
         und.select(F.col("a").alias("node"))
         .distinct()
@@ -667,14 +646,12 @@ def coreness(
     return h.select("node", F.col("h").alias("coreness"))
 
 
-def degree_distribution(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Log2-bucketed in/out degree distribution — the first chart a
-    web-graph audit draws (a crawl frontier is healthy when the tail
-    is power-law-ish; a sudden fat bucket is a link farm or a crawler
-    trap).  One row per (direction, log2 bucket) with the node count
-    and the exact min/max degree inside the bucket.
+def degree_distribution(edges: DataFrame) -> DataFrame:
+    """Log2-bucketed in/out degree distribution of ``(src, dst)`` edges
+    — the first chart a web-graph audit draws (a crawl frontier is
+    healthy when the tail is power-law-ish; a sudden fat bucket is a
+    link farm or a crawler trap).  One row per (direction, log2 bucket)
+    with the node count and the exact min/max degree inside the bucket.
 
     The bucket is ``floor(log2(degree))`` computed WITHOUT floats:
     ``length(bin(degree)) - 1`` (the binary-string length trick) —
@@ -687,7 +664,7 @@ def degree_distribution(
     ∝ log2(max degree).  Multi-edges are counted as distinct links
     (the graph is simplified first, same as every operator here)."""
     e = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("d")
+        F.col("src").alias("s"), F.col("dst").alias("d")
     ).where(F.col("s") != F.col("d")).distinct()
     out_deg = e.groupBy(F.col("s").alias("node")).agg(
         F.count("*").cast("long").alias("deg")

@@ -34,10 +34,10 @@ def bucket_table(
     n_buckets: int,
     path: str | None = None,
     sort_by: list[str] | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Write ``df`` as a bucketed (and optionally bucket-sorted)
-    table — the co-location lever for repeated fact-to-fact joins.
+    """Write (overwrite) ``df`` as a bucketed (and optionally
+    bucket-sorted) table — the co-location lever for repeated
+    fact-to-fact joins.
 
     Two tables bucketed on the join key with the same bucket count
     join with ZERO exchanges (and zero sorts when ``sort_by`` matches
@@ -51,7 +51,7 @@ def bucket_table(
     dir); bucketing requires the table catalog, so this is
     ``saveAsTable``, not a bare ``parquet()`` write.
     """
-    writer = df.write.mode(mode).bucketBy(n_buckets, *bucket_by)
+    writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_by)
     if sort_by:
         writer = writer.sortBy(*sort_by)
     if path is not None:
@@ -65,30 +65,22 @@ def compact_table(
     partition_by: list[str] | None = None,
     sort_by: list[str] | None = None,
     max_records_per_file: int = 1_000_000,
-    files_per_partition: int = 1,
-    mode: str = "overwrite",
 ) -> None:
-    """Rewrite ``df`` as a compacted, sorted, hive-partitioned table.
-
-    ``files_per_partition`` > 1 spreads each hive partition over that
-    many tasks (hash on the partition key + a within-key split) when
-    single-task-per-partition would bottleneck on a skewed partition;
-    the default 1 gives maximal compaction.
-    """
+    """Rewrite (overwrite) ``df`` as a compacted, sorted,
+    hive-partitioned table: each hive partition is written by one task,
+    for maximal compaction."""
     partition_by = partition_by or []
     sort_by = sort_by or []
     out = df
     if partition_by:
-        n_parts = files_per_partition * max(
-            df.sparkSession.sparkContext.defaultParallelism, 1
-        )
+        n_parts = max(df.sparkSession.sparkContext.defaultParallelism, 1)
         # hash-cluster on the hive keys: each output directory is
-        # written by ~files_per_partition tasks, not by every task
+        # written by one task, not by every task
         out = out.repartition(n_parts, *partition_by)
     if sort_by:
         out = out.sortWithinPartitions(*(partition_by + sort_by))
     writer = (
-        out.write.mode(mode)
+        out.write.mode("overwrite")
         .option("maxRecordsPerFile", max_records_per_file)
     )
     if partition_by:
@@ -132,7 +124,6 @@ def zorder_table(
     table: str,
     zorder_by: list[str],
     n_files: int = 8,
-    bits: int = 16,
 ):
     """Rewrite ``df`` Z-order-clustered on ``zorder_by`` into the
     snapshot catalog at ``table`` (overwrite commit): rows are sorted
@@ -160,7 +151,7 @@ def zorder_table(
     ).first()
     mins = [bounds[f"mn_{c}"] for c in zorder_by]
     maxs = [bounds[f"mx_{c}"] for c in zorder_by]
-    z = _zvalue(zorder_by, mins, maxs, bits)
+    z = _zvalue(zorder_by, mins, maxs, 16)
     clustered = (
         df.withColumn("_z", z)
         .repartitionByRange(n_files, "_z")

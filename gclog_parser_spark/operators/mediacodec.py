@@ -173,9 +173,8 @@ def png_decode(payload: bytes) -> dict:
     }
 
 
-def wav_encode(samples, framerate: int = 8000,
-               sampwidth: int = 2, channels: int = 1) -> bytes:
-    """Minimal PCM WAV writer via the stdlib ``wave`` module.  A sample
+def wav_encode(samples, framerate: int = 8000, sampwidth: int = 2) -> bytes:
+    """Minimal mono PCM WAV writer via the stdlib ``wave`` module.  A sample
     outside the signed range of ``sampwidth`` bytes raises ValueError."""
     if sampwidth not in (1, 2):
         raise ValueError("sampwidth must be 1 or 2")
@@ -185,7 +184,7 @@ def wav_encode(samples, framerate: int = 8000,
             raise ValueError(f"sample {s} out of range for width {sampwidth}")
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
-        w.setnchannels(channels)
+        w.setnchannels(1)
         w.setsampwidth(sampwidth)
         w.setframerate(framerate)
         if sampwidth == 2:

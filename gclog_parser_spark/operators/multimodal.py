@@ -157,14 +157,9 @@ RESIZE_SCHEMA = (
 )
 
 
-def resize_media(
-    pages: DataFrame,
-    target_w: int = 16,
-    target_h: int = 16,
-    payload_col: str = "html",
-) -> DataFrame:
-    """Fake-resize every payload to ``target_w×target_h``: one feature
-    row per payload, the shape a real thumbnailer uses.
+def resize_media(pages: DataFrame) -> DataFrame:
+    """Fake-resize every ``html`` payload to 16×16: one feature row per
+    payload, the shape a real thumbnailer uses.
 
     The pixel work is the documented stub (no codecs in this image):
     the 'resized' artifact is a deterministic digest of
@@ -173,25 +168,16 @@ def resize_media(
     digest line with the codec + resample call."""
 
     def rows(b):
-        yield (
-            _sniff(b)[1],
-            target_w,
-            target_h,
-            _stub_resize_digest(b, target_w, target_h),
-        )
+        yield _sniff(b)[1], 16, 16, _stub_resize_digest(b, 16, 16)
 
-    return _map_payloads(pages, payload_col, RESIZE_SCHEMA, rows)
+    return _map_payloads(pages, "html", RESIZE_SCHEMA, rows)
 
 
 FRAMES_SCHEMA = "url string, frame_idx int, frame_digest string"
 FRAME_CHARS = 4096  # fake 'frame' = 4 KiB character window
 
 
-def sample_frames(
-    pages: DataFrame,
-    every_n: int = 2,
-    payload_col: str = "html",
-) -> DataFrame:
+def sample_frames(pages: DataFrame) -> DataFrame:
     """Fake video frame sampling: one input row fans out to one row per
     sampled frame — the real shape of a frame-extraction pass (row
     explosion inside ``mapInPandas``, still shuffle-free; a 100 TB
@@ -199,31 +185,27 @@ def sample_frames(
     exchange).
 
     Frames are consecutive ``FRAME_CHARS`` windows of the decoded
-    payload; every ``every_n``-th window is 'decoded' (deterministic
+    ``html`` payload; every 2nd window is 'decoded' (deterministic
     digest stub, same contract as ``decode_stub``)."""
 
     def rows(b):
         text = b.decode("utf-8", errors="replace")
         n_frames = (len(text) + FRAME_CHARS - 1) // FRAME_CHARS
-        for i in range(0, n_frames, every_n):
+        for i in range(0, n_frames, 2):
             chunk = text[i * FRAME_CHARS: (i + 1) * FRAME_CHARS]
             yield i, hashlib.md5(chunk.encode()).hexdigest()
 
-    return _map_payloads(pages, payload_col, FRAMES_SCHEMA, rows)
+    return _map_payloads(pages, "html", FRAMES_SCHEMA, rows)
 
 
 PHASH_BITS = 60  # fits BIGINT positive; bands must divide it
 PHASH_SCHEMA = "url string, n_cp long, phash long"
 
 
-def media_phash(
-    pages: DataFrame,
-    payload_col: str = "html",
-    bits: int = PHASH_BITS,
-) -> DataFrame:
-    """Perceptual-style average-hash of every media payload — the
+def media_phash(pages: DataFrame) -> DataFrame:
+    """Perceptual-style average-hash of every ``html`` payload — the
     image-dedup signature (pHash family): split the decoded payload
-    into ``bits`` contiguous blocks, bit_i = (block mean >= global
+    into ``PHASH_BITS`` contiguous blocks, bit_i = (block mean >= global
     mean), compared with EXACT integer cross-multiplication
     (block_sum·n >= total_sum·block_len) so both engines derive the
     same bits.  Decode is the documented codec stub (no PIL/ffmpeg in
@@ -231,31 +213,29 @@ def media_phash(
     via numpy over the utf-32 view — a real deployment swaps ONLY the
     decode line for the codec + DCT/resample call.
 
-    Returns (url, n_cp, phash) — phash is a ``bits``-bit BIGINT;
+    Returns (url, n_cp, phash) — phash is a ``PHASH_BITS``-bit BIGINT;
     near-duplicate payloads land within small Hamming distance.
     Empty payloads drop."""
 
     def rows(b):
         text = b.decode("utf-8", errors="replace")
         if text:
-            yield len(text), _average_hash(_codepoints(text), bits)
+            yield len(text), _average_hash(_codepoints(text), PHASH_BITS)
 
-    return _map_payloads(pages, payload_col, PHASH_SCHEMA, rows)
+    return _map_payloads(pages, "html", PHASH_SCHEMA, rows)
 
 
 def media_phash_pairs(
     pages: DataFrame,
     max_hamming: int = 12,
     bands: int = 15,
-    bits: int = PHASH_BITS,
-    payload_col: str = "html",
 ) -> DataFrame:
     """Near-duplicate media pairs by phash Hamming distance — the
     image-dedup join, same pigeonhole banding as ``simhash_pairs``:
     two hashes within Hamming ``max_hamming`` (< bands) must agree
     exactly on at least one of ``bands`` equal segments, so candidates
     come from band equi-joins (shuffle ∝ payloads×bands, per-bucket
-    fan-out bounded by segment cardinality 2^(bits/bands)) and verify
+    fan-out bounded by segment cardinality 2^(PHASH_BITS/bands)) and verify
     with one popcount — never an all-pairs scan.  Production images
     use wider hashes (256-bit pHash, 8-bit segments) for colder
     buckets; the 60-bit default matches the stub decode.
@@ -266,10 +246,10 @@ def media_phash_pairs(
             f"pigeonhole needs max_hamming < bands, got"
             f" {max_hamming} >= {bands}"
         )
-    if bits % bands:
-        raise ValueError("bands must divide bits")
-    seg = bits // bands
-    sigs = media_phash(pages, payload_col=payload_col, bits=bits)
+    if PHASH_BITS % bands:
+        raise ValueError("bands must divide PHASH_BITS")
+    seg = PHASH_BITS // bands
+    sigs = media_phash(pages)
     banded = sigs.select(
         "url",
         "phash",
@@ -309,14 +289,10 @@ EMBED_DIM = 8
 EMBED_LANE_OFFSET = 1 << 23  # 24-bit lanes, signed around zero
 
 
-def media_embed(
-    pages: DataFrame,
-    dim: int = EMBED_DIM,
-    payload_col: str = "html",
-) -> DataFrame:
-    """Deterministic stand-in media embedder — the model-inference
-    pass of a multimodal pipeline in its real Spark shape: (url,
-    ``array<long>``) embedding relation, zero shuffle.  A real
+def media_embed(pages: DataFrame) -> DataFrame:
+    """Deterministic stand-in ``html`` payload embedder — the
+    model-inference pass of a multimodal pipeline in its real Spark
+    shape: (url, ``array<long>``) embedding relation, zero shuffle.  A real
     deployment swaps ONLY the per-payload function for the
     CLIP/encoder forward pass (GPU-batched over exactly these Arrow
     batches); everything downstream — storage schema, similarity
@@ -334,21 +310,14 @@ def media_embed(
         yield ([
             int(hashlib.md5((text + f":{j}").encode()).hexdigest()[:6], 16)
             - EMBED_LANE_OFFSET
-            for j in range(dim)
+            for j in range(EMBED_DIM)
         ],)
 
-    return _map_payloads(
-        pages, payload_col, "url string, emb array<long>", rows
-    )
+    return _map_payloads(pages, "html", "url string, emb array<long>", rows)
 
 
-def media_neighbor_topk(
-    pages: DataFrame,
-    k: int = 10,
-    dim: int = EMBED_DIM,
-    payload_col: str = "html",
-) -> DataFrame:
-    """Embedding-space nearest neighbors of one probe page — the
+def media_neighbor_topk(pages: DataFrame) -> DataFrame:
+    """Embedding-space top-10 nearest neighbors of one probe page — the
     multimodal→ANN composition: binary payload → embedding relation →
     exact-BIGINT dot-product top-k.  The probe is the keeper of the
     LARGEST exact-duplicate payload group (deterministic: count DESC,
@@ -358,11 +327,11 @@ def media_neighbor_topk(
     media pipeline runs before trusting the encoder.
 
     Scale shape: the embedding pass is shuffle-free; the probe row
-    broadcasts; the scan computes dim multiplies per vector; top-k is
+    broadcasts; the scan computes EMBED_DIM multiplies per vector; top-k is
     a bounded TakeOrdered — no global sort materializes."""
-    emb = media_embed(pages, dim=dim, payload_col=payload_col)
+    emb = media_embed(pages)
     probe_url = (
-        pages.groupBy(F.md5(payload_col))
+        pages.groupBy(F.md5("html"))
         .agg(F.count("*").alias("n"), F.min("url").alias("url"))
         .orderBy(F.desc("n"), F.asc("url"))
         .limit(1)
@@ -381,7 +350,7 @@ def media_neighbor_topk(
         .where(F.col("url") != F.col("probe_url"))
         .select("probe_url", "url", dot.alias("dot"))
         .orderBy(F.desc("dot"), F.asc("url"))
-        .limit(k)
+        .limit(10)
     )
 
 
@@ -392,12 +361,12 @@ DECODE_SCHEMA = (
 )
 
 
-def decode_media_features(pages: DataFrame, payload_col: str = "payload"):
-    """REAL media decode as a feature relation: PNG → zlib inflate +
-    scanline unfilter (all five PNG filter types), WAV → RIFF/PCM via
-    the stdlib ``wave`` module; anything else routes to the documented
-    stub (codec='stub', stub dims, NULL values).  See
-    ``operators.mediacodec``.
+def decode_media_features(pages: DataFrame):
+    """REAL media decode of the ``payload`` column as a feature
+    relation: PNG → zlib inflate + scanline unfilter (all five PNG
+    filter types), WAV → RIFF/PCM via the stdlib ``wave`` module;
+    anything else routes to the documented stub (codec='stub', stub
+    dims, NULL values).  See ``operators.mediacodec``.
 
     ``value_digest`` is md5 over the ','-joined decimal decoded values
     (pixels row-major channel-interleaved / signed PCM samples) — the
@@ -420,7 +389,7 @@ def decode_media_features(pages: DataFrame, payload_col: str = "payload"):
             dec["sample_rate"], len(vals), value_digest(vals),
         )
 
-    return _map_payloads(pages, payload_col, DECODE_SCHEMA, rows)
+    return _map_payloads(pages, "payload", DECODE_SCHEMA, rows)
 
 
 RESIZE_REAL_SCHEMA = (
@@ -429,65 +398,53 @@ RESIZE_REAL_SCHEMA = (
 )
 
 
-def resize_media_real(
-    pages: DataFrame,
-    target_w: int = 8,
-    target_h: int = 6,
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Real thumbnailing for the stdlib-decodable formats: PNG resizes
-    by nearest-neighbor (out(ty,tx,c) = src(ty·h div th, tx·w div tw,
-    c) — integer index math, exactly re-derivable in SQL), WAV
-    downsamples the waveform to a ``target_w·target_h``-point sketch
-    (out(j) = sample(j·n div L)); other payloads keep the documented
+def resize_media_real(pages: DataFrame) -> DataFrame:
+    """Real 8×6 thumbnailing of the ``payload`` column for the
+    stdlib-decodable formats: PNG resizes by nearest-neighbor
+    (out(ty,tx,c) = src(ty·h div 6, tx·w div 8, c) — integer index
+    math, exactly re-derivable in SQL), WAV downsamples the waveform
+    to a 48-point sketch (out(j) = sample(j·n div 48)); other payloads
+    keep the documented
     stub digest of :func:`resize_media` (md5 of text + 'WxH').
     ``resized_digest`` digests the resized values the same way
     ``value_digest`` does, so the oracle verifies REAL resampled
     pixels, not plumbing alone."""
-    L = target_w * target_h
+    tw, th = 8, 6
 
     def rows(b):
         dec = decode_media(b)
         if dec is None:
-            yield (
-                "stub", target_w, target_h,
-                _stub_resize_digest(b, target_w, target_h),
-            )
+            yield "stub", tw, th, _stub_resize_digest(b, tw, th)
             return
         src = dec["values"]
         if dec["codec"] == "png":
             w, h, ch = dec["width"], dec["height"], dec["n_channels"]
             out = [
-                src[((ty * h // target_h) * w
-                     + (tx * w // target_w)) * ch + c]
-                for ty in range(target_h)
-                for tx in range(target_w)
+                src[((ty * h // th) * w + (tx * w // tw)) * ch + c]
+                for ty in range(th)
+                for tx in range(tw)
                 for c in range(ch)
             ]
         else:  # wav: 1-D waveform sketch
             n = len(src)
-            out = [src[j * n // L] for j in range(L)]
-        yield dec["codec"], target_w, target_h, value_digest(out)
+            out = [src[j * n // (tw * th)] for j in range(tw * th)]
+        yield dec["codec"], tw, th, value_digest(out)
 
-    return _map_payloads(pages, payload_col, RESIZE_REAL_SCHEMA, rows)
+    return _map_payloads(pages, "payload", RESIZE_REAL_SCHEMA, rows)
 
 
 PHASH_REAL_SCHEMA = "url string, decoder string, n_vals long, phash long"
 
 
-def media_phash_real(
-    pages: DataFrame,
-    bits: int = PHASH_BITS,
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Average-hash over the REAL decoded values (round-5): PNG pixel
-    bytes / WAV PCM samples from the stdlib decoders — the honest
-    upgrade of :func:`media_phash`, whose 'pixels' are codepoint
+def media_phash_real(pages: DataFrame) -> DataFrame:
+    """Average-hash over the REAL decoded ``payload`` values (round-5):
+    PNG pixel bytes / WAV PCM samples from the stdlib decoders — the
+    honest upgrade of :func:`media_phash`, whose 'pixels' are codepoint
     stand-ins; undecodable payloads keep exactly that codepoint lane
     (``decoder='stub'``), so one relation covers the mixed corpus.
 
     The same average hash as ``media_phash`` (position ``i`` → block
-    ``i·bits div n``, exact integer cross-multiplication), so WAV's
+    ``i·PHASH_BITS div n``, exact integer cross-multiplication), so WAV's
     negative samples compare exactly too."""
 
     def rows(b):
@@ -498,9 +455,9 @@ def media_phash_real(
             vals = _codepoints(b.decode("utf-8", errors="replace"))
             decoder = "stub"
         if len(vals):
-            yield decoder, len(vals), _average_hash(vals, bits)
+            yield decoder, len(vals), _average_hash(vals, PHASH_BITS)
 
-    return _map_payloads(pages, payload_col, PHASH_REAL_SCHEMA, rows)
+    return _map_payloads(pages, "payload", PHASH_REAL_SCHEMA, rows)
 
 
 AUDIO_FEATURES_SCHEMA = (
@@ -509,14 +466,13 @@ AUDIO_FEATURES_SCHEMA = (
 )
 
 
-def media_audio_features(
-    pages: DataFrame, payload_col: str = "payload"
-) -> DataFrame:
-    """REAL audio feature extraction over decoded WAV samples — the
-    audio-quality gate of a multimodal training pipeline (silence /
-    clipping / DC-stuck detection before paying for transcription or
-    an audio encoder).  Everything is EXACT integers so the DuckDB
-    oracle reproduces it from the generator closed form bit-for-bit:
+def media_audio_features(pages: DataFrame) -> DataFrame:
+    """REAL audio feature extraction over decoded WAV ``payload``
+    samples — the audio-quality gate of a multimodal training pipeline
+    (silence / clipping / DC-stuck detection before paying for
+    transcription or an audio encoder).  Everything is EXACT integers
+    so the DuckDB oracle reproduces it from the generator closed form
+    bit-for-bit:
 
     * ``sum_sq`` — Σ s² (BIGINT; RMS = sqrt(sum_sq/n) is left to the
       reader precisely because sqrt is float) — silence ≈ 0;
@@ -540,7 +496,7 @@ def media_audio_features(
             int(((s[:-1] * s[1:]) < 0).sum()) if len(s) > 1 else 0,
         )
 
-    return _map_payloads(pages, payload_col, AUDIO_FEATURES_SCHEMA, rows)
+    return _map_payloads(pages, "payload", AUDIO_FEATURES_SCHEMA, rows)
 
 
 IMAGE_STATS_SCHEMA = (
@@ -549,11 +505,9 @@ IMAGE_STATS_SCHEMA = (
 )
 
 
-def media_image_stats(
-    pages: DataFrame, payload_col: str = "payload"
-) -> DataFrame:
-    """REAL image statistics over decoded PNG pixels — the image-DQ
-    gate (all-black / blown-out / low-entropy screenshots) run before
+def media_image_stats(pages: DataFrame) -> DataFrame:
+    """REAL image statistics over decoded PNG ``payload`` pixels — the
+    image-DQ gate (all-black / blown-out / low-entropy screenshots) run before
     an image encoder sees the corpus.  Exact integers only (sum, min,
     max, distinct pixel values), so the oracle recomputes them from
     the generator closed form.  Non-PNG payloads drop (image lane)."""
@@ -573,4 +527,4 @@ def media_image_stats(
             int(len(np.unique(px))),
         )
 
-    return _map_payloads(pages, payload_col, IMAGE_STATS_SCHEMA, rows)
+    return _map_payloads(pages, "payload", IMAGE_STATS_SCHEMA, rows)

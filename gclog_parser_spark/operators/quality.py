@@ -110,9 +110,9 @@ def dq_report(checks: list[DataFrame]) -> DataFrame:
 # ANALYZE-style column profiling
 # ---------------------------------------------------------------------------
 
-def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """One row of column statistics per column — the ANALYZE TABLE /
-    cost-based-optimizer input (row count, null count, exact distinct
+def profile_table(df: DataFrame) -> DataFrame:
+    """One row of column statistics per column of ``df`` — the ANALYZE
+    TABLE / cost-based-optimizer input (row count, null count, exact distinct
     count, numeric min/max, string length sum), computed in a SINGLE
     scan: all per-column aggregates go into one ``agg`` and the flat
     result unpivots driver-side (the aggregate row is O(columns), so
@@ -129,8 +129,7 @@ def profile_table(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     documented swap at 10^12 rows is ``approx_count_distinct`` per
     column, which collapses the expansion into mergeable HLL sketches.
     """
-    if cols is None:
-        cols = df.columns
+    cols = df.columns
     kinds = dict(df.dtypes)
     aggs = [F.count("*").alias("_rows")]
     for c in cols:
@@ -302,15 +301,14 @@ def table_diff(
     )
 
 
-def embedding_checks(
-    emb: DataFrame, dim: int = 64, col: str = "embedding"
-) -> DataFrame:
+def embedding_checks(emb: DataFrame, dim: int = 64) -> DataFrame:
     """Embedding-corpus validation — the gate a pipeline runs BEFORE
     LSH bucketing / ANN indexing (``lsh_buckets`` fails EMPTY on a
     width mismatch by design; this check is where the mismatch gets
-    NAMED).  Five (rule, metric, passed) rows from ONE conditional-
-    aggregate scan (the fused same-table pattern from
-    :func:`dq_report`'s docstring), metric = violating fraction:
+    NAMED).  Five (rule, metric, passed) rows over the ``embedding``
+    column from ONE conditional-aggregate scan (the fused same-table
+    pattern from :func:`dq_report`'s docstring), metric = violating
+    fraction:
 
     * ``emb_vector_not_null`` — NULL embedding cells
     * ``emb_dim_consistent``  — non-NULL vectors with ``size != dim``
@@ -320,7 +318,7 @@ def embedding_checks(
       scored NULL downstream, but a corpus full of them is a broken
       encoder)
     """
-    e = F.col(col)
+    e = F.col("embedding")
     inf = F.lit(float("inf"))
     n = F.count("*")
 

@@ -287,19 +287,21 @@ def pause_cusum(
     )
 
 
+#: the pause-time SLO (fraction of wall time a JVM may spend paused)
+#: and the burn rate at which ``slo_burn`` and its streaming twin page
+SLO = 0.01
+BURN_THRESHOLD = 1.0
+
+
 def slo_burn(
-    events: DataFrame,
-    short_s: int = 60,
-    long_s: int = 300,
-    slo: float = 0.01,
-    burn_threshold: float = 1.0,
+    events: DataFrame, short_s: int = 60, long_s: int = 300
 ) -> DataFrame:
     """Multi-window SLO burn-rate alert over GC pause time — the SRE-
     workbook pattern (Beyer et al. 2018, ch. 5) applied to the pause
-    budget: with an SLO of ``slo`` (fraction of wall time the JVM may
+    budget: with an SLO of ``SLO`` (fraction of wall time the JVM may
     spend paused), the burn rate of a window is paused-share / slo,
     and a page fires only when BOTH a long window (sustained) and its
-    current short window (still happening) burn at ≥ ``burn_threshold``
+    current short window (still happening) burn at ≥ ``BURN_THRESHOLD``
     × budget.  Completes the ops-analytics family: gc_overhead is the
     whole-life average, fullgc_pressure the thrash detector,
     pause_cusum the drift alarm — this is the *alert policy* layer
@@ -320,9 +322,9 @@ def slo_burn(
     Exact cross-engine math: pause ticks are 0.1 µs BIGINT (the
     gc_overhead convention) summed per bucket; each burn rate is ONE
     IEEE division of that BIGINT by an exact integer denominator
-    (``window_s · 10^7 · slo`` — callers must pick ``slo`` so this is
-    integral, e.g. 0.01), HALF_UP-rounded to 6 dp; the alarm compares
-    the rounded values, so Spark and DuckDB agree bit-for-bit.
+    (``window_s · 10^7 · SLO``, integral for whole-second windows),
+    HALF_UP-rounded to 6 dp; the alarm compares the rounded values, so
+    Spark and DuckDB agree bit-for-bit.
 
     Plan: filter + project scan-side → ONE url exchange, shared by
     the restart lag/run-id windows, the (url, run, short-bucket)
@@ -335,8 +337,8 @@ def slo_burn(
     if long_s % short_s != 0:
         raise ValueError("long_s must be a multiple of short_s")
     k = long_s // short_s
-    den_short = short_s * 10_000_000 * slo
-    den_long = long_s * 10_000_000 * slo
+    den_short = short_s * 10_000_000 * SLO
+    den_long = long_s * 10_000_000 * SLO
     if den_short != int(den_short):
         raise ValueError("short_s * 1e7 * slo must be integral")
     den_short, den_long = int(den_short), int(den_long)
@@ -380,7 +382,7 @@ def slo_burn(
             burn_s.alias("burn_short"),
             burn_l.alias("burn_long"),
             (
-                (burn_s >= burn_threshold) & (burn_l >= burn_threshold)
+                (burn_s >= BURN_THRESHOLD) & (burn_l >= BURN_THRESHOLD)
             ).alias("alarm"),
         )
     )

@@ -62,8 +62,6 @@ def shard_by_tokens(
     docs: DataFrame,
     tokens_per_shard: int = 4096,
     n_groups: int | None = None,
-    key: str = "doc_id",
-    salt: str = "shard",
 ) -> DataFrame:
     """Assign documents to ~``tokens_per_shard``-token output shards —
     the write-side packing stage of a training pipeline (shard =
@@ -72,7 +70,7 @@ def shard_by_tokens(
     Scale shape: a GLOBAL running sum would serialize on one task, so
     docs first hash into ``n_groups`` independent groups and the
     running token total is a ``partitionBy(group)`` window ordered by
-    the (bucket, key) hash order — parallel across groups, one
+    the (bucket, doc_id) hash order — parallel across groups, one
     exchange, deterministic.  ``shard = (group, floor(cum/size))``;
     each group packs its shards independently; a doc that overshoots a
     boundary stays in the shard it started in (shortening the next), so
@@ -89,22 +87,22 @@ def shard_by_tokens(
     if n_groups is None:
         n_groups = docs.sparkSession.sparkContext.defaultParallelism
 
-    b = hash_bucket(F.col(key), salt)
+    b = hash_bucket(F.col("doc_id"), "shard")
     toks = F.regexp_count(F.col("text"), F.lit(TOKEN_RE))
     base = docs.select(
-        F.col(key),
+        F.col("doc_id"),
         (b % n_groups).cast("int").alias("shard_group"),
         b.alias("order_key"),
         toks.cast("long").alias("doc_tokens"),
     )
     w = (
         Window.partitionBy("shard_group")
-        .orderBy("order_key", key)
+        .orderBy("order_key", "doc_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     cum = F.sum("doc_tokens").over(w)
     return base.select(
-        key,
+        "doc_id",
         "shard_group",
         "doc_tokens",
         # subtract the doc's own tokens so a doc spanning the boundary
@@ -118,19 +116,16 @@ def shard_by_tokens(
 def stratified_sample(
     docs: DataFrame,
     rates: dict[str, float],
-    strata_col: str = "lang",
     default_rate: float = 0.0,
-    key: str = "doc_id",
-    salt: str = "sample",
 ) -> DataFrame:
-    """Keep a per-stratum fraction of rows (e.g. down-sample dominant
+    """Keep a per-``lang`` fraction of rows (e.g. down-sample dominant
     languages, keep all of a rare one).  The rate lookup is a literal
     CASE expression (no join — the strata map is query metadata, not
     data), so the whole operator stays a codegen'd scan filter."""
-    b = hash_bucket(F.col(key), salt)
+    b = hash_bucket(F.col("doc_id"), "sample")
     thr = None
     for value, rate in sorted(rates.items()):
-        cond = F.col(strata_col) == value
+        cond = F.col("lang") == value
         lit = F.lit(int(round(rate * BUCKETS)))
         thr = F.when(cond, lit) if thr is None else thr.when(cond, lit)
     thr = (
@@ -144,14 +139,11 @@ def stratified_sample(
 def domain_quota(
     docs: DataFrame,
     max_per_group: int,
-    group_col: str = "source",
-    key: str = "doc_id",
-    salt: str = "quota",
 ) -> DataFrame:
-    """Cap rows per group — the C4/web-corpus 'at most N pages per
+    """Cap rows per ``source`` — the C4/web-corpus 'at most N pages per
     host' balance rule.  Which N survive is the content-keyed
     pseudo-random choice used everywhere in this module (lowest
-    ``hash_bucket`` wins, ``key`` breaks bucket collisions): the kept
+    ``hash_bucket`` wins, ``doc_id`` breaks bucket collisions): the kept
     set is a pure function of the group's membership — independent of
     arrival order, partitioning, retries, and cluster size.
 
@@ -166,38 +158,30 @@ def domain_quota(
     most N rows per hot group into the rank exchange.  A naive global
     row_number would instead sort every group's full row set.
 
-    Returns the kept rows as (key, group, bucket).
+    Returns the kept rows as (doc_id, source, bucket).
     """
-    b = hash_bucket(F.col(key), salt)
-    base = docs.select(
-        F.col(key).alias(key),
-        F.col(group_col).alias(group_col),
-        b.alias("bucket"),
-    )
+    b = hash_bucket(F.col("doc_id"), "quota")
+    base = docs.select("doc_id", "source", b.alias("bucket"))
     over = F.broadcast(
-        base.groupBy(group_col)
+        base.groupBy("source")
         .agg(F.count("*").alias("n_in_group"))
         .where(F.col("n_in_group") > max_per_group)
-        .select(group_col)
+        .select("source")
     )
-    under_rows = base.join(over, group_col, "left_anti")
-    w = Window.partitionBy(group_col).orderBy("bucket", key)
+    under_rows = base.join(over, "source", "left_anti")
+    w = Window.partitionBy("source").orderBy("bucket", "doc_id")
     over_rows = (
-        base.join(over, group_col, "left_semi")
+        base.join(over, "source", "left_semi")
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= max_per_group)
         .drop("rn")
     )
     return under_rows.unionByName(over_rows).select(
-        key, group_col, "bucket"
+        "doc_id", "source", "bucket"
     )
 
 
-def leakage_safe_split(
-    docs: DataFrame,
-    weights: dict[str, float] | None = None,
-    salt: str = "split",
-) -> DataFrame:
+def leakage_safe_split(docs: DataFrame) -> DataFrame:
     """Train/val/test split keyed on the near-dup CLUSTER rather than
     the document — the leakage-safe protocol: a plain per-doc split
     puts one copy of a near-duplicated page in train and another in
@@ -213,7 +197,7 @@ def leakage_safe_split(
     from gclog_parser_spark.operators.dedup import dedup_clusters
 
     cl = dedup_clusters(docs).select("doc_id", "cluster_id")
-    return hash_split(cl, weights, key="cluster_id", salt=salt).select(
+    return hash_split(cl, key="cluster_id").select(
         "doc_id", "cluster_id", "split"
     )
 
@@ -221,21 +205,19 @@ def leakage_safe_split(
 def weighted_sample(
     docs: DataFrame,
     weight_col,
-    key: str = "doc_id",
-    salt: str = "wsample",
 ) -> DataFrame:
     """Keep each row with probability equal to its own ``weight_col``
     (clamped to [0,1]) — per-row importance resampling, e.g. keep
     probability ∝ quality score so the corpus tilts toward high
     quality without a hard cutoff's cliff.  Same discipline as every
     sampler here: the draw is the content-keyed hash bucket, not
-    ``rand()`` — a doc's fate is a pure function of (salt, key,
+    ``rand()`` — a doc's fate is a pure function of (doc_id,
     weight), reproducible under retry/preemption/re-run and across
     cluster sizes — and the whole operator is a codegen'd scan filter
     (zero exchanges).  Rates are exact to 1/BUCKETS (1e-6): the keep
     rule is ``bucket < round(clamp(w)·BUCKETS)``, integer comparison
     in both engines."""
-    b = hash_bucket(F.col(key), salt)
+    b = hash_bucket(F.col("doc_id"), "wsample")
     w = F.least(
         F.greatest(F.col(weight_col).cast("double"), F.lit(0.0)),
         F.lit(1.0),
@@ -315,9 +297,7 @@ def importance_weights(
     )
 
 
-def domain_mix_weights(
-    docs: DataFrame, domain_col: str = "source"
-) -> DataFrame:
+def domain_mix_weights(docs: DataFrame) -> DataFrame:
     """Temperature-based training-mix design (the multilingual /
     multi-domain resampling rule of mBERT/XLM-R and the Pile's domain
     weights): flatten the corpus's domain distribution by sampling
@@ -343,7 +323,7 @@ def domain_mix_weights(
     as a broadcast one-row relation.  Driver holds nothing.
     Reference has no sampling ops; north-rule mix design
     (BASELINE.json)."""
-    per = docs.groupBy(F.col(domain_col).alias("domain")).agg(
+    per = docs.groupBy(F.col("source").alias("domain")).agg(
         F.count("*").alias("n_docs")
     )
     per = per.withColumn(
@@ -447,21 +427,19 @@ def epoch_shuffle(
     docs: DataFrame,
     epoch: int,
     n_shards: int = 64,
-    key: str = "doc_id",
-    salt: str = "shuffle",
 ) -> DataFrame:
     """Deterministic per-epoch global permutation of the corpus — the
     'reshuffle the training data every epoch' step of an LLM data
-    loader, as a pure function of (corpus, epoch, salt): re-running
+    loader, as a pure function of (corpus, epoch): re-running
     it (or retrying a failed stage) reproduces the identical order,
     and different epochs draw independent permutations.
 
     The permutation is content-keyed, never RNG-state-keyed: each
     row's order key is the portable 60-bit md5 of
-    ``salt:epoch:key`` (``dedup.md5_long`` — identical in DuckDB),
+    ``shuffle:epoch:doc_id`` (``dedup.md5_long`` — identical in DuckDB),
     its shard is ``order_key % n_shards``, and its position is the
-    rank of the order key within the shard (key ties broken by
-    ``key``, so the order is total and bit-stable).  Global read
+    rank of the order key within the shard (ties broken by
+    ``doc_id``, so the order is total and bit-stable).  Global read
     order = (shard, pos) — a loader streams shard 0..n-1.
 
     Scale: NO global sort.  One exchange on shard, then a
@@ -474,21 +452,21 @@ def epoch_shuffle(
     k = md5_long(
         F.concat_ws(
             ":",
-            F.lit(salt),
+            F.lit("shuffle"),
             F.lit(int(epoch)).cast("string"),
-            F.col(key).cast("string"),
+            F.col("doc_id").cast("string"),
         )
     )
     from pyspark.sql import Window
 
     keyed = docs.select(
-        F.col(key),
+        F.col("doc_id"),
         k.alias("order_key"),
         (k % F.lit(n_shards)).cast("int").alias("shard"),
     )
-    w = Window.partitionBy("shard").orderBy("order_key", key)
+    w = Window.partitionBy("shard").orderBy("order_key", "doc_id")
     return keyed.select(
-        key,
+        "doc_id",
         F.lit(int(epoch)).cast("int").alias("epoch"),
         "shard",
         (F.row_number().over(w) - 1).cast("long").alias("pos"),

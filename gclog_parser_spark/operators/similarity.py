@@ -30,12 +30,10 @@ def _lcg(seed: int):
         yield (x >> 33) / float(1 << 31) - 1.0  # in [-1, 1)
 
 
-def plane_components(
-    n_planes: int = N_PLANES, dim: int = EMB_DIM, seed: int = 42
-):
+def plane_components(dim: int = EMB_DIM, seed: int = 42):
     g = _lcg(seed)
     return [
-        [round(next(g), 6) for _ in range(dim)] for _ in range(n_planes)
+        [round(next(g), 6) for _ in range(dim)] for _ in range(N_PLANES)
     ]
 
 
@@ -149,16 +147,12 @@ def _bucket_pair_sims(base: DataFrame, key: str) -> DataFrame:
     )
 
 
-def cosine_topk(
-    emb: DataFrame,
-    query_vec_id: int = 0,
-    k: int = 10,
-) -> DataFrame:
+def cosine_topk(emb: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k by cosine similarity to the embedding of
-    ``query_vec_id`` (excluded from results).  Deterministic ordering:
+    vector 0 (excluded from results).  Deterministic ordering:
     (rounded sim desc, vec_id asc)."""
-    corpus = emb.where(F.col("vec_id") != query_vec_id)
-    q = emb.where(F.col("vec_id") == query_vec_id).select(
+    corpus = emb.where(F.col("vec_id") != 0)
+    q = emb.where(F.col("vec_id") == 0).select(
         F.col("embedding").alias("q")
     )
     scored = corpus.crossJoin(F.broadcast(q)).select(
@@ -196,29 +190,25 @@ def lsh_buckets(
     )
 
 
-def lsh_bucket_topk(
-    emb: DataFrame,
-    query_vec_id: int = 0,
-    k: int = 5,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k: exact cosine, but only within the query's LSH
-    bucket — the candidate set an IVF/LSH index would scan."""
-    b = lsh_buckets(emb, seed)
-    q = b.where(F.col("vec_id") == query_vec_id).select(
+def lsh_bucket_topk(emb: DataFrame) -> DataFrame:
+    """Approximate top-5 for vector 0: exact cosine, but only within
+    the query's LSH bucket — the candidate set an IVF/LSH index would
+    scan."""
+    b = lsh_buckets(emb)
+    q = b.where(F.col("vec_id") == 0).select(
         F.col("bucket").alias("qbucket"),
         F.col("embedding").alias("q"),
     )
     cand = b.join(
         F.broadcast(q), F.col("bucket") == F.col("qbucket")
-    ).where(F.col("vec_id") != query_vec_id)
+    ).where(F.col("vec_id") != 0)
     scored = cand.select(
         "vec_id",
         _cos_sim(F.col("embedding"), F.col("q")).alias("sim"),
     )
     return (
         scored.orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(k)
+        .limit(5)
         .select("vec_id", "sim")
     )
 
@@ -229,18 +219,14 @@ def lsh_bucket_topk(
 N_CELLS = 8
 
 
-def centroid_components(
-    n_cells: int = N_CELLS, dim: int = EMB_DIM, seed: int = 7
-):
+def centroid_components(seed: int = 7):
     g = _lcg(seed)
     return [
-        [round(next(g), 6) for _ in range(dim)] for _ in range(n_cells)
+        [round(next(g), 6) for _ in range(EMB_DIM)] for _ in range(N_CELLS)
     ]
 
 
-def ivf_assign(
-    emb: DataFrame, seed: int = 7, cents=None
-) -> DataFrame:
+def ivf_assign(emb: DataFrame, cents=None) -> DataFrame:
     """(vec_id, embedding, cell) — cell = argmax over centroids of the
     dot product (spherical coarse quantization).  Computed scan-side;
     at 10^12 scale the assignment is a one-pass projection and the
@@ -248,7 +234,7 @@ def ivf_assign(
 
     ``cents``: explicit centroid components (e.g. from ``ivf_train``);
     defaults to the deterministic pseudo-random quantizer."""
-    cents = cents if cents is not None else centroid_components(seed=seed)
+    cents = cents if cents is not None else centroid_components()
     scores = [
         _dot(F.col("embedding"), F.array(*[F.lit(c) for c in cent]))
         for cent in cents
@@ -262,13 +248,7 @@ def ivf_assign(
     )
 
 
-def ivf_train(
-    emb: DataFrame,
-    n_cells: int = N_CELLS,
-    iters: int = 2,
-    seed: int = 7,
-    dim: int = EMB_DIM,
-):
+def ivf_train(emb: DataFrame, iters: int = 2):
     """Spherical k-means for the IVF coarse quantizer (Dhillon & Modha
     2001): deterministic LCG init → repeat (assign to argmax-dot cell,
     recompute centroid as the NORMALIZED member mean, rounded to 6 dp).
@@ -291,7 +271,7 @@ def ivf_train(
 
     from gclog_parser_spark.core import half_up
 
-    cents = centroid_components(n_cells, dim, seed)
+    cents = centroid_components()
     for _ in range(iters):
         assigned = ivf_assign(emb, cents=cents)
         stats = (
@@ -309,7 +289,7 @@ def ivf_train(
         for r in stats:
             means.setdefault(r["cell"], {})[r["pos"]] = r["s"] / r["n"]
         new = []
-        for c in range(n_cells):
+        for c in range(N_CELLS):
             m = means.get(c)
             norm = (
                 math.sqrt(sum(v * v for v in m.values())) if m else 0.0
@@ -318,7 +298,7 @@ def ivf_train(
                 new.append(cents[c])  # empty/degenerate cell
             else:
                 new.append(
-                    [half_up(m[p] / norm, 6) for p in range(dim)]
+                    [half_up(m[p] / norm, 6) for p in range(EMB_DIM)]
                 )
         cents = new
     return cents
@@ -363,19 +343,17 @@ def ivf_topk(
     emb: DataFrame,
     query_vec_id: int = 0,
     k: int = 5,
-    n_probe: int = 2,
-    seed: int = 7,
     cents=None,
 ) -> DataFrame:
-    """IVF approximate top-k: exact cosine, but only within the
-    ``n_probe`` cells whose centroids score highest for the query —
+    """IVF approximate top-k: exact cosine, but only within the 2
+    cells whose centroids score highest for the query —
     the inverted-file candidate set.  Candidate generation is an
     equi-join on the cell id (shuffle ∝ corpus, never ∝ pairs); at
     scale the cells are partition-pruned instead of joined.
     ``cents`` swaps in trained centroids (``ivf_train``)."""
-    cents = cents if cents is not None else centroid_components(seed=seed)
+    cents = cents if cents is not None else centroid_components()
     assigned = ivf_assign(emb, cents=cents)
-    probes = _query_probes(emb, query_vec_id, cents, n_probe)
+    probes = _query_probes(emb, query_vec_id, cents, 2)
     cand = assigned.join(F.broadcast(probes), "cell").where(
         F.col("vec_id") != query_vec_id
     )
@@ -434,21 +412,18 @@ def neardup_pairs(
     )
 
 
-def neardup_pairs_multiband(
-    emb: DataFrame,
-    threshold: float = 0.9,
-    seeds=(42, 1042, 2042),
-) -> DataFrame:
-    """Multi-band near-dup: union the LSH-blocked pair sets of several
-    independent plane sets and dedup — the multi-band MinHash-LSH
-    recall amplifier.  A true near-dup pair missed by one plane set
-    (split by an unlucky hyperplane) is caught by another; false
-    negatives decay exponentially with the band count while shuffle
-    cost grows only linearly (one blocked join per seed — still never
-    O(n²)).  Dedup is one exact groupBy on (vec_a, vec_b)."""
+def neardup_pairs_multiband(emb: DataFrame) -> DataFrame:
+    """Multi-band near-dup at cosine >= 0.9: union the LSH-blocked pair
+    sets of three independent plane sets (seeds 42, 1042, 2042) and
+    dedup — the multi-band MinHash-LSH recall amplifier.  A true
+    near-dup pair missed by one plane set (split by an unlucky
+    hyperplane) is caught by another; false negatives decay
+    exponentially with the band count while shuffle cost grows only
+    linearly (one blocked join per seed — still never O(n²)).  Dedup is
+    one exact groupBy on (vec_a, vec_b)."""
     out = None
-    for s in seeds:
-        part = neardup_pairs(emb, threshold=threshold, seed=s)
+    for s in (42, 1042, 2042):
+        part = neardup_pairs(emb, seed=s)
         out = part if out is None else out.unionByName(part)
     return out.groupBy("vec_a", "vec_b").agg(
         F.first("sim").alias("sim")
@@ -546,10 +521,8 @@ def quantized_scan_topk(
     )
 
 
-def quantized_topk(
-    emb: DataFrame, query_vec_id: int = 0, k: int = 10
-) -> DataFrame:
-    """Exact top-k cosine over the int8-quantized corpus — the
+def quantized_topk(emb: DataFrame, query_vec_id: int = 0) -> DataFrame:
+    """Exact top-10 cosine over the int8-quantized corpus — the
     memory-bound production variant of ``cosine_topk``.  The integer
     dot products (|q_i| <= 127, so a 4096-dim dot < 2^31) are exact in
     double arithmetic, which is what makes this bit-parity with the
@@ -568,7 +541,7 @@ def quantized_topk(
         corpus.crossJoin(F.broadcast(q))
         .select("vec_id", sim.alias("sim"))
         .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(k)
+        .limit(10)
     )
 
 
@@ -616,7 +589,6 @@ def ann_recall_at_k(
     emb: DataFrame,
     query_ids: list[int],
     k: int = 10,
-    seed: int = 42,
     method: str = "lsh",
 ) -> DataFrame:
     """Recall@k of an approximate retrieval path vs exact cosine — the
@@ -664,7 +636,7 @@ def ann_recall_at_k(
         .select("query_id", "vec_id")
     )
     if method == "lsh":
-        b = lsh_buckets(emb, seed)
+        b = lsh_buckets(emb)
         qb = F.broadcast(
             b.where(F.col("vec_id").isin(query_ids)).select(
                 F.col("vec_id").alias("query_id"),
@@ -893,6 +865,7 @@ def srp_project(
 #: PQ layout: M subspaces × ks centroids; 64-dim → 4 × 16-dim subvectors
 PQ_M = 4
 PQ_KS = 8
+PQ_SUB = EMB_DIM // PQ_M
 PQ_TICKS = 1_000_000
 
 
@@ -977,39 +950,29 @@ def _pq_assign_np(cents, m_sub: int, sub: int):
     return pandas_udf("array<int>")(assign)
 
 
-def pq_init(
-    emb: DataFrame, m_sub: int = PQ_M, ks: int = PQ_KS,
-    dim: int = EMB_DIM,
-) -> list[list[list[int]]]:
+def pq_init(emb: DataFrame) -> list[list[list[int]]]:
     """Deterministic init: centroid j of every subspace = the
     tick-quantized subvector of vec_id j (the first ks vectors) —
     closed-form in SQL, no RNG.  Returns cents[m][cell][i] ticks."""
-    sub = dim // m_sub
     rows = {
         r["vec_id"]: r["embedding"]
-        for r in emb.where(F.col("vec_id") < ks)
+        for r in emb.where(F.col("vec_id") < PQ_KS)
         .select("vec_id", "embedding")
         .collect()
     }
     return [
         [
             [
-                _pq_tick(float(rows[j][m * sub + i]) * PQ_TICKS)
-                for i in range(sub)
+                _pq_tick(float(rows[j][m * PQ_SUB + i]) * PQ_TICKS)
+                for i in range(PQ_SUB)
             ]
-            for j in range(ks)
+            for j in range(PQ_KS)
         ]
-        for m in range(m_sub)
+        for m in range(PQ_M)
     ]
 
 
-def pq_train(
-    emb: DataFrame,
-    iters: int = 2,
-    m_sub: int = PQ_M,
-    ks: int = PQ_KS,
-    dim: int = EMB_DIM,
-) -> list[list[list[int]]]:
+def pq_train(emb: DataFrame, iters: int = 2) -> list[list[list[int]]]:
     """Product-quantization codebooks (Jégou et al., "Product
     Quantization for Nearest Neighbor Search", TPAMI 2011): an
     independent L2 k-means per subspace, all M subspaces trained in
@@ -1030,19 +993,18 @@ def pq_train(
     expression tree costs hundreds of py4j round-trips per iteration
     just to build.
     """
-    sub = dim // m_sub
-    cents = pq_init(emb, m_sub, ks, dim)
+    cents = pq_init(emb)
     for _ in range(iters):
-        assigns = _pq_assign_np(cents, m_sub, sub)(F.col("embedding"))
+        assigns = _pq_assign_np(cents, PQ_M, PQ_SUB)(F.col("embedding"))
         t = emb.select(
             assigns.alias("a"),
             F.posexplode("embedding").alias("pos", "val"),
         ).select(
-            (F.col("pos") / sub).cast("int").alias("m"),
+            (F.col("pos") / PQ_SUB).cast("int").alias("m"),
             F.element_at(
-                "a", (F.col("pos") / sub).cast("int") + 1
+                "a", (F.col("pos") / PQ_SUB).cast("int") + 1
             ).alias("cell"),
-            F.pmod("pos", F.lit(sub)).cast("int").alias("i"),
+            F.pmod("pos", F.lit(PQ_SUB)).cast("int").alias("i"),
             F.round(F.col("val").cast("double") * PQ_TICKS)
             .cast("long")
             .alias("t"),
@@ -1058,9 +1020,9 @@ def pq_train(
                 r["s"], r["n"]
             )
         new = []
-        for m in range(m_sub):
+        for m in range(PQ_M):
             row = []
-            for c in range(ks):
+            for c in range(PQ_KS):
                 got = acc.get((m, c))
                 if not got:
                     row.append(cents[m][c])  # empty cell
@@ -1068,7 +1030,7 @@ def pq_train(
                     row.append(
                         [
                             _pq_tick(got[i][0] / got[i][1])
-                            for i in range(sub)
+                            for i in range(PQ_SUB)
                         ]
                     )
             new.append(row)
@@ -1076,80 +1038,58 @@ def pq_train(
     return cents
 
 
-def pq_encode(
-    emb: DataFrame,
-    cents: list[list[list[int]]],
-    dim: int = EMB_DIM,
-) -> DataFrame:
+def pq_encode(emb: DataFrame, cents: list[list[list[int]]]) -> DataFrame:
     """(vec_id, code_0..code_{M-1}): each vector's nearest codebook
     cell per subspace — M·log2(ks) bits per vector (here 4×3 = 12 bits
     vs 2048 for fp32: the 170× compression that lets a 10^12-vector
     index live in RAM).  Pure scan-side codegen, zero shuffle."""
-    m_sub = len(cents)
-    sub = dim // m_sub
     return emb.select(
         "vec_id",
         *[
-            _pq_assign_col(cents[m], m, sub).alias(f"code_{m}")
-            for m in range(m_sub)
+            _pq_assign_col(cents[m], m, PQ_SUB).alias(f"code_{m}")
+            for m in range(PQ_M)
         ],
     )
 
 
 def pq_topk(
-    emb: DataFrame,
-    cents: list[list[list[int]]],
-    query_vec_id: int = 0,
-    k: int = 10,
-    dim: int = EMB_DIM,
+    emb: DataFrame, cents: list[list[list[int]]], k: int = 10
 ) -> DataFrame:
-    """Asymmetric distance computation (ADC): the query stays exact;
-    per subspace a ks-entry lookup table of exact integer tick
-    distances query→centroid is built once (O(M·ks·sub) driver work)
-    and the corpus scan sums M table lookups per vector — no
+    """Asymmetric distance computation (ADC) for vector 0: the query
+    stays exact; per subspace a ks-entry lookup table of exact integer
+    tick distances query→centroid is built once (O(M·ks·sub) local
+    work) and the corpus scan sums M table lookups per vector — no
     per-vector arithmetic in the hot loop at all.  Returns the top-k
     ``(vec_id, pq_dist_ticks)`` by (distance, vec_id)."""
-    m_sub = len(cents)
-    sub = dim // m_sub
-    q = emb.where(F.col("vec_id") == query_vec_id).collect()[0][
-        "embedding"
-    ]
-    return _adc_topk(emb, cents, q, query_vec_id, k, dim)
+    return _adc_topk(emb, cents, emb, k)
 
 
-def _adc_topk(
-    df: DataFrame,
-    cents,
-    q,
-    query_vec_id: int,
-    k: int,
-    dim: int,
-) -> DataFrame:
+def _adc_topk(df: DataFrame, cents, emb: DataFrame, k: int) -> DataFrame:
     """Shared ADC ranking tail of ``pq_topk``/``ivfpq_topk``: build
     the O(M·ks·sub) driver-side lookup table of exact integer tick
-    distances query→centroid, encode ``df`` scan-side, and sum M
-    table lookups per vector — no per-vector arithmetic in the hot
-    loop.  Returns top-k ``(vec_id, pq_dist_ticks)``."""
-    m_sub = len(cents)
-    sub = dim // m_sub
+    distances from vector 0 of ``emb`` to each centroid, encode ``df``
+    scan-side, and sum M table lookups per vector — no per-vector
+    arithmetic in the hot loop.  Returns top-k ``(vec_id,
+    pq_dist_ticks)``."""
+    q = emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]
     qt = [_pq_tick(float(x) * PQ_TICKS) for x in q]
     lut = [
         [
             sum(
-                (qt[m * sub + i] - cents[m][c][i]) ** 2
-                for i in range(sub)
+                (qt[m * PQ_SUB + i] - cents[m][c][i]) ** 2
+                for i in range(PQ_SUB)
             )
             for c in range(len(cents[m]))
         ]
-        for m in range(m_sub)
+        for m in range(PQ_M)
     ]
-    codes = pq_encode(df, cents, dim)
+    codes = pq_encode(df, cents)
     dist = None
-    for m in range(m_sub):
+    for m in range(PQ_M):
         term = F.element_at(F.lit(lut[m]), F.col(f"code_{m}") + 1)
         dist = term if dist is None else dist + term
     return (
-        codes.where(F.col("vec_id") != query_vec_id)
+        codes.where(F.col("vec_id") != 0)
         .select("vec_id", dist.alias("pq_dist_ticks"))
         .orderBy("pq_dist_ticks", "vec_id")
         .limit(k)
@@ -1157,17 +1097,10 @@ def _adc_topk(
 
 
 def ivfpq_topk(
-    emb: DataFrame,
-    cents_pq,
-    query_vec_id: int = 0,
-    k: int = 10,
-    n_probe: int = 2,
-    seed: int = 7,
-    cents_ivf=None,
-    dim: int = EMB_DIM,
+    emb: DataFrame, cents_pq, k: int = 10, n_probe: int = 2
 ) -> DataFrame:
-    """IVF-PQ: the billion-vector composition (Jégou et al. 2011's
-    IVFADC shape, here the no-residual variant faiss calls
+    """IVF-PQ for vector 0: the billion-vector composition (Jégou et
+    al. 2011's IVFADC shape, here the no-residual variant faiss calls
     ``by_residual=False``) — a coarse IVF quantizer prunes the corpus
     to the query's ``n_probe`` cells, then PQ asymmetric-distance
     ranking scores ONLY those candidates from 12-bit codes.  This is
@@ -1183,25 +1116,17 @@ def ivfpq_topk(
     candidate; the only exchange is the final TakeOrdered(k).
     Recall follows n_probe exactly as in ``ivf_topk`` — PQ changes
     the metric precision, never the candidate set."""
-    cents_ivf = (
-        cents_ivf
-        if cents_ivf is not None
-        else centroid_components(seed=seed)
-    )
+    cents_ivf = centroid_components()
     assigned = ivf_assign(emb, cents=cents_ivf)
-    probes = _query_probes(emb, query_vec_id, cents_ivf, n_probe)
+    probes = _query_probes(emb, 0, cents_ivf, n_probe)
     cand = assigned.join(
         F.broadcast(probes.select("cell")), "cell"
     )
-    q = emb.where(F.col("vec_id") == query_vec_id).collect()[0][
-        "embedding"
-    ]
-    return _adc_topk(cand, cents_pq, q, query_vec_id, k, dim)
+    return _adc_topk(cand, cents_pq, emb, k)
 
 
 def knn_graph(
-    emb: DataFrame, k: int = 3, seed: int = 42, seeds=None,
-    dim: int = EMB_DIM,
+    emb: DataFrame, k: int = 3, seeds=None, dim: int = EMB_DIM
 ) -> DataFrame:
     """Approximate k-NN graph: for EVERY vector, its top-k cosine
     neighbors within its LSH bucket — the all-queries generalization of
@@ -1239,9 +1164,9 @@ def knn_graph(
             F.col("sim").isNotNull()
         )
 
-    scored = _cands(seed)
+    scored = _cands(42)
     for sd in seeds or ():
-        if sd != seed:
+        if sd != 42:
             scored = scored.unionByName(_cands(sd))
     if seeds:
         scored = scored.distinct()

@@ -49,16 +49,15 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
     right_cols: list[str] | None = None,
-    prefix: str = "asof_",
     tolerance_secs: float | None = None,
 ) -> DataFrame:
     """For every left row, attach the latest right row with
     ``right.ts <= left.ts`` for the same ``key`` (backward as-of, the
     pandas ``merge_asof`` / kdb ``aj`` semantics), as a left join —
-    left rows with no preceding right row keep nulls.
+    left rows with no preceding right row keep nulls.  Both sides carry
+    their time in ``ts``; each right column ``c`` comes back as
+    ``asof_c``.
 
     Plan: tag both sides, union, one window per key ordered by
     ``(ts, side)`` with the right side sorting first on ties (so a
@@ -74,22 +73,22 @@ def asof_join(
     rcols = list(right_cols) if right_cols is not None else [
         c for c in right.columns if c != key
     ]
-    if right_ts not in rcols:
-        rcols = [right_ts] + rcols
-    lcols = [c for c in left.columns if c not in (key, left_ts)]
+    if "ts" not in rcols:
+        rcols = ["ts"] + rcols
+    lcols = [c for c in left.columns if c not in (key, "ts")]
     rtypes = dict((f.name, f.dataType) for f in right.schema.fields)
     ltypes = dict((f.name, f.dataType) for f in left.schema.fields)
 
     lhs = left.select(
         F.col(key),
-        F.col(left_ts).alias(_TS),
+        F.col("ts").alias(_TS),
         F.lit(1).alias(_SIDE),
         *[F.col(c) for c in lcols],
         *[F.lit(None).cast(rtypes[c]).alias(f"_r_{c}") for c in rcols],
     )
     rhs = right.select(
         F.col(key),
-        F.col(right_ts).alias(_TS),
+        F.col("ts").alias(_TS),
         F.lit(0).alias(_SIDE),
         *[F.lit(None).cast(ltypes[c]).alias(c) for c in lcols],
         *[F.col(c).alias(f"_r_{c}") for c in rcols],
@@ -104,12 +103,12 @@ def asof_join(
     u = lhs.unionByName(rhs)
     for c in rcols:
         u = u.withColumn(
-            f"{prefix}{c}", F.last(f"_r_{c}", ignorenulls=True).over(w)
+            f"asof_{c}", F.last(f"_r_{c}", ignorenulls=True).over(w)
         )
     out = (
         u.filter(F.col(_SIDE) == 1)
         .drop(_SIDE, *[f"_r_{c}" for c in rcols])
-        .withColumnRenamed(_TS, left_ts)
+        .withColumnRenamed(_TS, "ts")
     )
     if tolerance_secs is not None:
         # materialize the staleness flag FIRST — nulling the matched
@@ -117,15 +116,15 @@ def asof_join(
         out = out.withColumn(
             "_asof_stale",
             (
-                _micros(F.col(left_ts))
-                - _micros(F.col(f"{prefix}{right_ts}"))
+                _micros(F.col("ts"))
+                - _micros(F.col("asof_ts"))
             ) > int(tolerance_secs * 1_000_000),
         )
         for c in rcols:
             out = out.withColumn(
-                f"{prefix}{c}",
+                f"asof_{c}",
                 F.when(F.col("_asof_stale"), F.lit(None)).otherwise(
-                    F.col(f"{prefix}{c}")
+                    F.col(f"asof_{c}")
                 ),
             )
         out = out.drop("_asof_stale")
@@ -135,13 +134,10 @@ def asof_join(
 def range_join(
     facts: DataFrame,
     intervals: DataFrame,
-    fact_ts: str = "ts",
-    start: str = "istart",
-    end: str = "iend",
     bucket_secs: int = 600,
 ) -> DataFrame:
     """Inner-join every fact row to every interval row with
-    ``start <= fact.ts < end`` (no equi key — pure interval
+    ``istart <= fact.ts < iend`` (no equi key — pure interval
     containment), as a bucketed equi-join instead of the BNLJ/cross
     plan a bare inequality join plans to.
 
@@ -167,31 +163,24 @@ def range_join(
         "_bkt",
         F.explode(
             F.sequence(
-                _bkt(_micros(F.col(start))), _bkt(_micros(F.col(end)))
+                _bkt(_micros(F.col("istart"))), _bkt(_micros(F.col("iend")))
             )
         ),
     )
-    fc = facts.withColumn("_bkt", _bkt(_micros(F.col(fact_ts))))
+    fc = facts.withColumn("_bkt", _bkt(_micros(F.col("ts"))))
     return (
         iv.join(fc, "_bkt")
         .filter(
-            (F.col(fact_ts) >= F.col(start)) & (F.col(fact_ts) < F.col(end))
+            (F.col("ts") >= F.col("istart")) & (F.col("ts") < F.col("iend"))
         )
         .drop("_bkt")
     )
 
 
-def resample_ffill(
-    events: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    step: str = "1 hour",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
-    """Time-series resampling with forward fill: per key, a regular
+def resample_ffill(events: DataFrame, step: str = "1 hour") -> DataFrame:
+    """Time-series resampling with forward fill: per ``user_id``, a regular
     ``step`` grid from the key's first to last observation, carrying
-    the most recent observed value across empty buckets — the
+    the most recent observed ``value`` across empty buckets — the
     gap-filling primitive behind every dashboard line chart and every
     join-against-a-regular-clock feature pipeline.
 
@@ -216,40 +205,43 @@ def resample_ffill(
         # the grid step must equal the truncation unit or observations
         # could land on off-grid buckets and silently vanish
         raise ValueError(f"step must be 1 minute/hour/day/week: {step}")
-    bucket = F.date_trunc(unit, F.col(ts_col))
+    bucket = F.date_trunc(unit, F.col("ts"))
     order_key = F.concat(
-        F.lpad(_micros(F.col(ts_col)).cast("string"), 20, "0"),
-        F.lpad(F.col(tiebreak_col).cast("string"), 12, "0"),
+        F.lpad(_micros(F.col("ts")).cast("string"), 20, "0"),
+        F.lpad(F.col("event_id").cast("string"), 12, "0"),
     )
     obs = (
         events.select(
-            key, bucket.alias("bucket"), F.col(value_col), order_key.alias("_k")
+            "user_id",
+            bucket.alias("bucket"),
+            F.col("value"),
+            order_key.alias("_k"),
         )
-        .groupBy(key, "bucket")
-        .agg(F.expr(f"max_by({value_col}, _k)").alias("_obs"))
+        .groupBy("user_id", "bucket")
+        .agg(F.expr("max_by(value, _k)").alias("_obs"))
     )
     grid = (
-        events.groupBy(key)
+        events.groupBy("user_id")
         .agg(
             F.min(bucket).alias("_lo"),
             F.max(bucket).alias("_hi"),
         )
         .select(
-            key,
+            "user_id",
             F.explode(
                 F.sequence("_lo", "_hi", F.expr(f"INTERVAL {step}"))
             ).alias("bucket"),
         )
     )
     w = (
-        Window.partitionBy(key)
+        Window.partitionBy("user_id")
         .orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        grid.join(obs, [key, "bucket"], "left")
+        grid.join(obs, ["user_id", "bucket"], "left")
         .select(
-            key,
+            "user_id",
             "bucket",
             F.last("_obs", ignorenulls=True).over(w).alias("value_ffill"),
             F.col("_obs").isNotNull().alias("is_observed"),

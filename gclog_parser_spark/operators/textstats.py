@@ -301,8 +301,8 @@ def corpus_filter(docs: DataFrame, **overrides) -> DataFrame:
     )
 
 
-def fingerprints(docs: DataFrame, k: int = 4) -> DataFrame:
-    """Bottom-k sketch fingerprint: the k smallest md5-60bit hashes of
+def fingerprints(docs: DataFrame) -> DataFrame:
+    """Bottom-4 sketch fingerprint: the 4 smallest md5-60bit hashes of
     the document's word 3-shingles, joined into a stable string.  Equal
     fingerprints ⇒ near-identical shingle sets (winnowing-style)."""
     # words materialized in their own projection so the shingle lambda
@@ -317,7 +317,7 @@ def fingerprints(docs: DataFrame, k: int = 4) -> DataFrame:
         )
     )
     fp = F.concat_ws("_", F.transform(
-        F.slice(hashes, 1, k), lambda h: h.cast("string")
+        F.slice(hashes, 1, 4), lambda h: h.cast("string")
     ))
     return docs.select(
         "doc_id", _words(F.col("text")).alias("w")
@@ -418,9 +418,7 @@ def ngram_decontaminate_bloom(
     )
 
 
-def tfidf_topk(
-    docs: DataFrame, k: int = 3, broadcast_vocab: bool = True
-) -> DataFrame:
+def tfidf_topk(docs: DataFrame, k: int = 3) -> DataFrame:
     """Top-``k`` characteristic terms per document by tf-idf, with the
     rational idf variant ``(N + 1) / (df + 1)`` instead of its log —
     a transcendental produces 1-ulp cross-engine drift that can flip
@@ -430,9 +428,8 @@ def tfidf_topk(
     Scale shape: term frequencies are one (doc_id, word) exchange of
     already-exploded words; document frequencies aggregate THAT
     (pre-collapsed) relation; the vocab-sized df relation is broadcast
-    back onto tf (``broadcast_vocab=False`` falls back to a shuffle
-    join for corpora whose vocabulary outgrows the driver); the final
-    per-doc top-k is a row_number window on doc_id.  N is one count()
+    back onto tf; the final per-doc top-k is a row_number window on
+    doc_id.  N is one count()
     job — O(1) driver state.
     """
     from pyspark.sql import Window
@@ -441,9 +438,7 @@ def tfidf_topk(
         "doc_id", F.explode(_words(F.col("text"))).alias("word")
     ).filter(F.col("word") != "")
     tf = words.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
-    dfreq = tf.groupBy("word").agg(F.count("*").alias("df"))
-    if broadcast_vocab:
-        dfreq = F.broadcast(dfreq)
+    dfreq = F.broadcast(tf.groupBy("word").agg(F.count("*").alias("df")))
     n_docs = docs.count()
     score = F.round(
         F.col("tf") * F.lit(float(n_docs + 1)) / (F.col("df") + F.lit(1.0)),
@@ -530,15 +525,12 @@ def corpus_ngrams(docs: DataFrame, k: int = 2, top: int = 50) -> DataFrame:
 
 def fuzzy_pairs(
     docs: DataFrame,
-    prefix_len: int = 16,
-    head_len: int = 96,
     max_len_diff: int = 64,
-    max_dist: int = 24,
     max_block: int = 50,
 ) -> DataFrame:
-    """Edit-distance near-duplicate pairs: block on the lowercased
-    ``prefix_len``-char prefix, then Levenshtein over the
-    ``head_len``-char head within each block — the fuzzy-dedup
+    """Edit-distance near-duplicate pairs (distance <= 24): block on
+    the lowercased 16-char prefix, then Levenshtein over the 96-char
+    head within each block — the fuzzy-dedup
     complement to MinHash (`dedup.minhash_pairs` catches shuffled
     content; this catches small in-place edits with high precision).
 
@@ -548,15 +540,15 @@ def fuzzy_pairs(
     dropped BEFORE the join — a boilerplate prefix shared by millions
     of docs can otherwise explode quadratically.  Fan-out is therefore
     ≤ ``max_block``² per block; `levenshtein` is JVM codegen on the
-    truncated heads (O(head_len²) per candidate, never full texts).
+    truncated heads (O(96²) per candidate, never full texts).
     Dropped-block keys are observable via the block-size relation, not
     silently hidden (the cap is a documented recall trade, matching
     the reference-free corpus ops' conventions).
     """
     d = docs.select(
         F.col("doc_id"),
-        F.lower(F.substring("text", 1, prefix_len)).alias("pfx"),
-        F.substring("text", 1, head_len).alias("head"),
+        F.lower(F.substring("text", 1, 16)).alias("pfx"),
+        F.substring("text", 1, 96).alias("head"),
         F.length("text").alias("len"),
     )
     sizes = d.groupBy("pfx").agg(F.count("*").alias("n"))
@@ -570,7 +562,7 @@ def fuzzy_pairs(
         .filter(
             F.abs(F.col("a.len") - F.col("b.len")) <= max_len_diff
         )
-        .filter(dist <= max_dist)
+        .filter(dist <= 24)
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -604,8 +596,6 @@ def bm25_topk(
     docs: DataFrame,
     terms: list[str],
     k: int = 10,
-    k1_pct: int = 120,
-    b_pct: int = 75,
 ) -> DataFrame:
     """BM25 top-k docs per query term, cross-engine exact: the idf is
     the RATIONAL Robertson form ``(N - df + 0.5)/(df + 0.5)`` with no
@@ -619,8 +609,8 @@ def bm25_topk(
     broadcast back; top-k per term is a bounded window over ≤N rows
     per term.
     """
-    k1 = k1_pct / 100.0
-    b = b_pct / 100.0
+    k1 = 1.2
+    b = 0.75
     w = docs.select(
         "doc_id", F.posexplode(_words(F.col("text"))).alias("pos", "word")
     ).filter(F.col("word").isin(terms))
@@ -790,19 +780,12 @@ def normalize_text(docs: DataFrame) -> DataFrame:
     )
 
 
-def split_contamination(
-    docs: DataFrame,
-    weights: dict[str, float] | None = None,
-    k: int = 5,
-    train_split: str = "train",
-    eval_split: str = "test",
-    salt: str = "split",
-) -> DataFrame:
-    """Cross-split contamination audit: after a train/eval split, what
-    fraction of each EVAL document's distinct word ``k``-grams also
-    appears anywhere in train?  The post-split hygiene check that
-    catches what per-doc dedup missed (an eval doc quoting a train doc
-    scores as memorization, not generalization).
+def split_contamination(docs: DataFrame) -> DataFrame:
+    """Cross-split contamination audit: after the default
+    ``hash_split``, what fraction of each ``test`` document's distinct
+    word 5-grams also appears anywhere in ``train``?  The post-split
+    hygiene check that catches what per-doc dedup missed (an eval doc
+    quoting a train doc scores as memorization, not generalization).
 
     Unlike ``ngram_decontaminate`` — where the benchmark side is tiny
     and broadcasts — the train side here is ~90 % of the corpus, so
@@ -816,29 +799,29 @@ def split_contamination(
     (doc_id, n_grams, n_shared, contamination)."""
     from gclog_parser_spark.operators.sampling import hash_split
 
-    s = hash_split(docs, weights, salt=salt)
+    s = hash_split(docs)
     grams = s.select(
         "doc_id", "split", _words(F.col("text")).alias("w")
     ).select(
         "doc_id",
         "split",
         F.explode(
-            F.array_distinct(_shingle_expr(F.col("w"), k))
+            F.array_distinct(_shingle_expr(F.col("w"), 5))
         ).alias("gram"),
     )
     train_g = (
-        grams.where(F.col("split") == train_split)
+        grams.where(F.col("split") == "train")
         .select("gram")
         .distinct()
     )
-    ev = grams.where(F.col("split") == eval_split)
+    ev = grams.where(F.col("split") == "test")
     tot = ev.groupBy("doc_id").agg(F.count("*").alias("n_grams"))
     shd = (
         ev.join(train_g, "gram", "left_semi")
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_shared"))
     )
-    base = s.where(F.col("split") == eval_split).select("doc_id")
+    base = s.where(F.col("split") == "test").select("doc_id")
     n_grams = F.coalesce("n_grams", F.lit(0)).cast("long")
     n_shared = F.coalesce("n_shared", F.lit(0)).cast("long")
     return (
@@ -928,19 +911,24 @@ def unigram_surprisal_buckets(docs: DataFrame) -> DataFrame:
     return scored.withColumn("bucket", F.ntile(3).over(w))
 
 
-def hashed_feature_weights(spark, n_buckets: int = 4096):
+#: hashed-feature buckets of the ``classifier_score`` model
+N_FEATURE_BUCKETS = 4096
+
+
+def hashed_feature_weights(spark):
     """Deterministic exported-model weight table for
-    ``classifier_score``: one row per hashed-feature bucket with an
-    integer weight tick in [-1e6, 1e6] derived from md5 of the bucket
-    id — a stand-in for a trained fastText/logistic model's exported
-    coefficients that both engines can regenerate bit-identically
-    (no model file in the sandbox).  In production this relation is
-    the classifier artifact loaded from storage; everything downstream
-    (broadcast join shape, scoring arithmetic) is exactly what serving
-    a real exported model looks like."""
+    ``classifier_score``: one row per hashed-feature bucket
+    (``N_FEATURE_BUCKETS``) with an integer weight tick in [-1e6, 1e6]
+    derived from md5 of the bucket id — a stand-in for a trained
+    fastText/logistic model's exported coefficients that both engines
+    can regenerate bit-identically (no model file in the sandbox).  In
+    production this relation is the classifier artifact loaded from
+    storage; everything downstream (broadcast join shape, scoring
+    arithmetic) is exactly what serving a real exported model looks
+    like."""
     from gclog_parser_spark.operators.dedup import md5_long
 
-    return spark.range(n_buckets).select(
+    return spark.range(N_FEATURE_BUCKETS).select(
         F.col("id").alias("bucket"),
         (
             md5_long(F.concat(F.lit("w:"), F.col("id").cast("string")))
@@ -951,9 +939,7 @@ def hashed_feature_weights(spark, n_buckets: int = 4096):
 
 
 def classifier_score(
-    docs: DataFrame,
-    weights: DataFrame | None = None,
-    n_buckets: int = 4096,
+    docs: DataFrame, weights: DataFrame | None = None
 ) -> DataFrame:
     """Linear text-classifier INFERENCE at corpus scale — the
     quality/toxicity/domain-filter step of an LLM data pipeline
@@ -964,7 +950,8 @@ def classifier_score(
     aggregate, never a Python loop over tokens.
 
     Features: ``u:<word>`` unigrams and ``b:<w1> <w2>`` bigrams,
-    hashed to ``n_buckets`` with the portable 60-bit md5 hash
+    hashed to ``N_FEATURE_BUCKETS`` buckets with the portable 60-bit md5
+    hash
     (feature hashing — collisions are part of the model, same trick
     as Vowpal Wabbit / fastText's hashed n-grams).  The score is the
     tf-weighted MEAN weight tick / 1e6 (one IEEE division, round 6);
@@ -972,7 +959,8 @@ def classifier_score(
     decision boundary cannot float-drift between engines.
 
     Scale shape: explode → one (doc, bucket) exchange for tf → weight
-    join BROADCAST (n_buckets rows) → one doc exchange for the sum.
+    join BROADCAST (``N_FEATURE_BUCKETS`` rows) → one doc exchange for
+    the sum.
     Two exchanges total, both ∝ doc features; the model never
     shuffles.  Reference has no classifier; north-rule quality
     filtering (BASELINE.json)."""
@@ -983,7 +971,7 @@ def classifier_score(
     )
 
     if weights is None:
-        weights = hashed_feature_weights(docs.sparkSession, n_buckets)
+        weights = hashed_feature_weights(docs.sparkSession)
     # materialize the words array in its own projection: passing the
     # split() expression straight into _shingle_expr re-evaluates the
     # regex split per element_at (O(words) splits per doc, ~30x wall)
@@ -1004,7 +992,8 @@ def classifier_score(
     )
     tf = (
         feats.select(
-            "doc_id", (md5_long(F.col("feat")) % n_buckets).alias("bucket")
+            "doc_id",
+            (md5_long(F.col("feat")) % N_FEATURE_BUCKETS).alias("bucket"),
         )
         .groupBy("doc_id", "bucket")
         .agg(F.count("*").alias("tf"))
@@ -1027,10 +1016,10 @@ def classifier_score(
     )
 
 
-def oov_rate(docs: DataFrame, vocab_size: int = 100) -> DataFrame:
+def oov_rate(docs: DataFrame) -> DataFrame:
     """Tokenizer-coverage audit: per-document out-of-vocabulary rate
-    against a vocabulary TRAINED ON THE CORPUS ITSELF — the top
-    ``vocab_size`` word bigrams by frequency (count DESC, bigram ASC
+    against a vocabulary TRAINED ON THE CORPUS ITSELF — the top 100
+    word bigrams by frequency (count DESC, bigram ASC
     tie-break, so the vocabulary boundary is deterministic).  The
     pipeline question it answers: how much of each document would a
     fixed-size tokenizer vocabulary fail to cover, i.e. which docs
@@ -1056,7 +1045,7 @@ def oov_rate(docs: DataFrame, vocab_size: int = 100) -> DataFrame:
         bg.groupBy("bigram")
         .agg(F.count("*").alias("c"))
         .orderBy(F.desc("c"), "bigram")
-        .limit(vocab_size)
+        .limit(100)
         .select("bigram", F.lit(1).alias("in_vocab"))
     )
     return (
@@ -1243,19 +1232,15 @@ def hybrid_rrf_topk(
     docs: DataFrame,
     emb: DataFrame,
     terms: list[str],
-    query_vec_id: int = 0,
-    k: int = 10,
-    depth: int = 20,
-    k0: int = 60,
 ) -> DataFrame:
-    """Hybrid retrieval via reciprocal-rank fusion (Cormack, Clarke &
-    Buettcher, SIGIR 2009): fuse the LEXICAL ranking (per-doc sum of
-    BM25 scores over the per-term top-``depth`` pools from
+    """Top-10 hybrid retrieval via reciprocal-rank fusion (Cormack,
+    Clarke & Buettcher, SIGIR 2009): fuse the LEXICAL ranking (per-doc
+    sum of BM25 scores over the per-term top-20 pools from
     :func:`bm25_topk`) with the SEMANTIC ranking (embedding-cosine
-    top-``depth`` from ``similarity.cosine_topk``, ``vec_id`` aligned
-    to ``doc_id``) — the standard first stage of a RAG retriever.
-    ``rrf = 1/(k0 + lex_rank) + 1/(k0 + sem_rank)`` with an absent
-    list contributing 0.
+    top-20 for vector 0 from ``similarity.cosine_topk``, ``vec_id``
+    aligned to ``doc_id``) — the standard first stage of a RAG
+    retriever.  ``rrf = 1/(60 + lex_rank) + 1/(60 + sem_rank)`` with an
+    absent list contributing 0.
 
     Cross-engine exactness: the 6-dp BM25 scores become integer ticks
     (``round(score * 1e6)`` BIGINT) so the per-doc sum is associative;
@@ -1265,14 +1250,14 @@ def hybrid_rrf_topk(
 
     Scale shape: both input systems are already bounded (per-term
     window top-k; TakeOrdered corpus scan), so the fusion operates on
-    ≤ ``len(terms)·depth + depth`` rows — the single-partition rank
+    ≤ ``len(terms)·20 + 20`` rows — the single-partition rank
     windows and the outer join are driver-trivial by construction, NOT
     a corpus-sized global sort."""
     from pyspark.sql import Window
 
     from gclog_parser_spark.operators.similarity import cosine_topk
 
-    lex_pool = bm25_topk(docs, terms, k=depth).select(
+    lex_pool = bm25_topk(docs, terms, k=20).select(
         "doc_id",
         F.round(F.col("score") * 1e6).cast("long").alias("ticks"),
     )
@@ -1283,11 +1268,11 @@ def hybrid_rrf_topk(
         .select(
             "doc_id", F.row_number().over(wl).alias("lex_rank")
         )
-        .where(F.col("lex_rank") <= depth)
+        .where(F.col("lex_rank") <= 20)
     )
     ws = Window.orderBy(F.desc("sim"), F.asc("doc_id"))
     sem = (
-        cosine_topk(emb, query_vec_id=query_vec_id, k=depth)
+        cosine_topk(emb, k=20)
         .select(F.col("vec_id").alias("doc_id"), "sim")
         .select(
             "doc_id", F.row_number().over(ws).alias("sem_rank")
@@ -1299,32 +1284,27 @@ def hybrid_rrf_topk(
         "sem_rank",
         F.round(
             F.coalesce(
-                F.lit(1.0) / (F.lit(k0) + F.col("lex_rank")),
+                F.lit(1.0) / (F.lit(60) + F.col("lex_rank")),
                 F.lit(0.0),
             )
             + F.coalesce(
-                F.lit(1.0) / (F.lit(k0) + F.col("sem_rank")),
+                F.lit(1.0) / (F.lit(60) + F.col("sem_rank")),
                 F.lit(0.0),
             ),
             9,
         ).alias("rrf"),
     )
-    return fused.orderBy(F.desc("rrf"), F.asc("doc_id")).limit(k)
+    return fused.orderBy(F.desc("rrf"), F.asc("doc_id")).limit(10)
 
 
-def c4_line_filter(
-    docs: DataFrame,
-    min_words: int = 5,
-    min_kept_lines: int = 3,
-    return_text: bool = False,
-) -> DataFrame:
+def c4_line_filter(docs: DataFrame, return_text: bool = False) -> DataFrame:
     """C4's line-level cleaning rules (Raffel et al. 2020, "Exploring
     the Limits of Transfer Learning", §2.2) — the step BETWEEN raw
     extraction and the document-level Gopher gate
     (:func:`corpus_filter`): keep only lines that end in terminal
-    punctuation (``. ! ? "``) and have ≥ ``min_words`` words, drop
-    code-ish lines (``{`` or the word ``javascript``), then drop the
-    whole document when fewer than ``min_kept_lines`` lines survive
+    punctuation (``. ! ? "``) and have ≥ 5 words, drop code-ish lines
+    (``{`` or the word ``javascript``), then drop the whole document
+    when fewer than 3 lines survive
     or it contains the ``lorem ipsum`` placeholder.
 
     Pure scan-side lambda pipeline (split → ``F.filter`` HOF →
@@ -1342,7 +1322,7 @@ def c4_line_filter(
         words = F.split(F.trim(line), r"\s+")
         return (
             line.rlike(r'[.!?"]\s*$')
-            & (F.size(words) >= F.lit(min_words))
+            & (F.size(words) >= F.lit(5))
             & ~line.contains("{")
             & ~F.lower(line).contains("javascript")
         )
@@ -1353,7 +1333,7 @@ def c4_line_filter(
         F.size(lines).alias("n_lines"),
         F.size(kept_lines).alias("n_kept"),
         (
-            (F.size(kept_lines) >= F.lit(min_kept_lines))
+            (F.size(kept_lines) >= F.lit(3))
             & ~F.lower(F.col("text")).contains("lorem ipsum")
         ).alias("kept"),
         *(

@@ -52,16 +52,16 @@ MERGE_SCHEMA = StructType(
 )
 
 
-def word_freqs(docs: DataFrame, max_word_len: int = 64) -> DataFrame:
+def word_freqs(docs: DataFrame) -> DataFrame:
     """Weighted vocab relation ``(word, freq)`` — the one corpus-sized
     aggregation the trainer performs.  Words longer than
-    ``max_word_len`` are dropped (URL/blob junk would otherwise blow
+    64 characters are dropped (URL/blob junk would otherwise blow
     up the per-word symbol arrays; real trainers cap the same way)."""
     from gclog_parser_spark.operators.dedup import _words
 
     return (
         docs.select(F.explode(_words(F.col("text"))).alias("word"))
-        .where((F.col("word") != "") & (F.length("word") <= max_word_len))
+        .where((F.col("word") != "") & (F.length("word") <= 64))
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
     )
@@ -106,9 +106,7 @@ def _merge_fold(lhs: str, rhs: str):
     )
 
 
-def bpe_merges(
-    docs: DataFrame, n_merges: int = 8, max_word_len: int = 64
-) -> DataFrame:
+def bpe_merges(docs: DataFrame, n_merges: int = 8) -> DataFrame:
     """Learn the first ``n_merges`` BPE merges from the corpus.
 
     Returns the learned merge table ``(step, lhs, rhs, n)`` — step is
@@ -118,7 +116,7 @@ def bpe_merges(
     argmax CTEs goes empty at the same point, so parity holds.
     """
     spark = docs.sparkSession
-    vocab = word_freqs(docs, max_word_len=max_word_len).select(
+    vocab = word_freqs(docs).select(
         F.split(
             F.trim(F.regexp_replace("word", "(.)", "$1 ")), " "
         ).alias("syms"),

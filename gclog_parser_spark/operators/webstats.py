@@ -53,12 +53,12 @@ def synth_urls(docs: DataFrame) -> DataFrame:
     )
 
 
-def url_facets(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Per-row URL facets via ``parse_url`` (Hive/Java URL splitting,
-    codegen): host (port-free), registrable tld label, scheme flag,
-    explicit port, path depth (non-empty segment count), query-string
-    presence.  Adds columns; scan-side only."""
-    url = F.col(url_col)
+def url_facets(df: DataFrame) -> DataFrame:
+    """Per-row facets of the ``url`` column via ``parse_url`` (Hive/Java
+    URL splitting, codegen): host (port-free), registrable tld label,
+    scheme flag, explicit port, path depth (non-empty segment count),
+    query-string presence.  Adds columns; scan-side only."""
+    url = F.col("url")
     host = F.parse_url(url, F.lit("HOST"))
     authority = F.parse_url(url, F.lit("AUTHORITY"))
     path = F.parse_url(url, F.lit("PATH"))
@@ -82,15 +82,15 @@ def url_facets(df: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def url_facet_rollup(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Per-(tld, scheme) corpus rollup: doc count, EXACT distinct
-    hosts, mean path depth, explicit-port and query-string counts.
-    One exchange on the tiny facet key, everything partial map-side.
-    At 10^12 rows replace ``countDistinct(host)`` with
-    ``approx_count_distinct(host, 0.01)`` — the exact form is kept
-    here because the driver gate value-checks against DuckDB."""
+def url_facet_rollup(df: DataFrame) -> DataFrame:
+    """Per-(tld, scheme) rollup of the ``url`` column: doc count, EXACT
+    distinct hosts, mean path depth, explicit-port and query-string
+    counts.  One exchange on the tiny facet key, everything partial
+    map-side.  At 10^12 rows replace ``countDistinct(host)`` with
+    ``approx_count_distinct(host, 0.01)`` — the exact form is kept here
+    because the contract gate value-checks against DuckDB."""
     return (
-        url_facets(df, url_col)
+        url_facets(df)
         .groupBy("tld", "is_https")
         .agg(
             F.count("*").alias("n_docs"),
@@ -102,18 +102,13 @@ def url_facet_rollup(df: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def url_blocklist_filter(
-    df: DataFrame,
-    rules: list[str],
-    url_col: str = "url",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def url_blocklist_filter(df: DataFrame, rules: list[str]) -> DataFrame:
     """Domain-blocklist filtering with subdomain semantics: a row is
-    blocked when its host IS a rule domain or is a *subdomain* of one
-    (label-boundary aware: rule ``src1.org`` blocks ``www.src1.org``
-    but never ``src11.org`` — the bug a naive ``LIKE '%src1.org'``
-    scan has).  Adds ``(host, blocked, matched_rule)``; production
-    keeps ``WHERE NOT blocked``.
+    blocked when the host of its ``url`` IS a rule domain or is a
+    *subdomain* of one (label-boundary aware: rule ``src1.org`` blocks
+    ``www.src1.org`` but never ``src11.org`` — the bug a naive ``LIKE
+    '%src1.org'`` scan has).  Adds ``(host, blocked, matched_rule)``;
+    production keeps ``WHERE NOT blocked``.
 
     Scale shape: each host explodes into its dot-suffixes (≤ label
     count, ~3-5 per row) and equi-joins the rule relation on the
@@ -128,7 +123,7 @@ def url_blocklist_filter(
             [(r,) for r in sorted(set(rules))], "matched_rule string"
         )
     )
-    host = F.parse_url(F.col(url_col), F.lit("HOST"))
+    host = F.parse_url(F.col("url"), F.lit("HOST"))
     with_host = df.withColumn("host", host)
     labels = F.split("host", r"\.")
     n = F.size(labels)
@@ -137,13 +132,13 @@ def url_blocklist_filter(
         lambda i: F.array_join(F.slice(labels, i + 1, n - i), "."),
     )
     exploded = with_host.select(
-        id_col, "host", F.explode(suffixes).alias("suffix")
+        "doc_id", "host", F.explode(suffixes).alias("suffix")
     )
     hits = (
         exploded.join(
             rules_df, exploded["suffix"] == rules_df["matched_rule"]
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.max(
                 F.struct(
@@ -154,7 +149,7 @@ def url_blocklist_filter(
         )
     )
     return (
-        with_host.join(hits, id_col, "left")
+        with_host.join(hits, "doc_id", "left")
         .withColumn("blocked", F.col("matched_rule").isNotNull())
     )
 
@@ -215,7 +210,7 @@ def synth_messy_urls(docs: DataFrame) -> DataFrame:
 TRACKING_RE = r"^(utm_[^=]*|fbclid|gclid)="
 
 
-def canonicalize_url(df: DataFrame, url_col: str = "url") -> DataFrame:
+def canonicalize_url(df: DataFrame) -> DataFrame:
     """URL canonicalization — the dedup key every web pipeline derives
     before URL-level dedup/frontier checks: lowercase scheme+host,
     strip the scheme's default port, drop the fragment, drop tracking
@@ -224,8 +219,8 @@ def canonicalize_url(df: DataFrame, url_col: str = "url") -> DataFrame:
     (canon(canon(u)) == canon(u), pinned) and entirely codegen
     regexp/array expressions — scan-side, zero shuffle, no Python.
 
-    Adds ``canon_url``."""
-    u = F.col(url_col)
+    Adds ``canon_url``, the canonical form of ``url``."""
+    u = F.col("url")
     no_frag = F.regexp_replace(u, "#.*$", "")
     scheme = F.lower(
         F.regexp_extract(no_frag, r"^([A-Za-z][A-Za-z0-9+.\-]*)://", 1)
@@ -264,17 +259,15 @@ def canonicalize_url(df: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def crawl_budget(
-    df: DataFrame, budget: int = 10_000, url_col: str = "url"
-) -> DataFrame:
-    """Politeness-aware crawl-budget apportionment: split a global
-    fetch budget across hosts PROPORTIONALLY to their page counts with
-    the largest-remainder (Hamilton) method — the integer-exact
-    scheduler a recrawl planner runs after :func:`url_facet_rollup`:
-    every host gets ``floor(budget * n_pages / total)`` slots and the
-    leftover slots go to the largest fractional remainders, so the
-    quotas sum to EXACTLY ``budget`` (no float drift, no over-fetch)
-    and no host is starved by rounding.
+def crawl_budget(df: DataFrame, budget: int = 10_000) -> DataFrame:
+    """Politeness-aware crawl-budget apportionment: split a global fetch
+    budget across the hosts of ``url`` PROPORTIONALLY to their page
+    counts with the largest-remainder (Hamilton) method — the
+    integer-exact scheduler a recrawl planner runs after
+    :func:`url_facet_rollup`: every host gets ``floor(budget * n_pages /
+    total)`` slots and the leftover slots go to the largest fractional
+    remainders, so the quotas sum to EXACTLY ``budget`` (no float drift,
+    no over-fetch) and no host is starved by rounding.
 
     All arithmetic is BIGINT (`DIV` / `%`); ties on the remainder
     break by host ASC via ``row_number``, so the result is a pure
@@ -290,7 +283,7 @@ def crawl_budget(
     """
     if budget < 0:
         raise ValueError("crawl_budget requires budget >= 0")
-    host = F.try_parse_url(F.col(url_col), F.lit("HOST"))
+    host = F.try_parse_url(F.col("url"), F.lit("HOST"))
     hosts_rel = (
         df.select(host.alias("host"))
         # unparseable URLs must NOT pool into one NULL-host group and

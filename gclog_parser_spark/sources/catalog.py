@@ -305,10 +305,7 @@ def _apply_deletes(spark, table, data, dels, target=None) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def snapshot_write(
-    df: DataFrame,
-    table: str,
-    mode: str = "append",
-    max_records_per_file: int | None = None,
+    df: DataFrame, table: str, mode: str = "append"
 ) -> Snapshot:
     """Commit ``df`` to ``table`` as a new snapshot.
 
@@ -323,10 +320,7 @@ def snapshot_write(
     os.makedirs(os.path.join(table, _META), exist_ok=True)
 
     commit_dir = os.path.join(_DATA, f"commit-{uuid.uuid4().hex}")
-    w = df.write.mode("overwrite")
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
-    w.parquet(os.path.join(table, commit_dir))
+    df.write.mode("overwrite").parquet(os.path.join(table, commit_dir))
     return commit_existing_files(
         table, commit_dir, mode=mode, schema_json=df.schema.json()
     )
@@ -478,17 +472,16 @@ def scan_with_pruning(
     column: str,
     lower: Any,
     upper: Any,
-    snapshot_id: int | None = None,
 ) -> tuple[DataFrame, dict[str, int]]:
-    """Range scan with manifest-level file skipping: keep only files
-    whose footer [min,max] for ``column`` intersects [lower,upper],
-    then apply the exact filter on the survivors (stats are a
-    superset guard, never the final predicate).  Returns the DataFrame
-    and ``{"files_total": n, "files_scanned": k}`` so callers (and
-    tests) can assert the skipping actually happened."""
+    """Range scan of the current snapshot with manifest-level file
+    skipping: keep only files whose footer [min,max] for ``column``
+    intersects [lower,upper], then apply the exact filter on the
+    survivors (stats are a superset guard, never the final predicate).
+    Returns the DataFrame and ``{"files_total": n, "files_scanned": k}``
+    so callers (and tests) can assert the skipping actually happened."""
     from pyspark.sql import functions as F
 
-    snap = load_snapshot(table, snapshot_id)
+    snap = load_snapshot(table)
     data, dels = _split_entries(table, snap)
     total = 0
     kept_data = []
@@ -620,11 +613,7 @@ def expire_snapshots(table: str, keep_last: int = 1) -> dict[str, int]:
 # write-audit-publish (WAP)
 # ---------------------------------------------------------------------------
 
-def stage_write(
-    df: "DataFrame",
-    table: str,
-    max_records_per_file: int | None = None,
-) -> str:
+def stage_write(df: "DataFrame", table: str) -> str:
     """Stage data for write-audit-publish: the files and their
     manifest are written exactly as :func:`snapshot_write` would, but
     NO snapshot is committed — readers cannot see staged data (the
@@ -640,10 +629,7 @@ def stage_write(
     """
     os.makedirs(os.path.join(table, _META), exist_ok=True)
     commit_dir = os.path.join(_DATA, f"commit-{uuid.uuid4().hex}")
-    w = df.write.mode("overwrite")
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
-    w.parquet(os.path.join(table, commit_dir))
+    df.write.mode("overwrite").parquet(os.path.join(table, commit_dir))
     files = []
     abs_dir = os.path.join(table, commit_dir)
     for f in sorted(os.listdir(abs_dir)):
@@ -676,13 +662,11 @@ def read_staged(spark: SparkSession, table: str, token: str) -> DataFrame:
     return spark.read.parquet(*files)
 
 
-def publish_staged(table: str, token: str, mode: str = "append") -> Snapshot:
-    """Atomically publish a staged manifest as a new snapshot — the
+def publish_staged(table: str, token: str) -> Snapshot:
+    """Atomically publish a staged manifest as a new append snapshot — the
     'publish' of WAP.  Same optimistic-concurrency protocol as
     :func:`snapshot_write`; the data was already written at stage
     time, so publish is a pure metadata operation (O(1) I/O)."""
-    if mode not in ("append", "overwrite"):
-        raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     m = _load_manifest(table, token)
     added_rows = m["added_rows"]
     n_files = len(m["files"])
@@ -694,13 +678,11 @@ def publish_staged(table: str, token: str, mode: str = "append") -> Snapshot:
             cur = load_snapshot(table, parent)
             manifests = list(cur.manifests)
             parent_rows = cur.summary.get("total_rows", 0)
-        if mode == "overwrite":
-            manifests, parent_rows = [], 0
         sid = (parent or 0) + 1
         snap = Snapshot(
             snapshot_id=sid,
             parent_id=parent,
-            operation=mode,
+            operation="append",
             manifests=manifests
             + [{"path": token, "seq": sid, "kind": "data"}],
             summary={
@@ -984,12 +966,12 @@ def read_tag(spark: SparkSession, table: str, name: str) -> DataFrame:
     return read_snapshot(spark, table, refs[name])
 
 
-def table_files(spark: SparkSession, table: str,
-                snapshot_id: int | None = None) -> DataFrame:
+def table_files(spark: SparkSession, table: str) -> DataFrame:
     """The ``files`` metadata table (Iceberg's ``table.files`` twin):
-    one row per live file with rows/bytes/kind — what ops dashboards
-    and compaction planners query instead of listing storage."""
-    snap = load_snapshot(table, snapshot_id)
+    one row per live file of the current snapshot with rows/bytes/kind —
+    what ops dashboards and compaction planners query instead of listing
+    storage."""
+    snap = load_snapshot(table)
     rows = []
     for m in snap.manifests:
         e = _norm_entry(m)

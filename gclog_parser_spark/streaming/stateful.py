@@ -28,6 +28,7 @@ from pyspark.sql.types import (
 )
 
 from gclog_parser_spark.core import half_up, rate_step, to_ticks
+from gclog_parser_spark.operators.rates import BURN_THRESHOLD, SLO
 from gclog_parser_spark.schema import EVENTS_SCHEMA
 
 STATE_SCHEMA = StructType(
@@ -240,8 +241,6 @@ def stateful_slo_burn(
     events: DataFrame,
     short_s: int = 60,
     long_s: int = 300,
-    slo: float = 0.01,
-    burn_threshold: float = 1.0,
     end_marker_col: str | None = None,
     flush_on_batch_end: bool = False,
 ) -> DataFrame:
@@ -262,8 +261,8 @@ def stateful_slo_burn(
     if long_s % short_s != 0:
         raise ValueError("long_s must be a multiple of short_s")
     k = long_s // short_s
-    den_short = short_s * 10_000_000 * slo
-    den_long = long_s * 10_000_000 * slo
+    den_short = short_s * 10_000_000 * SLO
+    den_long = long_s * 10_000_000 * SLO
     if den_short != int(den_short):
         raise ValueError("short_s * 1e7 * slo must be integral")
     den_short, den_long = int(den_short), int(den_long)
@@ -294,7 +293,7 @@ def stateful_slo_burn(
                 out.append((
                     url, run_id, (l_bucket * k + j) * short_s, t,
                     ticks_long, burn_s, burn_l,
-                    burn_s >= burn_threshold and burn_l >= burn_threshold,
+                    burn_s >= BURN_THRESHOLD and burn_l >= BURN_THRESHOLD,
                 ))
             shorts, l_bucket = [None] * k, None
 

@@ -83,22 +83,17 @@ def _to_memory(
     )
 
 
-def parse_stream(
-    pages: DataFrame,
-    mode: str = "gc_line",
-    require_marker: bool = True,
-) -> DataFrame:
-    """Streaming pages → routed events.  Narrow stitch only: the window
-    strategy needs a global per-url sort, which an unbounded stream
-    cannot provide (and does not need — one page carries one log).
+def parse_stream(pages: DataFrame) -> DataFrame:
+    """Streaming pages → routed ``gc_line`` events from marked logs.
+    Narrow stitch only: the window strategy needs a global per-url
+    sort, which an unbounded stream cannot provide (and does not need —
+    one page carries one log).
 
     Rates are NOT applied here: Structured Streaming rejects analytic
     windows (NON_TIME_WINDOW_NOT_SUPPORTED_IN_STREAMING); they are
     applied per micro-batch inside foreachBatch, which is exact because
     a url's whole log arrives in one page row."""
-    events = parse_events(
-        pages, mode=mode, stitch="narrow", require_marker=require_marker
-    )
+    events = parse_events(pages, stitch="narrow")
     return with_sink(events)
 
 
@@ -176,13 +171,11 @@ def run_dedup_stream(
     )
 
 
-def hourly_sink_counts(
-    events: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
-    """Watermarked per-(sink, hour) streaming aggregate; append-mode
+def hourly_sink_counts(events: DataFrame) -> DataFrame:
+    """2-hour-watermarked per-(sink, hour) streaming aggregate; append-mode
     emits each hour once its watermark passes (bounded state)."""
     return (
-        events.withWatermark("warc_ts", watermark)
+        events.withWatermark("warc_ts", "2 hours")
         .groupBy(F.window("warc_ts", "1 hour").alias("w"), "sink")
         .agg(
             F.count("*").alias("events"),
@@ -210,25 +203,19 @@ def run_hourly_stream(
     )
 
 
-def sliding_value_counts(
-    events: DataFrame,
-    duration_secs: int = 600,
-    slide_secs: int = 300,
-    watermark: str = "30 minutes",
-) -> DataFrame:
+def sliding_value_counts(events: DataFrame) -> DataFrame:
     """Streaming twin of ``aggregate.sliding_counts``: watermarked
-    OVERLAPPING windows (duration/slide) per event_type — each row is
-    assigned to its duration/slide windows scan-side, state is bounded
-    by the watermark horizon, and the output schema matches the batch
-    operator exactly (window_start as epoch seconds), so the SAME
-    DuckDB oracle value-checks both the batch and streaming paths."""
+    OVERLAPPING windows (600 s sliding every 300 s) per event_type —
+    each row is assigned to its duration/slide windows scan-side, state
+    is bounded by the 30-minute watermark horizon, and the output schema
+    matches the batch operator exactly (window_start as epoch seconds),
+    so the SAME DuckDB oracle value-checks both the batch and streaming
+    paths."""
     ts = F.col("ts").cast("timestamp")
-    win = F.window(
-        F.col("ts_t"), f"{duration_secs} seconds", f"{slide_secs} seconds"
-    )
+    win = F.window(F.col("ts_t"), "600 seconds", "300 seconds")
     return (
         events.select(ts.alias("ts_t"), "event_type", "value")
-        .withWatermark("ts_t", watermark)
+        .withWatermark("ts_t", "30 minutes")
         .groupBy(win.alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
@@ -331,9 +318,9 @@ def run_attribution_stream(
     return _to_memory(agg, query_name, "append", checkpoint)
 
 
-def session_window_counts(events: DataFrame, gap: str = "6 hours") -> DataFrame:
+def session_window_counts(events: DataFrame) -> DataFrame:
     """Streaming twin of the native session_window aggregation
-    (__spark_entry__.q_rel_session_window): dynamic-gap event-time
+    (__spark_entry__.q_rel_session_window): 6-hour-gap event-time
     sessions per user, schema-identical to the batch query so the
     SAME DuckDB gaps-and-islands oracle value-checks both paths.
     State ∝ open sessions; a watermark bounds it on an infinite
@@ -342,7 +329,7 @@ def session_window_counts(events: DataFrame, gap: str = "6 hours") -> DataFrame:
     input)."""
     return (
         events.select(F.col("ts").cast("timestamp").alias("ts"), "user_id")
-        .groupBy(F.session_window("ts", gap), F.col("user_id"))
+        .groupBy(F.session_window("ts", "6 hours"), F.col("user_id"))
         .agg(
             F.count("*").alias("n_events"),
             F.min("ts").alias("session_start"),
@@ -377,15 +364,14 @@ def run_cdc_apply_stream(
     schema,
     table: str,
     checkpoint: str,
-    delete_col: str = "is_del",
 ):
     """Continuous MERGE apply: a file-source changelog stream is
     folded into the snapshot-catalog table one micro-batch at a time
     via ``foreachBatch`` — each batch reads the current snapshot,
     merges (:func:`operators.cdc.apply_changes` — newest change per
-    key wins, tombstones delete), and commits the merged state as a
-    new snapshot (copy-on-write MERGE; every intermediate state stays
-    time-travelable).
+    key wins, ``is_del`` tombstones delete), and commits the merged
+    state as a new snapshot (copy-on-write MERGE; every intermediate
+    state stays time-travelable).
 
     Sequential chronological batches compose to exactly the one-shot
     MERGE over the whole changelog (the contract query's oracle runs
@@ -407,7 +393,7 @@ def run_cdc_apply_stream(
         if not batch.take(1):
             return
         state = cat.read_snapshot(batch.sparkSession, table)
-        merged = apply_changes(state, batch, delete_col=delete_col)
+        merged = apply_changes(state, batch, delete_col="is_del")
         cat.snapshot_write(merged, table, mode="overwrite")
 
     return _start(
@@ -445,12 +431,12 @@ def run_late_audit_stream(
     schema,
     checkpoint: str,
     query_name: str = "late_hours",
-    watermark: str = "3 days",
 ):
-    """APPEND-mode watermarked hourly aggregate — the query that makes
-    Structured Streaming's late-data contract observable.  Every other
-    stream in this module runs complete/update-ish modes where nothing
-    is ever dropped; this one runs the production dashboard shape:
+    """APPEND-mode hourly aggregate with a 3-day watermark — the query
+    that makes Structured Streaming's late-data contract observable.
+    Every other stream in this module runs complete/update-ish modes
+    where nothing is ever dropped; this one runs the production
+    dashboard shape:
 
     * state for an hour window is kept only until the watermark passes
       its end (bounded state — the reason a 10^12-event stream can run
@@ -474,7 +460,7 @@ def run_late_audit_stream(
         "ts_t", F.col("ts").cast("timestamp")
     )
     agg = (
-        ev.withWatermark("ts_t", watermark)
+        ev.withWatermark("ts_t", "3 days")
         .groupBy(F.window("ts_t", "1 hour").alias("w"))
         .agg(F.count("*").alias("n_stream"))
         .select(F.col("w.start").alias("hour"), "n_stream")

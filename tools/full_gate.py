@@ -7,7 +7,11 @@ gate SF) and writes ``CORRECTNESS_full_r{N}.json`` with the same row
 shape — ``{rows_match, schema_match, hash_match, spark_rows,
 oracle_rows, err}`` — so every query ships with an in-repo
 rows+schema+hash record even when the driver's sample skips it
-(round-3 judge ask #2).
+(round-3 judge ask #2).  Each row also records the query's own output:
+``spark_sha256`` (the digest below over the sorted Spark rows) and
+``spark_schema`` (the ``[name, type, nullable]`` list), so "same output
+as another commit" is a diff of two JSON files, ``ROWS_ONLY`` queries
+included.
 
 Compare semantics (mirrors the driver's documented contract):
 columns sorted by name; per-value null-safe key ``(x is None,
@@ -85,6 +89,7 @@ def main() -> int:
             "rows_match": False, "schema_match": False,
             "hash_match": False, "spark_rows": None,
             "oracle_rows": None, "err": None,
+            "spark_sha256": None, "spark_schema": None,
         }
         try:
             df = queries[name](spark, sf_dir)
@@ -94,6 +99,11 @@ def main() -> int:
                 key=_key,
             )
             rec["spark_rows"] = len(srows)
+            rec["spark_sha256"] = _digest(srows)
+            rec["spark_schema"] = [
+                [f.name, f.dataType.simpleString(), f.nullable]
+                for f in df.schema.fields
+            ]
             sql = oracles.get(name)
             if sql is None:
                 assert name in entry_mod.ROWS_ONLY
