@@ -136,18 +136,24 @@ def q_gc_graphite_export(spark, sf_dir):
     return graphite_export(ev)
 
 
-def _fixture_parse(spark, fixture_text: str, url: str):
-    """One-page corpus from a fixture literal → the common parsed
-    projection compared against the fixture-literal DuckDB oracles
-    (superset formats absent from the frozen pages datagen)."""
+def _fixture_pages(spark, url: str, hour: int, text: str):
+    """One-row PAGES_SCHEMA corpus of a fixture log, stamped 2026-08-17
+    ``hour``:00 — the row the fixture-literal DuckDB oracles rebuild."""
     from datetime import datetime
 
     from gclog_parser_spark.schema import PAGES_SCHEMA
 
-    pages = spark.createDataFrame(
-        [(url, datetime(2026, 8, 17, 1, 0, 0), None, fixture_text, "en")],
+    return spark.createDataFrame(
+        [(url, datetime(2026, 8, 17, hour, 0, 0), None, text, "en")],
         PAGES_SCHEMA,
     )
+
+
+def _fixture_parse(spark, fixture_text: str, url: str):
+    """One-page corpus from a fixture literal → the common parsed
+    projection compared against the fixture-literal DuckDB oracles
+    (superset formats absent from the frozen pages datagen)."""
+    pages = _fixture_pages(spark, url, 1, fixture_text)
     ev = parse_events(pages, require_marker=False)
     return ev.select(
         "event_idx",
@@ -222,45 +228,18 @@ def q_gc_unified_regions(spark, sf_dir):
     `GC(n) Eden regions: 24->0(153)` lines) — the unified twin of the
     legacy `{Heap before/after}` mode (gc_region_deltas), parsed by a
     pure-codegen regexp path and independently re-derived in DuckDB."""
-    from datetime import datetime
-
     from gclog_parser_spark.fixtures import UNIFIED_HEAP_LOG
     from gclog_parser_spark.operators.enrich import unified_region_deltas
-    from gclog_parser_spark.schema import PAGES_SCHEMA
 
-    pages = spark.createDataFrame(
-        [
-            (
-                "uniheap://fixture/0",
-                datetime(2026, 8, 17, 4, 0, 0),
-                None,
-                UNIFIED_HEAP_LOG,
-                "en",
-            )
-        ],
-        PAGES_SCHEMA,
+    return unified_region_deltas(
+        _fixture_pages(spark, "uniheap://fixture/0", 4, UNIFIED_HEAP_LOG)
     )
-    return unified_region_deltas(pages)
 
 
 def _safepoint_pages(spark):
-    from datetime import datetime
-
     from gclog_parser_spark.fixtures import SAFEPOINT_LOG
-    from gclog_parser_spark.schema import PAGES_SCHEMA
 
-    return spark.createDataFrame(
-        [
-            (
-                "sp://fixture/0",
-                datetime(2026, 8, 17, 5, 0, 0),
-                None,
-                SAFEPOINT_LOG,
-                "en",
-            )
-        ],
-        PAGES_SCHEMA,
-    )
+    return _fixture_pages(spark, "sp://fixture/0", 5, SAFEPOINT_LOG)
 
 
 def q_gc_safepoints(spark, sf_dir):
@@ -276,23 +255,9 @@ def q_gc_safepoints(spark, sf_dir):
 
 
 def _stall_pages(spark):
-    from datetime import datetime
-
     from gclog_parser_spark.fixtures import ZGC_STALL_LOG
-    from gclog_parser_spark.schema import PAGES_SCHEMA
 
-    return spark.createDataFrame(
-        [
-            (
-                "zstall://fixture/0",
-                datetime(2026, 8, 17, 6, 0, 0),
-                None,
-                ZGC_STALL_LOG,
-                "en",
-            )
-        ],
-        PAGES_SCHEMA,
-    )
+    return _fixture_pages(spark, "zstall://fixture/0", 6, ZGC_STALL_LOG)
 
 
 def q_gc_zgc_stalls(spark, sf_dir):
@@ -336,45 +301,18 @@ def q_gc_g1_evac_failures(spark, sf_dir):
     (legacy inline tag, unified standalone GC(n) line) — per-failure
     rows with trunc-ms ages, zero-exchange codegen parse
     (operators/enrich.g1_evac_failures)."""
-    from datetime import datetime
-
     from gclog_parser_spark.fixtures import G1_EVAC_LOG
     from gclog_parser_spark.operators.enrich import g1_evac_failures
-    from gclog_parser_spark.schema import PAGES_SCHEMA
 
-    pages = spark.createDataFrame(
-        [
-            (
-                "g1evac://fixture/0",
-                datetime(2026, 8, 17, 7, 0, 0),
-                None,
-                G1_EVAC_LOG,
-                "en",
-            )
-        ],
-        PAGES_SCHEMA,
+    return g1_evac_failures(
+        _fixture_pages(spark, "g1evac://fixture/0", 7, G1_EVAC_LOG)
     )
-    return g1_evac_failures(pages)
 
 
 def _g1_humongous_pages(spark):
-    from datetime import datetime
-
     from gclog_parser_spark.fixtures import G1_HUMONGOUS_LOG
-    from gclog_parser_spark.schema import PAGES_SCHEMA
 
-    return spark.createDataFrame(
-        [
-            (
-                "g1hum://fixture/0",
-                datetime(2026, 8, 17, 7, 0, 0),
-                None,
-                G1_HUMONGOUS_LOG,
-                "en",
-            )
-        ],
-        PAGES_SCHEMA,
-    )
+    return _fixture_pages(spark, "g1hum://fixture/0", 7, G1_HUMONGOUS_LOG)
 
 
 def q_gc_g1_humongous(spark, sf_dir):

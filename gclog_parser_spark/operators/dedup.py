@@ -655,47 +655,68 @@ def simhash_pairs(
 
     Returns (doc_a, doc_b, hamming), doc_a < doc_b, hamming ≤
     ``max_hamming``."""
+    return _hamming_pairs(
+        simhash_docs(docs, bits=32), "doc_id", "simhash", 32,
+        max_hamming, bands, ("doc_a", "doc_b"),
+    )
+
+
+def _hamming_pairs(
+    sigs: DataFrame,
+    key: str,
+    hash_col: str,
+    width: int,
+    max_hamming: int,
+    bands: int,
+    out: tuple[str, str],
+) -> DataFrame:
+    """Pigeonhole Hamming self-join of ``width``-bit hashes: explode each
+    hash into ``bands`` equal segments, equi-join on (band_idx,
+    band_val), and verify the candidates with a popcount on the XOR.
+    Two hashes within ``max_hamming`` (< bands) agree exactly on at
+    least one segment, so no pair is lost.  Returns (``out[0]``,
+    ``out[1]``, hamming), one row per pair of ``key``s, a < b."""
     if max_hamming >= bands:
         raise ValueError(
             f"pigeonhole needs max_hamming < bands, got"
             f" {max_hamming} >= {bands}"
         )
-    seg = 32 // bands
-    sigs = simhash_docs(docs, bits=32)
+    if width % bands:
+        raise ValueError(f"bands must divide the {width}-bit hash")
+    seg = width // bands
     banded = sigs.select(
-        "doc_id",
-        "simhash",
+        key,
+        hash_col,
         F.explode(
             F.array(*[
                 F.struct(
                     F.lit(b).alias("band_idx"),
-                    F.shiftright("simhash", b * seg)
+                    F.shiftright(hash_col, b * seg)
                     .bitwiseAND((1 << seg) - 1)
                     .alias("band_val"),
                 )
                 for b in range(bands)
             ])
         ).alias("band"),
-    ).select("doc_id", "simhash", "band.band_idx", "band.band_val")
+    ).select(key, hash_col, "band.band_idx", "band.band_val")
     a, b = banded.alias("a"), banded.alias("b")
-    cand = (
+    return (
         a.join(
             b,
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+            & (F.col(f"a.{key}") < F.col(f"b.{key}")),
         )
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
+            F.col(f"a.{key}").alias(out[0]),
+            F.col(f"b.{key}").alias(out[1]),
             F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
+                F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
             ).alias("hamming"),
         )
         .where(F.col("hamming") <= max_hamming)
         .distinct()
     )
-    return cand
 
 
 def span_dedup(docs: DataFrame, k: int = 5) -> DataFrame:

@@ -21,6 +21,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from gclog_parser_spark.operators.dedup import _hamming_pairs
 from gclog_parser_spark.operators.mediacodec import (
     decode_media,
     value_digest,
@@ -241,47 +242,9 @@ def media_phash_pairs(
     buckets; the 60-bit default matches the stub decode.
 
     Returns (url_a, url_b, hamming), url_a < url_b."""
-    if max_hamming >= bands:
-        raise ValueError(
-            f"pigeonhole needs max_hamming < bands, got"
-            f" {max_hamming} >= {bands}"
-        )
-    if PHASH_BITS % bands:
-        raise ValueError("bands must divide PHASH_BITS")
-    seg = PHASH_BITS // bands
-    sigs = media_phash(pages)
-    banded = sigs.select(
-        "url",
-        "phash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band_idx"),
-                    F.shiftright("phash", b * seg)
-                    .bitwiseAND((1 << seg) - 1)
-                    .alias("band_val"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("band"),
-    ).select("url", "phash", "band.band_idx", "band.band_val")
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.url") < F.col("b.url")),
-        )
-        .select(
-            F.col("a.url").alias("url_a"),
-            F.col("b.url").alias("url_b"),
-            F.bit_count(
-                F.col("a.phash").bitwiseXOR(F.col("b.phash"))
-            ).alias("hamming"),
-        )
-        .where(F.col("hamming") <= max_hamming)
-        .distinct()
+    return _hamming_pairs(
+        media_phash(pages), "url", "phash", PHASH_BITS,
+        max_hamming, bands, ("url_a", "url_b"),
     )
 
 

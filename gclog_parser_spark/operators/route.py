@@ -67,14 +67,15 @@ def fanout_commit_catalog(
     references (collected by expire); a crash mid-2 leaves some sinks
     committed and the rest staged — re-running the job appends the
     missing sinks only if the caller dedups (e.g. via the ledger's
-    chunk protocol or `streaming_sink`'s batch fencing); the
-    PRIMITIVE here is atomic per sink.
+    chunk protocol or the batch fence below); the PRIMITIVE here is
+    atomic per sink.
 
     ``fence_id`` enables exactly-once streaming composition
-    (:func:`streaming_fanout_sink`): each sink table whose newest
-    committed ``stream_batch_id`` is ≥ the fence skips its commit (the
-    replayed batch is already durable there) and its staged files are
-    discarded.
+    (:func:`streaming_fanout_sink`): each sink commit carries it as
+    the catalog's batch fence (written by the same atomic create as
+    the snapshot, see `catalog.streaming_sink`), so a sink table that
+    already holds the replayed batch skips its commit and drops its
+    files.
 
     Returns ``{sink: snapshot_id}`` for the sinks committed this call.
     """
@@ -95,28 +96,14 @@ def fanout_commit_catalog(
             continue
         sink = d.split("=", 1)[1]
         table = os.path.join(base_dir, sink)
-        if fence_id is not None:
-            cur = cat.current_snapshot_id(table)
-            if cur is not None:
-                last = cat.load_snapshot(table, cur).summary.get(
-                    "stream_batch_id"
-                )
-                if last is not None and fence_id <= last:
-                    continue  # replayed batch: this sink already has it
         commit_rel = os.path.join("data", f"commit-{_uuid.uuid4().hex}")
         os.makedirs(os.path.join(table, "data"), exist_ok=True)
         shutil.move(os.path.join(stage, d), os.path.join(table, commit_rel))
         snap = cat.commit_existing_files(
-            table, commit_rel, mode="append", schema_json=schema_json
+            table, commit_rel, schema_json, fence_id=fence_id
         )
-        if fence_id is not None:
-            snap.summary["stream_batch_id"] = fence_id
-            with open(
-                os.path.join(table, "metadata", f"v{snap.snapshot_id}.json"),
-                "w",
-            ) as f:
-                f.write(snap.to_json())
-        committed[sink] = snap.snapshot_id
+        if snap is not None:
+            committed[sink] = snap.snapshot_id
     shutil.rmtree(stage, ignore_errors=True)
     staging_root = os.path.join(base_dir, "_staging")
     if os.path.isdir(staging_root) and not os.listdir(staging_root):

@@ -878,49 +878,15 @@ def _pq_tick(x: float) -> int:
     return int(math.copysign(math.floor(abs(v) + 0.5), v))
 
 
-def _pq_sub_ticks(m: int, sub: int) -> list:
-    """Integer-tick Columns for subspace ``m``'s components."""
-    return [
-        F.round(
-            F.element_at("embedding", m * sub + i + 1).cast("double")
-            * PQ_TICKS
-        ).cast("long")
-        for i in range(sub)
-    ]
-
-
-def _pq_assign_col(cents_m: list[list[int]], m: int, sub: int):
-    """argmin-L2 cell for subspace ``m`` as a literal codegen
-    expression: array_min over (distance, cell) structs — struct
-    ordering IS the (d, cell) tie-break, matching the oracle's
-    row_number ORDER BY d, cell.  All arithmetic is integer ticks, so
-    the distances are exact BIGINTs in both engines."""
-    ts = _pq_sub_ticks(m, sub)
-    structs = []
-    for cell, cvec in enumerate(cents_m):
-        d = None
-        for i, t in enumerate(ts):
-            diff = t - F.lit(int(cvec[i]))
-            term = diff * diff
-            d = term if d is None else d + term
-        structs.append(
-            F.named_struct(
-                F.lit("d"), d, F.lit("c"), F.lit(cell)
-            )
-        )
-    return F.array_min(F.array(*structs))["c"]
-
-
-def _pq_assign_np(cents, m_sub: int, sub: int):
-    """Arrow/numpy twin of the literal-argmin assignment: integer-tick
-    L2 per subspace with int64 matmul, argmin picking the LOWEST cell
-    on ties (np.argmin returns the first minimum — the same (d, cell)
-    struct order as ``_pq_assign_col``).  Ticks replicate Spark's
-    HALF_UP round exactly (sign·floor(|x|+0.5)), so assignments are
-    bit-identical to the codegen path; the win is construction cost —
-    the literal expression tree costs hundreds of py4j round-trips per
-    iteration to BUILD, the udf costs none (measured ~6x on
-    pq_train)."""
+def _pq_assign_np(cents, sub: int):
+    """The PQ cell assignment, as an Arrow UDF returning one code per
+    subspace: integer-tick L2 per subspace with int64 matmul, argmin
+    picking the LOWEST cell on ties (np.argmin returns the first
+    minimum — the oracle's row_number ORDER BY d, cell).  Ticks
+    replicate Spark's HALF_UP round (sign·floor(|x|+0.5)), so the
+    distances are the exact BIGINTs the oracle computes.  A UDF and not
+    a literal expression tree, because that tree costs hundreds of
+    py4j round-trips to build."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -987,15 +953,13 @@ def pq_train(emb: DataFrame, iters: int = 2) -> list[list[list[int]]]:
     iteration: scan-side Arrow int64 argmin (`_pq_assign_np`, no
     join) → ONE (m, cell, i) partial-sum shuffle (M·ks·sub = 512 rows
     out) → O(M·ks·sub) driver state shipped back in the next UDF
-    closure.  Empty cells keep their previous centroid.  The
-    assignment equals ``pq_encode``'s literal-argmin expression
-    (pinned in tests/test_pq.py); the UDF is used here because that
-    expression tree costs hundreds of py4j round-trips per iteration
-    just to build.
+    closure.  Empty cells keep their previous centroid.  Training and
+    ``pq_encode`` assign with the same UDF, so the codebooks converge
+    on the codes that encoding applies.
     """
     cents = pq_init(emb)
     for _ in range(iters):
-        assigns = _pq_assign_np(cents, PQ_M, PQ_SUB)(F.col("embedding"))
+        assigns = _pq_assign_np(cents, PQ_SUB)(F.col("embedding"))
         t = emb.select(
             assigns.alias("a"),
             F.posexplode("embedding").alias("pos", "val"),
@@ -1042,13 +1006,11 @@ def pq_encode(emb: DataFrame, cents: list[list[list[int]]]) -> DataFrame:
     """(vec_id, code_0..code_{M-1}): each vector's nearest codebook
     cell per subspace — M·log2(ks) bits per vector (here 4×3 = 12 bits
     vs 2048 for fp32: the 170× compression that lets a 10^12-vector
-    index live in RAM).  Pure scan-side codegen, zero shuffle."""
-    return emb.select(
-        "vec_id",
-        *[
-            _pq_assign_col(cents[m], m, PQ_SUB).alias(f"code_{m}")
-            for m in range(PQ_M)
-        ],
+    index live in RAM).  Scan-side Arrow UDF (`_pq_assign_np`), zero
+    shuffle."""
+    codes = _pq_assign_np(cents, PQ_SUB)(F.col("embedding"))
+    return emb.select("vec_id", codes.alias("a")).select(
+        "vec_id", *[F.col("a")[m].alias(f"code_{m}") for m in range(PQ_M)]
     )
 
 

@@ -52,6 +52,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 from dataclasses import dataclass
 from datetime import date, datetime
@@ -135,10 +136,9 @@ class Snapshot:
     parent_id: int | None
     operation: str  # append | overwrite | eqdelete
     #: manifest entries: ``{"path": rel, "seq": commit_seq, "kind":
-    #: "data"|"eqdelete"}`` (bare strings accepted for backward
-    #: compat and normalized by :func:`_norm_entry`).  ``seq`` is the
-    #: Iceberg data-sequence number: an equality delete applies only
-    #: to rows whose data file has a strictly SMALLER seq.
+    #: "data"|"eqdelete"}``.  ``seq`` is the Iceberg data-sequence
+    #: number: an equality delete applies only to rows whose data file
+    #: has a strictly SMALLER seq.
     manifests: list
     summary: dict[str, Any]
 
@@ -154,16 +154,21 @@ def _snap_path(table: str, sid: int) -> str:
     return os.path.join(table, _META, f"v{sid}.json")
 
 
-def current_snapshot_id(table: str) -> int | None:
+def _snapshot_ids(table: str) -> list[int]:
+    """Ids of the table's live snapshots, ascending."""
     meta = os.path.join(table, _META)
     if not os.path.isdir(meta):
-        return None
-    vs = [
+        return []
+    return sorted(
         int(f[1:-5])
         for f in os.listdir(meta)
         if f.startswith("v") and f.endswith(".json")
-    ]
-    return max(vs) if vs else None
+    )
+
+
+def current_snapshot_id(table: str) -> int | None:
+    ids = _snapshot_ids(table)
+    return ids[-1] if ids else None
 
 
 def load_snapshot(table: str, snapshot_id: int | None = None) -> Snapshot:
@@ -185,8 +190,6 @@ def _load_manifest(table: str, rel: str) -> dict[str, Any]:
 
 
 def _norm_entry(m) -> dict[str, Any]:
-    if isinstance(m, str):
-        return {"path": m, "seq": 0, "kind": "data"}
     return {
         "path": m["path"],
         "seq": m.get("seq", 0),
@@ -301,8 +304,118 @@ def _apply_deletes(spark, table, data, dels, target=None) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# write path
+# write path: one data write, one manifest writer, one commit loop
 # ---------------------------------------------------------------------------
+
+def _write_data(df: DataFrame, table: str) -> str:
+    """Write ``df`` into a fresh commit-private data directory (a normal
+    distributed Spark parquet write); returns it relative to ``table``."""
+    commit_dir = os.path.join(_DATA, f"commit-{uuid.uuid4().hex}")
+    df.write.mode("overwrite").parquet(os.path.join(table, commit_dir))
+    return commit_dir
+
+
+def _write_manifest(
+    table: str, commit_dir: str, **fields
+) -> tuple[str, dict[str, Any]]:
+    """Write the manifest ``m-<uuid>.json`` of the parquet files in
+    ``table/<commit_dir>``: per-file footer stats, their row total, and
+    ``fields``.  Returns (manifest path relative to ``table``, manifest)."""
+    files = []
+    for f in sorted(os.listdir(os.path.join(table, commit_dir))):
+        if f.endswith(".parquet"):
+            rel = os.path.join(commit_dir, f)
+            stats = _file_stats(os.path.join(table, rel))
+            files.append({"path": rel, **stats})
+    added_rows = sum(e["rows"] for e in files)
+    man = {"files": files, "added_rows": added_rows, **fields}
+    os.makedirs(os.path.join(table, _META), exist_ok=True)
+    manifest_rel = os.path.join(_META, f"m-{uuid.uuid4().hex}.json")
+    with open(os.path.join(table, manifest_rel), "w") as f:
+        json.dump(man, f)
+    return manifest_rel, man
+
+
+def _commit(
+    table: str,
+    operation: str,
+    manifest_rel: str,
+    summary: dict[str, Any],
+    fence_id: int | None,
+) -> Snapshot | None:
+    """The one optimistic commit: snapshot parent+1 adds the manifest
+    ``manifest_rel`` to the parent's manifest list (an overwrite starts
+    an empty list, an eqdelete needs a parent), and its ``v<N>.json`` is
+    created with O_EXCL — the atomic swap.  A loser re-reads the parent
+    through :func:`current_snapshot_id`, rebases, and retries.
+
+    ``fence_id`` is a stream batch id.  It is written into the summary
+    by the same create, so a snapshot is durable with its fence or not
+    at all; a batch whose id is ≤ the parent's fence is already in the
+    table and is skipped (returns None)."""
+    kind = "eqdelete" if operation == "eqdelete" else "data"
+    for _ in range(_MAX_COMMIT_RETRIES):
+        parent = current_snapshot_id(table)
+        cur = None if parent is None else load_snapshot(table, parent)
+        if cur is None and operation == "eqdelete":
+            raise FileNotFoundError(
+                f"cannot delete from empty table {table}"
+            )
+        last = None if cur is None else cur.summary.get("stream_batch_id")
+        if fence_id is not None and last is not None and fence_id <= last:
+            return None
+        base = cur if operation != "overwrite" else None
+        sid = (parent or 0) + 1
+        snap = Snapshot(
+            snapshot_id=sid,
+            parent_id=parent,
+            operation=operation,
+            manifests=(list(base.manifests) if base else [])
+            + [{"path": manifest_rel, "seq": sid, "kind": kind}],
+            summary={
+                **summary,
+                "total_rows": summary["added_rows"]
+                + (base.summary.get("total_rows", 0) if base else 0),
+            },
+        )
+        if fence_id is not None:
+            snap.summary["stream_batch_id"] = fence_id
+        try:
+            fd = os.open(
+                _snap_path(table, sid), os.O_CREAT | os.O_EXCL | os.O_WRONLY
+            )
+        except FileExistsError:
+            continue  # a concurrent commit won; rebase on the new current
+        with os.fdopen(fd, "w") as f:
+            f.write(snap.to_json())
+        return snap
+    raise RuntimeError(
+        f"{operation} on {table} lost {_MAX_COMMIT_RETRIES} optimistic races"
+    )
+
+
+def _add_files(
+    table: str,
+    commit_dir: str,
+    mode: str,
+    schema_json: str | None,
+    fence_id: int | None,
+) -> Snapshot | None:
+    """Manifest + commit for the data files in ``table/<commit_dir>``;
+    a fenced replay removes them again and returns None."""
+    manifest_rel, man = _write_manifest(table, commit_dir, schema=schema_json)
+    snap = _commit(
+        table,
+        mode,
+        manifest_rel,
+        {"added_files": len(man["files"]), "added_rows": man["added_rows"]},
+        fence_id,
+    )
+    if snap is None:
+        os.remove(os.path.join(table, manifest_rel))
+        shutil.rmtree(os.path.join(table, commit_dir))
+    return snap
+
 
 def snapshot_write(
     df: DataFrame, table: str, mode: str = "append"
@@ -317,87 +430,26 @@ def snapshot_write(
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-    os.makedirs(os.path.join(table, _META), exist_ok=True)
-
-    commit_dir = os.path.join(_DATA, f"commit-{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(os.path.join(table, commit_dir))
-    return commit_existing_files(
-        table, commit_dir, mode=mode, schema_json=df.schema.json()
+    return _add_files(
+        table, _write_data(df, table), mode, df.schema.json(), None
     )
 
 
 def commit_existing_files(
     table: str,
     commit_dir: str,
-    mode: str = "append",
     schema_json: str | None = None,
-) -> Snapshot:
+    fence_id: int | None = None,
+) -> Snapshot | None:
     """Commit parquet files ALREADY inside ``table/<commit_dir>`` as a
-    new snapshot — the zero-copy half of :func:`snapshot_write`, and
-    the primitive the fan-out writer uses: one partitioned Spark write
-    produces every sink's files, then each sink table commits its own
-    directory with pure metadata work (no data rewrite, exactly
-    Iceberg's add-files path)."""
-    files = []
-    abs_dir = os.path.join(table, commit_dir)
-    for f in sorted(os.listdir(abs_dir)):
-        if not f.endswith(".parquet"):
-            continue
-        rel = os.path.join(commit_dir, f)
-        entry = {"path": rel}
-        entry.update(_file_stats(os.path.join(table, rel)))
-        files.append(entry)
-
-    os.makedirs(os.path.join(table, _META), exist_ok=True)
-    manifest_rel = os.path.join(_META, f"m-{uuid.uuid4().hex}.json")
-    with open(os.path.join(table, manifest_rel), "w") as f:
-        json.dump(
-            {
-                "files": files,
-                "added_rows": sum(e["rows"] for e in files),
-                "schema": schema_json,
-            },
-            f,
-        )
-
-    added_rows = sum(e["rows"] for e in files)
-    for _ in range(_MAX_COMMIT_RETRIES):
-        parent = current_snapshot_id(table)
-        if parent is None:
-            manifests, parent_rows = [], 0
-        else:
-            cur = load_snapshot(table, parent)
-            manifests = list(cur.manifests)
-            parent_rows = cur.summary.get("total_rows", 0)
-        if mode == "overwrite":
-            manifests, parent_rows = [], 0
-        sid = (parent or 0) + 1
-        snap = Snapshot(
-            snapshot_id=sid,
-            parent_id=parent,
-            operation=mode,
-            manifests=manifests
-            + [{"path": manifest_rel, "seq": sid, "kind": "data"}],
-            summary={
-                "added_files": len(files),
-                "added_rows": added_rows,
-                "total_rows": parent_rows + added_rows,
-            },
-        )
-        try:
-            # O_EXCL create = the atomic swap; loser rebases and retries
-            fd = os.open(
-                _snap_path(table, snap.snapshot_id),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-            )
-            with os.fdopen(fd, "w") as f:
-                f.write(snap.to_json())
-            return snap
-        except FileExistsError:
-            continue  # concurrent commit won; rebase on the new current
-    raise RuntimeError(
-        f"commit to {table} lost {_MAX_COMMIT_RETRIES} optimistic races"
-    )
+    new append snapshot — the zero-copy half of :func:`snapshot_write`,
+    and the primitive the fan-out writer uses: one partitioned Spark
+    write produces every sink's files, then each sink table commits its
+    own directory with pure metadata work (no data rewrite, exactly
+    Iceberg's add-files path).  With ``fence_id`` the commit is
+    batch-fenced (see :func:`streaming_sink`): a replayed batch returns
+    None and its files are removed."""
+    return _add_files(table, commit_dir, "append", schema_json, fence_id)
 
 
 # ---------------------------------------------------------------------------
@@ -528,21 +580,18 @@ def table_history(spark: SparkSession, table: str) -> DataFrame:
     (Iceberg's ``table.history()`` twin)."""
     rows = []
     sid = current_snapshot_id(table)
-    meta = os.path.join(table, _META)
-    for f in sorted(os.listdir(meta)):
-        if f.startswith("v") and f.endswith(".json"):
-            s = load_snapshot(table, int(f[1:-5]))
-            rows.append(
-                (
-                    s.snapshot_id,
-                    s.parent_id,
-                    s.operation,
-                    len(s.manifests),
-                    s.summary.get("added_rows", 0),
-                    s.summary.get("total_rows", 0),
-                    s.snapshot_id == sid,
-                )
+    for s in (load_snapshot(table, i) for i in _snapshot_ids(table)):
+        rows.append(
+            (
+                s.snapshot_id,
+                s.parent_id,
+                s.operation,
+                len(s.manifests),
+                s.summary.get("added_rows", 0),
+                s.summary.get("total_rows", 0),
+                s.snapshot_id == sid,
             )
+        )
     return spark.createDataFrame(
         rows,
         "snapshot_id int, parent_id int, operation string,"
@@ -561,15 +610,10 @@ def expire_snapshots(table: str, keep_last: int = 1) -> dict[str, int]:
     ``expireSnapshots`` maintenance pass.  Reachability is decided
     from metadata alone, so orphans from crashed writers are also
     collected.  Returns deletion counts."""
-    cur = current_snapshot_id(table)
-    if cur is None:
+    all_sids = _snapshot_ids(table)
+    if not all_sids:
         return {"snapshots_removed": 0, "manifests_removed": 0, "data_files_removed": 0}
     meta = os.path.join(table, _META)
-    all_sids = sorted(
-        int(f[1:-5])
-        for f in os.listdir(meta)
-        if f.startswith("v") and f.endswith(".json")
-    )
     keep_sids = set(all_sids[-keep_last:])
     live_manifests: set[str] = set()
     live_files: set[str] = set()
@@ -627,30 +671,9 @@ def stage_write(df: "DataFrame", table: str) -> str:
     crash mid-audit) leaves only unreferenced files, which
     :func:`expire_snapshots` collects.
     """
-    os.makedirs(os.path.join(table, _META), exist_ok=True)
-    commit_dir = os.path.join(_DATA, f"commit-{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(os.path.join(table, commit_dir))
-    files = []
-    abs_dir = os.path.join(table, commit_dir)
-    for f in sorted(os.listdir(abs_dir)):
-        if not f.endswith(".parquet"):
-            continue
-        rel = os.path.join(commit_dir, f)
-        entry = {"path": rel}
-        entry.update(_file_stats(os.path.join(table, rel)))
-        files.append(entry)
-    manifest_rel = os.path.join(_META, f"m-{uuid.uuid4().hex}.json")
-    with open(os.path.join(table, manifest_rel), "w") as f:
-        json.dump(
-            {
-                "files": files,
-                "added_rows": sum(e["rows"] for e in files),
-                "schema": df.schema.json(),
-                "staged": True,
-            },
-            f,
-        )
-    return manifest_rel
+    return _write_manifest(
+        table, _write_data(df, table), schema=df.schema.json(), staged=True
+    )[0]
 
 
 def read_staged(spark: SparkSession, table: str, token: str) -> DataFrame:
@@ -668,43 +691,12 @@ def publish_staged(table: str, token: str) -> Snapshot:
     :func:`snapshot_write`; the data was already written at stage
     time, so publish is a pure metadata operation (O(1) I/O)."""
     m = _load_manifest(table, token)
-    added_rows = m["added_rows"]
-    n_files = len(m["files"])
-    for _ in range(_MAX_COMMIT_RETRIES):
-        parent = current_snapshot_id(table)
-        if parent is None:
-            manifests, parent_rows = [], 0
-        else:
-            cur = load_snapshot(table, parent)
-            manifests = list(cur.manifests)
-            parent_rows = cur.summary.get("total_rows", 0)
-        sid = (parent or 0) + 1
-        snap = Snapshot(
-            snapshot_id=sid,
-            parent_id=parent,
-            operation="append",
-            manifests=manifests
-            + [{"path": token, "seq": sid, "kind": "data"}],
-            summary={
-                "added_files": n_files,
-                "added_rows": added_rows,
-                "total_rows": parent_rows + added_rows,
-                "wap": True,
-            },
-        )
-        try:
-            fd = os.open(
-                _snap_path(table, snap.snapshot_id),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-            )
-            with os.fdopen(fd, "w") as f:
-                f.write(snap.to_json())
-            return snap
-        except FileExistsError:
-            continue
-    raise RuntimeError(
-        f"publish to {table} lost {_MAX_COMMIT_RETRIES} optimistic races"
-    )
+    summary = {
+        "added_files": len(m["files"]),
+        "added_rows": m["added_rows"],
+        "wap": True,
+    }
+    return _commit(table, "append", token, summary, None)
 
 
 def abort_staged(table: str, token: str) -> int:
@@ -750,66 +742,19 @@ def equality_delete(
     """
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
-    os.makedirs(os.path.join(table, _META), exist_ok=True)
-    commit_dir = os.path.join(_DATA, f"commit-{uuid.uuid4().hex}")
-    keys_df.select(*key_cols).distinct().write.mode("overwrite").parquet(
-        os.path.join(table, commit_dir)
+    manifest_rel, man = _write_manifest(
+        table,
+        _write_data(keys_df.select(*key_cols).distinct(), table),
+        added_rows=0,
+        key_cols=list(key_cols),
+        kind="eqdelete",
     )
-    files = []
-    abs_dir = os.path.join(table, commit_dir)
-    for f in sorted(os.listdir(abs_dir)):
-        if not f.endswith(".parquet"):
-            continue
-        rel = os.path.join(commit_dir, f)
-        entry = {"path": rel}
-        entry.update(_file_stats(os.path.join(table, rel)))
-        files.append(entry)
-    manifest_rel = os.path.join(_META, f"m-{uuid.uuid4().hex}.json")
-    with open(os.path.join(table, manifest_rel), "w") as f:
-        json.dump(
-            {
-                "files": files,
-                "added_rows": 0,
-                "key_cols": list(key_cols),
-                "kind": "eqdelete",
-            },
-            f,
-        )
-    n_keys = sum(e["rows"] for e in files)
-    for _ in range(_MAX_COMMIT_RETRIES):
-        parent = current_snapshot_id(table)
-        if parent is None:
-            raise FileNotFoundError(
-                f"cannot delete from empty table {table}"
-            )
-        cur = load_snapshot(table, parent)
-        sid = parent + 1
-        snap = Snapshot(
-            snapshot_id=sid,
-            parent_id=parent,
-            operation="eqdelete",
-            manifests=list(cur.manifests)
-            + [{"path": manifest_rel, "seq": sid, "kind": "eqdelete"}],
-            summary={
-                "added_files": 0,
-                "added_rows": 0,
-                "delete_keys": n_keys,
-                "total_rows": cur.summary.get("total_rows", 0),
-            },
-        )
-        try:
-            fd = os.open(
-                _snap_path(table, sid),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-            )
-            with os.fdopen(fd, "w") as f:
-                f.write(snap.to_json())
-            return snap
-        except FileExistsError:
-            continue
-    raise RuntimeError(
-        f"delete on {table} lost {_MAX_COMMIT_RETRIES} optimistic races"
-    )
+    summary = {
+        "added_files": 0,
+        "added_rows": 0,
+        "delete_keys": sum(e["rows"] for e in man["files"]),
+    }
+    return _commit(table, "eqdelete", manifest_rel, summary, None)
 
 
 def rewrite_compact(spark: SparkSession, table: str) -> Snapshot:
@@ -833,7 +778,7 @@ class IncrementalConsumer:
     the cursor in the lake, not in a broker).
 
     Protocol (at-least-once delivery; exactly-once OUTPUT when the
-    caller's sink is idempotent, e.g. ``route.fanout_write``'s
+    caller's sink is idempotent, e.g. ``stream.run_fanout_stream``'s
     (batch, sink) dynamic-overwrite or another catalog table keyed by
     ``to_id``):
 
@@ -893,10 +838,13 @@ class IncrementalConsumer:
 def streaming_sink(table: str):
     """A ``foreachBatch`` function committing each micro-batch as an
     append snapshot with **batch-id fencing**: the epoch id is stored
-    in the snapshot summary, and a replayed batch (restart from an
-    uncommitted offset — Structured Streaming's at-least-once
-    foreachBatch contract) whose id is ≤ the newest committed fence is
-    skipped, making the catalog append exactly-once.
+    in the snapshot summary by the same O_EXCL create that commits the
+    batch, and a replayed batch (restart from an uncommitted offset —
+    Structured Streaming's at-least-once foreachBatch contract) whose
+    id is ≤ the newest committed fence is skipped, making the catalog
+    append exactly-once.  A crash anywhere in the commit leaves the
+    batch either absent (the replay commits it) or present with its
+    fence (the replay skips it).
 
     The fence only needs the LATEST committed id per table because
     Structured Streaming replays batches in order.  Usage::
@@ -909,17 +857,12 @@ def streaming_sink(table: str):
     """
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        cur = current_snapshot_id(table)
-        if cur is not None:
-            last = load_snapshot(table, cur).summary.get("stream_batch_id")
-            if last is not None and batch_id <= last:
-                return  # replayed batch: already durable, skip
-        snap = snapshot_write(batch_df, table, mode="append")
-        # stamp the fence post-commit: rewrite THIS snapshot's summary
-        # (same file, owned by us — no concurrent writer holds v<id>)
-        snap.summary["stream_batch_id"] = batch_id
-        with open(_snap_path(table, snap.snapshot_id), "w") as f:
-            f.write(snap.to_json())
+        commit_existing_files(
+            table,
+            _write_data(batch_df, table),
+            batch_df.schema.json(),
+            fence_id=batch_id,
+        )
 
     return _sink
 

@@ -576,6 +576,81 @@ def test_fanout_crash_mid_commit_resumes_with_fence(
         assert cat.current_snapshot_id(t) == 1  # exactly one commit each
 
 
+def _crash_on_snapshot_writes(monkeypatch):
+    """Make every write-mode ``open`` of a snapshot file ``v<N>.json``
+    raise, as a crash at that point of a commit would."""
+    import builtins
+
+    real_open = builtins.open
+
+    def crashing_open(file, mode="r", *a, **kw):
+        name = os.path.basename(str(file))
+        if (
+            set(mode) & set("wax+")
+            and name.startswith("v")
+            and name.endswith(".json")
+        ):
+            raise OSError(f"simulated crash writing {name}")
+        return real_open(file, mode, *a, **kw)
+
+    monkeypatch.setattr(builtins, "open", crashing_open)
+
+
+def test_streaming_sink_fence_survives_commit_crash(
+    spark, tmp_path, monkeypatch
+):
+    """Batch 1 crashes in its commit, and Structured Streaming replays
+    it (its offset was never committed): the table must hold batch 1
+    exactly once.  A fence written by a second write after the commit
+    is lost in that crash, and the replay appends the batch again."""
+    import contextlib
+
+    table = str(tmp_path / "fenced")
+    sink = cat.streaming_sink(table)
+
+    def batch(i):
+        return spark.createDataFrame([(i, 0), (i, 1)], "batch int, k int")
+
+    sink(batch(0), 0)
+    with monkeypatch.context() as m, contextlib.suppress(OSError):
+        _crash_on_snapshot_writes(m)
+        sink(batch(1), 1)
+    sink(batch(1), 1)  # the replay
+    assert cat.read_snapshot(spark, table).count() == 4
+    assert cat.current_snapshot_id(table) == 2
+    assert cat.load_snapshot(table).summary["stream_batch_id"] == 1
+
+
+def test_streaming_fanout_fence_survives_commit_crash(
+    spark, tmp_path, monkeypatch
+):
+    """The per-sink twin: batch 1 crashes in its first sink's commit,
+    then the replay must leave every sink table with each of its rows
+    exactly once."""
+    import contextlib
+
+    from gclog_parser_spark.operators.route import streaming_fanout_sink
+
+    base = str(tmp_path / "sinks")
+    sink = streaming_fanout_sink(base)
+
+    def batch(i):
+        return spark.createDataFrame(
+            [(i, "G1"), (i, "G1"), (i, "ZGC")], "batch int, family string"
+        )
+
+    sink(batch(0), 0)
+    with monkeypatch.context() as m, contextlib.suppress(OSError):
+        _crash_on_snapshot_writes(m)
+        sink(batch(1), 1)
+    sink(batch(1), 1)  # the replay
+    got = {
+        s: cat.read_snapshot(spark, os.path.join(base, s)).count()
+        for s in ("G1", "ZGC")
+    }
+    assert got == {"G1": 4, "ZGC": 2}
+
+
 def test_append_rebases_over_concurrent_delete(
     spark, tmp_path, events, monkeypatch
 ):

@@ -132,7 +132,9 @@ def test_verified_pairs_filter_lucky_bands(spark):
 
 def test_simhash_pairs_banding_matches_bruteforce(spark):
     """Pigeonhole banding must lose NO pair with hamming <= bands-1:
-    compare against the brute-force popcount over all pairs."""
+    compare against the brute-force popcount over all 32-bit pairs.
+    Docs 24 and 25 differ only in bit 18 of their simhash, so a 16-bit
+    simhash would report them at hamming 0."""
     import itertools
 
     import pyspark.sql.functions as F
@@ -145,7 +147,7 @@ def test_simhash_pairs_banding_matches_bruteforce(spark):
     base = "spark table scan merge join filter sort window state "
     rows = [
         (i, base * 3 + f"tail{i % 4} extra{i % 2}") for i in range(24)
-    ]
+    ] + [(24, base + "alt0"), (25, base + "alt70")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
     got = {

@@ -117,24 +117,38 @@ def test_empty_cells_keep_previous_centroid(spark):
 
 
 def test_pq_np_assigner_trains_identical_codebooks(spark, sf_dir):
-    """Training assigns with the Arrow int64 UDF (`_pq_assign_np`),
-    encoding with the literal-argmin expression (`_pq_assign_col`, the
-    shape the DuckDB oracle mirrors).  On a trained codebook both must
-    give every vector the SAME code in every subspace (integer ticks,
-    HALF_UP replication, lowest cell on ties) — otherwise the
-    codebooks pq_train converges to are not the ones pq_encode
-    applies."""
-    from gclog_parser_spark.operators.similarity import _pq_assign_np
+    """Every code pq_encode gives on a trained codebook equals a
+    brute-force argmin in plain Python integers: components quantized
+    HALF_UP to ticks, squared L2 per subspace, the lowest cell on ties.
+    Training assigns with the same Arrow UDF, so this also pins the
+    codes pq_train converges on."""
+    from decimal import ROUND_HALF_UP, Decimal
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cents = pq_train(emb, iters=2)
-    udf = _pq_assign_np(cents, PQ_M, 64 // PQ_M)
+    sub = 64 // PQ_M
+
+    def tick(v):
+        x = Decimal(repr(float(v) * PQ_TICKS))
+        return int(x.quantize(Decimal(1), rounding=ROUND_HALF_UP))
+
+    want = {}
+    for r in emb.select("vec_id", "embedding").collect():
+        t = [tick(v) for v in r["embedding"]]
+        want[r["vec_id"]] = [
+            min(
+                range(PQ_KS),
+                key=lambda c: (
+                    sum(
+                        (t[m * sub + i] - cents[m][c][i]) ** 2
+                        for i in range(sub)
+                    ),
+                    c,
+                ),
+            )
+            for m in range(PQ_M)
+        ]
     got = {
-        r["vec_id"]: list(r["a"])
-        for r in emb.select("vec_id", udf(F.col("embedding")).alias("a"))
-        .collect()
-    }
-    want = {
         r["vec_id"]: [r[f"code_{m}"] for m in range(PQ_M)]
         for r in pq_encode(emb, cents).collect()
     }
