@@ -13,7 +13,12 @@ DuckDB SQL (gclog_parser_spark/oracle.py).
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
+import zlib
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
@@ -26,6 +31,21 @@ from gclog_parser_spark.operators.enrich import explode_region_deltas
 from gclog_parser_spark.operators.parse import parse_events
 from gclog_parser_spark.operators.rates import pause_ticks, with_rates
 from gclog_parser_spark.operators.route import with_sink
+
+
+@functools.cache
+def _fixture_root() -> str:
+    root = tempfile.mkdtemp(prefix="gps_fixtures_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def _fixture_dir(kind: str, sf_dir: str) -> str:
+    """Where this process builds its ``kind`` table of ``sf_dir``: one
+    per-process root under the temp dir, removed at exit, so a fixture
+    is built once per process and never outlives it."""
+    key = zlib.crc32(sf_dir.encode())
+    return os.path.join(_fixture_root(), f"{kind}_{key}")
 
 
 def _events(spark: SparkSession, sf_dir: str, mode: str = "gc_line"):
@@ -406,9 +426,6 @@ def q_gc_stream_cusum(spark, sf_dir):
     JVM (streaming/stateful.stateful_cusum) — value-checked against
     the SAME DuckDB oracle as the batch window operator, so stream
     and batch are interchangeable tick-for-tick."""
-    import shutil
-    import tempfile
-
     from gclog_parser_spark.streaming.stateful import stateful_cusum
     from gclog_parser_spark.streaming.stream import stream_pages
 
@@ -447,9 +464,6 @@ def q_gc_stream_jitter(spark, sf_dir):
     (streaming/stateful.stateful_jitter) — whole-log-per-page batches
     make that exactly one row per url, value-checked against the SAME
     DuckDB oracle as the batch operator (gc_pause_jitter)."""
-    import shutil
-    import tempfile
-
     from gclog_parser_spark.streaming.stateful import stateful_jitter
     from gclog_parser_spark.streaming.stream import stream_pages
 
@@ -524,9 +538,6 @@ def q_gc_stream_slo_burn(spark, sf_dir):
     windows emit when they close.  Value-checked against the SAME
     DuckDB oracle as the batch operator (oracle.slo_burn_sql), so the
     nightly scan and the live alert feed are interchangeable."""
-    import shutil
-    import tempfile
-
     from gclog_parser_spark.streaming.stateful import stateful_slo_burn
     from gclog_parser_spark.streaming.stream import stream_pages
 
@@ -642,9 +653,6 @@ def q_gc_stream_hourly(spark, sf_dir):
     (availableNow file source) → parse → watermarked per-(sink, hour)
     windowed aggregate, compared against the SAME DuckDB oracle as the
     batch aggregate — stream results must equal batch results."""
-    import shutil
-    import tempfile
-
     from gclog_parser_spark.streaming.stream import run_hourly_stream
 
     base = tempfile.mkdtemp(prefix="gps_stream_")
@@ -852,28 +860,24 @@ def _bucketed_pair(spark, sf_dir):
     """Bucketed twins of lineitem/orders (8 buckets on the orderkey,
     sorted within buckets), created once per session per sf_dir via
     saveAsTable — the layout investment a 100 TB warehouse makes so
-    every subsequent orderkey join is exchange-free."""
-    h = abs(hash(sf_dir)) % 10**8
-    lt, ot = f"gps_bkt_lineitem_{h}", f"gps_bkt_orders_{h}"
-    if not spark.catalog.tableExists(lt):
-        (
-            spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-            .write.bucketBy(8, "l_orderkey")
-            .sortBy("l_orderkey")
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(lt)
-        )
-    if not spark.catalog.tableExists(ot):
-        (
-            spark.read.parquet(f"{sf_dir}/orders.parquet")
-            .write.bucketBy(8, "o_orderkey")
-            .sortBy("o_orderkey")
-            .mode("overwrite")
-            .format("parquet")
-            .saveAsTable(ot)
-        )
-    return spark.table(lt), spark.table(ot)
+    every subsequent orderkey join is exchange-free.  Their files live
+    in the process's fixture root, not the warehouse dir."""
+    out = []
+    for table, key in (("lineitem", "l_orderkey"), ("orders", "o_orderkey")):
+        path = _fixture_dir(f"gps_bkt_{table}", sf_dir)
+        name = os.path.basename(path)
+        if not spark.catalog.tableExists(name):
+            (
+                spark.read.parquet(f"{sf_dir}/{table}.parquet")
+                .write.bucketBy(8, key)
+                .sortBy(key)
+                .mode("overwrite")
+                .format("parquet")
+                .option("path", path)
+                .saveAsTable(name)
+            )
+        out.append(spark.table(name))
+    return tuple(out)
 
 
 def q_rel_bucketed_join(spark, sf_dir):
@@ -1187,9 +1191,6 @@ def q_rel_stream_sliding(spark, sf_dir):
     aggregate → memory sink, value-checked against the SAME DuckDB
     oracle as the batch operator (stream results must equal batch
     results)."""
-    import shutil
-    import tempfile
-
     from gclog_parser_spark.streaming.stream import run_sliding_stream
 
     base = tempfile.mkdtemp(prefix="gps_sliding_")
@@ -1217,9 +1218,6 @@ def q_rel_stream_sessions(spark, sf_dir):
     session implementations (Spark batch session_window, Spark
     streaming session-state merge, DuckDB lag+running-sum) must all
     agree."""
-    import shutil
-    import tempfile
-
     from gclog_parser_spark.streaming.stream import run_session_stream
 
     base = tempfile.mkdtemp(prefix="gps_sessions_")
@@ -1670,9 +1668,6 @@ def q_corpus_compact(spark, sf_dir):
     it back — the oracle checks the rewrite is content-preserving
     (SELECT * FROM documents), the layout properties are pinned in
     tests/test_layout.py."""
-    import shutil
-    import tempfile
-
     from gclog_parser_spark.operators.layout import compact_table
 
     base = tempfile.mkdtemp(prefix="gps_compact_")
@@ -1735,9 +1730,6 @@ def q_rel_stream_upsert(spark, sf_dir):
     the SAME one-shot MERGE oracle as the batch twin rel_cdc_upsert —
     sequential chronological batches must compose to exactly the
     one-shot result (streaming/stream.py::run_cdc_apply_stream)."""
-    import shutil
-    import tempfile
-
     from gclog_parser_spark.operators.cdc import latest_snapshot
     from gclog_parser_spark.sources import catalog as cat
     from gclog_parser_spark.streaming.stream import run_cdc_apply_stream
@@ -1788,9 +1780,6 @@ def q_dedup_stream_incremental(spark, sf_dir):
     Output = every doc's (batch_idx, keep) verdict; the oracle
     re-derives the same greedy sequential semantics from the full
     banded pair set in staged SQL."""
-    import shutil
-    import tempfile
-
     from gclog_parser_spark.streaming.stream import (
         run_incremental_dedup_stream,
     )
@@ -1847,9 +1836,6 @@ def q_rel_stream_join(spark, sf_dir):
     inner-joined per user within a 30-minute lag bound; append-mode
     memory sink.  Value-checked against the SAME DuckDB oracle as the
     batch twin (stream results must equal batch results)."""
-    import shutil
-    import tempfile
-
     from gclog_parser_spark.streaming.stream import run_attribution_stream
 
     base = tempfile.mkdtemp(prefix="gps_attrib_")
@@ -2171,9 +2157,6 @@ def q_stream_dedup(spark, sf_dir):
     The watermark (48 h) covers the whole event-time span so no sighting
     is late-dropped — which makes the hash set deterministic regardless
     of file→batch packing."""
-    import shutil
-    import tempfile
-
     from gclog_parser_spark.streaming.stream import run_dedup_stream
 
     base = tempfile.mkdtemp(prefix="gps_sdedup_")
@@ -2498,9 +2481,6 @@ def q_gc_stream_source_counts(spark, sf_dir):
     idempotent sink.  The oracle runs the SAME SQL GC parser the page
     corpus is checked with, pointed at the files via DuckDB read_text —
     transport + parse verified together."""
-    import shutil
-    import tempfile
-
     from gclog_parser_spark.operators.parse import parse_events
     from gclog_parser_spark.sources.datasource import register
 
@@ -2885,9 +2865,6 @@ def q_rel_stream_hll(spark, sf_dir):
     the SAME DuckDB oracle value-checks both — the always-on
     distinct-users dashboard whose state is groups × 16 rows however
     many events stream through."""
-    import shutil
-    import tempfile
-
     from gclog_parser_spark.operators.aggregate import hll_distinct
     from gclog_parser_spark.streaming.stream import run_hll_stream
 
@@ -2934,9 +2911,6 @@ def q_rel_stream_late(spark, sf_dir):
     threshold sequence, a surviving late row always finds its window
     state still live — no duplicate emission, so the audit is exact
     (streaming/stream.py::run_late_audit_stream)."""
-    import shutil
-    import tempfile
-
     from gclog_parser_spark.streaming.stream import run_late_audit_stream
 
     base = tempfile.mkdtemp(prefix="gps_late_")
@@ -3334,13 +3308,10 @@ def q_rel_zorder_scan(spark, sf_dir):
     oracle is the plain BETWEEN filter, proving the clustered rewrite
     + manifest pruning is content-exact.  Both-column skip counts are
     pinned in tests/test_layout.py."""
-    import tempfile
-
     from gclog_parser_spark.operators.layout import zorder_table
     from gclog_parser_spark.sources import catalog as cat
 
-    key = f"gps_zorder_{abs(hash(sf_dir)) % 10**8}"
-    base = os.path.join(tempfile.gettempdir(), key)
+    base = _fixture_dir("gps_zorder", sf_dir)
     if cat.current_snapshot_id(base) is None:
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
         zorder_table(ev, base, ["event_id", "user_id"], n_files=8)
@@ -3610,13 +3581,9 @@ def q_snap_eq_delete(spark, sf_dir):
     (no data rewrite), v3 = re-insert a deterministic slice of the
     deleted users.  The read must show survivors + re-inserts only —
     the oracle re-derives that state with plain WHERE/UNION ALL."""
-    import shutil
-    import tempfile
-
     from gclog_parser_spark.sources import catalog as cat
 
-    key = f"gps_mor_{abs(hash(sf_dir)) % 10**8}"
-    base = os.path.join(tempfile.gettempdir(), key)
+    base = _fixture_dir("gps_mor", sf_dir)
     if cat.current_snapshot_id(base) != 3:
         shutil.rmtree(base, ignore_errors=True)
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -3642,14 +3609,10 @@ def q_snap_diff(spark, sf_dir):
     ``table_diff(read @snapshot 1, read @current)`` must classify every
     key as only_left / changed / only_right exactly as the oracle
     derives from the commit rules directly."""
-    import shutil
-    import tempfile
-
     from gclog_parser_spark.operators.quality import table_diff
     from gclog_parser_spark.sources import catalog as cat
 
-    key = f"gps_sdiff_{abs(hash(sf_dir)) % 10**8}"
-    base = os.path.join(tempfile.gettempdir(), key)
+    base = _fixture_dir("gps_sdiff", sf_dir)
     if cat.current_snapshot_id(base) != 3:
         shutil.rmtree(base, ignore_errors=True)
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -3688,8 +3651,6 @@ def q_gc_catalog_fanout(spark, sf_dir):
     aggregate — the result must equal the relational per-collector
     rollup the oracle computes directly, proving routed-row equality
     through the storage layer."""
-    import tempfile
-
     from gclog_parser_spark.operators.parse import parse_events
     from gclog_parser_spark.operators.route import (
         fanout_commit_catalog,
@@ -3697,8 +3658,7 @@ def q_gc_catalog_fanout(spark, sf_dir):
     )
     from gclog_parser_spark.sources import catalog as cat
 
-    key = f"gps_fanout_{abs(hash(sf_dir)) % 10**8}"
-    base = os.path.join(tempfile.gettempdir(), key)
+    base = _fixture_dir("gps_fanout", sf_dir)
     if not os.path.isdir(base):
         events = with_sink(
             parse_events(pages_from_documents(spark, sf_dir))
@@ -3976,9 +3936,6 @@ def q_snap_wap_publish(spark, sf_dir):
     STAGED rows only) → atomic publish; the read of the current
     snapshot must equal the full events table (oracle: SELECT * —
     WAP must be lossless when the audit passes)."""
-    import shutil
-    import tempfile
-
     from gclog_parser_spark.operators.quality import (
         dq_report,
         null_check,
@@ -3986,8 +3943,7 @@ def q_snap_wap_publish(spark, sf_dir):
     )
     from gclog_parser_spark.sources import catalog as cat
 
-    key = f"gps_wap_{abs(hash(sf_dir)) % 10**8}"
-    base = os.path.join(tempfile.gettempdir(), key)
+    base = _fixture_dir("gps_wap", sf_dir)
     if cat.current_snapshot_id(base) != 2:
         shutil.rmtree(base, ignore_errors=True)
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -4016,16 +3972,11 @@ def _snap_table(spark, sf_dir, tag: str, n_appends: int = 3) -> str:
     time-travel / incremental / pruning contract queries.  The split is
     pure modular arithmetic so DuckDB can express each snapshot's
     contents as a WHERE clause."""
-    import tempfile
-
     from gclog_parser_spark.sources import catalog as cat
 
-    key = f"gps_snap_{tag}_{abs(hash(sf_dir)) % 10**8}"
-    base = os.path.join(tempfile.gettempdir(), key)
+    base = _fixture_dir(f"gps_snap_{tag}", sf_dir)
     if cat.current_snapshot_id(base) == n_appends:
         return base
-    import shutil
-
     shutil.rmtree(base, ignore_errors=True)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     for i in range(n_appends):
@@ -4040,10 +3991,7 @@ def _dpp_table(spark, sf_dir) -> str:
     table of the events — the fixture for the dynamic-partition-pruning
     query.  Hive-style day=... directories, so partition pruning is a
     directory listing, not a data scan."""
-    import tempfile
-
-    key = f"gps_dpp_{abs(hash(sf_dir)) % 10**8}"
-    base = os.path.join(tempfile.gettempdir(), key)
+    base = _fixture_dir("gps_dpp", sf_dir)
     marker = os.path.join(base, "_SUCCESS")
     if not os.path.exists(marker):
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -4179,10 +4127,7 @@ def q_snap_prune_scan(spark, sf_dir):
     results."""
     from gclog_parser_spark.sources import catalog as cat
 
-    import tempfile
-
-    key = f"gps_snap_rng_{abs(hash(sf_dir)) % 10**8}"
-    base = os.path.join(tempfile.gettempdir(), key)
+    base = _fixture_dir("gps_snap_rng", sf_dir)
     if cat.current_snapshot_id(base) is None:
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
         hi = ev.agg(F.max("event_id")).first()[0]

@@ -14,6 +14,7 @@ Everything consumes/produces DataFrames; heavy lifting runs in
 WholeStageCodegen or Arrow-batched pandas — no per-row Python anywhere.
 """
 
+from gclog_parser_spark import _zipstamp  # noqa: F401  (installs its rule)
 from gclog_parser_spark.core import (  # noqa: F401
     parse_log,
     parse_with_heap_stats,

@@ -34,9 +34,11 @@ Scale notes (10^12-doc design point):
   files.  (Driver-side planning over file lists is what Iceberg's own
   planner does; at extreme file counts it distributes manifest reads —
   noted, out of sandbox scope.)
-* Commits use optimistic concurrency: the snapshot file is created
-  with O_EXCL; a loser re-reads the new current snapshot, rebases its
-  manifest list (appends compose; overwrites conflict), and retries —
+* Commits use optimistic concurrency: the snapshot JSON is written to
+  a temporary name and hard-linked to ``v<N>.json``, an exclusive
+  create that publishes the whole file or nothing; a loser re-reads
+  the new current snapshot, rebases its manifest list (appends
+  compose; overwrites conflict), and retries —
   the same protocol as Iceberg's atomic metadata swap.
 * Readers never list data directories; the manifest IS the truth.  A
   crashed writer leaves orphan files that no snapshot references;
@@ -50,6 +52,7 @@ of the north-rule superset, not reference parity.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -346,7 +349,9 @@ def _commit(
     """The one optimistic commit: snapshot parent+1 adds the manifest
     ``manifest_rel`` to the parent's manifest list (an overwrite starts
     an empty list, an eqdelete needs a parent), and its ``v<N>.json`` is
-    created with O_EXCL — the atomic swap.  A loser re-reads the parent
+    written to a temporary name and ``os.link``-ed into place — the
+    atomic swap: the link fails on an existing name, and a reader or a
+    crash never sees a partial file.  A loser re-reads the parent
     through :func:`current_snapshot_id`, rebases, and retries.
 
     ``fence_id`` is a stream batch id.  It is written into the summary
@@ -380,14 +385,17 @@ def _commit(
         )
         if fence_id is not None:
             snap.summary["stream_batch_id"] = fence_id
+        path = _snap_path(table, sid)
+        tmp = f"{path}.tmp.{uuid.uuid4().hex}"
         try:
-            fd = os.open(
-                _snap_path(table, sid), os.O_CREAT | os.O_EXCL | os.O_WRONLY
-            )
+            with open(tmp, "w") as f:
+                f.write(snap.to_json())
+            os.link(tmp, path)
         except FileExistsError:
             continue  # a concurrent commit won; rebase on the new current
-        with os.fdopen(fd, "w") as f:
-            f.write(snap.to_json())
+        finally:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
         return snap
     raise RuntimeError(
         f"{operation} on {table} lost {_MAX_COMMIT_RETRIES} optimistic races"
@@ -838,8 +846,8 @@ class IncrementalConsumer:
 def streaming_sink(table: str):
     """A ``foreachBatch`` function committing each micro-batch as an
     append snapshot with **batch-id fencing**: the epoch id is stored
-    in the snapshot summary by the same O_EXCL create that commits the
-    batch, and a replayed batch (restart from an uncommitted offset —
+    in the snapshot summary by the same exclusive create that commits
+    the batch, and a replayed batch (restart from an uncommitted offset —
     Structured Streaming's at-least-once foreachBatch contract) whose
     id is ≤ the newest committed fence is skipped, making the catalog
     append exactly-once.  A crash anywhere in the commit leaves the

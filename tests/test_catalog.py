@@ -577,8 +577,9 @@ def test_fanout_crash_mid_commit_resumes_with_fence(
 
 
 def _crash_on_snapshot_writes(monkeypatch):
-    """Make every write-mode ``open`` of a snapshot file ``v<N>.json``
-    raise, as a crash at that point of a commit would."""
+    """Make every write-mode ``open`` of a snapshot file ``v<N>.json``,
+    or of the temporary file it is published from, raise, as a crash at
+    that point of a commit would."""
     import builtins
 
     real_open = builtins.open
@@ -588,7 +589,7 @@ def _crash_on_snapshot_writes(monkeypatch):
         if (
             set(mode) & set("wax+")
             and name.startswith("v")
-            and name.endswith(".json")
+            and ".json" in name
         ):
             raise OSError(f"simulated crash writing {name}")
         return real_open(file, mode, *a, **kw)
@@ -603,8 +604,6 @@ def test_streaming_sink_fence_survives_commit_crash(
     it (its offset was never committed): the table must hold batch 1
     exactly once.  A fence written by a second write after the commit
     is lost in that crash, and the replay appends the batch again."""
-    import contextlib
-
     table = str(tmp_path / "fenced")
     sink = cat.streaming_sink(table)
 
@@ -612,7 +611,7 @@ def test_streaming_sink_fence_survives_commit_crash(
         return spark.createDataFrame([(i, 0), (i, 1)], "batch int, k int")
 
     sink(batch(0), 0)
-    with monkeypatch.context() as m, contextlib.suppress(OSError):
+    with monkeypatch.context() as m, pytest.raises(OSError):
         _crash_on_snapshot_writes(m)
         sink(batch(1), 1)
     sink(batch(1), 1)  # the replay
@@ -627,8 +626,6 @@ def test_streaming_fanout_fence_survives_commit_crash(
     """The per-sink twin: batch 1 crashes in its first sink's commit,
     then the replay must leave every sink table with each of its rows
     exactly once."""
-    import contextlib
-
     from gclog_parser_spark.operators.route import streaming_fanout_sink
 
     base = str(tmp_path / "sinks")
@@ -640,7 +637,7 @@ def test_streaming_fanout_fence_survives_commit_crash(
         )
 
     sink(batch(0), 0)
-    with monkeypatch.context() as m, contextlib.suppress(OSError):
+    with monkeypatch.context() as m, pytest.raises(OSError):
         _crash_on_snapshot_writes(m)
         sink(batch(1), 1)
     sink(batch(1), 1)  # the replay
@@ -649,6 +646,32 @@ def test_streaming_fanout_fence_survives_commit_crash(
         for s in ("G1", "ZGC")
     }
     assert got == {"G1": 4, "ZGC": 2}
+
+
+def test_snapshot_publish_survives_crash_mid_write(
+    spark, tmp_path, events, monkeypatch
+):
+    """A crash while a commit writes its snapshot JSON publishes
+    nothing: the table stays at its parent, readable, and the next
+    commit takes the same id.  An exclusive create followed by a
+    separate write leaves an empty ``v<N>.json`` behind, which then
+    names the current snapshot and fails every later read and commit."""
+    table, _ = _mk_table(tmp_path, events, n=1)
+    n = events.count()
+    part = events.limit(5)
+
+    def crash(self):
+        raise OSError("simulated crash writing the snapshot")
+
+    with monkeypatch.context() as m, pytest.raises(OSError):
+        m.setattr(cat.Snapshot, "to_json", crash)
+        cat.snapshot_write(part, table, "append")
+    meta = os.listdir(os.path.join(table, "metadata"))
+    assert sorted(f for f in meta if f.startswith("v")) == ["v1.json"]
+    assert cat.current_snapshot_id(table) == 1
+    assert cat.read_snapshot(spark, table).count() == n
+    assert cat.snapshot_write(part, table, "append").snapshot_id == 2
+    assert cat.read_snapshot(spark, table).count() == n + 5
 
 
 def test_append_rebases_over_concurrent_delete(

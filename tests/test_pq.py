@@ -116,16 +116,12 @@ def test_empty_cells_keep_previous_centroid(spark):
     assert len(cents) == PQ_M and len(cents[0]) == PQ_KS
 
 
-def test_pq_np_assigner_trains_identical_codebooks(spark, sf_dir):
-    """Every code pq_encode gives on a trained codebook equals a
-    brute-force argmin in plain Python integers: components quantized
-    HALF_UP to ticks, squared L2 per subspace, the lowest cell on ties.
-    Training assigns with the same Arrow UDF, so this also pins the
-    codes pq_train converges on."""
+def _brute_codes(rows, cents):
+    """vec_id → codes by brute force in plain Python integers:
+    components quantized HALF_UP to ticks, squared L2 per subspace, the
+    lowest cell on ties."""
     from decimal import ROUND_HALF_UP, Decimal
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents = pq_train(emb, iters=2)
     sub = 64 // PQ_M
 
     def tick(v):
@@ -133,7 +129,7 @@ def test_pq_np_assigner_trains_identical_codebooks(spark, sf_dir):
         return int(x.quantize(Decimal(1), rounding=ROUND_HALF_UP))
 
     want = {}
-    for r in emb.select("vec_id", "embedding").collect():
+    for r in rows:
         t = [tick(v) for v in r["embedding"]]
         want[r["vec_id"]] = [
             min(
@@ -148,12 +144,50 @@ def test_pq_np_assigner_trains_identical_codebooks(spark, sf_dir):
             )
             for m in range(PQ_M)
         ]
-    got = {
+    return want
+
+
+def _codes(df):
+    return {
         r["vec_id"]: [r[f"code_{m}"] for m in range(PQ_M)]
-        for r in pq_encode(emb, cents).collect()
+        for r in df.collect()
     }
-    assert got == want
+
+
+def test_pq_np_assigner_trains_identical_codebooks(spark, sf_dir):
+    """Every code pq_encode gives on a trained codebook equals a
+    brute-force argmin in plain Python integers.  Training assigns with
+    the same Arrow UDF, so this also pins the codes pq_train converges
+    on.  No real vector lies within a tick of a cell tie, so hand-built
+    probes on a hand-built codebook check the two rules the data
+    cannot: HALF_UP ticks (away from zero at .5) and the lowest cell on
+    an exact tie."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    cents = pq_train(emb, iters=2)
+    got = _codes(pq_encode(emb, cents))
+    rows = emb.select("vec_id", "embedding").collect()
+    assert got == _brute_codes(rows, cents)
     assert len(got) == emb.count()
+
+    # every subspace: cells on its first component (ticks), rest 0
+    sub = 64 // PQ_M
+    cell_ticks = [
+        0, 15625, -31250, -62500, -15625, 10**6, 2 * 10**6, 3 * 10**6
+    ]
+    hand = [[[t] + [0] * (sub - 1) for t in cell_ticks]] * PQ_M
+    probes = {
+        1: 1 / 128,  # 7812.5 ticks -> 7813: cell 1 (7812 -> cell 0)
+        2: -1 / 128,  # -7812.5 -> -7813: cell 4 (-7812 -> cell 0)
+        3: -3 / 64,  # -46875: as near cell 2 as cell 3 -> 2
+    }
+    rows = [
+        (vid, [x if i % sub == 0 else 0.0 for i in range(64)])
+        for vid, x in probes.items()
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = _codes(pq_encode(df, hand))
+    assert got == {1: [1] * PQ_M, 2: [4] * PQ_M, 3: [2] * PQ_M}
+    assert got == _brute_codes(df.collect(), hand)
 
 
 def test_ivfpq_candidates_come_from_probe_cells(spark, sf_dir):
