@@ -40,6 +40,13 @@ def _fixture_root() -> str:
     return root
 
 
+def _scratch_dir(prefix: str) -> str:
+    """A fresh directory for one query's stream input, checkpoint or
+    rewrite, under this process's fixture root: it is removed at exit
+    with the root, so a query that raises leaves nothing behind."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_fixture_root())
+
+
 def _fixture_dir(kind: str, sf_dir: str) -> str:
     """Where this process builds its ``kind`` table of ``sf_dir``: one
     per-process root under the temp dir, removed at exit, so a fixture
@@ -429,7 +436,7 @@ def q_gc_stream_cusum(spark, sf_dir):
     from gclog_parser_spark.streaming.stateful import stateful_cusum
     from gclog_parser_spark.streaming.stream import stream_pages
 
-    base = tempfile.mkdtemp(prefix="gps_stream_")
+    base = _scratch_dir("gps_stream_")
     inp = f"{base}/pages"
     pages_from_documents(spark, sf_dir).repartition(3).write.parquet(inp)
     _STREAM_SEQ[0] += 1
@@ -450,7 +457,6 @@ def q_gc_stream_cusum(spark, sf_dir):
     if not q.awaitTermination(600):
         q.stop()
         raise RuntimeError("gc_stream_cusum: stream timed out (600 s)")
-    shutil.rmtree(base, ignore_errors=True)
     return spark.table(qname).select(
         "url", "event_idx", "pause_ticks", "cusum_ticks", "alarm"
     )
@@ -467,7 +473,7 @@ def q_gc_stream_jitter(spark, sf_dir):
     from gclog_parser_spark.streaming.stateful import stateful_jitter
     from gclog_parser_spark.streaming.stream import stream_pages
 
-    base = tempfile.mkdtemp(prefix="gps_stream_")
+    base = _scratch_dir("gps_stream_")
     inp = f"{base}/pages"
     pages_from_documents(spark, sf_dir).repartition(3).write.parquet(inp)
     _STREAM_SEQ[0] += 1
@@ -488,7 +494,6 @@ def q_gc_stream_jitter(spark, sf_dir):
     if not q.awaitTermination(600):
         q.stop()
         raise RuntimeError("gc_stream_jitter: stream timed out (600 s)")
-    shutil.rmtree(base, ignore_errors=True)
     return spark.table(qname).select(
         "url", "n_pauses", "mean_pause_ms", "var_pause_ms2",
         "stddev_pause_ms",
@@ -541,7 +546,7 @@ def q_gc_stream_slo_burn(spark, sf_dir):
     from gclog_parser_spark.streaming.stateful import stateful_slo_burn
     from gclog_parser_spark.streaming.stream import stream_pages
 
-    base = tempfile.mkdtemp(prefix="gps_stream_")
+    base = _scratch_dir("gps_stream_")
     inp = f"{base}/pages"
     pages_from_documents(spark, sf_dir).repartition(3).write.parquet(inp)
     _STREAM_SEQ[0] += 1
@@ -562,7 +567,6 @@ def q_gc_stream_slo_burn(spark, sf_dir):
     if not q.awaitTermination(600):
         q.stop()
         raise RuntimeError("gc_stream_slo_burn: stream timed out (600 s)")
-    shutil.rmtree(base, ignore_errors=True)
     return spark.table(qname).select(
         "url", "run_id", "win_start_s", "ticks_short", "ticks_long",
         "burn_short", "burn_long", "alarm",
@@ -655,7 +659,7 @@ def q_gc_stream_hourly(spark, sf_dir):
     batch aggregate — stream results must equal batch results."""
     from gclog_parser_spark.streaming.stream import run_hourly_stream
 
-    base = tempfile.mkdtemp(prefix="gps_stream_")
+    base = _scratch_dir("gps_stream_")
     inp = f"{base}/pages"
     pages_from_documents(spark, sf_dir).repartition(3).write.parquet(inp)
     _STREAM_SEQ[0] += 1
@@ -667,7 +671,6 @@ def q_gc_stream_hourly(spark, sf_dir):
         q.stop()
         raise RuntimeError("gc_stream_hourly: stream timed out (600 s)")
     # memory-sink rows live in the driver — the staging dir can go now
-    shutil.rmtree(base, ignore_errors=True)
     out = spark.table(qname)
     return out.select(
         "sink",
@@ -1193,7 +1196,7 @@ def q_rel_stream_sliding(spark, sf_dir):
     results)."""
     from gclog_parser_spark.streaming.stream import run_sliding_stream
 
-    base = tempfile.mkdtemp(prefix="gps_sliding_")
+    base = _scratch_dir("gps_sliding_")
     inp = f"{base}/events"
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     ev.repartition(3).write.parquet(inp)
@@ -1205,7 +1208,6 @@ def q_rel_stream_sliding(spark, sf_dir):
     if not q.awaitTermination(600):
         q.stop()
         raise RuntimeError("rel_stream_sliding: stream timed out (600 s)")
-    shutil.rmtree(base, ignore_errors=True)
     return spark.table(qname)
 
 
@@ -1220,7 +1222,7 @@ def q_rel_stream_sessions(spark, sf_dir):
     agree."""
     from gclog_parser_spark.streaming.stream import run_session_stream
 
-    base = tempfile.mkdtemp(prefix="gps_sessions_")
+    base = _scratch_dir("gps_sessions_")
     inp = f"{base}/events"
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     ev.repartition(3).write.parquet(inp)
@@ -1232,7 +1234,6 @@ def q_rel_stream_sessions(spark, sf_dir):
     if not q.awaitTermination(600):
         q.stop()
         raise RuntimeError("rel_stream_sessions: stream timed out (600 s)")
-    shutil.rmtree(base, ignore_errors=True)
     return spark.table(qname)
 
 
@@ -1670,15 +1671,12 @@ def q_corpus_compact(spark, sf_dir):
     tests/test_layout.py."""
     from gclog_parser_spark.operators.layout import compact_table
 
-    base = tempfile.mkdtemp(prefix="gps_compact_")
+    base = _scratch_dir("gps_compact_")
     docs = _docs(spark, sf_dir)
     compact_table(
         docs, base, partition_by=["lang"], sort_by=["doc_id"]
     )
-    out = spark.read.parquet(base).select(*docs.columns)
-    rows = out.collect()  # materialize before the dir is removed
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(rows, out.schema)
+    return spark.read.parquet(base).select(*docs.columns)
 
 
 def q_rel_cdc_latest(spark, sf_dir):
@@ -1734,7 +1732,7 @@ def q_rel_stream_upsert(spark, sf_dir):
     from gclog_parser_spark.sources import catalog as cat
     from gclog_parser_spark.streaming.stream import run_cdc_apply_stream
 
-    base = tempfile.mkdtemp(prefix="gps_cdcstream_")
+    base = _scratch_dir("gps_cdcstream_")
     table = f"{base}/tbl"
     inp = f"{base}/changes"
     os.makedirs(inp)
@@ -1768,7 +1766,6 @@ def q_rel_stream_upsert(spark, sf_dir):
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
     rows = out.collect()
-    shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, out.schema)
 
 
@@ -1785,7 +1782,7 @@ def q_dedup_stream_incremental(spark, sf_dir):
     )
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="gps_dedupstream_")
+    base = _scratch_dir("gps_dedupstream_")
     inp = f"{base}/batches"
     os.makedirs(inp)
     for i in range(3):
@@ -1812,7 +1809,6 @@ def q_dedup_stream_incremental(spark, sf_dir):
         F.coalesce(F.col("_k"), F.lit(False)).alias("keep"),
     )
     rows = out.collect()
-    shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, out.schema)
 
 
@@ -1838,7 +1834,7 @@ def q_rel_stream_join(spark, sf_dir):
     batch twin (stream results must equal batch results)."""
     from gclog_parser_spark.streaming.stream import run_attribution_stream
 
-    base = tempfile.mkdtemp(prefix="gps_attrib_")
+    base = _scratch_dir("gps_attrib_")
     inp = f"{base}/events"
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     ev.repartition(3).write.parquet(inp)
@@ -1850,7 +1846,6 @@ def q_rel_stream_join(spark, sf_dir):
     if not q.awaitTermination(600):
         q.stop()
         raise RuntimeError("rel_stream_join: stream timed out (600 s)")
-    shutil.rmtree(base, ignore_errors=True)
     return spark.table(qname)
 
 
@@ -2159,7 +2154,7 @@ def q_stream_dedup(spark, sf_dir):
     of file→batch packing."""
     from gclog_parser_spark.streaming.stream import run_dedup_stream
 
-    base = tempfile.mkdtemp(prefix="gps_sdedup_")
+    base = _scratch_dir("gps_sdedup_")
     pages = pages_from_documents(spark, sf_dir)
     recrawl = pages.withColumn(
         "url", F.concat(F.lit("recrawl/"), F.col("url"))
@@ -2183,7 +2178,6 @@ def q_stream_dedup(spark, sf_dir):
     rows = (
         spark.read.parquet(f"{base}/out").select("text_hash").distinct()
     ).collect()
-    shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, "text_hash string")
 
 
@@ -2485,7 +2479,7 @@ def q_gc_stream_source_counts(spark, sf_dir):
     from gclog_parser_spark.sources.datasource import register
 
     register(spark)
-    base = tempfile.mkdtemp(prefix="gps_srcstream_")
+    base = _scratch_dir("gps_srcstream_")
     logs = os.path.join(base, "logs")
     out = os.path.join(base, "out")
     os.makedirs(logs)
@@ -2549,7 +2543,6 @@ def q_gc_stream_source_counts(spark, sf_dir):
         )
     )
     rows = res.collect()
-    shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, res.schema)
 
 
@@ -2868,7 +2861,7 @@ def q_rel_stream_hll(spark, sf_dir):
     from gclog_parser_spark.operators.aggregate import hll_distinct
     from gclog_parser_spark.streaming.stream import run_hll_stream
 
-    base = tempfile.mkdtemp(prefix="gps_hll_")
+    base = _scratch_dir("gps_hll_")
     inp = f"{base}/events"
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     ev.repartition(4).write.parquet(inp)
@@ -2880,7 +2873,6 @@ def q_rel_stream_hll(spark, sf_dir):
     if not q.awaitTermination(600):
         q.stop()
         raise RuntimeError("rel_stream_hll: stream timed out (600 s)")
-    shutil.rmtree(base, ignore_errors=True)
     sk = hll_distinct(
         None, ["event_type"], "user_id", registers=spark.table(qname)
     )
@@ -2913,7 +2905,7 @@ def q_rel_stream_late(spark, sf_dir):
     (streaming/stream.py::run_late_audit_stream)."""
     from gclog_parser_spark.streaming.stream import run_late_audit_stream
 
-    base = tempfile.mkdtemp(prefix="gps_late_")
+    base = _scratch_dir("gps_late_")
     inp = f"{base}/events"
     os.makedirs(inp)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -2964,7 +2956,6 @@ def q_rel_stream_late(spark, sf_dir):
     )
     # the memory sink and sf_dir parquet back every input; the temp
     # chunk files are no longer referenced once the stream terminated
-    shutil.rmtree(base, ignore_errors=True)
     return out
 
 

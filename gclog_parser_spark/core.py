@@ -739,7 +739,7 @@ NEED_ANOTHER_LINE = "need_more"
 SKIP_LINE = "skip"
 
 
-def incremental_parse(lines, heap_stats: bool = False):
+def incremental_parse(lines):
     """Reference ``Parser.incrementalParse`` (Parser.scala:134-151): the
     caller accumulates lines and re-offers the buffer; the reply is a
     tri-state ``(status, event)``:
@@ -752,33 +752,13 @@ def incremental_parse(lines, heap_stats: bool = False):
       (the reference's failed-within-half-of-first-line heuristic,
       Parser.scala:139-143, re-expressed via the line classifier).
 
-    ``heap_stats`` mirrors ``parseWithHeapStats``: ``{Heap before``
-    blocks are attempted only when the last line is ``}`` (the
-    O(1) ``EndsWithCurlyBracket`` guard, Parser.scala:112-115), and
-    plain GC lines other than long-form app-stopped are skipped.
-
-    The distributed pipeline never calls this (pages arrive whole);
+    This is the plain-GC-line mode; heap blocks are skipped.  The
+    distributed pipeline never calls this (pages arrive whole);
     it exists for API parity with the reference's streaming consumers.
     """
     if not lines:
         return (NEED_ANOTHER_LINE, None)
-    first = lines[0]
-    cls = classify_line(first, heap_stats)
-    if heap_stats:
-        if cls == "open":
-            if lines[-1].rstrip() != "}":
-                return (NEED_ANOTHER_LINE, None)
-            ev = parse_heap_block("\n".join(lines))
-            return (
-                (GC_EVENT_PARSED, ev) if ev else (SKIP_LINE, None)
-            )
-        if cls == "start":
-            ev = parse_gc_line("\n".join(lines))
-            if ev is not None and ev["gc_class"] == "app_stopped":
-                return (GC_EVENT_PARSED, ev)
-            return (SKIP_LINE, None)
-        return (SKIP_LINE, None)
-    if cls != "start":
+    if classify_line(lines[0], False) != "start":
         return (SKIP_LINE, None)
     ev = parse_gc_line("\n".join(lines))
     if ev is not None:

@@ -84,30 +84,25 @@ def _page_cols(doc_id_col, filler_col, lang_col):
         html.alias("html"),
         text.alias("text"),
         lang_col.alias("lang"),
-        doc_id_col.cast("long").alias("doc_id"),
-        F.col("class_name").alias("gclog_class"),
     ]
 
 
-def pages_from_documents(spark, sf_dir: str, with_meta: bool = False):
-    """Pages table derived deterministically from ``{sf_dir}/documents``.
-
-    ``with_meta`` keeps the (doc_id, gclog_class) provenance columns used
-    by tests; the pipeline itself only reads the PAGES_SCHEMA columns.
-    """
+def pages_from_documents(spark, sf_dir: str):
+    """Pages table derived deterministically from ``{sf_dir}/documents``:
+    the PAGES_SCHEMA columns; each url names its fixture class
+    (``https://logs.example/<class>/<doc_id>``)."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text", "lang"
     )
     joined = docs.withColumn(
         "class_id", (F.col("doc_id") % 10).cast("int")
     ).join(F.broadcast(fixture_dim(spark)), "class_id")
-    cols = _page_cols(F.col("doc_id"), F.col("text"), F.col("lang"))
-    out = joined.select(*cols)
-    return out if with_meta else out.drop("doc_id", "gclog_class")
+    return joined.select(
+        *_page_cols(F.col("doc_id"), F.col("text"), F.col("lang"))
+    )
 
 
-def synth_pages(spark, n: int, parallelism: int | None = None,
-                with_meta: bool = False):
+def synth_pages(spark, n: int, parallelism: int | None = None):
     """Standalone deterministic pages table of ``n`` rows for benchmarks."""
     rng = spark.range(n, numPartitions=parallelism)
     filler = F.concat_ws(
@@ -123,9 +118,7 @@ def synth_pages(spark, n: int, parallelism: int | None = None,
     joined = rng.withColumn(
         "class_id", (F.col("id") % 10).cast("int")
     ).join(F.broadcast(fixture_dim(spark)), "class_id")
-    cols = _page_cols(F.col("id"), filler, F.lit("en"))
-    out = joined.select(*cols)
-    return out if with_meta else out.drop("doc_id", "gclog_class")
+    return joined.select(*_page_cols(F.col("id"), filler, F.lit("en")))
 
 
 MEDIA_SCHEMA = "url string, payload binary, doc_id long"

@@ -235,34 +235,32 @@ def row_export_pairs(row: dict):
     return pairs
 
 
-def tsv_lines(events, delimiter="\t", rates_list=None):
-    """TsvOutputFormat (output/OutputFormat.scala:9-22): header from the
-    *first* event's keys, then one delimited row per event.  (Later events
+def tsv_lines(events, rates_list):
+    """TsvOutputFormat (output/OutputFormat.scala:9-22) with the tab
+    delimiter: header from the *first* event's keys, then one
+    tab-delimited row per event, ``rates_list[i]`` the RateCalculator
+    rates of ``events[i]``.  (Later events
     with different shapes silently misalign — reference behavior kept for
     parity; the Spark export view uses the fixed superset schema instead.)
     """
     lines = []
     if events:
-        first = to_seq_pairs(
-            events[0], rates_list[0] if rates_list else None
-        )
-        lines.append(delimiter.join(k for k, _ in first))
-    for i, ev in enumerate(events):
-        pairs = to_seq_pairs(ev, rates_list[i] if rates_list else None)
-        lines.append(delimiter.join(v for _, v in pairs))
+        first = to_seq_pairs(events[0], rates_list[0])
+        lines.append("\t".join(k for k, _ in first))
+    for ev, rates in zip(events, rates_list):
+        lines.append("\t".join(v for _, v in to_seq_pairs(ev, rates)))
     return lines
 
 
-def graphite_lines(events, prefix="gc", rates_list=None):
+def graphite_lines(events, rates_list):
     """GraphiteOutputFormat (output/OutputFormat.scala:24-36): unpivot to
-    '<prefix>.<metric> <value> <epochSeconds>' lines, excluding the
-    'datetime' key.  Requires event time (the reference NPEs otherwise)."""
+    'gc.<metric> <value> <epochSeconds>' lines, excluding the
+    'datetime' key, ``rates_list[i]`` the rates of ``events[i]``.
+    Requires event time (the reference NPEs otherwise)."""
     lines = []
-    for i, ev in enumerate(events):
+    for ev, rates in zip(events, rates_list):
         ts = epoch_seconds(ev)
-        for name, value in to_seq_pairs(
-            ev, rates_list[i] if rates_list else None
-        ):
+        for name, value in to_seq_pairs(ev, rates):
             if name != "datetime":
-                lines.append(f"{prefix}.{name} {value} {ts}")
+                lines.append(f"gc.{name} {value} {ts}")
     return lines

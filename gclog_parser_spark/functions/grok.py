@@ -72,14 +72,12 @@ def grok_compile(pattern: str) -> tuple[str, list[tuple[str, str]]]:
     return "".join(out), fields
 
 
-def grok_parse(
-    df: DataFrame, col: str, pattern: str, drop_unmatched: bool = True
-) -> DataFrame:
+def grok_parse(df: DataFrame, col: str, pattern: str) -> DataFrame:
     """Project the grok template's typed fields out of ``col``.
 
     Every field is a guarded codegen expression: the cast only runs on
-    rows the full regex matched (``rlike``), so a garbage line yields
-    NULLs (or is dropped with ``drop_unmatched``) instead of an ANSI
+    rows the full regex matched (``rlike``), and a garbage line is
+    dropped instead of raising an ANSI
     cast error poisoning the scan — the IgnoredLine discipline of the
     GC parser (core.py) applied to arbitrary templates."""
     regex, fields = grok_compile(pattern)
@@ -95,12 +93,7 @@ def grok_parse(
         elif typ != "string":
             val = F.when(matched, raw.cast(typ))
         exprs.append(val.alias(name))
-    out = df.select(*exprs, matched.alias("_grok_matched"))
-    if drop_unmatched:
-        out = out.where(F.col("_grok_matched")).drop("_grok_matched")
-    else:
-        out = out.withColumnRenamed("_grok_matched", "grok_matched")
-    return out
+    return df.where(matched).select(*exprs)
 
 
 #: the access-log-shaped demo template the contract query round-trips

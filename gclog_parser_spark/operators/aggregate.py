@@ -90,11 +90,9 @@ def events_per_collector(events: DataFrame) -> DataFrame:
     )
 
 
-def session_stats(
-    events: DataFrame, gap_seconds: float = 30.0
-) -> DataFrame:
+def session_stats(events: DataFrame) -> DataFrame:
     """Gaps-and-islands sessionization on the JVM-age axis: events in a
-    log separated by more than ``gap_seconds`` of JVM age start a new
+    log separated by more than 30 s of JVM age start a new
     session — the classic two-window pattern (lag flag → running sum),
     here yielding GC "activity bursts" per JVM with their pause budget.
 
@@ -107,7 +105,7 @@ def session_stats(
     prev_age = F.lag("jvm_age_seconds").over(w)
     is_new = F.when(
         prev_age.isNull()
-        | (F.col("jvm_age_seconds") - prev_age > gap_seconds),
+        | (F.col("jvm_age_seconds") - prev_age > 30.0),
         1,
     ).otherwise(0)
     flagged = events.select(
@@ -191,9 +189,7 @@ def value_histogram(
     )
 
 
-def skew_stats(
-    df: DataFrame, key_cols: list[str], top: int = 5
-) -> DataFrame:
+def skew_stats(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """Key-skew diagnosis — the measurement that decides whether a
     groupBy/join key needs salting (`per_sink_hourly_salted`,
     `rel_shuffle_join_salted`) or AQE's skew split.  Per heavy key:
@@ -202,7 +198,7 @@ def skew_stats(
     partition count means one reducer owns the key and salting pays.
 
     Two partial-aggregated exchanges (key counts, then the global
-    top-N via distributed TakeOrdered) — both ∝ distinct keys, never
+    top-5 via distributed TakeOrdered) — both ∝ distinct keys, never
     rows.  Deterministic order: (n desc, key asc)."""
     key = [F.col(c).cast("string").alias(c) for c in key_cols]
     counts = df.select(*key).groupBy(*key_cols).agg(
@@ -222,7 +218,7 @@ def skew_stats(
             ).alias("skew_ratio"),
         )
         .orderBy(F.desc("n"), *[F.asc(c) for c in key_cols])
-        .limit(top)
+        .limit(5)
     )
 
 
@@ -338,23 +334,21 @@ def kmv_estimate(sketch, group_col: str, k: int = 64):
     return agg.select(group_col, est.alias("kmv_estimate"))
 
 
-def heavy_hitters(
-    df: DataFrame, col: str, k: int = 100, capacity: int | None = None
-) -> DataFrame:
+def heavy_hitters(df: DataFrame, col: str, k: int = 100) -> DataFrame:
     """EXACT heavy hitters — items whose count strictly exceeds n/k —
     via the canonical bounded-state two-pass plan (Misra–Gries
     candidates, then exact verification), the 100 TB answer to "top
     words" when a global groupBy would shuffle 10^11 distinct keys.
 
     Pass 1 (candidates): a per-partition Misra–Gries summary over the
-    Arrow batches — state ≤ ``capacity`` counters regardless of
+    Arrow batches — state ≤ ``4·k`` counters regardless of
     partition size — emitting each partition's surviving items plus
     its row count.  The superset guarantee is arithmetic: if an item's
     global count exceeds n/k then some partition has count_p > n_p/k
     (otherwise summing the per-partition bounds gives ≤ n/k), and MG
     with capacity ≥ k under-counts by at most n_p/(capacity+1) ≤
     n_p/k, so that item survives there.  Candidate volume is
-    ≤ capacity·partitions rows — never the distinct-item count.
+    ≤ 4·k·partitions rows — never the distinct-item count.
 
     Pass 2 (exact): the raw column left-semi-joins the broadcast
     candidate set (scan-side filter, nothing shuffles but matches),
@@ -370,9 +364,7 @@ def heavy_hitters(
 
     Returns (item, cnt, share) ordered (cnt DESC, item ASC).
     """
-    cap = capacity or 4 * k
-    if cap < k:
-        raise ValueError(f"capacity {cap} must be >= k {k}")
+    cap = 4 * k
 
     def _mg(batches):
         import pandas as pd
@@ -883,8 +875,8 @@ def cms_estimate(
     )
 
 
-def journey_paths(events: DataFrame, k: int = 20) -> DataFrame:
-    """Top-k user journeys: sessionize per user_id (gaps-and-islands
+def journey_paths(events: DataFrame) -> DataFrame:
+    """Top-20 user journeys: sessionize per user_id (gaps-and-islands
     on a 30-minute gap), take each session's first 5 event_type steps in
     (ts, event_id) order, and count identical paths — the funnel
     discovery that tells you which flows actually happen (vs
@@ -937,7 +929,7 @@ def journey_paths(events: DataFrame, k: int = 20) -> DataFrame:
         paths.groupBy("path")
         .agg(F.count(F.lit(1)).alias("n_sessions"))
         .orderBy(F.desc("n_sessions"), F.asc("path"))
-        .limit(k)
+        .limit(20)
     )
 
 

@@ -116,15 +116,13 @@ def bloom_reduce(
     probe_key: str,
     build: DataFrame,
     build_key: str,
-    m_bits: int = M_BITS,
-    n_hashes: int = N_HASHES,
 ) -> DataFrame:
     """Probe side filtered by a Bloom sketch of the build side's keys:
     every row that would survive ``probe ⋈ build`` survives this filter
     (no false negatives), most rows that wouldn't are dropped *before*
     the join's exchange.  Schema is unchanged."""
-    words = bloom_build(build, build_key, m_bits, n_hashes)
-    bm, pred = bloom_test(probe_key, words, m_bits, n_hashes)
+    words = bloom_build(build, build_key, M_BITS, N_HASHES)
+    bm, pred = bloom_test(probe_key, words, M_BITS, N_HASHES)
     return (
         probe.withColumn("__bloom_bm", bm)
         .where(pred)

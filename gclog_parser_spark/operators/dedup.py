@@ -19,10 +19,10 @@ scale to 10^12 documents:
 
 from __future__ import annotations
 
-import time
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+
+from gclog_parser_spark.operators.graph import _fixpoint
 
 #: number of minhash functions and LSH band layout
 NUM_HASHES = 8
@@ -221,13 +221,11 @@ def simhash_docs(docs: DataFrame, bits: int = 16) -> DataFrame:
     return agg.select("doc_id", sim.cast("long").alias("simhash"))
 
 
-def minhash_verified_pairs(
-    docs: DataFrame, threshold: float = 0.5
-) -> DataFrame:
+def minhash_verified_pairs(docs: DataFrame) -> DataFrame:
     """The verify stage between LSH candidate generation and
     clustering: each candidate pair gets the MinHash-estimated Jaccard
     (fraction of agreeing signature positions — the unbiased estimator)
-    and pairs below ``threshold`` are discarded.  Banding alone admits
+    and pairs below 0.5 are discarded.  Banding alone admits
     pairs sharing one lucky band; thresholding the estimate is the
     standard precision repair, and it costs only two hash-joins of the
     tiny (doc_id, sig) relation against the candidate pairs — never a
@@ -261,7 +259,7 @@ def minhash_verified_pairs(
             "doc_b",
             F.round(agree / NUM_HASHES, 6).alias("est_jaccard"),
         )
-        .where(F.col("est_jaccard") >= threshold)
+        .where(F.col("est_jaccard") >= 0.5)
     )
 
 
@@ -334,9 +332,12 @@ def connected_components(
     thousands).  Convergence is detected with an O(1)-size driver
     checksum (count + hash sum), and each round is ``localCheckpoint``-ed
     to truncate lineage — on a cluster this is ``checkpoint`` into the
-    job's checkpoint dir (plans/ledger.py pattern).
+    job's checkpoint dir (plans/ledger.py pattern).  The loop is
+    ``graph._fixpoint``: ``max_rounds`` bounds the rounds that change
+    the edge set, and one more round confirms.
 
-    ``stats``: optional dict, receives {'rounds': r} for tests/metrics.
+    ``stats``: optional dict, receives ``rounds`` and ``round_secs``
+    (each round's wall seconds) for metrics.
     """
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -344,32 +345,14 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    prev = None
-    rounds = 0
-    converged = False
-    round_secs: list[float] = []
-    for _ in range(max_rounds):
-        t0 = time.perf_counter()
-        e2 = _small_star(_large_star(e)).localCheckpoint()
-        rounds += 1
-        sig = _edge_sig(e2)
-        round_secs.append(round(time.perf_counter() - t0, 3))
-        e = e2
-        if sig == prev:
-            converged = True
-            break
-        prev = sig
-    if not converged:
-        # the trailing min-aggregate below yields WRONG labels off the
-        # star fixpoint — never return them silently
-        raise RuntimeError(
-            f"connected_components did not reach the star fixpoint in"
-            f" {max_rounds} rounds (alternating-star converges in"
-            f" O(log n); raise max_rounds)"
-        )
+    # off the star fixpoint the trailing min-aggregate below yields
+    # WRONG labels; _fixpoint raises instead of returning them
+    e, round_secs = _fixpoint(
+        e, lambda e: _small_star(_large_star(e)), _edge_sig, None,
+        max_rounds, "connected_components",
+    )
     if stats is not None:
-        stats["rounds"] = rounds
-        stats["converged"] = converged
+        stats["rounds"] = len(round_secs)
         stats["round_secs"] = round_secs
     # at the fixpoint every edge is (node, component_min)
     comp = e.select(F.col("u").alias("node"), F.col("v").alias("comp"))
@@ -385,11 +368,7 @@ def connected_components(
     )
 
 
-def dedup_clusters(
-    docs: DataFrame,
-    stats: dict | None = None,
-    min_est: float | None = None,
-) -> DataFrame:
+def dedup_clusters(docs: DataFrame, stats: dict | None = None) -> DataFrame:
     """Full near-dup pipeline stage 2: MinHash-LSH candidate pairs →
     connected components → (doc_id, cluster_id, is_keeper).
 
@@ -397,16 +376,9 @@ def dedup_clusters(
     100 TB training-data pipeline retains; ``WHERE is_keeper`` is the
     deduplicated corpus.  Docs outside every pair are their own
     singleton cluster (left join + coalesce, no shuffle beyond the CC
-    rounds' own).  ``min_est`` inserts the verify stage: only pairs
-    whose MinHash-estimated Jaccard clears it feed the clustering
-    (`minhash_verified_pairs`) — without it, one lucky shared band is
-    enough to merge two clusters."""
-    if min_est is not None:
-        pairs = minhash_verified_pairs(docs, threshold=min_est).select(
-            "doc_a", "doc_b"
-        )
-    else:
-        pairs = minhash_band_pairs(docs).select("doc_a", "doc_b")
+    rounds' own).  Every LSH band pair feeds the clustering, so one
+    shared band is enough to merge two clusters."""
+    pairs = minhash_band_pairs(docs).select("doc_a", "doc_b")
     comp = connected_components(pairs, stats=stats).select(
         F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
     )
@@ -506,21 +478,20 @@ def _pair_overlaps(
     return inter.join(sa, "doc_a").join(sb, "doc_b")
 
 
-def jaccard_pairs(docs: DataFrame, max_df: int = 256) -> DataFrame:
+def jaccard_pairs(docs: DataFrame) -> DataFrame:
     """n-gram Jaccard similarity >= 0.5 for candidate pairs within the
     same `source`.  Computed relationally: explode distinct
     shingles → self-join on shingle → |A∩B| by group; |A∪B| from per-doc
     counts.  Shuffle ∝ postings, never materializes the pair matrix.
 
-    ``max_df`` is the postings cap that keeps the self-join tractable
-    on web text: a stop-shingle ("the quick brown" class) with document
-    frequency d contributes O(d²) join rows, so shingles with
-    ``df > max_df`` are dropped from the similarity space entirely
-    (postings AND union sizes — the standard stop-postings rule, like
-    an IDF floor).  Per kept shingle the join fan-out is bounded by
-    max_df², independent of corpus size; hot shingles carry no
-    similarity signal anyway."""
-    inter = _pair_overlaps(docs, "source", max_df)
+    A postings cap of 256 keeps the self-join tractable on web text:
+    a stop-shingle ("the quick brown" class) with document frequency d
+    contributes O(d²) join rows, so shingles with ``df > 256`` are
+    dropped from the similarity space entirely (postings AND union
+    sizes — the standard stop-postings rule, like an IDF floor).  Per
+    kept shingle the join fan-out is bounded by 256², independent of
+    corpus size; hot shingles carry no similarity signal anyway."""
+    inter = _pair_overlaps(docs, "source", 256)
     out = (
         inter.withColumn(
             "jaccard",
@@ -536,16 +507,16 @@ def jaccard_pairs(docs: DataFrame, max_df: int = 256) -> DataFrame:
     return out
 
 
-def prefix_jaccard_pairs(
-    docs: DataFrame,
-    threshold_num: int = 1,
-    threshold_den: int = 2,
-) -> DataFrame:
-    """All-pairs Jaccard ≥ num/den via PPJoin-style **prefix
-    filtering** (Chaudhuri/Ganti/Kaushik 2006; Xiao et al. 2008) — the
-    provably-COMPLETE candidate reducer, unlike ``jaccard_pairs``'s
-    df-cap heuristic which silently drops pairs whose overlap lives in
-    hot shingles.
+#: the Jaccard threshold num/den of ``prefix_jaccard_pairs``
+PREFIX_THRESHOLD = (1, 2)
+
+
+def prefix_jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """All-pairs Jaccard ≥ num/den (``PREFIX_THRESHOLD``) via
+    PPJoin-style **prefix filtering** (Chaudhuri/Ganti/Kaushik 2006;
+    Xiao et al. 2008) — the provably-COMPLETE candidate reducer,
+    unlike ``jaccard_pairs``'s df-cap heuristic which silently drops
+    pairs whose overlap lives in hot shingles.
 
     Order every document's distinct shingles by the one global
     canonical order (ascending corpus df, shingle as tie-break) and
@@ -572,7 +543,7 @@ def prefix_jaccard_pairs(
     candidate docs only: shuffle ∝ candidate postings, never the pair
     matrix.  Reference has no similarity ops; north-rule dedup
     (BASELINE.json)."""
-    num, den = threshold_num, threshold_den
+    num, den = PREFIX_THRESHOLD
     sh = _doc_shingles(
         docs.select("doc_id", "text"), distinct=True
     ).withColumnRenamed("s", "shingle")
@@ -633,31 +604,26 @@ def prefix_jaccard_pairs(
     )
 
 
-def simhash_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    bands: int = 4,
-) -> DataFrame:
+def simhash_pairs(docs: DataFrame) -> DataFrame:
     """Near-duplicate pairs by SimHash Hamming distance — the third
     pair generator next to MinHash-Jaccard (set overlap) and
     Levenshtein-fuzzy (edit distance): Hamming over the simhash catches
     bag-of-words drift in O(1) per comparison.
 
     Pigeonhole banding makes it scale: split the 32-bit simhash
-    into ``bands`` equal segments — two hashes within Hamming distance
-    ``max_hamming`` (< bands) must agree EXACTLY on at least one
-    segment, so candidates come from ``bands`` equi-joins on
+    into 4 equal segments — two hashes within Hamming distance 3
+    (< 4) must agree EXACTLY on at least one
+    segment, so candidates come from 4 equi-joins on
     (band_idx, segment value) instead of the O(n²) all-pairs scan (the
     plan the oracle deliberately runs).  Shuffle ∝ docs×bands; hot
-    segments are bounded by segment cardinality 2^(32/bands).
+    segments are bounded by segment cardinality 2^8.
     Candidates then verify with a popcount on the XOR — exact, no
-    recall loss for max_hamming ≤ bands-1.
+    recall loss.
 
-    Returns (doc_a, doc_b, hamming), doc_a < doc_b, hamming ≤
-    ``max_hamming``."""
+    Returns (doc_a, doc_b, hamming), doc_a < doc_b, hamming ≤ 3."""
     return _hamming_pairs(
         simhash_docs(docs, bits=32), "doc_id", "simhash", 32,
-        max_hamming, bands, ("doc_a", "doc_b"),
+        3, 4, ("doc_a", "doc_b"),
     )
 
 
@@ -784,9 +750,7 @@ def span_dedup(docs: DataFrame, k: int = 5) -> DataFrame:
     )
 
 
-def containment_pairs(
-    docs: DataFrame, min_containment: float = 0.8
-) -> DataFrame:
+def containment_pairs(docs: DataFrame) -> DataFrame:
     """ASYMMETRIC near-dup detection within the same `source`: containment
     ``C(A,B) = |A∩B| / min(|A|,|B|)`` over distinct shingle sets —
     the rule that catches a document EMBEDDED in another (quoted
@@ -794,7 +758,7 @@ def containment_pairs(
     symmetric Jaccard misses: a page wrapped in a 5× larger template
     has J ≈ 0.17 but C = 1.0.  Returns
     ``(doc_a, doc_b, inter, na, nb, containment, jaccard)`` for pairs
-    at or above ``min_containment`` — jaccard rides along so callers
+    with containment ≥ 0.8 — jaccard rides along so callers
     can separate true near-dups (both high) from subset-dups (C high,
     J low).
 
@@ -816,7 +780,7 @@ def containment_pairs(
                 6,
             ),
         )
-        .where(F.col("containment") >= min_containment)
+        .where(F.col("containment") >= 0.8)
         .select(
             "doc_a", "doc_b", "inter", "na", "nb",
             "containment", "jaccard",

@@ -24,15 +24,26 @@ both engines implement the identical rule.
 
 Scale: each iteration is one shuffle join of edges⋈ranks on src plus
 one partial-aggregated shuffle on dst — shuffle ∝ edges, state ∝
-nodes, never quadratic.  Lineage is truncated with ``localCheckpoint``
-each round (same reasoning as dedup.connected_components — 5 chained
-joins would otherwise nest 10 shuffles in one lineage tree and
-re-plan/re-execute on any recompute).  The only driver-side scalars
-are the node count and (for the events-derived demo graph) the user
-count — O(1).
+nodes, never quadratic.  The only driver-side scalars are the node
+count and (for the events-derived demo graph) the user count — O(1).
+
+Lineage: every loop here ends a round in ``localCheckpoint`` so the
+next round plans against a leaf instead of a tree of 2·rounds
+shuffles.  ``localCheckpoint(eager=False)`` is not free at build time:
+it calls ``execute()`` on the adaptive plan, and under AQE that runs
+every query stage below the last one (each shuffle map stage and
+broadcast) as Spark jobs right away; only the final stage waits for
+the first action.  So a builder launches its jobs before it returns.
+Measured on ``events_link_graph`` of sf0.01 (``local[4]``, warm second
+build, ``DAGScheduler.nextJobId`` delta): ``pagerank`` 29,
+``trustrank`` 38, ``hits`` 42, ``label_propagation`` 16, ``kcore`` 11,
+``coreness`` 34.  The fixpoint loops (:func:`_fixpoint`) checkpoint
+eagerly, because their convergence test reads the new state anyway.
 """
 
 from __future__ import annotations
+
+import time
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -41,13 +52,61 @@ from pyspark.sql import DataFrame
 #: (85 = the canonical 0.85, so the damping multiply stays in BIGINT)
 SCALE = 10**12
 DAMPING_PCT = 85
+#: fixed iteration counts: pagerank/trustrank, hits, label_propagation
+RANK_ITERS = 5
+HITS_ITERS = 3
+LPA_ITERS = 3
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The undirected simple edge set ``(a, b)`` of ``edges``: both
+    directions of every non-loop edge, distinct, materialized once
+    because every round of the caller's loop reads it."""
+    d = edges.select(
+        F.col(src).alias("a"), F.col(dst).alias("b")
+    ).where(F.col("a") != F.col("b"))
+    return (
+        d.union(d.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .distinct()
+        .localCheckpoint()
+    )
+
+
+def _fixpoint(state, step, sig, prev, max_rounds: int, name: str):
+    """Iterate ``state = step(state)`` until ``sig(state)`` repeats.
+
+    Each round materializes the new state with an eager
+    ``localCheckpoint`` (the lineage stays one round deep), takes its
+    O(1) driver-side signature and compares it with the last one;
+    ``prev`` is the signature of the input state, or None when the
+    caller has none, so the first round always counts as a change.
+    ``max_rounds`` bounds the rounds that change the state, and one
+    more round confirms the fixpoint; past that the loop raises
+    instead of returning a state that is not the fixpoint.  Used by
+    :func:`kcore`, :func:`coreness` and
+    ``dedup.connected_components``.
+
+    Returns the fixpoint state and each round's wall seconds.
+    """
+    round_secs: list[float] = []
+    for _ in range(max_rounds + 1):
+        t0 = time.perf_counter()
+        state = step(state).localCheckpoint()
+        cur = sig(state)
+        round_secs.append(round(time.perf_counter() - t0, 3))
+        if cur == prev:
+            return state, round_secs
+        prev = cur
+    raise RuntimeError(
+        f"{name} did not reach its fixpoint in {max_rounds} rounds that"
+        " change the state; raise max_rounds"
+    )
 
 
 def _edges_and_nodes(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The distinct ``(src, dst)`` edges and their ``node`` set, each
     materialized once: every iteration below reads both, and a lazy
-    relation would re-scan and re-dedup the input per iteration (AQE
-    runs each iteration's query stages when its checkpoint is built)."""
+    relation would re-scan and re-dedup the input per iteration."""
     e = edges.select("src", "dst").distinct().localCheckpoint()
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -58,16 +117,51 @@ def _edges_and_nodes(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     return e, nodes
 
 
-def _out_edges(e: DataFrame) -> DataFrame:
-    """``(src, dst, deg)``: each edge with its source's out-degree,
-    materialized once for the iteration loop."""
+def _seeded_rank(
+    e: DataFrame, flagged: DataFrame, n_seed: int, col: str
+) -> DataFrame:
+    """The integer-tick rank loop that :func:`pagerank` and
+    :func:`trustrank` share, over distinct edges ``e`` and ``flagged``
+    ``(node, is_seed)``: a seed starts at ``SCALE DIV n_seed`` and takes
+    the teleport base each round, any other node starts and teleports
+    at 0.  Returns ``(node, <col>)`` after ``RANK_ITERS`` rounds."""
+    t0 = SCALE // n_seed
+    base = ((100 - DAMPING_PCT) * t0) // 100
+
+    def seeded(v: int):
+        return F.when(F.col("is_seed"), F.lit(v)).otherwise(F.lit(0))
+
     outdeg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    return e.join(outdeg, "src").localCheckpoint()
+    ed = e.join(outdeg, "src").localCheckpoint()
+    ranks = flagged.select("node", seeded(t0).cast("long").alias(col))
+    for _ in range(RANK_ITERS):
+        contrib = ed.join(
+            ranks.withColumnRenamed("node", "src"), "src"
+        ).select(
+            F.col("dst").alias("node"),
+            F.expr(f"{col} DIV deg").alias("c"),
+        )
+        insum = contrib.groupBy("node").agg(F.sum("c").alias("s"))
+        ranks = (
+            flagged.join(insum, "node", "left")
+            .select(
+                "node",
+                (
+                    seeded(base)
+                    + F.expr(
+                        f"({DAMPING_PCT} * coalesce(s, CAST(0 AS BIGINT)))"
+                        " DIV 100"
+                    )
+                ).cast("long").alias(col),
+            )
+            .localCheckpoint(eager=False)
+        )
+    return ranks
 
 
-def pagerank(edges: DataFrame, n_iter: int = 5) -> DataFrame:
+def pagerank(edges: DataFrame) -> DataFrame:
     """Fixed-iteration integer-tick PageRank over distinct ``(src,
-    dst)`` edges.
+    dst)`` edges: :func:`trustrank` with every node a seed.
 
     Returns ``(node, rank_ticks)`` for every node that appears as a
     source or destination.
@@ -76,42 +170,11 @@ def pagerank(edges: DataFrame, n_iter: int = 5) -> DataFrame:
     n = nodes.count()
     if n == 0:
         raise ValueError("pagerank over an empty edge set")
-    r0 = SCALE // n
-    base = ((100 - DAMPING_PCT) * r0) // 100
-
-    ed = _out_edges(e)
-    ranks = nodes.withColumn("rank_ticks", F.lit(r0).cast("long"))
-    for _ in range(n_iter):
-        contrib = (
-            ed.join(
-                ranks.withColumnRenamed("node", "src"), "src"
-            )
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank_ticks DIV deg").alias("c"),
-            )
-        )
-        insum = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(insum, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr(
-                        f"({DAMPING_PCT} * coalesce(s, CAST(0 AS BIGINT)))"
-                        " DIV 100"
-                    )
-                ).cast("long").alias("rank_ticks"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
+    flagged = nodes.withColumn("is_seed", F.lit(True))
+    return _seeded_rank(e, flagged, n, "rank_ticks")
 
 
-def trustrank(
-    edges: DataFrame, seeds: DataFrame, n_iter: int = 5
-) -> DataFrame:
+def trustrank(edges: DataFrame, seeds: DataFrame) -> DataFrame:
     """Fixed-iteration integer-tick TrustRank (Gyöngyi, Garcia-Molina
     & Pedersen 2004): personalized PageRank whose teleport vector is a
     trusted SEED set instead of uniform.  Trust flows outward from
@@ -138,8 +201,7 @@ def trustrank(
     Scale: seeds are semi-joined onto the O(nodes) side — per
     iteration the plan is the same edges⋈ranks shuffle + one
     partial-aggregated exchange on dst as pagerank, shuffle ∝ edges;
-    lineage truncated per round via ``localCheckpoint``; driver state
-    is two counts.
+    driver state is two counts.
     """
     e, nodes = _edges_and_nodes(edges)
     if nodes.count() == 0:
@@ -153,45 +215,12 @@ def trustrank(
     n_seed = seed_nodes.count()
     if n_seed == 0:
         raise ValueError("trustrank requires >= 1 seed present in the graph")
-    t0 = SCALE // n_seed
-    base = ((100 - DAMPING_PCT) * t0) // 100
-
     flagged = nodes.join(
         seed_nodes.withColumn("is_seed", F.lit(True)), "node", "left"
     ).select(
         "node", F.coalesce(F.col("is_seed"), F.lit(False)).alias("is_seed")
     ).localCheckpoint()
-    ed = _out_edges(e)
-    ranks = flagged.select(
-        "node",
-        F.when(F.col("is_seed"), F.lit(t0))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("trust_ticks"),
-    )
-    for _ in range(n_iter):
-        contrib = ed.join(
-            ranks.withColumnRenamed("node", "src"), "src"
-        ).select(
-            F.col("dst").alias("node"),
-            F.expr("trust_ticks DIV deg").alias("c"),
-        )
-        insum = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
-            flagged.join(insum, "node", "left")
-            .select(
-                "node",
-                (
-                    F.when(F.col("is_seed"), F.lit(base)).otherwise(F.lit(0))
-                    + F.expr(
-                        f"({DAMPING_PCT} * coalesce(s, CAST(0 AS BIGINT)))"
-                        " DIV 100"
-                    )
-                ).cast("long").alias("trust_ticks"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
+    return _seeded_rank(e, flagged, n_seed, "trust_ticks")
 
 
 def events_link_graph(events: DataFrame) -> DataFrame:
@@ -239,9 +268,12 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
         F.col("x") != F.col("y")
     )
     # the canonical edge set and the oriented relation are each reused
-    # 2-3× below; localCheckpoint materializes them once (at cluster
-    # scale these would be persisted tables) instead of replanning the
-    # subtree per reference — without it the plan is an exchange storm
+    # 2-3× below; localCheckpoint makes each a leaf (at cluster scale
+    # these would be persisted tables) instead of replanning the subtree
+    # per reference — without it the plan is an exchange storm.  Even
+    # with eager=False each one runs its stages below the last as jobs
+    # here, at build time (module docstring); the final stage runs at
+    # the first action
     und = (
         e.select(
             F.least("x", "y").alias("u"), F.greatest("x", "y").alias("v")
@@ -336,7 +368,7 @@ def _l1_normalize(scores: DataFrame, col: str) -> DataFrame:
     )
 
 
-def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
+def hits(edges: DataFrame) -> DataFrame:
     """Kleinberg HITS hub/authority scores over ``(src, dst)`` edges —
     the link-quality pair web pipelines read next to PageRank
     (authorities ≈ canonical content pages, hubs ≈ link directories;
@@ -354,13 +386,12 @@ def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
 
     Scale: per half-iteration one shuffle join edges⋈scores plus one
     partial-aggregated exchange on the opposite endpoint — shuffle ∝
-    edges, state ∝ nodes, the same discipline as ``pagerank``.
-    Lineage truncated per iteration with ``localCheckpoint``.
+    edges, state ∝ nodes, the same discipline as ``pagerank``.  Each
+    half-iteration ends in ``localCheckpoint(eager=False)``, which runs
+    its stages below the last at build time (module docstring): 42
+    Spark jobs before the caller's first action on sf0.01.
 
     Returns ``(node, auth_ticks, hub_ticks)`` for every node."""
-    if n_iter < 1:
-        # n_iter=0 would leave auth unset and crash on the final join
-        raise ValueError("hits requires n_iter >= 1")
     e, nodes = _edges_and_nodes(edges)
     n = nodes.count()
     if n == 0:
@@ -380,8 +411,7 @@ def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
         )
 
     hub = nodes.withColumn("hub_ticks", F.lit(init).cast("long"))
-    auth = None
-    for _ in range(n_iter):
+    for _ in range(HITS_ITERS):
         auth = _l1_normalize(
             _gather(hub, "hub_ticks", "src", "dst", "auth_ticks"),
             "auth_ticks",
@@ -393,7 +423,7 @@ def hits(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     return auth.join(hub, "node")
 
 
-def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
+def label_propagation(edges: DataFrame) -> DataFrame:
     """Synchronous label-propagation community detection over ``(src,
     dst)`` edges (Raghavan,
     Albert & Kumara 2007) — the near-linear community finder web-corpus
@@ -404,7 +434,7 @@ def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     LPA splits a connected graph into densely-knit parts).
 
     Determinism (the classic LPA pitfall is update-order dependence):
-    updates are SYNCHRONOUS over a fixed iteration count, and the
+    updates are SYNCHRONOUS over ``LPA_ITERS`` rounds, and the
     update rule is exact —
 
         label_i(v) = the most frequent label among v's neighbors at
@@ -419,20 +449,11 @@ def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     Scale: per iteration one edges-join on the label side plus one
     partial-aggregated shuffle on (node, label) — shuffle is ∝ edges,
     map-side combine collapses hot labels before the exchange, and the
-    struct-max needs no window sort.  Lineage truncated per round via
-    ``localCheckpoint`` (same discipline as ``pagerank``/``hits``);
+    struct-max needs no window sort.  Each round ends in
+    ``localCheckpoint(eager=False)`` as in ``pagerank``/``hits``;
     driver state O(1).
     """
-    if n_iter < 1:
-        raise ValueError("label_propagation requires n_iter >= 1")
-    d = edges.select(
-        F.col("src").alias("a"), F.col("dst").alias("b")
-    ).where(F.col("a") != F.col("b"))
-    und = (
-        d.union(d.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
+    und = _undirected(edges, "src", "dst")
     labels = (
         und.select(F.col("a").alias("node"))
         .distinct()
@@ -440,7 +461,7 @@ def label_propagation(edges: DataFrame, n_iter: int = 3) -> DataFrame:
     )
     if labels.count() == 0:
         raise ValueError("label_propagation over an empty edge set")
-    for _ in range(n_iter):
+    for _ in range(LPA_ITERS):
         counts = (
             und.join(
                 labels.select(
@@ -477,7 +498,6 @@ def kcore(
     dst: str = "dst",
     k: int = 2,
     max_rounds: int = 64,
-    stats: dict | None = None,
 ) -> DataFrame:
     """k-core decomposition by iterative peeling (Seidman 1983;
     Batagelj-Zaveršnik): repeatedly delete every node whose degree in
@@ -502,57 +522,33 @@ def kcore(
     two semi-joins on the endpoint — shuffle ∝ surviving edges, never
     more than the input; the surviving edge set only shrinks, so later
     rounds are cheaper.  Convergence is detected with an O(1) driver
-    count (edge count is strictly monotone down until the fixpoint);
-    each round ``localCheckpoint``-truncates lineage.  Peeling depth
-    (the rounds that remove edges) is in practice a handful; the
-    fixpoint costs one more round to confirm.  ``max_rounds`` bounds
-    the peeling depth and is the same loud backstop as
-    ``dedup.connected_components``; ``stats["rounds"]`` counts every
-    round run, the confirming one included.
+    count (edge count is strictly monotone down until the fixpoint).
+    ``max_rounds`` bounds the peeling depth (the rounds that remove
+    edges), one more round confirms: :func:`_fixpoint`.
     """
     if k < 1:
         raise ValueError("kcore requires k >= 1")
-    d = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).where(F.col("a") != F.col("b"))
-    und = (
-        d.union(d.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
-    if und.count() == 0:
-        raise ValueError("kcore over an empty edge set")
-    rounds = 0
+    und = _undirected(edges, src, dst)
     n_edges = und.count()
-    # max_rounds bounds the rounds that peel; one more may be needed to
-    # see that nothing is left to peel
-    for _ in range(max_rounds + 1):
+    if n_edges == 0:
+        raise ValueError("kcore over an empty edge set")
+
+    def peel(und: DataFrame) -> DataFrame:
         alive = (
             und.groupBy("a")
             .agg(F.count("*").alias("deg"))
             .where(F.col("deg") >= k)
             .select("a")
         )
-        nxt = (
+        return (
             und.join(alive, "a", "left_semi")
             .join(alive.withColumnRenamed("a", "b"), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint()
         )
-        rounds += 1
-        n_next = nxt.count()
-        und = nxt
-        if n_next == n_edges:
-            break
-        n_edges = n_next
-    else:
-        raise RuntimeError(
-            f"kcore did not reach the peeling fixpoint in {max_rounds}"
-            " rounds (bounded by peeling depth; raise max_rounds)"
-        )
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["core_edges"] = n_edges
+
+    und, _ = _fixpoint(
+        und, peel, DataFrame.count, n_edges, max_rounds, "kcore"
+    )
     return und.groupBy(F.col("a").alias("node")).agg(
         F.count("*").cast("long").alias("core_deg")
     )
@@ -563,7 +559,6 @@ def coreness(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 64,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Full core decomposition — every node's coreness (the largest
     ``k`` for which it survives in the k-core) in ONE pass, via the
@@ -590,32 +585,22 @@ def coreness(
     per-node neighbor-value array is degree-bounded (for billion-degree
     hubs swap the array form for the windowed running-count form).
     Convergence is an O(1) driver check: values only ever decrease, so
-    a stable BIGINT sum means a stable vector.  ``localCheckpoint``
-    truncates lineage per round; ``max_rounds`` is the loud backstop
-    on the rounds that change a value (one more confirms the fixpoint).
+    a stable BIGINT sum means a stable vector.  ``max_rounds`` bounds
+    the rounds that change a value, one more confirms: :func:`_fixpoint`.
     """
-    d = edges.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).where(F.col("a") != F.col("b"))
-    und = (
-        d.union(d.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
+    und = _undirected(edges, src, dst)
     if und.count() == 0:
         raise ValueError("coreness over an empty edge set")
     h = und.groupBy(F.col("a").alias("node")).agg(
         F.count("*").cast("long").alias("h")
     )
-    prev_sum = h.agg(F.sum("h")).first()[0]
-    rounds = 0
-    # as in kcore, max_rounds bounds the rounds that change a value
-    for _ in range(max_rounds + 1):
+
+    def h_index(h: DataFrame) -> DataFrame:
         nb = und.join(
             h.select(F.col("node").alias("b"), F.col("h").alias("hb")),
             "b",
         )
-        h = (
+        return (
             nb.groupBy(F.col("a").alias("node"))
             .agg(
                 F.sort_array(F.collect_list("hb"), asc=False).alias("hs")
@@ -628,21 +613,12 @@ def coreness(
                     " (x, r) -> x >= r), p -> p)) AS LONG)"
                 ).alias("h"),
             )
-            .localCheckpoint()
         )
-        rounds += 1
-        cur_sum = h.agg(F.sum("h")).first()[0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        raise RuntimeError(
-            f"coreness did not converge in {max_rounds} rounds"
-            " (h-index iteration converges in O(peeling depth);"
-            " raise max_rounds)"
-        )
-    if stats is not None:
-        stats["rounds"] = rounds
+
+    def h_sum(h: DataFrame) -> int:
+        return h.agg(F.sum("h")).first()[0]
+
+    h, _ = _fixpoint(h, h_index, h_sum, h_sum(h), max_rounds, "coreness")
     return h.select("node", F.col("h").alias("coreness"))
 
 

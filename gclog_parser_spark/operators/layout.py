@@ -33,15 +33,12 @@ def bucket_table(
     bucket_by: list[str],
     n_buckets: int,
     path: str | None = None,
-    sort_by: list[str] | None = None,
 ) -> None:
-    """Write (overwrite) ``df`` as a bucketed (and optionally
-    bucket-sorted) table — the co-location lever for repeated
-    fact-to-fact joins.
+    """Write (overwrite) ``df`` as a bucketed table — the co-location
+    lever for repeated fact-to-fact joins.
 
     Two tables bucketed on the join key with the same bucket count
-    join with ZERO exchanges (and zero sorts when ``sort_by`` matches
-    the key): at 100 TB that converts every recurring
+    join with ZERO exchanges: at 100 TB that converts every recurring
     lineitem⋈orders-shaped join from a full two-sided shuffle into a
     local per-bucket merge.  This is the parquet/hive stand-in for
     Iceberg's ``bucket(N, col)`` partition transform (same hash, same
@@ -52,11 +49,14 @@ def bucket_table(
     ``saveAsTable``, not a bare ``parquet()`` write.
     """
     writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_by)
-    if sort_by:
-        writer = writer.sortBy(*sort_by)
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(name)
+
+
+#: rows per output file of ``compact_table``; a hive partition with
+#: more rows is written as several files
+MAX_RECORDS_PER_FILE = 1_000_000
 
 
 def compact_table(
@@ -64,7 +64,6 @@ def compact_table(
     out_path: str,
     partition_by: list[str] | None = None,
     sort_by: list[str] | None = None,
-    max_records_per_file: int = 1_000_000,
 ) -> None:
     """Rewrite (overwrite) ``df`` as a compacted, sorted,
     hive-partitioned table: each hive partition is written by one task,
@@ -81,7 +80,7 @@ def compact_table(
         out = out.sortWithinPartitions(*(partition_by + sort_by))
     writer = (
         out.write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
+        .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
     )
     if partition_by:
         writer = writer.partitionBy(*partition_by)

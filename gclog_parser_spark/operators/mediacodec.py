@@ -47,13 +47,13 @@ def _paeth(a: int, b: int, c: int) -> int:
 
 
 def png_encode(width: int, height: int, pixels: bytes,
-               channels: int = 1, filters=None, level: int = 0) -> bytes:
+               channels: int = 1, filters=None) -> bytes:
     """Minimal PNG writer (8-bit grey or RGB, non-interlaced).
 
     ``filters`` optionally pins the per-row filter type (0..4) so the
     fixture corpus exercises EVERY unfilter branch of the decoder.
-    ``level`` is the zlib level; the default 0 (stored blocks) makes
-    the FILE byte length a closed form of the dimensions —
+    The IDAT is zlib level 0 (stored blocks), which makes the FILE
+    byte length a closed form of the dimensions —
     ``68 + height·(width·channels + 1)`` for payloads under one
     deflate stored block (64 KiB) — which is what lets the DuckDB
     oracle check ``n_bytes`` without running zlib.
@@ -100,7 +100,7 @@ def png_encode(width: int, height: int, pixels: bytes,
 
     ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
     return (_PNG_SIG + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(raw), level))
+            + chunk(b"IDAT", zlib.compress(bytes(raw), 0))
             + chunk(b"IEND", b""))
 
 
@@ -173,24 +173,18 @@ def png_decode(payload: bytes) -> dict:
     }
 
 
-def wav_encode(samples, framerate: int = 8000, sampwidth: int = 2) -> bytes:
-    """Minimal mono PCM WAV writer via the stdlib ``wave`` module.  A sample
-    outside the signed range of ``sampwidth`` bytes raises ValueError."""
-    if sampwidth not in (1, 2):
-        raise ValueError("sampwidth must be 1 or 2")
-    hi = (1 << (8 * sampwidth - 1)) - 1
+def wav_encode(samples, framerate: int = 8000) -> bytes:
+    """Minimal mono 16-bit PCM WAV writer via the stdlib ``wave``
+    module.  A sample outside the int16 range raises ValueError."""
     for s in samples:
-        if not -hi - 1 <= s <= hi:
-            raise ValueError(f"sample {s} out of range for width {sampwidth}")
+        if not -32768 <= s <= 32767:
+            raise ValueError(f"sample {s} out of range for width 2")
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
         w.setnchannels(1)
-        w.setsampwidth(sampwidth)
+        w.setsampwidth(2)
         w.setframerate(framerate)
-        if sampwidth == 2:
-            w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
-        else:
-            w.writeframes(bytes(s + 128 for s in samples))
+        w.writeframes(struct.pack(f"<{len(samples)}h", *samples))
     return buf.getvalue()
 
 

@@ -236,18 +236,21 @@ def gc_overhead(events: DataFrame) -> DataFrame:
     )
 
 
-def pause_cusum(
-    events: DataFrame,
-    target_ms: int = 100,
-    threshold_ms: int = 500,
-) -> DataFrame:
+#: CUSUM target and alarm threshold of ``pause_cusum`` and its
+#: streaming twin, in ms of pause
+CUSUM_TARGET_MS = 100
+CUSUM_THRESHOLD_MS = 500
+
+
+def pause_cusum(events: DataFrame) -> DataFrame:
     """Per-JVM CUSUM drift detector over the pause series — the
     change-point alarm between :func:`heap_trend` (slope over the
     whole log) and ``aggregate.mad_anomalies`` (point outliers):
     CUSUM accumulates small sustained regressions that neither of
     those flags (Page 1954's cumulative-sum rule, the standard SPC
     drift chart).  S_i = max(0, S_{i-1} + (pause_i − target)); alarm
-    when S crosses the threshold.  (The reference exports raw pause
+    when S crosses the threshold (``CUSUM_TARGET_MS``,
+    ``CUSUM_THRESHOLD_MS``).  (The reference exports raw pause
     series via TSV/graphite, OutputFormat.scala; the detector is new
     surface under the north rule's aggregate charter.)
 
@@ -261,8 +264,8 @@ def pause_cusum(
     Plan: pause rows filter scan-side → ONE url exchange whose sort
     both windows share → codegen projections.  Output one row per
     timed pause with its running CUSUM and alarm flag."""
-    target_ticks = target_ms * 10_000  # ms → 0.1 µs ticks
-    threshold_ticks = threshold_ms * 10_000
+    target_ticks = CUSUM_TARGET_MS * 10_000  # ms → 0.1 µs ticks
+    threshold_ticks = CUSUM_THRESHOLD_MS * 10_000
     pauses = events.where(F.col("pause_seconds").isNotNull()).select(
         "url",
         "event_idx",
@@ -291,11 +294,13 @@ def pause_cusum(
 #: and the burn rate at which ``slo_burn`` and its streaming twin page
 SLO = 0.01
 BURN_THRESHOLD = 1.0
+#: the short and long burn windows in seconds of JVM age; the long one
+#: is a multiple of the short one, so each short window nests in one
+SLO_SHORT_S = 60
+SLO_LONG_S = 300
 
 
-def slo_burn(
-    events: DataFrame, short_s: int = 60, long_s: int = 300
-) -> DataFrame:
+def slo_burn(events: DataFrame) -> DataFrame:
     """Multi-window SLO burn-rate alert over GC pause time — the SRE-
     workbook pattern (Beyer et al. 2018, ch. 5) applied to the pause
     budget: with an SLO of ``SLO`` (fraction of wall time the JVM may
@@ -311,9 +316,9 @@ def slo_burn(
     charter.)
 
     Windows are fixed buckets of the JVM-age axis (``age_ms div
-    (short_s·1000)``); ``long_s`` must be an integer multiple of
-    ``short_s`` so every short bucket nests exactly in one long
-    bucket (``s_bucket div (long_s/short_s)``).  A jvm_age reset
+    (SLO_SHORT_S·1000)``); ``SLO_LONG_S`` is an integer multiple of
+    ``SLO_SHORT_S``, so every short bucket nests exactly in one long
+    bucket (``s_bucket div (SLO_LONG_S/SLO_SHORT_S)``).  A jvm_age reset
     mid-url (a restart appended to the same log) would fold two runs
     into one window, so consecutive-pause age decreases start a new
     ``run_id`` — the fullgc_pressure restart rule, applied before
@@ -334,14 +339,9 @@ def slo_burn(
     the plan (verified: single Exchange, zero Python post-parse).
     Output ∝ short windows with ≥ 1 timed pause — thousands of rows
     per JVM-day at 100 TB, never ∝ events."""
-    if long_s % short_s != 0:
-        raise ValueError("long_s must be a multiple of short_s")
-    k = long_s // short_s
-    den_short = short_s * 10_000_000 * SLO
-    den_long = long_s * 10_000_000 * SLO
-    if den_short != int(den_short):
-        raise ValueError("short_s * 1e7 * slo must be integral")
-    den_short, den_long = int(den_short), int(den_long)
+    k = SLO_LONG_S // SLO_SHORT_S
+    den_short = int(SLO_SHORT_S * 10_000_000 * SLO)
+    den_long = int(SLO_LONG_S * 10_000_000 * SLO)
 
     pauses = events.where(
         F.col("pause_seconds").isNotNull()
@@ -364,7 +364,7 @@ def slo_burn(
     short = runs.groupBy(
         "url",
         "run_id",
-        F.expr(f"age_ms div {short_s * 1000}").alias("s_bucket"),
+        F.expr(f"age_ms div {SLO_SHORT_S * 1000}").alias("s_bucket"),
     ).agg(F.sum("pause_ticks").alias("ticks_short"))
     wl = Window.partitionBy(
         "url", "run_id", F.expr(f"s_bucket div {k}")
@@ -376,7 +376,7 @@ def slo_burn(
         .select(
             "url",
             "run_id",
-            (F.col("s_bucket") * short_s).alias("win_start_s"),
+            (F.col("s_bucket") * SLO_SHORT_S).alias("win_start_s"),
             "ticks_short",
             "ticks_long",
             burn_s.alias("burn_short"),

@@ -29,10 +29,10 @@ def with_sink(events: DataFrame) -> DataFrame:
 def fanout_write(
     events: DataFrame,
     base_path: str,
-    mode: str = "append",
     fmt: str = "parquet",
 ) -> None:
-    """One-pass fan-out: dynamic partition write on the routing key.
+    """One-pass fan-out: dynamic partition write on the routing key,
+    appended under ``base_path``.
 
     The sink column has low cardinality (≤ ~8 families) so dynamic
     partitioning produces a bounded number of directories; within each
@@ -40,7 +40,7 @@ def fanout_write(
     """
     routed = with_sink(events)
     (
-        routed.write.mode(mode)
+        routed.write.mode("append")
         .partitionBy("sink")
         .format(fmt)
         .save(base_path)

@@ -36,7 +36,6 @@ def hash_split(
     docs: DataFrame,
     weights: dict[str, float] | None = None,
     key: str = "doc_id",
-    salt: str = "split",
 ) -> DataFrame:
     """Assign every row to a named split (train/val/test by default) by
     hash bucket — disjoint, exhaustive, deterministic, and stable under
@@ -44,7 +43,7 @@ def hash_split(
     added, unlike sorted/percentile splits)."""
     weights = weights or {"train": 0.9, "val": 0.05, "test": 0.05}
     total = sum(weights.values())
-    b = hash_bucket(F.col(key), salt)
+    b = hash_bucket(F.col(key), "split")
     names = list(weights)
     cum = 0.0
     thresholds = []
@@ -350,14 +349,12 @@ def pack_sequences(
     docs: DataFrame,
     seq_len: int = 128,
     n_groups: int | None = None,
-    key: str = "doc_id",
-    salt: str = "pack",
 ) -> DataFrame:
     """Pack the corpus into fixed-``seq_len``-token training sequences
     (GPT-style concat-and-chunk): documents are concatenated in a
     deterministic content-keyed order and sliced every ``seq_len``
     tokens, so a document can SPAN sequence boundaries — the output is
-    one row per (doc, sequence) span, ``(key, pack_group, seq_idx,
+    one row per (doc, sequence) span, ``(doc_id, pack_group, seq_idx,
     tok_start, tok_end)`` with ``[tok_start, tok_end)`` the doc-local
     token slice that lands in that sequence.  This is the step that
     turns a filtered corpus into the equal-length rows a trainer
@@ -378,21 +375,21 @@ def pack_sequences(
     if n_groups is None:
         n_groups = docs.sparkSession.sparkContext.defaultParallelism
 
-    b = hash_bucket(F.col(key), salt)
+    b = hash_bucket(F.col("doc_id"), "pack")
     toks = F.regexp_count(F.col("text"), F.lit(TOKEN_RE))
     base = docs.select(
-        F.col(key),
+        F.col("doc_id"),
         (b % n_groups).cast("int").alias("pack_group"),
         b.alias("order_key"),
         toks.cast("long").alias("doc_tokens"),
     ).where(F.col("doc_tokens") > 0)
     w = (
         Window.partitionBy("pack_group")
-        .orderBy("order_key", key)
+        .orderBy("order_key", "doc_id")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     spans = base.select(
-        key,
+        "doc_id",
         "pack_group",
         "doc_tokens",
         (F.sum("doc_tokens").over(w) - F.col("doc_tokens")).alias("off"),
@@ -403,14 +400,14 @@ def pack_sequences(
         .cast("long")
     )
     exploded = spans.select(
-        key,
+        "doc_id",
         "pack_group",
         "doc_tokens",
         "off",
         F.explode(F.sequence(first, last)).alias("seq_idx"),
     )
     return exploded.select(
-        key,
+        "doc_id",
         "pack_group",
         F.col("seq_idx").cast("long").alias("seq_idx"),
         F.greatest(
@@ -423,11 +420,7 @@ def pack_sequences(
     )
 
 
-def epoch_shuffle(
-    docs: DataFrame,
-    epoch: int,
-    n_shards: int = 64,
-) -> DataFrame:
+def epoch_shuffle(docs: DataFrame, epoch: int) -> DataFrame:
     """Deterministic per-epoch global permutation of the corpus — the
     'reshuffle the training data every epoch' step of an LLM data
     loader, as a pure function of (corpus, epoch): re-running
@@ -437,7 +430,7 @@ def epoch_shuffle(
     The permutation is content-keyed, never RNG-state-keyed: each
     row's order key is the portable 60-bit md5 of
     ``shuffle:epoch:doc_id`` (``dedup.md5_long`` — identical in DuckDB),
-    its shard is ``order_key % n_shards``, and its position is the
+    its shard is ``order_key % 64``, and its position is the
     rank of the order key within the shard (ties broken by
     ``doc_id``, so the order is total and bit-stable).  Global read
     order = (shard, pos) — a loader streams shard 0..n-1.
@@ -445,8 +438,8 @@ def epoch_shuffle(
     Scale: NO global sort.  One exchange on shard, then a
     per-partition window sort — each shard sorts independently, so
     skew is impossible by construction (md5 spreads uniformly) and
-    the sort never exceeds corpus/n_shards rows per task.  At 100 TB
-    pick n_shards ≈ corpus_bytes / target_file_size, write
+    the sort never exceeds corpus/64 rows per task.  At 100 TB the
+    shard count would be ≈ corpus_bytes / target_file_size; write
     partitioned by shard, and the epoch is materialized without any
     driver-side state."""
     k = md5_long(
@@ -462,7 +455,7 @@ def epoch_shuffle(
     keyed = docs.select(
         F.col("doc_id"),
         k.alias("order_key"),
-        (k % F.lit(n_shards)).cast("int").alias("shard"),
+        (k % F.lit(64)).cast("int").alias("shard"),
     )
     w = Window.partitionBy("shard").orderBy("order_key", "doc_id")
     return keyed.select(
@@ -474,9 +467,7 @@ def epoch_shuffle(
 
 
 def corpus_manifest(
-    docs: DataFrame,
-    tokens_per_shard: int = 4096,
-    n_groups: int | None = None,
+    docs: DataFrame, n_groups: int | None = None
 ) -> DataFrame:
     """Per-shard release MANIFEST — the reproducibility artifact a
     training-data release ships next to its shards: for every
@@ -494,9 +485,7 @@ def corpus_manifest(
     handles skew), and ONE (shard_group, shard_idx) partial-aggregated
     exchange; checksum addition is commutative so map-side combine
     does most of the work."""
-    sh = shard_by_tokens(
-        docs, tokens_per_shard=tokens_per_shard, n_groups=n_groups
-    )
+    sh = shard_by_tokens(docs, tokens_per_shard=4096, n_groups=n_groups)
     tick = F.conv(
         F.substring(
             F.md5(

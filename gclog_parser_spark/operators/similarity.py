@@ -339,23 +339,18 @@ def _query_probes(
     ).select("q", F.explode("top.cell").alias("cell"))
 
 
-def ivf_topk(
-    emb: DataFrame,
-    query_vec_id: int = 0,
-    k: int = 5,
-    cents=None,
-) -> DataFrame:
-    """IVF approximate top-k: exact cosine, but only within the 2
-    cells whose centroids score highest for the query —
+def ivf_topk(emb: DataFrame, cents=None) -> DataFrame:
+    """IVF approximate top-5 for query vector 0: exact cosine, but only
+    within the 2 cells whose centroids score highest for the query —
     the inverted-file candidate set.  Candidate generation is an
     equi-join on the cell id (shuffle ∝ corpus, never ∝ pairs); at
     scale the cells are partition-pruned instead of joined.
     ``cents`` swaps in trained centroids (``ivf_train``)."""
     cents = cents if cents is not None else centroid_components()
     assigned = ivf_assign(emb, cents=cents)
-    probes = _query_probes(emb, query_vec_id, cents, 2)
+    probes = _query_probes(emb, 0, cents, 2)
     cand = assigned.join(F.broadcast(probes), "cell").where(
-        F.col("vec_id") != query_vec_id
+        F.col("vec_id") != 0
     )
     scored = cand.select(
         "vec_id",
@@ -363,43 +358,32 @@ def ivf_topk(
     )
     return (
         scored.orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(k)
+        .limit(5)
         .select("vec_id", "sim")
     )
 
 
 def neardup_pairs(
-    emb: DataFrame,
-    threshold: float = 0.9,
-    block_col: str | None = None,
-    seed: int = 42,
-    dim: int = EMB_DIM,
+    emb: DataFrame, threshold: float = 0.9, seed: int = 42
 ) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs within a blocking key.
+    """Embedding-cosine near-duplicate pairs within an LSH bucket.
 
-    Default blocking is the LSH bucket (``lsh_buckets``): block size is
+    Blocking is the LSH bucket (``lsh_buckets``): block size is
     bounded by bucket occupancy (corpus/2^planes in expectation), never
     by any data-supplied attribute — a hot ``label`` would make an
     attribute block O(n²) at 10^12 scale.  True near-dups (cos ≥ 0.9)
     land in the same sign-bit bucket with high probability; for more
     recall union the pairs from a few ``seed`` values (independent
-    plane sets), exactly like multi-band MinHash-LSH.  Pass
-    ``block_col`` to block on an explicit attribute instead (small,
-    trusted cardinality-per-value only).
+    plane sets), exactly like multi-band MinHash-LSH.
 
     Pairs are scored per block inside the Arrow group map
     (`_bucket_pairs_pd`): each vector crosses the exchange once, only
     scalar rows come back, and the rank-1-update left folds keep the
     sums bit-identical to the ``_cos_sim`` expression the DuckDB
     oracle mirrors; division and round(6) stay JVM-side."""
-    if block_col is None:
-        base = lsh_buckets(emb, seed, dim=dim).select(
-            "vec_id", "embedding", F.col("bucket").alias("block")
-        )
-    else:
-        base = emb.select(
-            "vec_id", "embedding", F.col(block_col).alias("block")
-        )
+    base = lsh_buckets(emb, seed).select(
+        "vec_id", "embedding", F.col("bucket").alias("block")
+    )
     return (
         _bucket_pair_sims(base, "block")
         .where(F.col("src") < F.col("dst"))
@@ -499,30 +483,29 @@ def _cos_sim_np_int8(q_qvec):
     return pandas_udf(_sim, "double")
 
 
-def quantized_scan_topk(
-    qz: DataFrame, query_vec_id: int = 0, k: int = 10
-) -> DataFrame:
-    """Top-k over an ALREADY-quantized table (``quantize_embeddings``
-    output, e.g. the int8 parquet a pipeline materializes once and
-    scans many times) with the numpy int8 scorer — the steady-state
-    ANN serving scan: 4x less parquet read + Arrow transfer than the
-    fp32 corpus."""
-    row = qz.where(F.col("vec_id") == query_vec_id).select("qvec").head()
+def quantized_scan_topk(qz: DataFrame) -> DataFrame:
+    """Top-10 for query vector 0 over an ALREADY-quantized table
+    (``quantize_embeddings`` output, e.g. the int8 parquet a pipeline
+    materializes once and scans many times) with the numpy int8 scorer
+    — the steady-state ANN serving scan: 4x less parquet read + Arrow
+    transfer than the fp32 corpus."""
+    row = qz.where(F.col("vec_id") == 0).select("qvec").head()
     if row is None:
-        raise ValueError(f"query vec_id {query_vec_id} not found")
-    corpus = qz.where(F.col("vec_id") != query_vec_id)
+        raise ValueError("query vec_id 0 not found")
+    corpus = qz.where(F.col("vec_id") != 0)
     return (
         corpus.select(
             "vec_id",
             _cos_sim_np_int8(list(row["qvec"]))(F.col("qvec")).alias("sim"),
         )
         .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(k)
+        .limit(10)
     )
 
 
-def quantized_topk(emb: DataFrame, query_vec_id: int = 0) -> DataFrame:
-    """Exact top-10 cosine over the int8-quantized corpus — the
+def quantized_topk(emb: DataFrame) -> DataFrame:
+    """Exact top-10 cosine for query vector 0 over the int8-quantized
+    corpus — the
     memory-bound production variant of ``cosine_topk``.  The integer
     dot products (|q_i| <= 127, so a 4096-dim dot < 2^31) are exact in
     double arithmetic, which is what makes this bit-parity with the
@@ -532,10 +515,8 @@ def quantized_topk(emb: DataFrame, query_vec_id: int = 0) -> DataFrame:
     error (measured per corpus by ``quantization_error``).
     Deterministic order: (rounded sim desc, vec_id asc)."""
     qz = quantize_embeddings(emb)
-    q = qz.where(F.col("vec_id") == query_vec_id).select(
-        F.col("qvec").alias("q")
-    )
-    corpus = qz.where(F.col("vec_id") != query_vec_id)
+    q = qz.where(F.col("vec_id") == 0).select(F.col("qvec").alias("q"))
+    corpus = qz.where(F.col("vec_id") != 0)
     sim = _cos_sim(F.col("qvec"), F.col("q"))
     return (
         corpus.crossJoin(F.broadcast(q))
@@ -1087,9 +1068,7 @@ def ivfpq_topk(
     return _adc_topk(cand, cents_pq, emb, k)
 
 
-def knn_graph(
-    emb: DataFrame, k: int = 3, seeds=None, dim: int = EMB_DIM
-) -> DataFrame:
+def knn_graph(emb: DataFrame, k: int = 3, dim: int = EMB_DIM) -> DataFrame:
     """Approximate k-NN graph: for EVERY vector, its top-k cosine
     neighbors within its LSH bucket — the all-queries generalization of
     ``lsh_bucket_topk`` and the building block for SemDeDup-style
@@ -1108,45 +1087,26 @@ def knn_graph(
     ≤ k·n rows, not the full candidate set.  Zero-norm vectors score
     NULL and are excluded (both engines).
 
-    ``seeds``: pass several plane-set seeds to union candidate sets
-    before ranking — the multiband recall amplifier
-    (``neardup_pairs_multiband``): a true neighbor split off by one
-    unlucky hyperplane set is caught by another; cost grows linearly
-    in seeds (one bucket group map each), recall loss decays
-    exponentially.
-
     Returns ``(src, dst, sim, rank)``, rank 1-based per src."""
     from pyspark.sql import Window
 
-    def _cands(sd):
-        b = lsh_buckets(emb, sd, dim=dim).select(
-            "vec_id", "embedding", "bucket"
-        )
-        return _bucket_pair_sims(b, "bucket").where(
-            F.col("sim").isNotNull()
-        )
-
-    scored = _cands(42)
-    for sd in seeds or ():
-        if sd != 42:
-            scored = scored.unionByName(_cands(sd))
-    if seeds:
-        scored = scored.distinct()
+    b = lsh_buckets(emb, 42, dim=dim).select("vec_id", "embedding", "bucket")
+    scored = _bucket_pair_sims(b, "bucket").where(F.col("sim").isNotNull())
     w = Window.partitionBy("src").orderBy(F.desc("sim"), F.asc("dst"))
     return scored.withColumn(
         "rank", F.row_number().over(w)
     ).where(F.col("rank") <= k)
 
 
-def matryoshka_audit(embs: DataFrame, dims=(16, 32)) -> DataFrame:
+def matryoshka_audit(embs: DataFrame) -> DataFrame:
     """Matryoshka truncation audit (Kusupati et al., NeurIPS 2022):
-    per (label, truncation dim d), how much of each vector's energy
-    the d-prefix retains — ``||x[:d]|| / ||x||``, which is exactly the
-    cosine between the full vector and its zero-padded truncation.
-    The go/no-go read before serving truncated embeddings (MRL-style
-    progressive dims) from the same table the full-dim ANN path scans:
-    high retention → truncate and quarter the serving bytes, low →
-    the tail dims carry real signal for that label.
+    per (label, truncation dim d ∈ {16, 32}), how much of each vector's
+    energy the d-prefix retains — ``||x[:d]|| / ||x||``, which is exactly
+    the cosine between the full vector and its zero-padded truncation. The
+    go/no-go read before serving truncated embeddings (MRL-style progressive
+    dims) from the same table the full-dim ANN path scans: high retention →
+    truncate and quarter the serving bytes, low → the tail dims carry real
+    signal for that label.
 
     Parity discipline: per-vector ratio = ONE sqrt of ONE division of
     two deterministic left-to-right array folds (the `_dot` shape every
@@ -1157,7 +1117,7 @@ def matryoshka_audit(embs: DataFrame, dims=(16, 32)) -> DataFrame:
     stats (same guard as ``_cos_sim``).
 
     Plan: scan-side per-vector folds (no Python), one explode ×
-    |dims|, one partial-agged exchange on the tiny (label, d) key;
+    2 dims, one partial-agged exchange on the tiny (label, d) key;
     output ∝ labels × dims."""
     emb = F.col("embedding")
     base = embs.select(
@@ -1167,7 +1127,7 @@ def matryoshka_audit(embs: DataFrame, dims=(16, 32)) -> DataFrame:
         "label",
         "embedding",
         "full_sq",
-        F.explode(F.array(*[F.lit(int(d)) for d in dims])).alias("d"),
+        F.explode(F.array(F.lit(16), F.lit(32))).alias("d"),
     )
     pre = F.slice(emb, F.lit(1), F.col("d"))
     ratio = F.when(

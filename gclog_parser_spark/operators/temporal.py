@@ -50,7 +50,6 @@ def asof_join(
     right: DataFrame,
     key: str,
     right_cols: list[str] | None = None,
-    tolerance_secs: float | None = None,
 ) -> DataFrame:
     """For every left row, attach the latest right row with
     ``right.ts <= left.ts`` for the same ``key`` (backward as-of, the
@@ -66,9 +65,6 @@ def asof_join(
     rows.  Ties inside the right side are broken deterministically by
     ordering on every carried column (the synthetic and GC streams
     are tie-free; the ordering makes retries stable anyway).
-
-    ``tolerance_secs`` nulls the match out when the right row is
-    older than the given horizon (pandas ``tolerance=``).
     """
     rcols = list(right_cols) if right_cols is not None else [
         c for c in right.columns if c != key
@@ -105,30 +101,11 @@ def asof_join(
         u = u.withColumn(
             f"asof_{c}", F.last(f"_r_{c}", ignorenulls=True).over(w)
         )
-    out = (
+    return (
         u.filter(F.col(_SIDE) == 1)
         .drop(_SIDE, *[f"_r_{c}" for c in rcols])
         .withColumnRenamed(_TS, "ts")
     )
-    if tolerance_secs is not None:
-        # materialize the staleness flag FIRST — nulling the matched
-        # ts in place would corrupt the predicate for the later columns
-        out = out.withColumn(
-            "_asof_stale",
-            (
-                _micros(F.col("ts"))
-                - _micros(F.col("asof_ts"))
-            ) > int(tolerance_secs * 1_000_000),
-        )
-        for c in rcols:
-            out = out.withColumn(
-                f"asof_{c}",
-                F.when(F.col("_asof_stale"), F.lit(None)).otherwise(
-                    F.col(f"asof_{c}")
-                ),
-            )
-        out = out.drop("_asof_stale")
-    return out
 
 
 def range_join(
@@ -177,9 +154,9 @@ def range_join(
     )
 
 
-def resample_ffill(events: DataFrame, step: str = "1 hour") -> DataFrame:
+def resample_ffill(events: DataFrame) -> DataFrame:
     """Time-series resampling with forward fill: per ``user_id``, a regular
-    ``step`` grid from the key's first to last observation, carrying
+    hourly grid from the key's first to last observation, carrying
     the most recent observed ``value`` across empty buckets — the
     gap-filling primitive behind every dashboard line chart and every
     join-against-a-regular-clock feature pipeline.
@@ -199,13 +176,9 @@ def resample_ffill(events: DataFrame, step: str = "1 hour") -> DataFrame:
     only its own window (same caveat as sessionization)."""
     from pyspark.sql import Window
 
-    n, unit = step.split()
-    unit = unit.rstrip("s")
-    if n != "1" or unit not in ("minute", "hour", "day", "week"):
-        # the grid step must equal the truncation unit or observations
-        # could land on off-grid buckets and silently vanish
-        raise ValueError(f"step must be 1 minute/hour/day/week: {step}")
-    bucket = F.date_trunc(unit, F.col("ts"))
+    # the grid step equals the truncation unit, so every observation
+    # lands on a grid bucket
+    bucket = F.date_trunc("hour", F.col("ts"))
     order_key = F.concat(
         F.lpad(_micros(F.col("ts")).cast("string"), 20, "0"),
         F.lpad(F.col("event_id").cast("string"), 12, "0"),
@@ -229,7 +202,7 @@ def resample_ffill(events: DataFrame, step: str = "1 hour") -> DataFrame:
         .select(
             "user_id",
             F.explode(
-                F.sequence("_lo", "_hi", F.expr(f"INTERVAL {step}"))
+                F.sequence("_lo", "_hi", F.expr("INTERVAL 1 hour"))
             ).alias("bucket"),
         )
     )

@@ -165,9 +165,9 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def strip_boilerplate(docs: DataFrame, max_df: int = 10) -> DataFrame:
+def strip_boilerplate(docs: DataFrame) -> DataFrame:
     """Remove boilerplate lines — lines whose exact text appears in more
-    than ``max_df`` documents (nav bars, cookie banners, footers) — and
+    than 10 documents (nav bars, cookie banners, footers) — and
     return (doc_id, n_lines, n_removed, cleaned_hash).
 
     Relational shape: explode lines with position → line document
@@ -185,7 +185,7 @@ def strip_boilerplate(docs: DataFrame, max_df: int = 10) -> DataFrame:
     hot = (
         lines.groupBy("line")
         .agg(F.count_distinct("doc_id").alias("df"))
-        .where(F.col("df") > max_df)
+        .where(F.col("df") > 10)
         .select("line", F.lit(True).alias("is_hot"))
     )
     marked = lines.join(hot, "line", "left")
@@ -365,8 +365,6 @@ def ngram_decontaminate_bloom(
     benchmark: DataFrame,
     k: int = 5,
     min_hits: int = 3,
-    m_bits: int | None = None,
-    n_hashes: int | None = None,
 ) -> DataFrame:
     """:func:`ngram_decontaminate` for benchmark sets too large to
     broadcast as an exact hash relation (a full eval-suite union at
@@ -385,15 +383,7 @@ def ngram_decontaminate_bloom(
     FP rate · shingles); the benchmark side shuffles once on shingle.
     The join is hinted shuffle-hash — with the bench side no longer
     broadcastable there is no reason to pay a sort."""
-    from gclog_parser_spark.operators.bloomjoin import (
-        M_BITS,
-        N_HASHES,
-        bloom_build,
-        bloom_test,
-    )
-
-    m_bits = M_BITS if m_bits is None else m_bits
-    n_hashes = N_HASHES if n_hashes is None else n_hashes
+    from gclog_parser_spark.operators import bloomjoin
 
     def _sh(df: DataFrame) -> DataFrame:
         sh = F.array_distinct(_shingle_expr(F.col("w"), k))
@@ -402,8 +392,9 @@ def ngram_decontaminate_bloom(
         ).select("doc_id", F.explode(sh).alias("shingle"))
 
     bench = _sh(benchmark).select("shingle").distinct()
-    words = bloom_build(bench, "shingle", m_bits, n_hashes)
-    bm, pred = bloom_test("shingle", words, m_bits, n_hashes)
+    m_bits, n_hashes = bloomjoin.M_BITS, bloomjoin.N_HASHES
+    words = bloomjoin.bloom_build(bench, "shingle", m_bits, n_hashes)
+    bm, pred = bloomjoin.bloom_test("shingle", words, m_bits, n_hashes)
     survivors = (
         _sh(corpus)
         .withColumn("__bloom_bm", bm)
@@ -456,12 +447,11 @@ def tfidf_topk(docs: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
-def chunk_documents(
-    docs: DataFrame, chunk_words: int = 32, overlap: int = 8
-) -> DataFrame:
+def chunk_documents(docs: DataFrame) -> DataFrame:
     """Split each document into fixed-width word chunks with overlap
     (the RAG / pretraining context-window chunker): chunk ``i`` covers
     words ``[i*stride+1, i*stride+chunk_words]`` with
+    ``chunk_words = 32``, ``overlap = 8`` and
     ``stride = chunk_words - overlap``; the final chunk is clipped at
     the document end; every doc yields ≥1 chunk.
 
@@ -470,7 +460,7 @@ def chunk_documents(
     joins) — zero shuffles, so it chunks a 10^12-doc corpus at scan
     speed.  Output: (doc_id, chunk_idx, chunk_text, n_chunk_words).
     """
-    assert 0 <= overlap < chunk_words
+    chunk_words, overlap = 32, 8
     stride = chunk_words - overlap
     # integer-exact ceil((max(n-overlap,1)) / stride) via DIV
     n_chunks = F.expr(
@@ -523,11 +513,7 @@ def corpus_ngrams(docs: DataFrame, k: int = 2, top: int = 50) -> DataFrame:
     )
 
 
-def fuzzy_pairs(
-    docs: DataFrame,
-    max_len_diff: int = 64,
-    max_block: int = 50,
-) -> DataFrame:
+def fuzzy_pairs(docs: DataFrame) -> DataFrame:
     """Edit-distance near-duplicate pairs (distance <= 24): block on
     the lowercased 16-char prefix, then Levenshtein over the 96-char
     head within each block — the fuzzy-dedup
@@ -536,15 +522,17 @@ def fuzzy_pairs(
 
     Scale discipline (same as `jaccard_pairs`' df cap and
     `similarity.neardup_pairs`' LSH blocking): the self-join runs only
-    inside prefix blocks, and blocks larger than ``max_block`` are
-    dropped BEFORE the join — a boilerplate prefix shared by millions
-    of docs can otherwise explode quadratically.  Fan-out is therefore
-    ≤ ``max_block``² per block; `levenshtein` is JVM codegen on the
-    truncated heads (O(96²) per candidate, never full texts).
-    Dropped-block keys are observable via the block-size relation, not
-    silently hidden (the cap is a documented recall trade, matching
-    the reference-free corpus ops' conventions).
+    inside prefix blocks, and blocks larger than ``max_block`` (50 docs) are
+    dropped BEFORE the join — a boilerplate prefix shared by millions of
+    docs can otherwise explode quadratically.  Fan-out is therefore ≤
+    ``max_block``² per block; `levenshtein` is JVM codegen on the truncated
+    heads (O(96²) per candidate, never full texts). Dropped-block keys are
+    observable via the block-size relation, not silently hidden (the cap is
+    a documented recall trade, matching the reference-free corpus ops'
+    conventions).  Pairs whose lengths differ by more than ``max_len_diff``
+    (64 chars) are not compared.
     """
+    max_len_diff, max_block = 64, 50
     d = docs.select(
         F.col("doc_id"),
         F.lower(F.substring("text", 1, 16)).alias("pfx"),
@@ -938,9 +926,7 @@ def hashed_feature_weights(spark):
     )
 
 
-def classifier_score(
-    docs: DataFrame, weights: DataFrame | None = None
-) -> DataFrame:
+def classifier_score(docs: DataFrame) -> DataFrame:
     """Linear text-classifier INFERENCE at corpus scale — the
     quality/toxicity/domain-filter step of an LLM data pipeline
     (fastText-style: hashed bag of word uni+bigrams → weight lookup →
@@ -970,8 +956,7 @@ def classifier_score(
         md5_long,
     )
 
-    if weights is None:
-        weights = hashed_feature_weights(docs.sparkSession)
+    weights = hashed_feature_weights(docs.sparkSession)
     # materialize the words array in its own projection: passing the
     # split() expression straight into _shingle_expr re-evaluates the
     # regex split per element_at (O(words) splits per doc, ~30x wall)
@@ -1297,7 +1282,7 @@ def hybrid_rrf_topk(
     return fused.orderBy(F.desc("rrf"), F.asc("doc_id")).limit(10)
 
 
-def c4_line_filter(docs: DataFrame, return_text: bool = False) -> DataFrame:
+def c4_line_filter(docs: DataFrame) -> DataFrame:
     """C4's line-level cleaning rules (Raffel et al. 2020, "Exploring
     the Limits of Transfer Learning", §2.2) — the step BETWEEN raw
     extraction and the document-level Gopher gate
@@ -1314,8 +1299,7 @@ def c4_line_filter(docs: DataFrame, return_text: bool = False) -> DataFrame:
     Spark lambda exprs re-derived in DuckDB as ``list_filter`` —
     engines agree on every line verdict, not just the counts.
 
-    Returns ``(doc_id, n_lines, n_kept, kept)`` (+ ``clean_text``,
-    the surviving lines re-joined, when ``return_text``)."""
+    Returns ``(doc_id, n_lines, n_kept, kept)``."""
     lines = F.split(F.col("text"), "\n")
 
     def _keep(line):
@@ -1328,7 +1312,7 @@ def c4_line_filter(docs: DataFrame, return_text: bool = False) -> DataFrame:
         )
 
     kept_lines = F.filter(lines, _keep)
-    out = docs.select(
+    return docs.select(
         "doc_id",
         F.size(lines).alias("n_lines"),
         F.size(kept_lines).alias("n_kept"),
@@ -1336,13 +1320,7 @@ def c4_line_filter(docs: DataFrame, return_text: bool = False) -> DataFrame:
             (F.size(kept_lines) >= F.lit(3))
             & ~F.lower(F.col("text")).contains("lorem ipsum")
         ).alias("kept"),
-        *(
-            [F.array_join(kept_lines, "\n").alias("clean_text")]
-            if return_text
-            else []
-        ),
     )
-    return out
 
 
 def encoding_stats(docs: DataFrame) -> DataFrame:
@@ -1506,7 +1484,7 @@ def readability(docs: DataFrame) -> DataFrame:
     )
 
 
-def cooccur_pairs(docs: DataFrame, min_support: int = 5) -> DataFrame:
+def cooccur_pairs(docs: DataFrame) -> DataFrame:
     """Within-document unordered co-occurrence mining (the 2-itemset
     level of Apriori, Agrawal & Srikant VLDB'94, over documents as
     baskets): for every word pair, in how many documents do BOTH
@@ -1517,8 +1495,8 @@ def cooccur_pairs(docs: DataFrame, min_support: int = 5) -> DataFrame:
     "spark…shuffle" co-occurring ten words apart).
 
     The scale story IS the Apriori property: a pair can reach
-    ``min_support`` only if BOTH words individually do, so words are
-    pruned by document frequency BEFORE the quadratic per-doc pair
+    ``min_support`` (5 documents) only if BOTH words individually do,
+    so words are pruned by document frequency BEFORE the quadratic per-doc pair
     join — the candidate explosion is bounded by frequent words per
     doc, not vocabulary.  Exact BIGINT counts; lift is ONE IEEE
     division of BIGINT products (``n_pair·N / (df_a·df_b)``), HALF_UP
@@ -1528,9 +1506,10 @@ def cooccur_pairs(docs: DataFrame, min_support: int = 5) -> DataFrame:
     Plan: distinct (doc, word) exchange → df filter (broadcast-sized
     frequent vocab at any corpus scale: it's ∝ words above min_support,
     not docs) → per-doc self-join of the pruned token sets → one
-    partial-agged (w1, w2) exchange.  At 10^12 docs raise
-    ``min_support`` with the corpus — support thresholds are relative
-    in practice — and the pruned join stays bounded."""
+    partial-agged (w1, w2) exchange.  At 10^12 docs ``min_support``
+    would rise with the corpus — support thresholds are relative in
+    practice — and the pruned join stays bounded."""
+    min_support = 5
     dw = (
         docs.select(
             "doc_id", F.explode(_words(F.col("text"))).alias("w")

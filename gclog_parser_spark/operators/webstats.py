@@ -259,15 +259,15 @@ def canonicalize_url(df: DataFrame) -> DataFrame:
     )
 
 
-def crawl_budget(df: DataFrame, budget: int = 10_000) -> DataFrame:
+def crawl_budget(df: DataFrame) -> DataFrame:
     """Politeness-aware crawl-budget apportionment: split a global fetch
-    budget across the hosts of ``url`` PROPORTIONALLY to their page
-    counts with the largest-remainder (Hamilton) method — the
-    integer-exact scheduler a recrawl planner runs after
-    :func:`url_facet_rollup`: every host gets ``floor(budget * n_pages /
-    total)`` slots and the leftover slots go to the largest fractional
-    remainders, so the quotas sum to EXACTLY ``budget`` (no float drift,
-    no over-fetch) and no host is starved by rounding.
+    budget of ``budget = 10_000`` slots across the hosts of ``url``
+    PROPORTIONALLY to their page counts with the largest-remainder
+    (Hamilton) method — the integer-exact scheduler a recrawl planner runs
+    after :func:`url_facet_rollup`: every host gets ``floor(budget * n_pages
+    / total)`` slots and the leftover slots go to the largest fractional
+    remainders, so the quotas sum to EXACTLY ``budget`` (no float drift, no
+    over-fetch) and no host is starved by rounding.
 
     All arithmetic is BIGINT (`DIV` / `%`); ties on the remainder
     break by host ASC via ``row_number``, so the result is a pure
@@ -281,8 +281,7 @@ def crawl_budget(df: DataFrame, budget: int = 10_000) -> DataFrame:
     per-partition counts), same trick as the global top-n operator.
     Output ∝ hosts.
     """
-    if budget < 0:
-        raise ValueError("crawl_budget requires budget >= 0")
+    budget = 10_000
     host = F.try_parse_url(F.col("url"), F.lit("HOST"))
     hosts_rel = (
         df.select(host.alias("host"))

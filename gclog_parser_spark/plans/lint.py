@@ -13,15 +13,16 @@ Rules (each names the failure it prevents at scale):
   UDF path, ~10-100× slower than Arrow; ``ArrowEvalPython`` /
   ``MapInPandas`` / ``FlatMapGroupsInPandas`` are the sanctioned
   Python lanes.
-* ``exchange-storm:<n>`` — more than ``max_exchanges`` shuffles in one
+* ``exchange-storm:<n>`` — more than ``MAX_EXCHANGES`` shuffles in one
   plan means some stage re-partitions data it could have reused; every
   exchange is a full write+read of the stage's data.
 * ``global-sort`` — an ``Exchange rangepartitioning`` that does not
   feed a ``TakeOrderedAndProject`` is a whole-dataset sort; at 10^12
-  rows that is the most expensive operator Spark has.  Tiny
-  presentation sorts opt out via ``allow=("global-sort",)`` — the
-  caller is asserting the sorted relation is group-sized, which a
-  string linter cannot know.
+  rows that is the most expensive operator Spark has.
+
+A caller that accepts a finding for one plan (a tiny presentation sort
+the caller knows is group-sized, which a string linter cannot know, or
+a documented higher exchange count) filters it out of the result.
 """
 
 from __future__ import annotations
@@ -42,14 +43,11 @@ def plan_string(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def lint_plan(
-    df: DataFrame,
-    max_exchanges: int = 12,
-    allow: tuple[str, ...] = (),
-) -> list[str]:
-    """Findings for ``df``'s executed plan — empty list == clean.
-    ``allow`` suppresses named rules (each suppression is a reviewed,
-    documented exception at the call site)."""
+MAX_EXCHANGES = 12
+
+
+def lint_plan(df: DataFrame) -> list[str]:
+    """Findings for ``df``'s executed plan — empty list == clean."""
     plan = plan_string(df)
     findings: list[str] = []
     if "CartesianProduct" in plan:
@@ -57,11 +55,11 @@ def lint_plan(
     if "BatchEvalPython" in plan:
         findings.append("row-python")
     n = len(re.findall(r"Exchange (?:hash|range)partitioning", plan))
-    if n > max_exchanges:
+    if n > MAX_EXCHANGES:
         findings.append(f"exchange-storm:{n}")
     if (
         re.search(r"Exchange rangepartitioning", plan)
         and "TakeOrderedAndProject" not in plan
     ):
         findings.append("global-sort")
-    return [f for f in findings if f.split(":")[0] not in allow]
+    return findings

@@ -883,13 +883,14 @@ def _refs_path(table: str) -> str:
     return os.path.join(table, _META, "refs.json")
 
 
-def create_tag(table: str, name: str, snapshot_id: int | None = None) -> int:
-    """Pin a name to a snapshot (Iceberg tag): time travel by label —
+def create_tag(table: str, name: str) -> int:
+    """Pin a name to the current snapshot (Iceberg tag): time travel by
+    label —
     'the corpus release run X trained on'.  Expiry does not consult
     tags (keep_last is the only retention rule here); reading a tag
     whose snapshot was expired fails loudly.  Atomic read-modify-write
     via tmp+rename."""
-    sid = snapshot_id if snapshot_id is not None else current_snapshot_id(table)
+    sid = current_snapshot_id(table)
     if sid is None or not os.path.exists(_snap_path(table, sid)):
         raise FileNotFoundError(f"snapshot {sid} not in {table}")
     refs = read_refs(table)

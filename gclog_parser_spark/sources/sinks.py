@@ -47,14 +47,14 @@ def write_socket(
     lines: DataFrame,
     host: str,
     port: int = DEFAULT_GRAPHITE_PORT,
-    batch_size: int = 500,
 ) -> None:
     """Send a (url, line_no, line) DataFrame to ``host:port``, one
-    connection per partition, per-log line order preserved."""
+    connection per partition, 500 lines per send, per-log line order
+    preserved."""
     (
         lines.repartition("url")
         .sortWithinPartitions("url", "line_no")
-        .foreachPartition(_send_partition(host, port, batch_size))
+        .foreachPartition(_send_partition(host, port, 500))
     )
 
 
@@ -63,9 +63,9 @@ def stream_to_socket(
     host: str,
     port: int = DEFAULT_GRAPHITE_PORT,
     checkpoint: str | None = None,
-    transform=None,
 ):
-    """Streaming variant of the socket sink.
+    """Streaming variant of the socket sink over a (url, line_no,
+    line) stream.
 
     Delivery semantics (documented, test-pinned in
     tests/test_socket_sink.py): **at-least-once per micro-batch**.  The
@@ -79,16 +79,9 @@ def stream_to_socket(
     the transport is at-least-once (the reference's single-threaded
     SocketSink, output/OutputSink.scala:18-36, has the same property
     one process at a time).  A cleanly-committed batch is never re-sent
-    on restart.
-
-    ``transform``: optional batch-DataFrame → lines-DataFrame callable
-    applied INSIDE ``foreachBatch`` — analytic windows and
-    ``applyInPandas`` (rates, graphite formatting) are legal there on
-    the micro-batch even though a streaming DF rejects them."""
+    on restart."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if transform is not None:
-            batch_df = transform(batch_df)
         write_socket(batch_df, host, port)
 
     writer = lines_stream.writeStream.foreachBatch(write_batch)

@@ -28,7 +28,14 @@ from pyspark.sql.types import (
 )
 
 from gclog_parser_spark.core import half_up, rate_step, to_ticks
-from gclog_parser_spark.operators.rates import BURN_THRESHOLD, SLO
+from gclog_parser_spark.operators.rates import (
+    BURN_THRESHOLD,
+    CUSUM_TARGET_MS,
+    CUSUM_THRESHOLD_MS,
+    SLO,
+    SLO_LONG_S,
+    SLO_SHORT_S,
+)
 from gclog_parser_spark.schema import EVENTS_SCHEMA
 
 STATE_SCHEMA = StructType(
@@ -172,10 +179,7 @@ CUSUM_SCHEMA = StructType(
 
 
 def stateful_cusum(
-    events: DataFrame,
-    target_ms: int = 100,
-    threshold_ms: int = 500,
-    end_marker_col: str | None = None,
+    events: DataFrame, end_marker_col: str | None = None
 ) -> DataFrame:
     """Streaming twin of ``rates.pause_cusum`` — the always-on pause
     drift alarm: per-url CUSUM carried across micro-batches as TWO
@@ -188,8 +192,8 @@ def stateful_cusum(
 
     Same eviction contract as :func:`stateful_rates`
     (``end_marker_col``; NoTimeout — see that docstring)."""
-    target_ticks = target_ms * 10_000
-    threshold_ticks = threshold_ms * 10_000
+    target_ticks = CUSUM_TARGET_MS * 10_000
+    threshold_ticks = CUSUM_THRESHOLD_MS * 10_000
 
     def fold(key, st, recs, ended):
         p_sum, p_min = st or (0, 0)
@@ -239,8 +243,6 @@ def _slo_schemas(k: int):
 
 def stateful_slo_burn(
     events: DataFrame,
-    short_s: int = 60,
-    long_s: int = 300,
     end_marker_col: str | None = None,
     flush_on_batch_end: bool = False,
 ) -> DataFrame:
@@ -258,15 +260,10 @@ def stateful_slo_burn(
     the same BigDecimal-equivalent rule), so stream and batch share
     one DuckDB oracle and an on-call can swap the nightly scan for
     the live alert feed."""
-    if long_s % short_s != 0:
-        raise ValueError("long_s must be a multiple of short_s")
-    k = long_s // short_s
-    den_short = short_s * 10_000_000 * SLO
-    den_long = long_s * 10_000_000 * SLO
-    if den_short != int(den_short):
-        raise ValueError("short_s * 1e7 * slo must be integral")
-    den_short, den_long = int(den_short), int(den_long)
-    short_ms = short_s * 1000
+    k = SLO_LONG_S // SLO_SHORT_S
+    den_short = int(SLO_SHORT_S * 10_000_000 * SLO)
+    den_long = int(SLO_LONG_S * 10_000_000 * SLO)
+    short_ms = SLO_SHORT_S * 1000
     state_schema, out_schema = _slo_schemas(k)
 
     def fold(key, st, recs, ended):
@@ -291,7 +288,7 @@ def stateful_slo_burn(
                     continue
                 burn_s = half_up(t / den_short, 6)
                 out.append((
-                    url, run_id, (l_bucket * k + j) * short_s, t,
+                    url, run_id, (l_bucket * k + j) * SLO_SHORT_S, t,
                     ticks_long, burn_s, burn_l,
                     burn_s >= BURN_THRESHOLD and burn_l >= BURN_THRESHOLD,
                 ))

@@ -246,17 +246,12 @@ def run_sliding_stream(
     )
 
 
-def attribution_join(
-    views: DataFrame,
-    purchases: DataFrame,
-    max_lag: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def attribution_join(views: DataFrame, purchases: DataFrame) -> DataFrame:
     """Stream-stream INNER interval join (view -> purchase attribution):
-    each purchase joins every view by the same user at most ``max_lag``
-    before it.  Both sides carry an event-time watermark and the join
-    condition carries the time bound, so Spark can evict view state
-    ``max_lag`` past the watermark and purchase state at the watermark —
+    each purchase joins every view by the same user at most 30 minutes
+    before it.  Both sides carry a 2-hour event-time watermark and the
+    join condition carries the time bound, so Spark can evict view state
+    30 minutes past the watermark and purchase state at the watermark —
     state is bounded by the lag horizon, not the stream length.  The
     lag is emitted as integer microseconds (exact on both engines — no
     float epoch drift against the DuckDB oracle).
@@ -276,14 +271,14 @@ def attribution_join(
         F.col("value"),
     )
     if views.isStreaming:
-        v = v.withWatermark("v_ts", watermark)
+        v = v.withWatermark("v_ts", "2 hours")
     if purchases.isStreaming:
-        p = p.withWatermark("p_ts", watermark)
+        p = p.withWatermark("p_ts", "2 hours")
     joined = v.join(
         p,
         F.expr(
             "user_id = p_user AND p_ts >= v_ts "
-            f"AND p_ts <= v_ts + interval {max_lag}"
+            "AND p_ts <= v_ts + interval 30 minutes"
         ),
     )
     return joined.select(

@@ -105,7 +105,7 @@ def test_chunk_documents_boundaries(spark):
     )
     rows = {
         (r["doc_id"], r["chunk_idx"]): (r["chunk_text"], r["n_chunk_words"])
-        for r in chunk_documents(docs, chunk_words=32, overlap=8).collect()
+        for r in chunk_documents(docs).collect()
     }
     # chunk 0 = words 0..31; chunk 1 starts at stride 24 → words 24..39
     assert rows[(1, 0)][1] == 32
@@ -144,15 +144,16 @@ def test_skew_stats_literal(spark):
     from gclog_parser_spark.operators.aggregate import skew_stats
 
     df = spark.createDataFrame(
-        [("a",)] * 8 + [("b",)] + [("c",)],
+        [("a",)] * 8 + [(k,) for k in "gfedcb"],
         "k string",
     )
-    rows = skew_stats(df, ["k"], top=2).collect()
-    assert [r["k"] for r in rows] == ["a", "b"]
+    # top 5 of 7 keys: the 1-count ties cut by key
+    rows = skew_stats(df, ["k"]).collect()
+    assert [r["k"] for r in rows] == ["a", "b", "c", "d", "e"]
     assert rows[0]["n"] == 8
-    assert rows[0]["share"] == 0.8
-    # 3 distinct keys, uniform would be 10/3 each: 8 / (10/3) = 2.4
-    assert rows[0]["skew_ratio"] == 2.4
+    assert rows[0]["share"] == round(8 / 14, 6)
+    # 7 distinct keys, uniform would be 14/7 each: 8 / (14/7) = 4.0
+    assert rows[0]["skew_ratio"] == 4.0
 
 
 def test_kmv_distinct_error_bound_and_exact_path(spark):
@@ -224,12 +225,12 @@ def test_heavy_hitters_exact_with_tiny_capacity(spark):
     from gclog_parser_spark.operators.aggregate import heavy_hitters
 
     # 300 'hot' + 700 distinct singletons over 7 partitions; k=5 →
-    # threshold 200, so only 'hot' qualifies.  capacity=k (the minimum
-    # that preserves the superset guarantee) forces constant MG
-    # decrement churn in every partition.
+    # threshold 200, so only 'hot' qualifies.  ~100 distinct items per
+    # partition against 4·k = 20 counters force constant MG decrement
+    # churn in every partition.
     rows = [("hot",)] * 300 + [(f"u{i}",) for i in range(700)]
     df = spark.createDataFrame(rows, "w string").repartition(7)
-    out = heavy_hitters(df, "w", k=5, capacity=5).collect()
+    out = heavy_hitters(df, "w", k=5).collect()
     assert [(r["item"], r["cnt"]) for r in out] == [("hot", 300)]
     assert abs(out[0]["share"] - 0.3) < 1e-9
 
@@ -604,17 +605,15 @@ def test_journey_paths_topk_cut_is_deterministic(spark):
 
     from gclog_parser_spark.operators.aggregate import journey_paths
 
+    types = [f"t{i:02d}" for i in range(22)]
     ev = spark.createDataFrame(
-        [
-            (i, i, dt(2024, 1, 1), t)
-            for i, t in enumerate(["a", "b", "c", "d"])
-        ],
+        [(i, i, dt(2024, 1, 1), t) for i, t in enumerate(reversed(types))],
         "event_id long, user_id long, ts timestamp, event_type string",
     )
-    # four single-step paths all tie at 1 — k=2 must keep the two
-    # lexicographically smallest
-    rows = [r.path for r in journey_paths(ev, k=2).collect()]
-    assert rows == ["a", "b"]
+    # 22 single-step paths all tie at 1 — the top-20 cut must keep the
+    # 20 lexicographically smallest
+    rows = [r.path for r in journey_paths(ev).collect()]
+    assert rows == types[:20]
 
 
 def test_decayed_counts_exact_powers_of_two(spark):

@@ -9,8 +9,10 @@ cover while only one of them ever runs.  The rule:
   except the DuckDB reference modules ``oracle.py``/``oracle_text.py``,
   which the parity tests compare against and which stay as written.
 * Calls: every call in the package, ``jobs/``, ``tools/``, ``perfbench/``,
-  ``tests/``, ``bench.py`` and ``__spark_entry__.py``, matched to a
-  definition by the called name (``f(...)`` or ``obj.f(...)``).
+  ``bench.py`` and ``__spark_entry__.py``, matched to a definition by
+  the called name (``f(...)`` or ``obj.f(...)``).  Tests are not
+  callers: an option only a test sets is a second configuration that
+  no program runs.
 * A defaulted parameter is set when some call passes it by keyword, or
   passes enough positional arguments to reach it.  A ``**kwargs`` call
   sets every keyword of that name, and a ``*args`` call every
@@ -25,21 +27,34 @@ import os
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = os.path.join(ROOT, "gclog_parser_spark")
 ORACLES = {"oracle.py", "oracle_text.py"}
-CALLERS = ["gclog_parser_spark", "jobs", "tools", "perfbench", "tests",
-           "bench.py", "__spark_entry__.py"]
+CALLERS = ["gclog_parser_spark", "jobs", "tools", "perfbench", "bench.py",
+           "__spark_entry__.py"]
 
-# Options that only a call through a bound name, or a deployment, sets,
-# and one left for a change that may touch the benchmark's timed path.
+_EVICT = ("the state-eviction path: under NoTimeout the end marker is "
+          "the twin's only bound on per-url state")
+_BACKSTOP = ("bound of a safety backstop that a test must reach: "
+             "max_rounds bounds the rounds that change the state")
+
+# Options no program sets that stay options, each with its reason.
 KEPT = {
-    ("streaming/stateful.py", "stateful_cusum", "end_marker_col"):
-        "set through a bound name: twin(stream, end_marker_col=...) in "
-        "test_streaming_stateful.py",
-    ("streaming/stateful.py", "stateful_jitter", "end_marker_col"):
-        "set through a bound name: twin(stream, end_marker_col=...) in "
-        "test_streaming_stateful.py",
+    ("sources/sinks.py", "stream_to_socket", "port"):
+        "deployment setting: the graphite relay's port",
+    ("sources/sinks.py", "stream_to_socket", "checkpoint"):
+        "deployment setting: the stream's checkpoint location",
+    ("operators/layout.py", "bucket_table", "path"):
+        "deployment setting: where the external bucketed table lives",
     ("operators/route.py", "fanout_write", "fmt"):
-        "the deployment's output format swap that the module docstring "
-        "names",
+        "deployment setting: the output format swap that the module "
+        "docstring names",
+    ("operators/graph.py", "kcore", "max_rounds"): _BACKSTOP,
+    ("operators/graph.py", "coreness", "max_rounds"): _BACKSTOP,
+    ("operators/dedup.py", "connected_components", "max_rounds"):
+        _BACKSTOP,
+    ("streaming/stateful.py", "stateful_rates", "end_marker_col"): _EVICT,
+    ("streaming/stateful.py", "stateful_cusum", "end_marker_col"): _EVICT,
+    ("streaming/stateful.py", "stateful_jitter", "end_marker_col"): _EVICT,
+    ("streaming/stateful.py", "stateful_slo_burn", "end_marker_col"):
+        _EVICT,
     ("operators/parse.py", "extract_gc_text", "text_col"):
         "on the timed path of perfbench (parse_events calls it); its one "
         "setting caller, cpu_times(text_col=), is gone",
@@ -135,10 +150,14 @@ def unset_options():
 
 def test_every_public_option_is_set_by_some_call():
     unset = [o for o in unset_options() if o not in KEPT]
+    by_module: dict[str, list[str]] = {}
+    for m, f, p in unset:
+        by_module.setdefault(m, []).append(f"{f}({p}=)")
     assert not unset, (
-        f"{len(unset)} defaulted parameters that no call sets; make each "
-        "the constant it is:\n"
-        + "\n".join(f"  {m}:{f}({p}=)" for m, f, p in unset))
+        f"{len(unset)} defaulted parameters that no program call sets; "
+        "make each the constant it is:\n"
+        + "\n".join(f"  {m} ({len(v)}): {', '.join(v)}"
+                     for m, v in by_module.items()))
 
 
 def test_kept_exceptions_are_still_unset_options():

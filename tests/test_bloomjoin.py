@@ -87,13 +87,15 @@ def test_empty_build_side_filters_everything(spark, tpc):
     assert bloom_reduce(li, "l_orderkey", empty, "o_orderkey").count() == 0
 
 
-def test_tiny_sketch_keeps_correctness(tpc):
+def test_tiny_sketch_keeps_correctness(tpc, monkeypatch):
     """Even a saturated 64-bit sketch (all-ones bitmap, 100 % FPR)
     never loses a match — it just stops pruning."""
+    from gclog_parser_spark.operators import bloomjoin
+
+    monkeypatch.setattr(bloomjoin, "M_BITS", 64)
+    monkeypatch.setattr(bloomjoin, "N_HASHES", 2)
     li, orders = tpc
-    lif = bloom_reduce(
-        li, "l_orderkey", orders, "o_orderkey", m_bits=64, n_hashes=2
-    )
+    lif = bloom_reduce(li, "l_orderkey", orders, "o_orderkey")
     plain = li.join(orders, li.l_orderkey == orders.o_orderkey).count()
     pruned = lif.join(orders, lif.l_orderkey == orders.o_orderkey).count()
     assert plain == pruned

@@ -387,9 +387,13 @@ def test_schema_evolution_add_widen_drop(spark, tmp_path):
 
 
 def test_tags_and_files_metadata_table(spark, tmp_path, events):
-    table, _ = _mk_table(tmp_path, events)
-    cat.create_tag(table, "v1-release", 1)
-    cat.create_tag(table, "latest")  # default = current
+    table = str(tmp_path / "tbl")
+    for i in range(3):
+        part = events.filter(F.col("event_id") % 3 == i)
+        cat.snapshot_write(part, table, mode="append")
+        if i == 0:
+            cat.create_tag(table, "v1-release")  # current: snapshot 1
+    cat.create_tag(table, "latest")
     assert cat.read_refs(table) == {"v1-release": 1, "latest": 3}
     assert cat.read_tag(spark, table, "v1-release").count() == (
         events.filter(F.col("event_id") % 3 == 0).count()
@@ -398,7 +402,7 @@ def test_tags_and_files_metadata_table(spark, tmp_path, events):
     with pytest.raises(KeyError, match="no tag"):
         cat.read_tag(spark, table, "nope")
     with pytest.raises(FileNotFoundError):
-        cat.create_tag(table, "bad", 99)
+        cat.create_tag(str(tmp_path / "no_such_table"), "bad")
 
     files = cat.table_files(spark, table)
     assert files.filter(F.col("kind") == "data").count() == files.count()

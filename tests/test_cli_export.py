@@ -45,7 +45,7 @@ def test_cli_tsv_stdout_matches_reference(tmp_path):
     log.write_text(fixture_text(name))
     evs = parse_log(fixture_text(name))
     rates = calculate_rates(evs)
-    want = tsv_lines(evs, delimiter="|", rates_list=rates)
+    want = [line.replace("\t", "|") for line in tsv_lines(evs, rates)]
 
     out = _run_cli(
         [
@@ -66,7 +66,10 @@ def test_cli_graphite_limit_and_stdin(tmp_path):
     text = fixture_text(name)
     evs = parse_log(text)
     rates = calculate_rates(evs)
-    want = graphite_lines(evs[:2], prefix="jvm", rates_list=rates[:2])
+    want = [
+        "jvm." + line.removeprefix("gc.")
+        for line in graphite_lines(evs[:2], rates[:2])
+    ]
 
     out = _run_cli(
         [
@@ -87,7 +90,7 @@ def test_cli_heap_stats_flag(tmp_path):
     log.write_text(fixture_text(name))
     evs = parse_with_heap_stats(fixture_text(name))
     rates = calculate_rates(evs)
-    want = tsv_lines(evs, rates_list=rates)
+    want = tsv_lines(evs, rates)
 
     out = _run_cli(
         [

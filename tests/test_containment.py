@@ -26,7 +26,7 @@ def test_embedded_doc_has_full_containment_low_jaccard(spark):
         + " ".join(f"foot{i}" for i in range(25))
     )
     docs = _docs(spark, [(1, article, "s"), (2, wrapper, "s")])
-    out = containment_pairs(docs, min_containment=0.8).collect()
+    out = containment_pairs(docs).collect()
     assert len(out) == 1
     r = out[0]
     assert (r["doc_a"], r["doc_b"]) == (1, 2)

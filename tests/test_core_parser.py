@@ -652,7 +652,8 @@ def test_promotion_rate_heap_stats():
 
 def test_graphite_format():
     events = parse_log(fixture("fragment.txt"))
-    assert graphite_lines(events[:1]) == [
+    # no rates: the export pairs of the event alone
+    assert graphite_lines(events[:1], [None]) == [
         "gc.age 524176.359 1449722814",
         "gc.type GC 1449722814",
         "gc.pause 0.18402 1449722814",
@@ -674,7 +675,7 @@ def test_graphite_format():
 
 def test_tsv_header_from_first_event():
     events = parse_log(fixture("basic-java7-gc.log"))
-    lines = tsv_lines(events)
+    lines = tsv_lines(events, [None] * len(events))
     assert lines[0] == "age\ttype\tpause\theapBefore\theapAfter\theapReclaimed\theapMax"
     assert lines[1].split("\t")[0] == "0.263"
     assert len(lines) == 8

@@ -16,12 +16,12 @@ from gclog_parser_spark.operators.dedup import (
 )
 
 
-def _cc(spark, edges, **kw):
+def _cc(spark, edges):
     df = spark.createDataFrame(edges, ["doc_a", "doc_b"])
     stats = {}
     out = {
         r["node"]: r["component"]
-        for r in connected_components(df, stats=stats, **kw).collect()
+        for r in connected_components(df, stats=stats).collect()
     }
     return out, stats
 
@@ -93,8 +93,9 @@ def test_keeper_filter_is_the_deduped_corpus(spark):
 
 def test_verified_pairs_filter_lucky_bands(spark):
     """est_jaccard = agreeing-signature fraction; exact copies estimate
-    1.0, and a strict min_est keeps partial matches from merging."""
+    1.0, and no pair below the 0.5 estimate survives verification."""
     from gclog_parser_spark.operators.dedup import (
+        minhash_band_pairs,
         minhash_verified_pairs,
     )
 
@@ -110,24 +111,13 @@ def test_verified_pairs_filter_lucky_bands(spark):
     )
     est = {
         (r["doc_a"], r["doc_b"]): r["est_jaccard"]
-        for r in minhash_verified_pairs(docs, threshold=0.0).collect()
+        for r in minhash_verified_pairs(docs).collect()
     }
     assert est[(1, 2)] == 1.0
-    strict = {
-        (r["doc_a"], r["doc_b"])
-        for r in minhash_verified_pairs(docs, threshold=1.0).collect()
-    }
-    assert (1, 2) in strict
-    assert all(p == (1, 2) for p in strict)
-
-    from gclog_parser_spark.operators.dedup import dedup_clusters
-
-    rows = {
-        r["doc_id"]: r["cluster_id"]
-        for r in dedup_clusters(docs, min_est=1.0).collect()
-    }
-    assert rows[1] == rows[2] == 1
-    assert rows[3] == 3  # near-match survives under strict verification
+    assert all(e >= 0.5 for e in est.values())
+    band = {(r["doc_a"], r["doc_b"])
+            for r in minhash_band_pairs(docs).collect()}
+    assert set(est) <= band
 
 
 def test_simhash_pairs_banding_matches_bruteforce(spark):
@@ -152,7 +142,7 @@ def test_simhash_pairs_banding_matches_bruteforce(spark):
 
     got = {
         (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in simhash_pairs(docs, max_hamming=3).collect()
+        for r in simhash_pairs(docs).collect()
     }
     sigs = {
         r["doc_id"]: r["simhash"]
@@ -167,15 +157,16 @@ def test_simhash_pairs_banding_matches_bruteforce(spark):
 
 
 def test_simhash_pairs_rejects_uncoverable_hamming(spark):
-    import pytest
-
-    from gclog_parser_spark.operators.dedup import simhash_pairs
+    # the pigeonhole join behind simhash_pairs (3 of 4 bands) refuses a
+    # distance it cannot cover
+    from gclog_parser_spark.operators.dedup import _hamming_pairs, simhash_docs
 
     docs = spark.createDataFrame(
         [(1, "a b c")], "doc_id long, text string"
     )
+    sigs = simhash_docs(docs, bits=32)
     with pytest.raises(ValueError):
-        simhash_pairs(docs, max_hamming=4, bands=4)
+        _hamming_pairs(sigs, "doc_id", "simhash", 32, 4, 4, ("a", "b"))
 
 
 def test_simhash_pairs_plan_is_equi_join(spark):

@@ -219,7 +219,7 @@ def test_round5_media_and_cusum_ops_empty(spark, empty_docs):
     empty_emb = spark.createDataFrame(
         [], "vec_id int, embedding array<float>, label string"
     )
-    assert neardup_pairs(empty_emb, dim=8).count() == 0
+    assert neardup_pairs(empty_emb).count() == 0
 
 
 def test_round5_late_wave_ops_empty(spark, empty_docs, empty_events):
@@ -238,7 +238,7 @@ def test_round5_late_wave_ops_empty(spark, empty_docs, empty_events):
     r = readability(empty_docs)
     assert r.count() == 0 and "fk_grade" in r.columns
     empty_urls = spark.createDataFrame([], "doc_id long, url string")
-    cb = crawl_budget(empty_urls, budget=10)
+    cb = crawl_budget(empty_urls)
     assert cb.count() == 0 and cb.columns == ["host", "n_pages", "quota"]
     empty_pages = spark.createDataFrame([], PAGES_SCHEMA)
     assert stall_rootcause(empty_pages).count() == 0

@@ -3,8 +3,13 @@ __spark_entry__ is the large-scale cross-check; here a third,
 plain-Python reimplementation pins the integer-tick formulas)."""
 
 import pyspark.sql.functions as F
+import pytest
 
-from gclog_parser_spark.operators.graph import events_link_graph, pagerank
+from gclog_parser_spark.operators.graph import (
+    events_link_graph,
+    pagerank,
+    trustrank,
+)
 
 
 def _py_pagerank(edges, n_iter=5, d=85, scale=10**12):
@@ -27,12 +32,13 @@ def _py_pagerank(edges, n_iter=5, d=85, scale=10**12):
 def test_pagerank_matches_python_reimpl(spark):
     edges = [(1, 2), (2, 1), (3, 1), (3, 2), (4, 3)]
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    for n_iter in (1, 5):
-        got = {
-            r["node"]: r["rank_ticks"]
-            for r in pagerank(df, n_iter=n_iter).collect()
-        }
-        assert got == _py_pagerank(edges, n_iter=n_iter)
+    got = {r["node"]: r["rank_ticks"] for r in pagerank(df).collect()}
+    assert got == _py_pagerank(edges)
+    # pagerank is trustrank seeded with every node
+    every = spark.createDataFrame([(v,) for v in range(1, 5)], "node bigint")
+    assert got == {
+        r["node"]: r["trust_ticks"] for r in trustrank(df, every).collect()
+    }
 
 
 def test_pagerank_source_only_node_gets_base_rank(spark):
@@ -139,19 +145,6 @@ def test_hits_l1_mass_bounded_and_deterministic(spark):
     assert scale - 10 <= hub <= scale
 
 
-def test_hits_rejects_zero_iterations(spark):
-    """Round-4 advice regression: n_iter=0 used to leave auth unset
-    and crash with AttributeError on the final join — now a loud
-    ValueError, like the empty-edge-set guard."""
-    import pytest
-
-    from gclog_parser_spark.operators.graph import hits
-
-    e = spark.createDataFrame([(1, 2)], "src long, dst long")
-    with pytest.raises(ValueError, match="n_iter"):
-        hits(e, n_iter=0)
-
-
 def _py_lpa(edges, n_iter=3):
     und = set()
     for a, b in edges:
@@ -179,12 +172,11 @@ def test_lpa_matches_python_reimpl(spark):
     edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (6, 4),
              (7, 1)]
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    for n_iter in (1, 3):
-        got = {
-            r["node"]: r["community"]
-            for r in label_propagation(df, n_iter=n_iter).collect()
-        }
-        assert got == _py_lpa(edges, n_iter=n_iter)
+    got = {
+        r["node"]: r["community"]
+        for r in label_propagation(df).collect()
+    }
+    assert got == _py_lpa(edges)
 
 
 def test_lpa_splits_two_cliques_joined_by_a_bridge(spark):
@@ -196,7 +188,7 @@ def test_lpa_splits_two_cliques_joined_by_a_bridge(spark):
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
     got = {
         r["node"]: r["community"]
-        for r in label_propagation(df, n_iter=3).collect()
+        for r in label_propagation(df).collect()
     }
     left = {got[1], got[2], got[3]}
     right = {got[4], got[5], got[6]}
@@ -225,13 +217,8 @@ def test_lpa_ignores_multi_edges_self_loops_and_direction(spark):
 
 
 def test_lpa_guards_bad_inputs(spark):
-    import pytest
-
     from gclog_parser_spark.operators.graph import label_propagation
 
-    df = spark.createDataFrame([(1, 2)], "src bigint, dst bigint")
-    with pytest.raises(ValueError):
-        label_propagation(df, n_iter=0)
     empty = spark.createDataFrame([], "src bigint, dst bigint")
     with pytest.raises(ValueError):
         label_propagation(empty)
@@ -264,8 +251,6 @@ def _py_trustrank(edges, seed_ids, n_iter=5, d=85, scale=10**12):
 
 
 def test_trustrank_matches_python_reimpl(spark):
-    from gclog_parser_spark.operators.graph import trustrank
-
     edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 4), (6, 1),
              (2, 6), (7, 8), (8, 7)]
     seed_ids = [1, 4, 99]  # 99 absent from the graph -> ignored
@@ -273,14 +258,12 @@ def test_trustrank_matches_python_reimpl(spark):
     sd = spark.createDataFrame([(s,) for s in seed_ids], "node bigint")
     got = {
         r["node"]: r["trust_ticks"]
-        for r in trustrank(df, sd, n_iter=4).collect()
+        for r in trustrank(df, sd).collect()
     }
-    assert got == _py_trustrank(edges, seed_ids, n_iter=4)
+    assert got == _py_trustrank(edges, seed_ids)
 
 
 def test_trustrank_unreachable_nodes_hold_zero_trust(spark):
-    from gclog_parser_spark.operators.graph import trustrank
-
     # spam farm {7,8} interlinks densely but no seed path reaches it:
     # PageRank would reward it; TrustRank pins it to exactly 0 ticks
     edges = [(1, 2), (2, 3), (3, 1), (7, 8), (8, 7), (7, 7)]
@@ -288,17 +271,13 @@ def test_trustrank_unreachable_nodes_hold_zero_trust(spark):
     sd = spark.createDataFrame([(1,)], "node bigint")
     got = {
         r["node"]: r["trust_ticks"]
-        for r in trustrank(df, sd, n_iter=5).collect()
+        for r in trustrank(df, sd).collect()
     }
     assert got[7] == 0 and got[8] == 0
     assert got[1] > 0 and got[2] > 0 and got[3] > 0
 
 
 def test_trustrank_guards_bad_inputs(spark):
-    import pytest
-
-    from gclog_parser_spark.operators.graph import trustrank
-
     df = spark.createDataFrame([(1, 2)], "src bigint, dst bigint")
     empty_edges = spark.createDataFrame([], "src bigint, dst bigint")
     sd = spark.createDataFrame([(1,)], "node bigint")
@@ -339,13 +318,11 @@ def test_kcore_matches_python_reimpl(spark):
              (4, 5), (5, 6), (7, 8)]
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
     for k in (1, 2, 3, 4):
-        stats = {}
         got = {
             r["node"]: r["core_deg"]
-            for r in kcore(df, k=k, stats=stats).collect()
+            for r in kcore(df, k=k).collect()
         }
         assert got == _py_kcore(edges, k)
-        assert stats["rounds"] >= 1
     assert set(_py_kcore(edges, 2)) == {1, 2, 3, 4}
     assert _py_kcore(edges, 4) == {}
 
@@ -355,15 +332,12 @@ def test_kcore_cascade_peels_whole_chain(spark):
 
     # a pure path graph has NO 2-core: each peel round removes the two
     # current endpoints, so the cascade takes ceil(n/2) rounds and the
-    # convergence loop (not a fixed unroll) must carry it to empty.
+    # convergence loop (not a fixed unroll) must carry it to empty;
+    # test_kcore_coreness_backstop_is_peeling_depth pins the rounds.
     n = 9
     edges = [(i, i + 1) for i in range(n)]
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    stats = {}
-    got = kcore(df, k=2, stats=stats).collect()
-    assert got == []
-    assert stats["rounds"] >= (n + 1) // 2
-    assert stats["core_edges"] == 0
+    assert kcore(df, k=2).collect() == []
 
 
 def test_kcore_direction_and_multiedge_invariant(spark):
@@ -379,8 +353,6 @@ def test_kcore_direction_and_multiedge_invariant(spark):
 
 
 def test_kcore_guards(spark):
-    import pytest
-
     from gclog_parser_spark.operators.graph import kcore
 
     df = spark.createDataFrame([(1, 2)], "src bigint, dst bigint")
@@ -416,15 +388,10 @@ def test_coreness_matches_python_and_kcore(spark):
     edges = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
              (4, 5), (5, 6), (7, 8)]
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    stats = {}
-    got = {
-        r["node"]: r["coreness"]
-        for r in coreness(df, stats=stats).collect()
-    }
+    got = {r["node"]: r["coreness"] for r in coreness(df).collect()}
     want = _py_coreness(edges)
     assert got == want
     assert got[1] == 3 and got[5] == 1 and got[7] == 1
-    assert stats["rounds"] >= 1
     # cross-operator consistency: {v : coreness >= k} == k-core nodes
     for k in (1, 2, 3):
         core_nodes = {
@@ -444,32 +411,46 @@ def test_coreness_path_graph_all_ones(spark):
     assert len(got) == 9
 
 
-def test_kcore_coreness_backstop_is_peeling_depth(spark):
-    """``max_rounds`` bounds the peeling depth: a graph whose depth
-    equals ``max_rounds`` converges (the round that only confirms the
-    fixpoint is extra), one round less raises."""
-    import pytest
-
+def _fixpoint_builders():
+    from gclog_parser_spark.operators.dedup import connected_components
     from gclog_parser_spark.operators.graph import coreness, kcore
 
-    # path 0-1-...-6: the 2-core peel removes both ends each round
-    # (3 rounds to empty); the h-index 1s also move in from both ends
-    # one node per round (3 rounds until every value is 1)
-    edges = [(i, i + 1) for i in range(6)]
+    path7 = [(i, i + 1) for i in range(6)]
+    path16 = [(i, i + 1) for i in range(15)]
+    # (builder, edges, depth, result at the fixpoint).  On the path
+    # 0-1-...-6 the 2-core peel removes both ends each round (3 rounds
+    # to empty), and the h-index 1s move in from both ends one node
+    # per round (3 rounds until every value is 1).  Alternating star
+    # closes the 16-node path in 4 rounds that change its edge set.
+    return {
+        "kcore": (
+            lambda df, m: kcore(df, k=2, max_rounds=m), path7, 3, []),
+        "coreness": (
+            lambda df, m: coreness(df, max_rounds=m), path7, 3,
+            [(i, 1) for i in range(7)]),
+        "connected_components": (
+            lambda df, m: connected_components(
+                df, src="src", dst="dst", max_rounds=m),
+            path16, 4, [(i, 0) for i in range(16)]),
+    }
+
+
+@pytest.mark.parametrize(
+    "name", ["kcore", "coreness", "connected_components"])
+def test_kcore_coreness_backstop_is_peeling_depth(spark, name):
+    """One rule for every fixpoint builder: ``max_rounds`` bounds the
+    rounds that change the state, and the round that only confirms
+    the fixpoint is extra.  A graph converges at ``max_rounds`` equal
+    to its depth and raises one round less, which also pins each
+    builder's round count."""
+    build, edges, depth, want = _fixpoint_builders()[name]
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    assert kcore(df, k=2, max_rounds=3).collect() == []
-    got = {r["node"]: r["coreness"]
-           for r in coreness(df, max_rounds=3).collect()}
-    assert got == _py_coreness(edges)
-    with pytest.raises(RuntimeError, match="peeling fixpoint"):
-        kcore(df, k=2, max_rounds=2)
-    with pytest.raises(RuntimeError, match="did not converge"):
-        coreness(df, max_rounds=2)
+    assert sorted(map(tuple, build(df, depth).collect())) == want
+    with pytest.raises(RuntimeError, match="did not reach its fixpoint"):
+        build(df, depth - 1)
 
 
 def test_coreness_empty_guard(spark):
-    import pytest
-
     from gclog_parser_spark.operators.graph import coreness
 
     loops = spark.createDataFrame([(1, 1)], "src bigint, dst bigint")

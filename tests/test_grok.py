@@ -44,12 +44,6 @@ def test_parse_types_and_unmatched(spark):
     r = kept[0]
     assert (r.n, r.lvl, r.msg) == (7, "INFO", "done")
     assert r.t.isoformat() == "2024-01-02T03:04:05"
-    # drop_unmatched=False keeps the garbage row with NULL fields
-    rows = grok_parse(
-        df, "line", pat, drop_unmatched=False
-    ).collect()
-    bad = [x for x in rows if not x.grok_matched]
-    assert len(bad) == 1 and bad[0].n is None and bad[0].t is None
 
 
 def test_parse_requires_named_field(spark):

@@ -11,19 +11,18 @@ from gclog_parser_spark.core import (
     SKIP_LINE,
     incremental_parse,
     parse_log,
-    parse_with_heap_stats,
 )
 from gclog_parser_spark.fixtures import fixture_text
 
 
-def drive(text: str, heap_stats: bool = False):
+def drive(text: str):
     """Reference caller loop: accumulate lines; on parsed → emit+reset,
     on skip → drop the first buffered line and retry the remainder."""
     events, statuses, buf = [], [], []
     for line in text.split("\n"):
         buf.append(line)
         while buf:
-            status, ev = incremental_parse(buf, heap_stats)
+            status, ev = incremental_parse(buf)
             statuses.append(status)
             if status == GC_EVENT_PARSED:
                 events.append(ev)
@@ -34,7 +33,7 @@ def drive(text: str, heap_stats: bool = False):
                 break
     # flush: drop head lines until nothing parses (EOF behavior)
     while buf:
-        status, ev = incremental_parse(buf, heap_stats)
+        status, ev = incremental_parse(buf)
         if status == GC_EVENT_PARSED:
             events.append(ev)
             buf = []
@@ -81,30 +80,3 @@ def test_drive_matches_whole_log_parse():
         text = fixture_text(name)
         events, _ = drive(text)
         assert events == parse_log(text), name
-
-
-def test_drive_heap_stats_matches():
-    for name in ("fragment", "cms", "heap7", "heap8"):
-        text = fixture_text(name)
-        events, statuses = drive(text, heap_stats=True)
-        assert events == parse_with_heap_stats(text), name
-        assert NEED_ANOTHER_LINE in statuses  # brace blocks accumulated
-
-
-def test_heap_block_waits_for_closing_brace():
-    text = fixture_text("fragment")
-    lines = text.split("\n")
-    start = next(
-        i for i, l in enumerate(lines) if l.startswith("{Heap before")
-    )
-    end = next(
-        i for i in range(start, len(lines)) if lines[i].rstrip() == "}"
-    )
-    for i in range(start + 1, end + 1):
-        status, _ = incremental_parse(lines[start:i], heap_stats=True)
-        assert status == NEED_ANOTHER_LINE, i
-    status, ev = incremental_parse(
-        lines[start : end + 1], heap_stats=True
-    )
-    assert status == GC_EVENT_PARSED
-    assert ev["regions"]

@@ -39,16 +39,16 @@ def test_compact_one_file_per_partition_and_sorted(spark, sf_dir, tmp_path):
     assert got.count() == docs.count()
 
 
-def test_compact_max_records_per_file_splits(spark, sf_dir, tmp_path):
+def test_compact_max_records_per_file_splits(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    from gclog_parser_spark.operators import layout
+
+    # 25 rows per file instead of 10^6, so a small table splits
+    monkeypatch.setattr(layout, "MAX_RECORDS_PER_FILE", 25)
     out = str(tmp_path / "compact_small")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    compact_table(
-        docs,
-        out,
-        partition_by=["lang"],
-        sort_by=["doc_id"],
-        max_records_per_file=25,
-    )
+    compact_table(docs, out, partition_by=["lang"], sort_by=["doc_id"])
     per_lang = {
         r["lang"]: r["n"]
         for r in docs.groupBy("lang").count().withColumnRenamed(

@@ -53,14 +53,17 @@ def test_classifier_keep_is_sign_of_tick_sum(spark):
         assert r.keep == (r.score >= 0) or r.score == 0.0
 
 
-def test_classifier_honors_custom_weight_relation(spark):
+def test_classifier_honors_custom_weight_relation(spark, monkeypatch):
     # an all-negative model must reject everything
+    from gclog_parser_spark.operators import textstats
+
     wt = hashed_feature_weights(spark).select(
         "bucket", F.lit(-5).alias("w_tick")
     )
+    monkeypatch.setattr(textstats, "hashed_feature_weights", lambda s: wt)
     docs = spark.createDataFrame(
         [(0, "some text here")], "doc_id long, text string"
     )
-    row = classifier_score(docs, weights=wt).collect()[0]
+    row = classifier_score(docs).collect()[0]
     assert row.keep is False
     assert row.score == -0.000005

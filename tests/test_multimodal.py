@@ -205,20 +205,28 @@ def test_wav_roundtrip_and_pinned_digest():
         "ec95bc57432732ab2def3d6a5af43957"
     )
     # 8-bit lane: unsigned storage, signed values out
-    b8 = wav_encode([-128, -1, 0, 1, 127], sampwidth=1)
-    assert wav_decode(b8)["values"] == [-128, -1, 0, 1, 127]
+    import io
+    import wave
+
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(1)
+        w.setsampwidth(1)
+        w.setframerate(8000)
+        w.writeframes(bytes(s + 128 for s in [-128, -1, 0, 1, 127]))
+    assert wav_decode(buf.getvalue())["values"] == [-128, -1, 0, 1, 127]
 
 
 def test_wav_encode_rejects_out_of_range_samples_at_both_widths():
-    """Neither width wraps a sample it cannot store: 8-bit used to
-    wrap 128 to -128 silently while 16-bit raised struct.error."""
+    """The 16-bit encoder does not wrap a sample it cannot store (it
+    used to raise struct.error); 8-bit WAVs are decoded, not encoded."""
     import pytest
 
     from gclog_parser_spark.operators.mediacodec import wav_encode
 
-    for width, bad in ((1, 128), (1, -129), (2, 32768), (2, -32769)):
+    for bad in (32768, -32769):
         with pytest.raises(ValueError):
-            wav_encode([0, bad], sampwidth=width)
+            wav_encode([0, bad])
 
 
 def test_decode_media_dispatch_and_guards():
@@ -358,6 +366,24 @@ def test_image_stats_flat_vs_gradient(spark):
     )
 
 
+def _recompress_idat(png: bytes, level: int) -> bytes:
+    """``png`` with its IDAT zlib stream recompressed at ``level`` (the
+    encoder writes stored blocks), so the decoder also sees deflate."""
+    import struct
+    import zlib
+
+    out, pos = [png[:8]], 8
+    while pos < len(png):
+        (n,) = struct.unpack(">I", png[pos:pos + 4])
+        tag, data = png[pos + 4:pos + 8], png[pos + 8:pos + 8 + n]
+        if tag == b"IDAT":
+            data = zlib.compress(zlib.decompress(data), level)
+        out.append(struct.pack(">I", len(data)) + tag + data + struct.pack(
+            ">I", zlib.crc32(tag + data) & 0xFFFFFFFF))
+        pos += 12 + n
+    return b"".join(out)
+
+
 def test_png_roundtrip_property_fuzz():
     """Property fuzz (no Spark): ANY 8-bit grey/RGB image with ANY
     per-row filter assignment must round-trip byte-identically through
@@ -384,9 +410,9 @@ def test_png_roundtrip_property_fuzz():
         filters = data.draw(
             st.lists(st.integers(0, 4), min_size=h, max_size=h)
         )
-        b = png_encode(
-            w, h, px, channels=ch, filters=filters, level=level
-        )
+        b = png_encode(w, h, px, channels=ch, filters=filters)
+        if level:
+            b = _recompress_idat(b, level)
         dec = png_decode(b)
         assert (dec["width"], dec["height"], dec["n_channels"]) == (
             w, h, ch

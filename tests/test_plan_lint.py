@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as entry_mod
-from gclog_parser_spark.plans.lint import lint_plan
+from gclog_parser_spark.plans.lint import MAX_EXCHANGES, lint_plan
 
 #: reviewed exceptions — each names the rule it suppresses and why
 ALLOW: dict[str, tuple[str, ...]] = {
@@ -19,7 +19,7 @@ ALLOW: dict[str, tuple[str, ...]] = {
     "text_heavy_hitters": ("global-sort",),
 }
 
-#: per-query exchange caps above the default 12 — each documented
+#: per-query exchange caps above MAX_EXCHANGES — each documented
 CAPS: dict[str, int] = {
     # the sketch/exact/pair subtrees each re-plan the (group, hash)
     # distinct, so the node count is high, but every exchange after
@@ -44,14 +44,23 @@ SKIP = tuple(
 QUERIES = sorted(n for n in entry_mod.queries() if n not in SKIP)
 
 
+def _unexcused(name: str, findings: list[str]) -> list[str]:
+    """``findings`` less the ones ALLOW and CAPS accept for ``name``."""
+    out = []
+    for f in findings:
+        rule, _, n = f.partition(":")
+        if rule in ALLOW.get(name, ()):
+            continue
+        if rule == "exchange-storm" and int(n) <= CAPS.get(name, 0):
+            continue
+        out.append(f)
+    return out
+
+
 @pytest.mark.parametrize("name", QUERIES)
 def test_plan_is_lint_clean(spark, sf_dir, name):
     df = entry_mod.queries()[name](spark, sf_dir)
-    findings = lint_plan(
-        df,
-        max_exchanges=CAPS.get(name, 12),
-        allow=ALLOW.get(name, ()),
-    )
+    findings = _unexcused(name, lint_plan(df))
     assert findings == [], f"{name}: {findings}"
 
 
@@ -74,16 +83,13 @@ def test_linter_actually_fires(spark):
     # removed by EliminateSorts (the data is already sorted)
     gsort = a.orderBy(F.col("id") % 7)
     assert "global-sort" in lint_plan(gsort)
-    assert lint_plan(gsort, allow=("global-sort",)) == []
+    assert _unexcused("emb_label_stats", lint_plan(gsort)) == []
 
     # chained groupBys on distinct keys — adjacent repartition() calls
     # would be collapsed by CollapseRepartition
     storm = a.select("id", F.lit(1).alias("c"))
-    for i in range(4):
+    for i in range(MAX_EXCHANGES + 1):
         storm = storm.groupBy(
             (F.col("id") % (i + 2)).alias("id")
         ).agg(F.sum("c").alias("c"))
-    assert any(
-        f.startswith("exchange-storm")
-        for f in lint_plan(storm, max_exchanges=3)
-    )
+    assert any(f.startswith("exchange-storm") for f in lint_plan(storm))

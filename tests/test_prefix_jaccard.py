@@ -56,18 +56,23 @@ def test_prefix_join_matches_brute_force(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in prefix_jaccard_pairs(df, 1, 2).collect()
+        for r in prefix_jaccard_pairs(df).collect()
     }
     assert got == _brute(docs, 1, 2)
     assert got, "corpus must actually contain qualifying pairs"
 
 
-def test_prefix_join_high_threshold(spark):
+def test_prefix_join_high_threshold(spark, monkeypatch):
+    # the prefix filter's completeness argument holds at any threshold;
+    # at 9/10 the prefixes are shortest, so a lost pair shows first
+    from gclog_parser_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "PREFIX_THRESHOLD", (9, 10))
     docs = _corpus()
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in prefix_jaccard_pairs(df, 9, 10).collect()
+        for r in prefix_jaccard_pairs(df).collect()
     }
     assert got == _brute(docs, 9, 10)
     assert (0, 1, 1.0) in got  # the exact dup survives theta=0.9

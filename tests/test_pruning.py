@@ -96,9 +96,9 @@ def test_bucketed_join_eliminates_shuffle(spark, tmp_path):
         li = spark.read.parquet(f"{SF}/lineitem.parquet")
         orders = spark.read.parquet(f"{SF}/orders.parquet")
         bucket_table(li, "li_bkt", ["l_orderkey"], 8,
-                     path=str(tmp_path / "li"), sort_by=["l_orderkey"])
+                     path=str(tmp_path / "li"))
         bucket_table(orders, "ord_bkt", ["o_orderkey"], 8,
-                     path=str(tmp_path / "ord"), sort_by=["o_orderkey"])
+                     path=str(tmp_path / "ord"))
         j = (
             spark.table("li_bkt")
             .join(

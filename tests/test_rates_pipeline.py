@@ -20,7 +20,10 @@ from gclog_parser_spark.operators.route import fanout_write, with_sink
 
 @pytest.fixture(scope="module")
 def pages(spark):
-    return synth_pages(spark, 30, parallelism=4, with_meta=True).cache()
+    # each url names its fixture class: https://logs.example/<class>/<n>
+    return synth_pages(spark, 30, parallelism=4).withColumn(
+        "gclog_class", F.split("url", "/")[3]
+    ).cache()
 
 
 @pytest.fixture(scope="module")
@@ -87,7 +90,7 @@ def test_region_enrichment(spark, pages):
 
 def test_fanout_and_aggregate(spark, events, tmp_path):
     out = str(tmp_path / "routed")
-    fanout_write(events, out, mode="overwrite")
+    fanout_write(events, out)
     back = spark.read.parquet(out)
     assert back.count() == events.count()
     # partition pruning on the routing key
@@ -133,7 +136,7 @@ def test_session_stats_gaps_and_islands(spark):
     )
     out = {
         r["session_id"]: r
-        for r in session_stats(ev, gap_seconds=30.0).collect()
+        for r in session_stats(ev).collect()
     }
     assert len(out) == 3
     assert out[0]["n_events"] == 3 and out[0]["total_pause"] == 0.6
@@ -302,7 +305,7 @@ def test_pause_cusum_catches_sustained_drift_and_resets(spark):
     )
     got = {
         r["event_idx"]: (r["cusum_ticks"], r["alarm"])
-        for r in pause_cusum(ev, target_ms=100, threshold_ms=500).collect()
+        for r in pause_cusum(ev).collect()
     }
 
     s, want = 0, {}
@@ -373,14 +376,23 @@ def test_slo_burn_multiwindow_alert_and_restart_split(spark):
 
 
 def test_slo_burn_rejects_bad_windows(spark):
-    from gclog_parser_spark.operators.rates import slo_burn
+    # the windows are constants; the bucketing relies on the long
+    # window nesting whole short windows and on an integral short-window
+    # denominator, so a bad pair fails here instead of mis-bucketing
+    from gclog_parser_spark.operators.rates import (
+        SLO,
+        SLO_LONG_S,
+        SLO_SHORT_S,
+        slo_burn,
+    )
 
+    assert SLO_LONG_S % SLO_SHORT_S == 0
+    den_short = SLO_SHORT_S * 10_000_000 * SLO
+    assert den_short == int(den_short)
     ev = spark.createDataFrame(
         [], "url string, event_idx int, jvm_age_seconds double,"
         " pause_seconds double"
     )
-    with pytest.raises(ValueError):
-        slo_burn(ev, short_s=60, long_s=250)
     assert slo_burn(ev).count() == 0  # empty-input totality
 
 

@@ -57,13 +57,17 @@ def test_split_stable_under_corpus_growth(spark, docs):
 
 
 def test_split_salt_decorrelates(docs):
+    # hash_split and pack_sequences draw from the same md5 family under
+    # different salts, so a doc's split says nothing about its pack order
+    from gclog_parser_spark.operators.sampling import hash_bucket
+
+    rows = docs.select(
+        hash_bucket(F.col("doc_id"), "split").alias("s"),
+        hash_bucket(F.col("doc_id"), "pack").alias("p"),
+    ).collect()
+    assert sum(r.s == r.p for r in rows) < len(rows) / 10
     a = {r["doc_id"]: r["split"] for r in hash_split(docs).collect()}
-    b = {
-        r["doc_id"]: r["split"]
-        for r in hash_split(docs, salt="other").collect()
-    }
-    assert a != b  # different draws
-    assert set(b.values()) == {"train", "val", "test"}
+    assert set(a.values()) == {"train", "val", "test"}
 
 
 def test_stratified_rates_respected(docs):
@@ -401,11 +405,11 @@ class TestPackSequences:
     """Concat-and-chunk packing invariants (value parity vs DuckDB is
     tests/test_oracle_parity.py[corpus_pack])."""
 
-    def _pack(self, spark, sf_dir, **kw):
+    def _pack(self, spark, sf_dir):
         from gclog_parser_spark.operators.sampling import pack_sequences
 
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        return pack_sequences(docs, seq_len=64, n_groups=4, **kw)
+        return pack_sequences(docs, seq_len=64, n_groups=4)
 
     def test_spans_partition_each_doc_exactly(self, spark, sf_dir):
         """Per doc: spans are contiguous, start at 0, end at
@@ -483,7 +487,7 @@ def test_epoch_shuffle_is_a_permutation(spark, sf_dir):
     from gclog_parser_spark.operators.sampling import epoch_shuffle
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = epoch_shuffle(docs, epoch=1, n_shards=8).collect()
+    out = epoch_shuffle(docs, epoch=1).collect()
     assert len(out) == docs.count()
     assert len({r["doc_id"] for r in out}) == len(out)
     by_shard = {}
@@ -572,8 +576,7 @@ def test_corpus_manifest_null_text_matches_oracle(spark):
     got = sorted(
         (r["shard_group"], r["shard_idx"], r["n_docs"], r["n_tokens"],
          int(r["content_checksum"]))
-        for r in corpus_manifest(docs, tokens_per_shard=4, n_groups=2)
-        .collect()
+        for r in corpus_manifest(docs, n_groups=2).collect()
     )
     con = duckdb.connect()
     con.register(
@@ -582,7 +585,7 @@ def test_corpus_manifest_null_text_matches_oracle(spark):
     want = sorted(
         (g, i, n, t, int(c))
         for g, i, n, t, _, _, c in con.execute(
-            corpus_manifest_sql(tokens_per_shard=4, n_groups=2)
+            corpus_manifest_sql(n_groups=2)
         ).fetchall()
     )
     assert got == want

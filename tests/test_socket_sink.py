@@ -14,7 +14,7 @@ from gclog_parser_spark.operators.export import graphite_export
 from gclog_parser_spark.operators.parse import parse_events
 from gclog_parser_spark.operators.rates import with_rates
 from gclog_parser_spark.sources.pages import read_gc_logs
-from gclog_parser_spark.sources.sinks import write_socket
+from gclog_parser_spark.sources.sinks import _send_partition, write_socket
 
 
 class _Collector(socketserver.StreamRequestHandler):
@@ -43,7 +43,7 @@ def test_socket_sink_delivers_reference_graphite_lines(spark, tmp_path):
     p.write_text(fixture_text(name))
 
     evs = parse_log(fixture_text(name))
-    want = graphite_lines(evs, rates_list=calculate_rates(evs))
+    want = graphite_lines(evs, calculate_rates(evs))
 
     srv, port = _server()
     try:
@@ -51,7 +51,7 @@ def test_socket_sink_delivers_reference_graphite_lines(spark, tmp_path):
             parse_events(read_gc_logs(spark, str(p)), require_marker=False)
         )
         lines = graphite_export(events)
-        write_socket(lines, "127.0.0.1", port, batch_size=7)
+        write_socket(lines, "127.0.0.1", port)
         got = list(srv.received)
     finally:
         srv.shutdown()
@@ -59,13 +59,24 @@ def test_socket_sink_delivers_reference_graphite_lines(spark, tmp_path):
 
     assert got == want  # one log → one partition → exact order too
 
+    # the sender batches 500 lines per send; 7 per send splits this log
+    # across many sends, and every line must survive the seams
+    rows = lines.orderBy("line_no").collect()
+    srv, port = _server()
+    try:
+        _send_partition("127.0.0.1", port, 7)(iter(rows))
+    finally:
+        srv.shutdown()
+        srv.server_close()
+    assert len(want) > 7 and srv.received == want
+
 
 def test_stream_to_socket_restart_and_replay(spark, sf_dir, tmp_path):
     """Exactly-once vs at-least-once, pinned end-to-end against a real
     TCP server:
 
-    1. availableNow run (3 files, 1 file/trigger) delivers exactly the
-       batch pipeline's graphite line multiset;
+    1. availableNow run (3 files of graphite lines, 1 file/trigger)
+       delivers exactly the batch pipeline's line multiset;
     2. restart on the same checkpoint delivers NOTHING (committed
        batches are never re-sent);
     3. deleting the last offset commit (crash between send and commit)
@@ -80,32 +91,33 @@ def test_stream_to_socket_restart_and_replay(spark, sf_dir, tmp_path):
 
     from gclog_parser_spark.datagen import pages_from_documents
     from gclog_parser_spark.sources.sinks import stream_to_socket
-    from gclog_parser_spark.streaming.stream import stream_pages
 
-    inp = str(tmp_path / "pages")
+    # the stream carries graphite lines: formatting them needs windows,
+    # which a streaming DataFrame rejects, so they are built batch-side
+    # and streamed from parquet, one file per trigger
+    inp = str(tmp_path / "lines")
     ckpt = str(tmp_path / "ckpt")
     pages = pages_from_documents(spark, sf_dir)
-    pages.repartition(3).write.parquet(inp)
-
-    def to_lines(batch_df):
-        ev = parse_events(batch_df, stitch="narrow").where(
-            F.col("event_time").isNotNull()
-        )
-        return graphite_export(ev)
-
-    want = collections.Counter(
-        r["line"] for r in to_lines(pages).collect()
+    ev = parse_events(pages, stitch="narrow").where(
+        F.col("event_time").isNotNull()
     )
+    lines = graphite_export(ev)
+    lines.repartition(3, "url").write.parquet(inp)
+
+    want = collections.Counter(r["line"] for r in lines.collect())
     assert sum(want.values()) > 0
+
+    def lines_stream():
+        return (
+            spark.readStream.schema(lines.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(inp)
+        )
 
     srv, port = _server()
     try:
         q = stream_to_socket(
-            stream_pages(spark, inp, max_files_per_trigger=1),
-            "127.0.0.1",
-            port,
-            checkpoint=ckpt,
-            transform=to_lines,
+            lines_stream(), "127.0.0.1", port, checkpoint=ckpt
         )
         assert q.awaitTermination(300)
         with srv.lock:
@@ -114,11 +126,7 @@ def test_stream_to_socket_restart_and_replay(spark, sf_dir, tmp_path):
 
         # restart, same checkpoint: all offsets committed → no resend
         q2 = stream_to_socket(
-            stream_pages(spark, inp, max_files_per_trigger=1),
-            "127.0.0.1",
-            port,
-            checkpoint=ckpt,
-            transform=to_lines,
+            lines_stream(), "127.0.0.1", port, checkpoint=ckpt
         )
         assert q2.awaitTermination(300)
         with srv.lock:
@@ -137,11 +145,7 @@ def test_stream_to_socket_restart_and_replay(spark, sf_dir, tmp_path):
         if os.path.exists(crc):
             os.remove(crc)
         q3 = stream_to_socket(
-            stream_pages(spark, inp, max_files_per_trigger=1),
-            "127.0.0.1",
-            port,
-            checkpoint=ckpt,
-            transform=to_lines,
+            lines_stream(), "127.0.0.1", port, checkpoint=ckpt
         )
         assert q3.awaitTermination(300)
         with srv.lock:

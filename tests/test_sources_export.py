@@ -114,7 +114,7 @@ def test_tsv_export_matches_reference_format(spark, log_dir):
     name = "details7"
     evs = parse_log(fixture_text(name))
     rates = calculate_rates(evs)
-    want = tsv_lines(evs, rates_list=rates)
+    want = tsv_lines(evs, rates)
 
     pages = read_gc_logs(spark, str(log_dir / f"{name}.log"))
     out = tsv_export(with_rates(parse_events(pages, require_marker=False)))
@@ -126,7 +126,7 @@ def test_graphite_export_matches_reference_format(spark, log_dir):
     name = "details8"
     evs = parse_log(fixture_text(name))
     rates = calculate_rates(evs)
-    want = graphite_lines(evs, prefix="gc", rates_list=rates)
+    want = graphite_lines(evs, rates)
 
     pages = read_gc_logs(spark, str(log_dir / f"{name}.log"))
     events = with_rates(parse_events(pages, require_marker=False))
@@ -141,7 +141,7 @@ def test_tsv_export_heap_stats_mode(spark, log_dir):
     name = "fragment"
     evs = parse_with_heap_stats(fixture_text(name))
     rates = calculate_rates(evs)
-    want = tsv_lines(evs, rates_list=rates)
+    want = tsv_lines(evs, rates)
 
     pages = read_gc_logs(spark, str(log_dir / f"{name}.log"))
     events = with_rates(

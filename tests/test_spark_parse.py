@@ -19,13 +19,16 @@ from gclog_parser_spark.schema import PAGES_SCHEMA
 
 @pytest.fixture(scope="module")
 def pages(spark):
-    return synth_pages(spark, 40, parallelism=4, with_meta=True).cache()
+    # each url names its fixture class: https://logs.example/<class>/<n>
+    return synth_pages(spark, 40, parallelism=4).withColumn(
+        "gclog_class", F.split("url", "/")[3]
+    ).cache()
 
 
 def test_extracted_text_byte_identical(spark, pages):
     """The per-row invariant (BASELINE.json input_hint): extracted text
     equals the embedded fixture bytes exactly."""
-    rows = extract_gc_text(pages.withColumnRenamed("doc_id", "d")).join(
+    rows = extract_gc_text(pages).join(
         pages.select(F.col("url"), "gclog_class"), "url"
     ).collect()
     assert len(rows) == 40
@@ -161,12 +164,13 @@ def test_window_line_flags_match_core_classifier(spark, heap_stats):
 
 
 def test_pages_from_documents(spark, sf_dir):
-    pages = pages_from_documents(spark, sf_dir, with_meta=True)
+    pages = pages_from_documents(spark, sf_dir)
+    assert pages.columns == PAGES_SCHEMA.fieldNames()
     n = pages.count()
     assert n == 500  # sf0.001 documents rows
     # every class present 50×
     counts = dict(
-        pages.groupBy("gclog_class").count().collect()
+        pages.groupBy(F.split("url", "/")[3]).count().collect()
     )
     assert all(v == 50 for v in counts.values()) and len(counts) == 10
     # hot-hour skew by construction

@@ -654,7 +654,9 @@ def test_stream_join_state_plateaus_under_longer_replay(
         base = time.time() - n * 10
         os.makedirs(inp, exist_ok=True)
         for i in range(n):
-            ts = t0 + dt.timedelta(hours=i)
+            # batches 4 h apart: past the 30-minute lag plus the 2-hour
+            # watermark, so each batch's state can be evicted
+            ts = t0 + dt.timedelta(hours=4 * i)
             rows = []
             for j in range(k):
                 rows.append(
@@ -683,10 +685,7 @@ def test_stream_join_state_plateaus_under_longer_replay(
                 .filter(F.col("event_type") == event_type)
             )
 
-        agg = attribution_join(
-            side("view"), side("purchase"),
-            max_lag="10 minutes", watermark="30 minutes",
-        )
+        agg = attribution_join(side("view"), side("purchase"))
         q = (
             agg.writeStream.format("memory").queryName(name)
             .outputMode("append")
@@ -707,3 +706,25 @@ def test_stream_join_state_plateaus_under_longer_replay(
     assert max(s_long) <= 4 * k + 4
     assert max(s_long) <= max(s_short) + 2 * k
     assert s_long[-1] <= 4 * k + 4 < 6 * 2 * k
+
+
+def test_failed_stream_query_leaves_no_scratch_dir(spark, tmp_path):
+    """A contract stream query that raises after making its scratch
+    directory leaves nothing in the temp dir outside the per-process
+    fixture root (which is removed at exit)."""
+    import os
+    import tempfile
+
+    import pytest
+
+    import __spark_entry__ as entry
+
+    tmp = tempfile.gettempdir()
+    before = set(os.listdir(tmp))
+    with pytest.raises(Exception):
+        entry.q_gc_stream_cusum(spark, str(tmp_path / "no_such_sf"))
+    left = {
+        d for d in set(os.listdir(tmp)) - before
+        if d.startswith("gps_") and not d.startswith("gps_fixtures_")
+    }
+    assert not left

@@ -8,7 +8,6 @@ from __future__ import annotations
 import time
 from collections import Counter
 from datetime import datetime
-from functools import partial
 
 from gclog_parser_spark.core import calculate_rates, parse_log
 from gclog_parser_spark.fixtures import fixture_text
@@ -141,6 +140,19 @@ def test_stateful_rates_end_marker_evicts(spark, tmp_path):
     assert got[7:] == want
 
 
+def _drift_log() -> str:
+    """A plain-GC log made for the pause alarms: a 0.8 s pause every
+    10 s of JVM age for 300 s, then 0.05 s pauses for 300 s more, so
+    the CUSUM (100 ms target, 500 ms threshold) and the SLO pager
+    (60 s and 300 s windows) both fire, and the second half drains
+    them."""
+    return "".join(
+        f"{5 + 10 * i}.000: [GC (Allocation Failure)  "
+        f"65536K->57255K(251392K), {0.8 if i < 30 else 0.05:.7f} secs]\n"
+        for i in range(60)
+    )
+
+
 def test_stateful_cusum_matches_batch_across_batches(spark, tmp_path):
     """The streaming CUSUM (O(1) two-word state per JVM) must emit
     BIT-IDENTICAL rows to the batch window operator when the same log
@@ -152,7 +164,7 @@ def test_stateful_cusum_matches_batch_across_batches(spark, tmp_path):
     from gclog_parser_spark.operators.rates import pause_cusum
     from gclog_parser_spark.streaming.stateful import stateful_cusum
 
-    text = fixture_text("basic8")
+    text = _drift_log()
     lines = text.strip().split("\n")
     url = "tail://app-c/gc.log"
     ts = datetime(2016, 11, 10, 4, 0, 0)
@@ -173,7 +185,7 @@ def test_stateful_cusum_matches_batch_across_batches(spark, tmp_path):
         require_marker=False,
     )
     q = (
-        stateful_cusum(stream, target_ms=50, threshold_ms=100)
+        stateful_cusum(stream)
         .writeStream.format("memory")
         .queryName("t_cusum")
         .outputMode("append")
@@ -203,9 +215,7 @@ def test_stateful_cusum_matches_batch_across_batches(spark, tmp_path):
     )
     want = sorted(
         (r["pause_ticks"], r["cusum_ticks"], r["alarm"])
-        for r in pause_cusum(
-            reordered, target_ms=50, threshold_ms=100
-        ).collect()
+        for r in pause_cusum(reordered).collect()
     )
     assert got == want and got
     # the fixture's big pauses actually trip the alarm at this target
@@ -223,7 +233,7 @@ def test_stateful_slo_burn_matches_batch_across_batches(spark, tmp_path):
     from gclog_parser_spark.operators.rates import slo_burn
     from gclog_parser_spark.streaming.stateful import stateful_slo_burn
 
-    text = fixture_text("basic8")
+    text = _drift_log()
     lines = text.strip().split("\n")
     url = "tail://app-s/gc.log"
     ts = datetime(2016, 11, 10, 4, 0, 0)
@@ -246,9 +256,7 @@ def test_stateful_slo_burn_matches_batch_across_batches(spark, tmp_path):
         require_marker=False,
     ).withColumn("log_end", F.col("jvm_age_seconds") == last_age)
     q = (
-        stateful_slo_burn(
-            stream, short_s=1, long_s=5, end_marker_col="log_end"
-        )
+        stateful_slo_burn(stream, end_marker_col="log_end")
         .writeStream.format("memory")
         .queryName("t_slo")
         .outputMode("append")
@@ -281,7 +289,7 @@ def test_stateful_slo_burn_matches_batch_across_batches(spark, tmp_path):
             r["run_id"], r["win_start_s"], r["ticks_short"],
             r["ticks_long"], r["burn_short"], r["burn_long"], r["alarm"],
         )
-        for r in slo_burn(reordered, short_s=1, long_s=5).collect()
+        for r in slo_burn(reordered).collect()
     )
     assert got == want and got
     # windows from BOTH batches appear, and the big fixture pauses
@@ -389,11 +397,11 @@ def test_stateful_jitter_end_marker_evicts(spark, tmp_path):
     stream = parsed.withColumn(
         "log_end", F.col("jvm_age_seconds") == last_age
     )
-    # target 0: the CUSUM is the running pause-tick sum, so a carried
-    # state would lift every second-run row above its first-run twin
+    # the log ends with its CUSUM above zero, so a carried state would
+    # lift every second-run row above its first-run twin
     for name, twin in (
         ("t_jitter_evict", stateful_jitter),
-        ("t_cusum_evict", partial(stateful_cusum, target_ms=0)),
+        ("t_cusum_evict", stateful_cusum),
     ):
         q = (
             twin(stream, end_marker_col="log_end")
@@ -434,10 +442,7 @@ def test_stateful_cusum_rounds_half_tick_pauses_like_batch(spark, tmp_path):
     inp = str(tmp_path / "events")
     events.write.parquet(inp)
     q = (
-        stateful_cusum(
-            spark.readStream.schema(schema).parquet(inp),
-            target_ms=0, threshold_ms=0,
-        )
+        stateful_cusum(spark.readStream.schema(schema).parquet(inp))
         .writeStream.format("memory")
         .queryName("t_cusum_half")
         .outputMode("append")
@@ -448,7 +453,6 @@ def test_stateful_cusum_rounds_half_tick_pauses_like_batch(spark, tmp_path):
     assert q.awaitTermination(300)
     got = sorted(tuple(r) for r in spark.sql("select * from t_cusum_half")
                  .collect())
-    want = sorted(tuple(r) for r in pause_cusum(
-        events, target_ms=0, threshold_ms=0).collect())
+    want = sorted(tuple(r) for r in pause_cusum(events).collect())
     assert got == want
     assert [r[2] for r in got] == [1, 2, 3]

@@ -179,48 +179,43 @@ def _py_hamilton(pages_per_host, budget):
 def test_crawl_budget_matches_python_hamilton(spark):
     from gclog_parser_spark.operators.webstats import crawl_budget
 
-    pages = {"a.com": 7, "b.com": 3, "c.org": 13, "d.org": 1}
-    rows = [
-        (i, f"https://{h}/p{i}")
-        for i, h in enumerate(
-            h for h, n in sorted(pages.items()) for _ in range(n)
-        )
-    ]
-    df = spark.createDataFrame(rows, "doc_id int, url string")
-    for budget in (0, 1, 10, 24, 1000):
-        want = _py_hamilton(pages, budget)
+    # the 10,000-slot budget over host mixes whose remainders differ:
+    # four uneven hosts, a 9,999:2 skew, and 7 single-page hosts
+    for pages in (
+        {"a.com": 7, "b.com": 3, "c.org": 13, "d.org": 1},
+        {"x.io": 9999, "y.io": 2},
+        {f"h{i}.net": 1 for i in range(7)},
+    ):
+        rows = [
+            (i, f"https://{h}/p{i}")
+            for i, h in enumerate(
+                h for h, n in sorted(pages.items()) for _ in range(n)
+            )
+        ]
+        df = spark.createDataFrame(rows, "doc_id int, url string")
+        want = _py_hamilton(pages, 10_000)
         got = {
             r["host"]: (r["n_pages"], r["quota"])
-            for r in crawl_budget(df, budget=budget).collect()
+            for r in crawl_budget(df).collect()
         }
         assert {h: q for h, (_, q) in got.items()} == want
         assert {h: n for h, (n, _) in got.items()} == pages
-        assert sum(q for _, q in got.values()) == budget
+        assert sum(q for _, q in got.values()) == 10_000
 
 
 def test_crawl_budget_remainder_tie_breaks_by_host_asc(spark):
     from gclog_parser_spark.operators.webstats import crawl_budget
 
-    # two hosts, one page each, budget 3: quotas 1+1, remainder tie
-    # (3*1 % 2 == 1 for both) -> the single leftover slot goes to the
-    # lexicographically smaller host.
+    # three hosts, one page each, budget 10,000: quotas 3333 each,
+    # remainder tie (10000 % 3 == 1 for all) -> the single leftover
+    # slot goes to the lexicographically smallest host.
     df = spark.createDataFrame(
-        [(0, "https://zz.org/p"), (1, "https://aa.com/p")],
+        [(0, "https://zz.org/p"), (1, "https://aa.com/p"),
+         (2, "https://mm.net/p")],
         "doc_id int, url string",
     )
-    got = {r["host"]: r["quota"] for r in crawl_budget(df, budget=3).collect()}
-    assert got == {"aa.com": 2, "zz.org": 1}
-
-
-def test_crawl_budget_rejects_negative(spark):
-    import pytest
-
-    from gclog_parser_spark.operators.webstats import crawl_budget
-
-    df = spark.createDataFrame([(0, "https://a.com/p")],
-                               "doc_id int, url string")
-    with pytest.raises(ValueError, match="budget"):
-        crawl_budget(df, budget=-1)
+    got = {r["host"]: r["quota"] for r in crawl_budget(df).collect()}
+    assert got == {"aa.com": 3334, "mm.net": 3333, "zz.org": 3333}
 
 
 def test_crawl_budget_drops_unparseable_urls(spark):
@@ -235,5 +230,5 @@ def test_crawl_budget_drops_unparseable_urls(spark):
         "doc_id int, url string",
     )
     got = {r["host"]: (r["n_pages"], r["quota"])
-           for r in crawl_budget(df, budget=5).collect()}
-    assert got == {"a.com": (2, 5)}
+           for r in crawl_budget(df).collect()}
+    assert got == {"a.com": (2, 10_000)}
